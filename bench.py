@@ -284,8 +284,8 @@ def image_pipeline_throughput(
 
 
 def crawl_engine_bench(spark, n_pages: int = 1500, rounds: int = 3) -> dict:
-    """Macro-bench of the REAL engine: CrawlRun with the distributed
-    membership tiers over a larger cached fixture. What this measures is
+    """Macro-bench of the REAL engine: CrawlRun with the words-table
+    membership tier over a larger cached fixture. What this measures is
     the per-round FIXED orchestration cost (plan/commit/checkpoint) — the
     per-row cost is the frontier microbench above; at production scale a
     round carries millions of rows against the same fixed cost."""

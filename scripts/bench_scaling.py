@@ -412,13 +412,13 @@ verified by tests/test_politeness.py and the resume/roundtrip suites.
 
 ## Tiered-round scaling (with the membership probe)
 
-The north star's round dedupes "against bloom/cuckoo membership" before the
-exact confirm; this job measures the SAME round with the Bloom tier in the
-plan (`bench.frontier_tiered_throughput`): first-wins dedupe → cogrouped
-blob probe (blobs-as-a-table, one ~blob per task — the layout that holds
-when the 10^10-key filter fits neither driver nor broadcast) → definite
-negatives skip the exact anti-join, positives are confirmed exactly →
-salted per-host top-k. Filter construction is untimed setup (it persists
+The north star's round dedupes against a Bloom membership filter before
+the exact confirm; this job measures the SAME round with the Bloom tier in
+the plan (`bench.frontier_tiered_throughput`): first-wins dedupe → JVM
+words probe (blobs as (pkey, words) table rows equi-joined on pkey — the
+layout that holds when the 10^10-key filter fits neither driver nor
+broadcast) → definite negatives skip the exact anti-join, positives are
+confirmed exactly → salted per-host top-k. Filter construction is untimed setup (it persists
 across rounds in `TableSeenTiers`).
 
 | parallelism | wall s | URLs/s | vs local[{LEVELS[0]}] |

@@ -35,16 +35,11 @@ def main() -> int:
     ap.add_argument("--fixture-dir", required=True, help="site tables (urls/links/pages/robots parquet + seeds.csv)")
     ap.add_argument("--run-dir", required=True, help="state directory (frontier/seen/fetch_log/metrics/lineage)")
     ap.add_argument("--resume", action="store_true", help="resume from the run-dir checkpoint")
-    ap.add_argument("--use-bloom", action="store_true", help="enable the Bloom/cuckoo membership tiers")
     ap.add_argument(
-        "--tier",
-        choices=["distributed", "driver", "table"],
-        default=None,
-        help="membership tier layout (with --use-bloom): 'distributed' "
-        "(default; blobs broadcast per probe), 'table' (blobs as snapshot-"
-        "table rows, cogrouped probe/flush — the 10^10 layout where the "
-        "filter fits neither driver nor broadcast), 'driver' (legacy "
-        "cuckoo hot tier)",
+        "--use-bloom",
+        action="store_true",
+        help="enable the Bloom membership tier (blobs as snapshot-table rows "
+        "under run-dir/bloom, probed JVM-side)",
     )
     ap.add_argument("--host-budget", type=int, default=4)
     ap.add_argument("--max-rounds", type=int, default=50)
@@ -62,7 +57,6 @@ def main() -> int:
         max_rounds=args.max_rounds,
         follow_links=not args.no_follow_links,
         use_bloom=args.use_bloom,
-        tier_kind=args.tier,
     )
     run = CrawlRun(
         spark,

@@ -24,10 +24,10 @@ cp scripts/submit_crawl.py "$WORK/entry.py"   # non-repo path: no repo on sys.pa
 cd "$WORK"
 "$SPARK_SUBMIT" --master "local[8]" --py-files "$WORK/wcs.zip" "$WORK/entry.py" \
     --fixture-dir "$WORK/fixture" --run-dir "$WORK/run" \
-    --use-bloom --tier table --max-rounds 4 | tee rounds_1_4.jsonl
+    --use-bloom --max-rounds 4 | tee rounds_1_4.jsonl
 "$SPARK_SUBMIT" --master "local[8]" --py-files "$WORK/wcs.zip" "$WORK/entry.py" \
     --fixture-dir "$WORK/fixture" --run-dir "$WORK/run" \
-    --resume --use-bloom --tier table --max-rounds 7 | tee rounds_5_7.jsonl
+    --resume --use-bloom --max-rounds 7 | tee rounds_5_7.jsonl
 
 python - <<'EOF'
 import json

@@ -1,14 +1,22 @@
-"""Bloom + cuckoo URL-seen tiers: no false negatives ever; fp-rate sane;
-cuckoo supports delete; distributed build/probe round-trips."""
+"""Bloom URL-seen tier: no false negatives ever; fp-rate sane; the
+distributed words build/probe round-trips and matches the numpy reference;
+tier checkpoints of other families, kinds and sizings reset safely."""
 
 from __future__ import annotations
 
+import pickle
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
-from web_crawler_spark.functions.hashing import xxh64_str
-from web_crawler_spark.operators.bloom import PartitionedBloom
-from web_crawler_spark.operators.cuckoo import CuckooFilter
+from web_crawler_spark.operators.bloom import (
+    WORDS_SCHEMA,
+    PartitionedBloom,
+    _bits_to_words,
+    or_merge_words,
+    probe_words_joined,
+)
 
 
 @pytest.fixture(scope="module")
@@ -26,152 +34,58 @@ def test_bloom_no_false_negatives(hashes):
     assert fp < 0.01, f"fp rate {fp}"
 
 
+def _keys(spark, arr):
+    return spark.createDataFrame([(int(h),) for h in arr], "url_hash long")
+
+
 def test_bloom_distributed_build_and_probe(spark, hashes):
-    inserted = hashes[:5000]
-    df = spark.createDataFrame([(int(h),) for h in inserted], ["url_hash"])
+    """Build the words table in two incremental OR-merges, probe it
+    JVM-side: every inserted key is a hit, the fp rate is sane, and the
+    merged words equal the numpy reference's bits partition for partition."""
     bf = PartitionedBloom.sized_for(5000, n_partitions=8)
-    bf.build_from(df)
-    # distributed probe agrees with driver-side probe and has no false negatives
-    probed = bf.probe(df).collect()
-    assert all(r.might_contain for r in probed)
-    other_df = spark.createDataFrame(
-        [(int(h),) for h in hashes[10000:11000]], ["url_hash"]
-    )
-    fp = np.mean([r.might_contain for r in bf.probe(other_df).collect()])
+    first, second = hashes[:3000], hashes[3000:5000]
+    sizing = dict(m=bf.m, k=bf.k, p=bf.p)
+    empty = spark.createDataFrame([], schema=WORDS_SCHEMA)
+    t1 = or_merge_words(_keys(spark, first), empty, **sizing).localCheckpoint()
+    t2 = or_merge_words(_keys(spark, second), t1, **sizing).localCheckpoint()
+    bf.add_hashes(hashes[:5000])
+    got = {r.pkey: list(r.words) for r in t2.collect()}
+    want = {key: _bits_to_words(blob).tolist() for key, blob in bf.blobs.items()}
+    assert got == want
+    probed = probe_words_joined(_keys(spark, hashes[:5000]), t2, **sizing)
+    assert all(r.might_contain for r in probed.collect())
+    other = probe_words_joined(_keys(spark, hashes[10000:11000]), t2, **sizing)
+    fp = np.mean([r.might_contain for r in other.collect()])
     assert fp < 0.02
 
 
-def test_bloom_persistence_roundtrip(hashes):
+def test_bloom_persistence_roundtrip(spark, hashes, tmp_path):
+    """numpy blobs → words rows in a snapshot table → read back: the JVM
+    probe over the persisted table answers like the in-memory filter."""
+    from web_crawler_spark.sources.lake import SnapshotTable
+
     bf = PartitionedBloom.sized_for(1000, n_partitions=4)
     bf.add_hashes(hashes[:1000])
-    bf2 = PartitionedBloom.from_rows(bf.to_rows(), bf.p, bf.m, bf.k)
-    assert bf2.might_contain(hashes[:1000]).all()
-
-
-def test_cuckoo_insert_contains_delete():
-    cf = CuckooFilter(1024)
-    keys = [xxh64_str(f"https://h{i}.com/p") for i in range(2000)]
-    for k in keys:
-        assert cf.insert(k)
-    assert all(cf.contains(k) for k in keys)
-    assert cf.contains_batch(np.array(keys)).all()
-    # deletes actually remove
-    for k in keys[:500]:
-        assert cf.delete(k)
-    misses = sum(cf.contains(k) for k in keys[:500])
-    # deleted keys may still collide with remaining fingerprints, but the vast
-    # majority must be gone (16-bit fp, ~0.5 load)
-    assert misses < 10
-    # untouched keys unaffected (no false negatives from deletes)
-    assert all(cf.contains(k) for k in keys[500:])
-
-
-def test_cuckoo_overflow_signals():
-    cf = CuckooFilter(8)  # tiny: 8 buckets * 4 slots
-    ok = True
-    for i in range(200):
-        ok = cf.insert(xxh64_str(f"k{i}"))
-        if not ok:
-            break
-    assert not ok, "tiny filter must overflow and say so"
-    assert cf.load_factor > 0.8
-
-
-def test_cuckoo_overflow_never_loses_keys():
-    """Overflow must never create a false negative: the displaced victim
-    stays findable via the stash, and a full filter refuses new inserts
-    without evicting (previously a failed insert silently dropped a key)."""
-    import numpy as np
-
-    from web_crawler_spark.operators.cuckoo import CuckooFilter
-
-    cf = CuckooFilter(2)  # tiny: 2 buckets × 4 slots
-    inserted = []
-    for h in range(100):
-        ok = cf.insert(h)
-        inserted.append(h)
-        if not ok:
-            break
-    # every key ever successfully handed to insert (incl. the overflow one,
-    # whose displacement victim went to the stash) must still be visible
-    for h in inserted:
-        assert cf.contains(h), h
-    assert cf.contains_batch(np.asarray(inserted, dtype=np.int64)).all()
-
-
-def test_cogrouped_probe_and_merge_match_broadcast(spark, hashes):
-    """The blobs-as-a-table primitives must give the exact answers of the
-    broadcast implementations: probe_cogrouped == PartitionedBloom.probe on
-    every row, or_merge_blobs == the driver-side OR of the same keys, and an
-    empty blob table is all definite negatives."""
-    from pyspark.sql import functions as F
-
-    from web_crawler_spark.operators.bloom import (
-        BLOB_SCHEMA,
-        or_merge_blobs,
-        probe_cogrouped,
+    table = SnapshotTable(str(tmp_path / "bloom"))
+    table.overwrite_local(
+        [{"pkey": key, "words": _bits_to_words(blob).tolist()} for key, blob in bf.blobs.items()],
+        WORDS_SCHEMA,
     )
-
-    bf = PartitionedBloom.sized_for(10000, n_partitions=8)
-    first, second, probe_keys = hashes[:5000], hashes[5000:8000], hashes[2500:12500]
-    spark_keys = lambda arr: spark.createDataFrame(  # noqa: E731
-        [(int(h),) for h in arr], "url_hash long"
-    )
-    cand = spark_keys(probe_keys).withColumn("x", F.col("url_hash") % 7)
-
-    # empty table → no positives
-    empty = spark.createDataFrame([], schema=BLOB_SCHEMA)
-    n_pos = (
-        probe_cogrouped(cand, empty, m=bf.m, k=bf.k, p=bf.p)
-        .filter("might_contain")
-        .count()
-    )
-    assert n_pos == 0
-
-    # merge round 1 into the empty table, round 2 into the result
-    bf.add_hashes(first)
-    t1 = or_merge_blobs(spark_keys(first), empty, m=bf.m, k=bf.k, p=bf.p)
-    t1 = spark.createDataFrame(t1.collect(), schema=BLOB_SCHEMA)  # settle
-    bf.add_hashes(second)
-    t2 = or_merge_blobs(spark_keys(second), t1, m=bf.m, k=bf.k, p=bf.p)
-    got = {r["pkey"]: bytes(r["bits"]) for r in t2.collect()}
-    want = {k: bytes(b) for k, b in bf.to_rows()}
-    assert got == want
-
-    blobs = spark.createDataFrame(
-        [(k, bytes(b)) for k, b in bf.to_rows()], schema=BLOB_SCHEMA
-    )
-    a = bf.probe(cand).orderBy("url_hash", "x").collect()
-    b = (
-        probe_cogrouped(cand, blobs, m=bf.m, k=bf.k, p=bf.p)
-        .orderBy("url_hash", "x")
-        .collect()
-    )
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # no false negatives through the cogrouped path
-    inserted_set = set(int(h) for h in first) | set(int(h) for h in second)
-    for r in b:
-        if int(r["url_hash"]) in inserted_set:
-            assert r["might_contain"]
+    words = table.read(spark, schema=WORDS_SCHEMA)
+    cand = hashes[:2000]
+    got = {
+        r.url_hash: r.might_contain
+        for r in probe_words_joined(_keys(spark, cand), words, m=bf.m, k=bf.k, p=bf.p).collect()
+    }
+    assert got == dict(zip(cand.tolist(), bf.might_contain(cand).tolist()))
+    assert all(got[int(h)] for h in hashes[:1000])
 
 
 def test_words_probe_jvm_matches_all_other_paths(spark, hashes):
-    """The JVM column-expression probe (words layout) == the cogrouped Arrow
-    probe == the driver probe, row for row — including the blobs→words
-    migration path and the empty-table (all definite negatives) case. Also
-    pins that the probe plan contains NO Python evaluation node."""
-    from pyspark.sql import functions as F
-
-    from web_crawler_spark.operators.bloom import (
-        BLOB_SCHEMA,
-        WORDS_SCHEMA,
-        blobs_to_words,
-        or_merge_blobs,
-        or_merge_words,
-        probe_cogrouped,
-        probe_words_joined,
-    )
-
+    """The JVM column-expression probe (words layout) == the numpy
+    reference probe, row for row — including the empty-table (all definite
+    negatives) case. Also pins that the probe plan contains NO Python
+    evaluation node."""
     bf = PartitionedBloom.sized_for(8000, n_partitions=8)
     inserted = hashes[:8000]
     cand_keys = np.concatenate([inserted[:2000], hashes[10000:16000]])
@@ -180,25 +94,13 @@ def test_words_probe_jvm_matches_all_other_paths(spark, hashes):
         [(int(v), i) for i, v in enumerate(cand_keys)], "url_hash long, pos int"
     )
     empty_w = spark.createDataFrame([], schema=WORDS_SCHEMA)
-    empty_b = spark.createDataFrame([], schema=BLOB_SCHEMA)
     words = or_merge_words(seen, empty_w, m=bf.m, k=bf.k, p=bf.p).localCheckpoint()
-    blobs = or_merge_blobs(seen, empty_b, m=bf.m, k=bf.k, p=bf.p).localCheckpoint()
 
     jvm_df = probe_words_joined(cand, words, m=bf.m, k=bf.k, p=bf.p)
     r_jvm = {r.url_hash: r.might_contain for r in jvm_df.collect()}
-    r_cog = {
-        r.url_hash: r.might_contain
-        for r in probe_cogrouped(cand, blobs, m=bf.m, k=bf.k, p=bf.p).collect()
-    }
     bf.add_hashes(inserted)
     r_drv = dict(zip(cand_keys.tolist(), bf.might_contain(cand_keys).tolist()))
-    r_mig = {
-        r.url_hash: r.might_contain
-        for r in probe_words_joined(
-            cand, blobs_to_words(blobs), m=bf.m, k=bf.k, p=bf.p
-        ).collect()
-    }
-    assert r_jvm == r_cog == r_drv == r_mig
+    assert r_jvm == r_drv
     assert all(r_jvm[int(v)] for v in inserted[:2000])  # no false negatives
     # candidate columns pass through untouched
     assert {f.name for f in jvm_df.schema.fields} == {"url_hash", "pos", "might_contain"}
@@ -211,48 +113,101 @@ def test_words_probe_jvm_matches_all_other_paths(spark, hashes):
     assert none.filter(F.col("might_contain")).count() == 0
 
 
-def test_tiers_checkpoint_family_mismatch_resets_safely(tmp_path):
-    """A tiers checkpoint written under a different bloom hash family must
-    not surface its bits (false negatives = exactness bug): the distributed
-    tier resets to empty-filter + watermark 0 (the exact hot slice then
-    covers everything); the driver tier fails loud."""
-    import pickle
+def test_tiers_checkpoint_family_mismatch_resets_safely(spark, tmp_path):
+    """A tiers checkpoint written under a different bloom hash family, or by
+    one of the removed tier kinds ('distributed', 'driver', kind-less), must
+    not surface its bits (false negatives = exactness bug): the tier resets
+    to an empty words table + watermark 0, so the exact hot slice covers
+    everything. A same-family table checkpoint round-trips intact."""
+    from web_crawler_spark.functions.hashing import BLOOM_FAMILY
+    from web_crawler_spark.operators.membership import TableSeenTiers
 
-    from web_crawler_spark.operators.membership import (
-        DistributedSeenTiers,
-        SeenTiers,
+    path = str(tmp_path / "bloom")
+    tiers = TableSeenTiers(path, expected_keys=1024, bloom_partitions=4)
+    tiers.init_table()
+    tiers.blob_table.overwrite_local(
+        [{"pkey": 0, "words": [-1] * (tiers.bloom.m // 64)}], WORDS_SCHEMA
     )
-
-    dist = DistributedSeenTiers(expected_keys=1024, bloom_partitions=4)
-    dist.bloom.add_hashes(np.arange(100, dtype=np.int64))
-    dist.flushed_round = 7
-    p1 = str(tmp_path / "dist.pkl")
-    dist.dump(p1)
-    with open(p1, "rb") as f:
+    tiers.flushed_round = 7
+    ck = str(tmp_path / "tiers.pkl")
+    tiers.dump(ck)
+    with open(ck, "rb") as f:
         state = pickle.load(f)
-    assert state["family"]
-    state["family"] = "km0"  # simulate a pre-change checkpoint
-    with open(p1, "wb") as f:
-        pickle.dump(state, f)
-    loaded = DistributedSeenTiers.load(p1)
-    assert loaded.bloom.blobs == {}  # stale bits discarded
-    assert loaded.flushed_round == 0  # hot slice covers the whole seen set
-    # same-family load round-trips intact
-    dist.dump(p1)
-    same = DistributedSeenTiers.load(p1)
+    assert state["family"] == BLOOM_FAMILY
+
+    same = TableSeenTiers.load(ck, path)
     assert same.flushed_round == 7
-    assert same.bloom.might_contain(np.arange(100, dtype=np.int64)).all()
+    assert same.blob_table.read(spark, schema=WORDS_SCHEMA).count() == 1
 
-    drv = SeenTiers(expected_keys=1024)
-    p2 = str(tmp_path / "drv.pkl")
-    drv.dump(p2)
-    with open(p2, "rb") as f:
-        state = pickle.load(f)
-    state["family"] = "km0"
-    with open(p2, "wb") as f:
-        pickle.dump(state, f)
-    with pytest.raises(ValueError, match="hash family"):
-        SeenTiers.load(p2)
+    sizing = (tiers.bloom.p, tiers.bloom.m, tiers.bloom.k)
+    blob_rows = [(0, b"\xff" * (tiers.bloom.m // 8))]
+    stale = [
+        {**state, "family": "km0"},  # a pre-change hash family
+        {"kind": "distributed", "family": BLOOM_FAMILY,
+         "bloom": (*sizing, blob_rows), "flushed_round": 7, "flush_every": 4},
+        {"kind": "driver", "family": BLOOM_FAMILY,
+         "bloom": (*sizing, blob_rows), "flush_every": 4},
+        {"family": BLOOM_FAMILY, "bloom": (*sizing, blob_rows), "flush_every": 4},
+    ]
+    for legacy in stale:
+        tiers.blob_table.overwrite_local(
+            [{"pkey": 0, "words": [-1] * (tiers.bloom.m // 64)}], WORDS_SCHEMA
+        )
+        with open(ck, "wb") as f:
+            pickle.dump(legacy, f)
+        loaded = TableSeenTiers.load(ck, path)
+        assert loaded.flushed_round == 0, legacy  # hot slice covers all
+        assert (loaded.bloom.p, loaded.bloom.m, loaded.bloom.k) == sizing
+        # stale bits discarded
+        assert loaded.blob_table.read(spark, schema=WORDS_SCHEMA).count() == 0
+
+
+def test_legacy_unaligned_checkpoint_loads_and_flushes(spark, tmp_path):
+    """A checkpoint from before the blocked family recorded an m that is
+    64- but not 512-aligned. Resetting it must rebuild the sizing through
+    the constructor (which pads m to whole 512-bit blocks) — restoring m
+    raw made the next flush fail in ``bloom_indices``."""
+    from web_crawler_spark.operators.membership import TableSeenTiers
+    from web_crawler_spark.schemas import SEEN
+    from web_crawler_spark.sources.lake import SnapshotTable
+
+    path = str(tmp_path / "bloom")
+    ck = str(tmp_path / "tiers.pkl")
+    with open(ck, "wb") as f:
+        pickle.dump(
+            {
+                "kind": "table", "family": "xr2", "layout": "words",
+                "sizing": (4, 1088, 10), "expected_keys": 1024,
+                "flushed_round": 3, "flush_every": 1,
+                "table_path": path, "table_sid": None,
+            },
+            f,
+        )
+    tiers = TableSeenTiers.load(ck, path)
+    assert tiers.bloom.m % 512 == 0 and tiers.bloom.m >= 1088
+    assert (tiers.bloom.p, tiers.bloom.k, tiers.flushed_round) == (4, 10, 0)
+
+    seen_t = SnapshotTable(str(tmp_path / "seen"), stats_cols=["settled_round"])
+    keys = spark.range(200).select(
+        F.xxhash64(F.col("id")).alias("url_hash"),
+        F.concat(F.lit("https://h/"), F.col("id").cast("string")).alias("url"),
+        F.lit(4).cast("int").alias("settled_round"),
+    )
+    seen_t.overwrite(keys.select([f.name for f in SEEN.fields]))
+    tiers.end_round(4, seen_t, spark)  # the flush that used to raise
+    assert tiers.flushed_round == 4
+    probed = tiers.probe(keys.select("url_hash"), spark, seen_t)
+    assert probed.filter(~F.col("might_contain")).count() == 0
+
+
+def test_words_probe_rejects_misaligned_m(spark):
+    """``m`` that is not a whole number of 512-bit blocks fails loudly at
+    the probe's entry, as the numpy side does — never as silent false
+    negatives from a mis-sized block index."""
+    words = spark.createDataFrame([], schema=WORDS_SCHEMA)
+    cand = spark.range(10).selectExpr("xxhash64(id) AS url_hash")
+    with pytest.raises(ValueError, match="512"):
+        probe_words_joined(cand, words, m=1088, k=10, p=4)
 
 
 def test_derived_partitions_cap_blob_size_at_design_point(tmp_path):
@@ -271,7 +226,7 @@ def test_derived_partitions_cap_blob_size_at_design_point(tmp_path):
     tiers.init_table()
     ck = str(tmp_path / "tiers.pkl")
     tiers.dump(ck)
-    loaded = TableSeenTiers.load(ck)
+    loaded = TableSeenTiers.load(ck, str(tmp_path / "bloom"))
     assert (loaded.bloom.p, loaded.bloom.m, loaded.bloom.k) == (bf.p, bf.m, bf.k)
     # small filters keep the 16-partition floor (probe parallelism never
     # collapses), exactly the previous default

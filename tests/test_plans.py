@@ -109,31 +109,6 @@ def test_round3_operators_avoid_antipatterns(spark):
     assert "BroadcastHashJoin" in _plan(joined)
 
 
-def test_distributed_tier_probe_plan_is_broadcast_and_arrow(spark, tmp_path):
-    """DistributedSeenTiers.probe: hot tier joins by broadcast (no shuffle
-    of the probe side) and the bloom test is one Arrow-batched pass."""
-    from pyspark.sql import functions as F
-
-    from web_crawler_spark.operators.membership import DistributedSeenTiers
-    from web_crawler_spark.schemas import SEEN
-    from web_crawler_spark.sources.lake import SnapshotTable
-
-    seen = SnapshotTable(str(tmp_path / "seen"), stats_cols=["settled_round"])
-    seen.overwrite(
-        spark.range(100).select(
-            F.xxhash64("id").alias("url_hash"),
-            F.concat(F.lit("https://h/"), F.col("id").cast("string")).alias("url"),
-            F.lit(1).cast("int").alias("settled_round"),
-        )
-    )
-    tiers = DistributedSeenTiers(expected_keys=1 << 12, bloom_partitions=8)
-    probe = spark.range(50).select(F.xxhash64("id").alias("url_hash"))
-    p = _plan(tiers.probe(probe, spark, seen, 1))
-    assert "BroadcastHashJoin" in p
-    assert "ArrowEvalPython" in p          # the bloom pandas-UDF pass
-    assert "BatchEvalPython" not in p      # never row-at-a-time Python
-
-
 def test_table_tier_probe_plan_is_jvm_side_join(spark, tmp_path):
     """TableSeenTiers.probe: the bloom test is an equi-join to the words
     table plus k getbit column expressions — entirely JVM-side (no Python
@@ -157,7 +132,7 @@ def test_table_tier_probe_plan_is_jvm_side_join(spark, tmp_path):
     )
     tiers.init_table()
     probe = spark.range(50).select(F.xxhash64("id").alias("url_hash"))
-    p = _plan(tiers.probe(probe, spark, seen, 1))
+    p = _plan(tiers.probe(probe, spark, seen))
     assert "getbit" in p                    # the k bit tests, in codegen
     assert "FlatMapCoGroupsInPandas" not in p  # probe moved JVM-side
     assert "ArrowEvalPython" not in p       # zero Python in this path

@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) over the pure-Python cores the engine's
-determinism rests on: hashing parity, membership structures, canonicalizer
+determinism rests on: hashing parity, the Bloom filter, canonicalizer
 semantics. No SparkSession needed — these run fast and wide."""
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from web_crawler_spark.functions.urls import (
     py_is_valid_url,
 )
 from web_crawler_spark.operators.bloom import PartitionedBloom
-from web_crawler_spark.operators.cuckoo import CuckooFilter
 
 
 @given(st.text(max_size=200))
@@ -35,21 +34,6 @@ def test_bloom_never_false_negative(keys):
     bf = PartitionedBloom.sized_for(expected_keys=max(len(keys), 16), n_partitions=4)
     bf.add_hashes(keys)
     assert bf.might_contain(np.asarray(keys, dtype=np.int64)).all()
-
-
-@given(st.lists(st.integers(min_value=0, max_value=1 << 60), min_size=1, max_size=500, unique=True))
-@settings(max_examples=50, deadline=None)
-def test_cuckoo_insert_contains_delete(keys):
-    cf = CuckooFilter(n_buckets=1 << 9)  # 2048 slots >> 500 keys
-    inserted = [h for h in keys if cf.insert(h)]
-    assert inserted == list(keys)  # no overflow at this load
-    for h in inserted:
-        assert cf.contains(h)
-    batch = cf.contains_batch(np.asarray(inserted, dtype=np.int64))
-    assert batch.all()
-    for h in inserted:
-        assert cf.delete(h)
-    assert cf.count == 0
 
 
 @given(st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=80))

@@ -185,3 +185,27 @@ def test_trap_quarantine_in_crawl_round(spark, tmp_path_factory):
     ]
     run.close()
     run2.close()
+
+
+def test_start_drops_prefetched_trap_rows(spark, tmp_path_factory):
+    """start() begins a new history: trap rows prefetched for the next
+    round of an earlier crawl on the same object must not carry over —
+    consumed by round 1, they would quarantine hosts for good."""
+    from web_crawler_spark.plans.round import CrawlConfig, CrawlRun
+    from web_crawler_spark.sources.fixtures import generate_site, load_fixture
+    from web_crawler_spark.sources.seeds import read_seeds
+
+    d = str(tmp_path_factory.mktemp("restart-site"))
+    generate_site(d, n_pages=20, n_hosts=2, n_seeds=2)
+    run = CrawlRun(
+        spark,
+        str(tmp_path_factory.mktemp("restart-run")),
+        urls=load_fixture(spark, d, "urls"),
+        links=load_fixture(spark, d, "links"),
+        pages=load_fixture(spark, d, "pages"),
+        robots=load_fixture(spark, d, "robots"),
+        config=CrawlConfig(trap_detection=True),
+    )
+    run._next_traps = (1, [{"host": "stale.example", "flagged_round": 1}])
+    run.start(read_seeds(spark, f"{d}/seeds.csv"))
+    assert run._next_traps is None

@@ -7,8 +7,7 @@ deterministic tie-break ``(priority DESC, url_hash ASC)`` is identical between
 the Spark engine and the Python reference — verified by
 tests/test_hashing.py against live Spark output.
 
-Also: splittable hash family for the partitioned Bloom filter, and 64-bit
-mixers for minhash permutations.
+Also: the splittable hash family for the partitioned Bloom filter.
 """
 
 from __future__ import annotations
@@ -169,15 +168,3 @@ def bloom_indices(h: np.ndarray, m: int, k: int):
         yield (base + ((h1 ^ rotated(r)) & np.uint64(BLOOM_BLOCK_BITS - 1))).astype(
             np.int64
         )
-
-
-def mix64(h: np.ndarray, seed: int) -> np.ndarray:
-    """One cheap invertible 64-bit mix keyed by ``seed`` — the minhash
-    'permutation' family applied to pre-hashed shingles (uint64 in/out)."""
-    x = h.astype(np.uint64) ^ np.uint64(seed * 0x9E3779B97F4A7C15 & _MASK)
-    x ^= x >> np.uint64(30)
-    x = x * np.uint64(0xBF58476D1CE4E5B9)
-    x ^= x >> np.uint64(27)
-    x = x * np.uint64(0x94D049BB133111EB)
-    x ^= x >> np.uint64(31)
-    return x

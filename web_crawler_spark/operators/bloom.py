@@ -6,12 +6,13 @@ candidate set against a 10^10-row build side. The Bloom tier shrinks that:
 
 - One Bloom blob per hash-range partition: pkey = pmod(url_hash, P).
   At 14 bits/key and 10^10 keys the filter is ~17.5 GB *total*, but each of
-  P=1024 partitions is ~17 MB — executor-memory sized, storable as binary
-  blobs in a snapshot table, mergeable by OR.
-- Probe is co-partitioned: candidates are grouped by pkey and each group is
-  tested against *its own* blob via ``applyInPandas`` (Arrow batches, numpy
-  bit tests) — no task ever needs the whole filter, so the layout survives a
-  1000-executor cluster unchanged.
+  P=1024 partitions is ~17 MB — executor-memory sized, stored as
+  (pkey, words array<long>) rows in a snapshot table, mergeable by OR.
+- Probe is an equi-join on pkey: each candidate meets *its own* blob row and
+  the k bit tests run as column expressions (``probe_words_joined``) — no
+  task ever needs the whole filter, so the layout survives a 1000-executor
+  cluster unchanged. The numpy ``add_hashes``/``might_contain`` pair is the
+  reference the JVM probe and the oracle are checked against.
 - **Exactness never depends on the filter** (north rule): might_contain=False
   rows are definite negatives and skip the exact anti-join; positives (real
   or false) are confirmed against the exact seen table. False-positive rate
@@ -35,29 +36,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
-    BooleanType,
     IntegerType,
     LongType,
     StructField,
     StructType,
 )
 
-from ..functions.hashing import bloom_indices, bloom_rotations
-
-BLOB_SCHEMA = StructType(
-    [
-        StructField("pkey", IntegerType(), False),
-        StructField("bits", BinaryType(), False),
-    ]
-)
-
-_PROBE_SCHEMA = StructType(
-    [
-        StructField("url_hash", LongType(), False),
-        StructField("might_contain", BooleanType(), False),
-    ]
-)
+from ..functions.hashing import BLOOM_BLOCK_BITS, bloom_indices, bloom_rotations
 
 
 def _set_bits(bits: np.ndarray, hashes: np.ndarray, m: int, k: int) -> None:
@@ -86,10 +71,6 @@ class PartitionedBloom:
         self.m = bits_per_partition
         self.k = n_hashes
         self.blobs: dict[int, np.ndarray] = {}
-        # probe broadcast reuse (republished only when blobs change)
-        self._version = 0
-        self._bc = None
-        self._bc_version = -1
 
     # blob sizing bounds for ``sized_for``: target ≤ 2^28 bits (32 MiB)
     # per partition when deriving P, hard-fail past 2^29 bits (64 MiB) —
@@ -141,7 +122,6 @@ class PartitionedBloom:
     # -- driver-side (small batches, oracle parity, tests) ----------------
 
     def add_hashes(self, hashes: np.ndarray | list[int]) -> None:
-        self._version += 1
         h = np.asarray(hashes, dtype=np.int64)
         pk = (h % self.p + self.p) % self.p
         for key in np.unique(pk):
@@ -160,89 +140,6 @@ class PartitionedBloom:
             out[sel] = _test_bits(blob, h[sel], self.m, self.k)
         return out
 
-    # -- distributed build / probe ----------------------------------------
-
-    def build_from(self, df: DataFrame, hash_col: str = "url_hash") -> None:
-        """Distributed build: one applyInPandas task per hash-range partition
-        emits its blob; blobs OR-merge into the current filter."""
-        m, k, p = self.m, self.k, self.p
-
-        def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            bits = np.zeros(m // 8, dtype=np.uint8)
-            _set_bits(bits, pdf["h"].to_numpy(np.int64), m, k)
-            return pd.DataFrame({"pkey": [int(pdf["pkey"].iloc[0])], "bits": [bits.tobytes()]})
-
-        rows = (
-            df.select(
-                F.col(hash_col).alias("h"),
-                F.pmod(F.col(hash_col), F.lit(p)).cast("int").alias("pkey"),
-            )
-            .groupBy("pkey")
-            .applyInPandas(build_group, BLOB_SCHEMA)
-            .collect()
-        )
-        self._version += 1
-        for r in rows:
-            blob = np.frombuffer(r.bits, dtype=np.uint8).copy()
-            if r.pkey in self.blobs:
-                self.blobs[r.pkey] |= blob
-            else:
-                self.blobs[r.pkey] = blob
-
-    def probe(self, df: DataFrame, hash_col: str = "url_hash") -> DataFrame:
-        """Attach a ``might_contain`` column, co-partitioned by pkey.
-
-        Sandbox-scale implementation broadcasts the blob dict (a few MB); the
-        blobs-as-table + cogroup variant for cluster scale is the same grouped
-        computation with the blob joined in by pkey instead of broadcast.
-        """
-        m, k, p = self.m, self.k, self.p
-        spark = df.sparkSession
-        if self._bc is None or self._bc_version != self._version:
-            if self._bc is not None:
-                try:
-                    self._bc.unpersist(blocking=False)
-                except Exception:  # noqa: BLE001 — best-effort cleanup
-                    pass
-            self._bc = spark.sparkContext.broadcast(
-                {key: blob.tobytes() for key, blob in self.blobs.items()}
-            )
-            self._bc_version = self._version
-        bc = self._bc
-
-        @F.pandas_udf(BooleanType())
-        def _probe(h: pd.Series) -> pd.Series:
-            hv = h.to_numpy(np.int64)
-            pk = (hv % p + p) % p
-            out = np.zeros(len(hv), dtype=bool)
-            blobs = bc.value
-            for key in np.unique(pk):
-                raw = blobs.get(int(key))
-                if raw is None:
-                    continue
-                sel = pk == key
-                out[sel] = _test_bits(
-                    np.frombuffer(raw, dtype=np.uint8), hv[sel], m, k
-                )
-            return pd.Series(out)
-
-        return df.withColumn("might_contain", _probe(F.col(hash_col)))
-
-    # -- persistence (resume) ----------------------------------------------
-
-    def to_rows(self) -> list[tuple[int, bytes]]:
-        return [(key, blob.tobytes()) for key, blob in sorted(self.blobs.items())]
-
-    @classmethod
-    def from_rows(
-        cls, rows, n_partitions: int, bits_per_partition: int, n_hashes: int
-    ) -> "PartitionedBloom":
-        bf = cls(n_partitions, bits_per_partition, n_hashes)
-        bf._version += 1
-        for key, raw in rows:
-            bf.blobs[int(key)] = np.frombuffer(raw, dtype=np.uint8).copy()
-        return bf
-
     def fp_rate(self, n_keys: int) -> float:
         """Theoretical false-positive rate at n_keys total inserted keys."""
         n_per = n_keys / self.p
@@ -250,103 +147,14 @@ class PartitionedBloom:
 
 
 # ---------------------------------------------------------------------------
-# Blobs-as-a-table variants — the 10^10 design point, where the filter
-# (~17.5 GB at 14 bits/key) fits neither the driver nor a broadcast. The
-# blobs live as (pkey, bits) rows in a snapshot table; probe and flush are
-# cogrouped per-partition tasks, so no process ever holds more than its own
-# partition's ~17 MB blob and the driver sees zero blob bytes.
-# ---------------------------------------------------------------------------
-
-
-def probe_cogrouped(
-    df: DataFrame,
-    blobs_df: DataFrame,
-    *,
-    m: int,
-    k: int,
-    p: int,
-    hash_col: str = "url_hash",
-) -> DataFrame:
-    """Attach ``might_contain`` by cogrouping candidates with their blob row.
-
-    Same answer as ``PartitionedBloom.probe`` (pinned by tests), different
-    movement: candidates shuffle by pkey (their natural hash-range key) and
-    meet exactly one blob row per group — a partition with no blob row yet
-    is a definite negative. All candidate columns pass through."""
-    out_schema = StructType(
-        df.schema.fields + [StructField("might_contain", BooleanType(), False)]
-    )
-    cols = list(df.columns)
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        res = left[cols]
-        if len(left) == 0:
-            return res.assign(might_contain=np.zeros(0, dtype=bool))
-        if len(right) == 0:
-            return res.assign(might_contain=False)
-        bits = np.frombuffer(bytes(right["bits"].iloc[0]), dtype=np.uint8)
-        hv = left[hash_col].to_numpy(np.int64)
-        return res.assign(might_contain=_test_bits(bits, hv, m, k))
-
-    cand = df.withColumn(
-        "__pkey", F.pmod(F.col(hash_col), F.lit(p)).cast("int")
-    )
-    return (
-        cand.groupBy("__pkey")
-        .cogroup(blobs_df.groupBy("pkey"))
-        .applyInPandas(fn, out_schema)
-    )
-
-
-def or_merge_blobs(
-    new_keys: DataFrame,
-    blobs_df: DataFrame,
-    *,
-    m: int,
-    k: int,
-    p: int,
-    hash_col: str = "url_hash",
-) -> DataFrame:
-    """The distributed flush: OR the bits of ``new_keys`` into the existing
-    blob rows, emitting the merged (pkey, bits) table — one task per touched
-    partition, O(P) small rows out, zero driver traffic. Partitions with no
-    new keys pass their blob through unchanged; partitions with no blob yet
-    are built fresh."""
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(left):
-            pkey = int(left["__pkey"].iloc[0])
-        else:
-            pkey = int(right["pkey"].iloc[0])
-        bits = np.zeros(m // 8, dtype=np.uint8)
-        if len(right):
-            bits |= np.frombuffer(bytes(right["bits"].iloc[0]), dtype=np.uint8)
-        if len(left):
-            _set_bits(bits, left["h"].to_numpy(np.int64), m, k)
-        return pd.DataFrame({"pkey": [pkey], "bits": [bits.tobytes()]})
-
-    keys = new_keys.select(
-        F.col(hash_col).alias("h"),
-        F.pmod(F.col(hash_col), F.lit(p)).cast("int").alias("__pkey"),
-    )
-    return (
-        keys.groupBy("__pkey")
-        .cogroup(blobs_df.groupBy("pkey"))
-        .applyInPandas(fn, BLOB_SCHEMA)
-    )
-
-
-# ---------------------------------------------------------------------------
 # Words layout — blobs as (pkey, words array<long>) so the probe is a plain
 # equi-join + bit-test COLUMN EXPRESSION, fully JVM-side in whole-stage
-# codegen. This is the production probe for the table tier: the cogrouped
-# Arrow probe above pays ~µs/row to round-trip every candidate through a
-# Python worker, a linear tax that never amortizes; here candidates never
-# leave the JVM. Catalyst picks the join strategy by size — broadcast while
-# the filter is MB-sized, sort-merge on pkey at the 10^10 design point where
-# the blob table is ~17.5 GB (the same data movement as the cogroup, minus
-# the Python round-trip). Word j of a partition's words equals the
-# little-endian int64 view of bytes [8j, 8j+8) of its binary blob.
+# codegen — candidates never leave the JVM (an Arrow probe pays ~µs/row to
+# round-trip every candidate through a Python worker, a linear tax that
+# never amortizes). Catalyst picks the join strategy by size — broadcast
+# while the filter is MB-sized, sort-merge on pkey at the 10^10 design point
+# where the blob table is ~17.5 GB. Word j of a partition's words equals the
+# little-endian int64 view of bytes [8j, 8j+8) of its numpy blob.
 # ---------------------------------------------------------------------------
 
 WORDS_SCHEMA = StructType(
@@ -376,9 +184,10 @@ def or_merge_words(
     p: int,
     hash_col: str = "url_hash",
 ) -> DataFrame:
-    """``or_merge_blobs`` for the words layout: OR ``new_keys`` into the
-    existing (pkey, words) rows — one task per touched partition, O(P) small
-    rows out, zero driver traffic."""
+    """The distributed flush: OR the bits of ``new_keys`` into the existing
+    (pkey, words) rows — one task per touched partition, O(P) small rows
+    out, zero driver traffic. Partitions with no new keys pass their words
+    through unchanged; partitions with no row yet are built fresh."""
 
     def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left):
@@ -403,69 +212,6 @@ def or_merge_words(
     )
 
 
-def blobs_to_words(blobs_df: DataFrame) -> DataFrame:
-    """One-shot layout migration: (pkey, bits binary) → (pkey, words)."""
-
-    def fn(it):
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "pkey": pdf["pkey"].astype("int32"),
-                    "words": [
-                        _bits_to_words(np.frombuffer(bytes(b), dtype=np.uint8))
-                        for b in pdf["bits"]
-                    ],
-                }
-            )
-
-    return blobs_df.mapInPandas(fn, WORDS_SCHEMA)
-
-
-def might_contain_expr(hash_col, words_col, *, m: int, k: int):
-    """The k-probe Bloom test as a pure column expression — the JVM twin of
-    ``_test_bits`` (term-for-term mirror of ``hashing.bloom_indices``).
-
-    ANSI-safe by construction: xor / logical shifts / rotate / pmod only
-    (the family is multiplication-free for exactly this reason). The probe
-    value is masked to 63 bits before the mod so ONE pmod of a non-negative
-    long gives the family's index — critically, each probe references its
-    ``g`` subtree exactly once. The previous signed-pmod + ``when(g<0)``
-    sign correction referenced ``g`` twice per probe, and through Spark's
-    generated code that duplication measured 20-25× slower at k=10 (the
-    combined expression crosses method-split boundaries, after which common
-    subexpressions are re-evaluated per reference and JIT inlining breaks).
-    A NULL words column (no blob row for the partition yet) is a definite
-    negative.
-    """
-    h = F.col(hash_col) if isinstance(hash_col, str) else hash_col
-    w = F.col(words_col) if isinstance(words_col, str) else words_col
-    x1 = h.bitwiseXOR(F.shiftleft(h, 13))
-    x2 = x1.bitwiseXOR(F.shiftrightunsigned(x1, 7))
-    h2 = x2.bitwiseXOR(F.shiftleft(x2, 17))
-    sign_mask = (1 << 63) - 1
-    rots = bloom_rotations(k + 1)
-
-    def rotated(r):
-        return (
-            h2
-            if r == 0
-            else F.shiftleft(h2, r).bitwiseOR(F.shiftrightunsigned(h2, 64 - r))
-        )
-
-    # blocked family: rotation 0 picks the 512-bit block, rotations 1..k
-    # the in-block bit positions (hashing.bloom_indices, term for term)
-    base = F.pmod(
-        h.bitwiseXOR(rotated(rots[0])).bitwiseAND(F.lit(sign_mask)),
-        F.lit(m // 512),
-    ) * F.lit(512)
-    test = F.lit(True)
-    for r in rots[1:]:
-        idx = base + h.bitwiseXOR(rotated(r)).bitwiseAND(F.lit(511))
-        word = F.element_at(w, F.shiftrightunsigned(idx, 6).cast("int") + 1)
-        test = test & (F.getbit(word, idx.bitwiseAND(F.lit(63))) == 1)
-    return F.when(w.isNull(), F.lit(False)).otherwise(test)
-
-
 def probe_words_joined(
     df: DataFrame,
     words_df: DataFrame,
@@ -477,8 +223,13 @@ def probe_words_joined(
 ) -> DataFrame:
     """Attach ``might_contain`` by equi-joining candidates to their blob row
     on pkey and evaluating the k bit tests as column expressions. Same
-    answer as ``PartitionedBloom.probe`` / ``probe_cogrouped`` (pinned by
-    tests); zero Python in the path.
+    answer as the numpy ``PartitionedBloom.might_contain`` (pinned by
+    tests); zero Python in the path. A partition with no blob row yet is a
+    definite negative.
+
+    ``m`` must be a whole number of 512-bit blocks, as ``bloom_indices``
+    requires: ``m // 512`` below would otherwise silently pick blocks the
+    writer never used, i.e. false negatives.
 
     Plan shape matters here, twice over:
 
@@ -498,6 +249,8 @@ def probe_words_joined(
       values through the candidate exchange — ~90 GB of shuffle at 10^9
       rows that filled the sandbox disk. Columns derivable from the join
       key must be computed after the exchange, never carried through it."""
+    if m % BLOOM_BLOCK_BITS:
+        raise ValueError(f"blocked bloom needs m % {BLOOM_BLOCK_BITS} == 0, got {m}")
     blobs = words_df.select(
         F.col("pkey").alias("__bpkey"), F.col("words").alias("__words")
     )

@@ -3,8 +3,8 @@
 - first_wins:      D1/D2 — the reference's insertion-order `seen_urls` set
                    (crawler/link_extractor.py:94,109-113) as a window dedupe.
 - anti_join_seen:  D4/J3 — frontier ∖ seen on url_hash (exactness layer; the
-                   Bloom/cuckoo tiers in bloom.py/cuckoo.py are prefilters
-                   only and never affect correctness).
+                   Bloom tier in bloom.py/membership.py is a prefilter
+                   only and never affects correctness).
 - collision_suffix: D3 — per-base filename counters
                    (image_downloader.py:183-192).
 

@@ -1,10 +1,16 @@
-"""The two-tier URL-seen membership stack (D4 at 10^10 scale).
+"""The URL-seen membership tier (D4 at 10^10 scale).
 
-Combines the partitioned Bloom filter (bloom.py — cold tier, append-only,
-periodically absorbs the hot tier) with the cuckoo filter (cuckoo.py — hot
-tier for recently settled URLs, supports deletes) behind one probe:
+One tier, two halves behind one probe:
 
-    might_contain(h) = bloom.might_contain(h) OR hot.contains(h)
+    might_contain(h) = bloom-hit(h) OR hot-hit(h)
+
+- **cold**: the partitioned Bloom filter (bloom.py), stored as (pkey, words)
+  rows in a snapshot table, append-only, absorbing the hot half every
+  ``flush_every`` rounds;
+- **hot**: *derived*, not a data structure — the exact seen table's rows
+  settled after the last flush watermark (a stats-pruned snapshot scan
+  reads only the post-watermark commits). It is an exact sliding window
+  over ``settled_round``, so deletes and exactness cost nothing.
 
 Routing per round (plans/round.py):
     definite negatives (¬might_contain)  → schedulable immediately, SKIP the
@@ -13,88 +19,78 @@ Routing per round (plans/round.py):
                                            table (anti-join on a shrunken
                                            probe side) — false-positive
                                            rescue keeps the seen set EXACT
-
-Two implementations share this contract:
-
-- ``DistributedSeenTiers`` (the default, the scale path): NO per-key driver
-  state. The hot tier is *derived* — it IS the exact seen table's rows with
-  ``settled_round`` past the last flush watermark (a stats-pruned snapshot
-  scan reads only the post-watermark commits), joined against the probe
-  side executor-side. Flushes rebuild the Bloom blobs distributed via
-  ``PartitionedBloom.build_from`` (one applyInPandas task per hash-range
-  partition); only the P blob rows ever reach the driver — O(P), not
-  O(batch). This removes the flagship loop's only driver-side bottleneck
-  (VERDICT r1 #1).
-- ``SeenTiers`` (legacy, driver-sized): cuckoo-filter hot tier maintained on
-  the driver. Kept for the cuckoo probe/delete semantics and small
-  single-process deployments; the per-round settled batch is bounded by
-  Σ host budgets, so inserts are O(batch) — fine at sandbox scale, a
-  driver bottleneck at millions of fetches per round.
 """
 
 from __future__ import annotations
 
 import pickle
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
-from .bloom import PartitionedBloom, _test_bits
-from .cuckoo import CuckooFilter
-from ..functions.hashing import mix64
+from .bloom import WORDS_SCHEMA, PartitionedBloom, or_merge_words, probe_words_joined
 
 DEFAULT_FLUSH_EVERY = 4
 
 
-class DistributedSeenTiers:
-    """Bloom cold tier + derived hot tier, with zero per-key driver state.
+class TableSeenTiers:
+    """Bloom blobs as a snapshot TABLE plus the derived hot tier.
 
-    The hot tier is not a data structure at all: it is the slice of the
-    exact seen table settled after the last Bloom flush
-    (``settled_round > flushed_round``), read via a stats-pruned snapshot
-    scan and joined against the probe side. Correctness framing is identical
-    to ``SeenTiers``: might_contain = bloom-hit OR hot-hit; definite
-    negatives skip the exact anti-join, positives are confirmed against the
-    exact table, so the final seen set is always EXACT.
+    At 10^10 keys / 14 bits the filter is ~17.5 GB — too big for the driver
+    or a broadcast — so the blobs are (pkey, words) rows in a
+    ``SnapshotTable`` and no per-key state lives on the driver:
 
-    Scale notes:
-    - ``probe`` broadcasts the hot slice (bounded by flush_every · Σ host
-      budgets — politeness caps it). If a deployment's budgets outgrow the
-      broadcast threshold, drop the ``F.broadcast`` hint and Spark falls
-      back to a shuffle join on url_hash — still executor-side.
-    - ``end_round`` flushes every ``flush_every`` rounds by a distributed
-      ``PartitionedBloom.build_from`` over ONLY the post-watermark commits
-      (snapshot min/max stats prune the rest); the driver receives P blob
-      rows, nothing else.
+    - **probe**: candidates equi-join their blob row on pkey and the k bit
+      tests evaluate as COLUMN EXPRESSIONS (``bloom.probe_words_joined``) —
+      fully JVM-side in whole-stage codegen. Catalyst broadcasts the blob
+      table while it is MB-sized and falls back to a sort-merge join on
+      pkey at the 10^10 point. The hot slice joins by broadcast: it is
+      bounded by flush_every · Σ host budgets (politeness caps it).
+    - **flush**: ``bloom.or_merge_words`` ORs the post-watermark seen slice
+      into the blob rows and overwrites the table — one distributed job,
+      zero blob bytes through the driver.
+    - **checkpoint/resume**: ``dump`` records only sizing + watermark + the
+      blob table's snapshot id; ``load`` rolls the table back to it, so a
+      crash between a flush and the round checkpoint discards the
+      uncheckpointed blob commit exactly like the six row tables.
+
+    Exactness: might_contain=False skips the exact anti-join, positives are
+    confirmed against the exact seen table, so the seen set stays EXACT.
     """
 
-    kind = "distributed"
+    kind = "table"
 
     def __init__(
         self,
+        table_path: str,
         expected_keys: int = 1 << 20,
         *,
         bloom_partitions: int | None = None,
         flush_every: int = DEFAULT_FLUSH_EVERY,
     ):
+        from ..sources.lake import SnapshotTable
+
         # bloom_partitions=None derives P from expected_keys so blob size
         # stays ≤32 MiB at ANY design point (10^10 keys ⇒ P=1024/~17 MB
         # blobs); an explicit P that would exceed 64 MiB blobs raises at
-        # construction (r4 VERDICT Wrong #2)
+        # construction (r4 VERDICT Wrong #2). The driver holds only the
+        # sizing: ``self.bloom.blobs`` stays empty.
         self.bloom = PartitionedBloom.sized_for(
             expected_keys=expected_keys, n_partitions=bloom_partitions
         )
         self.flush_every = flush_every
         self.flushed_round = 0
+        self.blob_table = SnapshotTable(table_path)
 
-    # ------------------------------------------------------------------ state
+    def init_table(self) -> None:
+        """Fresh start: an empty blob table (no partitions have blobs yet —
+        every probe is a definite negative until the first flush)."""
+        self.blob_table.overwrite_local([], WORDS_SCHEMA)
 
-    def hot_slice(
-        self, spark, seen_table, current_round: int, hash_col: str = "url_hash"
-    ) -> DataFrame:
+    def _words_df(self, spark) -> DataFrame:
+        return self.blob_table.read(spark, schema=WORDS_SCHEMA)
+
+    def hot_slice(self, spark, seen_table, hash_col: str = "url_hash") -> DataFrame:
         """The derived hot tier: seen rows settled after the flush watermark.
         The snapshot scan prunes commits entirely below it via min/max
         stats; the residual filter keeps the slice exact within kept dirs."""
@@ -110,147 +106,12 @@ class DistributedSeenTiers:
         )
 
     def end_round(self, current_round: int, seen_table, spark) -> None:
-        """Absorb the hot slice into the Bloom blobs every flush_every
-        rounds (distributed build; O(P) driver traffic)."""
+        """Absorb the hot slice into the blob table every flush_every
+        rounds (one distributed OR-merge; no blob bytes via the driver)."""
         if current_round - self.flushed_round < self.flush_every:
             return
-        hot = self.hot_slice(spark, seen_table, current_round)
-        self.bloom.build_from(hot)
-        self.flushed_round = current_round
-
-    # ------------------------------------------------------------------ probe
-
-    def probe(
-        self, df: DataFrame, spark, seen_table, current_round: int,
-        hash_col: str = "url_hash",
-    ) -> DataFrame:
-        """Attach ``might_contain`` = bloom-hit OR hot-hit. The bloom test is
-        the existing Arrow pandas-UDF pass; the hot test is a broadcast
-        left join against the derived hot slice — both executor-side."""
-        hot = self.hot_slice(
-            spark, seen_table, current_round, hash_col=hash_col
-        ).withColumn("__hot", F.lit(True))
-        probed = self.bloom.probe(df, hash_col=hash_col)
-        return (
-            probed.join(F.broadcast(hot), hash_col, "left")
-            .withColumn(
-                "might_contain",
-                F.col("might_contain") | F.coalesce(F.col("__hot"), F.lit(False)),
-            )
-            .drop("__hot")
-        )
-
-    # ------------------------------------------------------------- persistence
-
-    def dump(self, path: str) -> None:
-        from ..functions.hashing import BLOOM_FAMILY
-
-        state = {
-            "kind": self.kind,
-            "family": BLOOM_FAMILY,
-            "bloom": (self.bloom.p, self.bloom.m, self.bloom.k, self.bloom.to_rows()),
-            "flushed_round": self.flushed_round,
-            "flush_every": self.flush_every,
-        }
-        with open(path, "wb") as f:
-            pickle.dump(state, f)
-
-    @classmethod
-    def load(cls, path: str) -> "DistributedSeenTiers":
-        from ..functions.hashing import BLOOM_FAMILY
-
-        with open(path, "rb") as f:
-            state = pickle.load(f)
-        p, m, k, rows = state["bloom"]
-        tiers = cls(flush_every=state["flush_every"], bloom_partitions=p)
-        if state.get("family") == BLOOM_FAMILY:
-            tiers.bloom = PartitionedBloom.from_rows(rows, p, m, k)
-            tiers.flushed_round = state["flushed_round"]
-        else:
-            # Checkpoint written under a different hash family: its bits are
-            # meaningless to the current probe and REUSING them would create
-            # false negatives (seen URLs re-scheduled — an exactness bug).
-            # Safe reset: empty filter + watermark 0 makes the derived hot
-            # tier (exact rows, settled_round >= 1) cover the ENTIRE seen
-            # set until the next flush rebuilds the blobs under the current
-            # family. Slower for a few rounds, never wrong.
-            tiers.bloom = PartitionedBloom(p, m, k)
-            tiers.flushed_round = 0
-        return tiers
-
-
-class TableSeenTiers(DistributedSeenTiers):
-    """Bloom blobs as a snapshot TABLE — the 10^10 design point.
-
-    ``DistributedSeenTiers`` still materializes the blob dict on the driver
-    and broadcasts it per probe; fine while the filter is MB-sized, but at
-    10^10 keys / 14 bits it is ~17.5 GB — too big for either. Here the blobs
-    are (pkey, bits) rows in a ``SnapshotTable``:
-
-    - **probe**: candidates equi-join their blob row on pkey and the k bit
-      tests evaluate as COLUMN EXPRESSIONS (``bloom.probe_words_joined``) —
-      fully JVM-side in whole-stage codegen, no Arrow round-trip of the
-      candidate set (the cogrouped Arrow probe paid a ~µs/row Python tax
-      that never amortizes). Blobs are stored as ``array<long>`` words;
-      Catalyst broadcasts the blob table while it is MB-sized and falls
-      back to a sort-merge join on pkey at the 10^10 point — the same data
-      movement as the cogroup, minus Python. The derived hot tier is
-      unchanged (politeness bounds it, so its broadcast join stays
-      legitimate at any scale).
-    - **flush**: ``bloom.or_merge_words`` ORs the post-watermark seen slice
-      into the blob rows and overwrites the table — one distributed job,
-      zero blob bytes through the driver.
-    - **checkpoint/resume**: ``dump`` records only sizing + watermark + the
-      blob table's snapshot id; ``load`` rolls the table back to it, so a
-      crash between a flush and the round checkpoint discards the
-      uncheckpointed blob commit exactly like the six row tables.
-
-    Exactness contract identical to the other tiers: might_contain=False
-    skips the exact anti-join, positives are confirmed against the exact
-    seen table.
-    """
-
-    kind = "table"
-
-    def __init__(
-        self,
-        table_path: str,
-        expected_keys: int = 1 << 20,
-        *,
-        bloom_partitions: int | None = None,
-        flush_every: int = DEFAULT_FLUSH_EVERY,
-    ):
-        super().__init__(
-            expected_keys,
-            bloom_partitions=bloom_partitions,
-            flush_every=flush_every,
-        )
-        from ..sources.lake import SnapshotTable
-
-        self.table_path = table_path
-        self.blob_table = SnapshotTable(table_path)
-        self.expected_keys = expected_keys
-
-    def init_table(self) -> None:
-        """Fresh start: an empty blob table (no partitions have blobs yet —
-        every probe is a definite negative until the first flush)."""
-        from .bloom import WORDS_SCHEMA
-
-        self.blob_table.overwrite_local([], WORDS_SCHEMA)
-
-    def _words_df(self, spark) -> DataFrame:
-        from .bloom import WORDS_SCHEMA
-
-        return self.blob_table.read(spark, schema=WORDS_SCHEMA)
-
-    def end_round(self, current_round: int, seen_table, spark) -> None:
-        from .bloom import or_merge_words
-
-        if current_round - self.flushed_round < self.flush_every:
-            return
-        hot = self.hot_slice(spark, seen_table, current_round)
         merged = or_merge_words(
-            hot,
+            self.hot_slice(spark, seen_table),
             self._words_df(spark),
             m=self.bloom.m,
             k=self.bloom.k,
@@ -260,14 +121,12 @@ class TableSeenTiers(DistributedSeenTiers):
         self.flushed_round = current_round
 
     def probe(
-        self, df: DataFrame, spark, seen_table, current_round: int,
-        hash_col: str = "url_hash",
+        self, df: DataFrame, spark, seen_table, hash_col: str = "url_hash"
     ) -> DataFrame:
-        from .bloom import probe_words_joined
-
-        hot = self.hot_slice(
-            spark, seen_table, current_round, hash_col=hash_col
-        ).withColumn("__hot", F.lit(True))
+        """Attach ``might_contain`` = bloom-hit OR hot-hit, executor-side."""
+        hot = self.hot_slice(spark, seen_table, hash_col=hash_col).withColumn(
+            "__hot", F.lit(True)
+        )
         probed = probe_words_joined(
             df,
             self._words_df(spark),
@@ -295,35 +154,33 @@ class TableSeenTiers(DistributedSeenTiers):
             "family": BLOOM_FAMILY,
             "layout": "words",
             "sizing": (self.bloom.p, self.bloom.m, self.bloom.k),
-            "expected_keys": self.expected_keys,
             "flushed_round": self.flushed_round,
             "flush_every": self.flush_every,
-            "table_path": self.table_path,
             "table_sid": self.blob_table.current_snapshot_id(),
         }
         with open(path, "wb") as f:
             pickle.dump(state, f)
 
     @classmethod
-    def load(cls, path: str) -> "TableSeenTiers":
+    def load(cls, path: str, table_path: str) -> "TableSeenTiers":
+        """Restore the tiers checkpointed at ``path`` over the blob table at
+        ``table_path``. Checkpoints of the removed tier kinds ('distributed',
+        'driver', kind-less) and of other hash families reset safely."""
         from ..functions.hashing import BLOOM_FAMILY
 
         with open(path, "rb") as f:
             state = pickle.load(f)
-        # construct with derived sizing, then restore the CHECKPOINTED
-        # sizing verbatim — the stored bits are only meaningful under the
-        # (p, m, k) they were written with, and a legacy checkpoint whose
-        # explicit P predates the blob-size guard must still resume (the
-        # guard applies to new constructions, not recorded state)
-        tiers = cls(
-            state["table_path"],
-            state["expected_keys"],
-            flush_every=state["flush_every"],
-        )
-        tiers.bloom.p = state["sizing"][0]
-        tiers.bloom.m, tiers.bloom.k = state["sizing"][1], state["sizing"][2]
+        tiers = cls(table_path, flush_every=state["flush_every"])
+        # restore the CHECKPOINTED sizing, not the derived one: the stored
+        # bits are only meaningful under the (p, m, k) they were written
+        # with, and a legacy checkpoint whose explicit P predates the
+        # blob-size guard must still resume. Rebuilding through the
+        # constructor re-pads a legacy m to whole 512-bit blocks.
+        sizing = state["sizing"] if "sizing" in state else state["bloom"][:3]
+        tiers.bloom = PartitionedBloom(*sizing)
         if (
-            state.get("family") == BLOOM_FAMILY
+            state.get("kind") == cls.kind
+            and state.get("family") == BLOOM_FAMILY
             and state.get("layout") == "words"
         ):
             tiers.flushed_round = state["flushed_round"]
@@ -332,210 +189,12 @@ class TableSeenTiers(DistributedSeenTiers):
                 # discard blob commits past the checkpoint (crash mid-round)
                 tiers.blob_table.rollback(sid)
         else:
-            # Blob table written under a different hash family or the legacy
-            # binary layout: reusing those bits would create false negatives
-            # (an exactness bug). Reset to an empty words table + watermark 0
-            # — the derived hot tier covers the whole seen set exactly until
-            # the next flush rebuilds the filter. Slower, never wrong.
+            # A different hash family, the legacy binary layout, or a tier
+            # kind whose blobs never lived in this table: reusing those bits
+            # would create false negatives (an exactness bug). Reset to an
+            # empty words table + watermark 0 — the derived hot tier covers
+            # the whole seen set exactly until the next flush rebuilds the
+            # filter. Slower, never wrong.
             tiers.init_table()
             tiers.flushed_round = 0
-        return tiers
-
-
-def load_tiers(path: str):
-    """Resume helper: dispatch on the persisted tier kind (checkpoints from
-    before the distributed tier default carried no kind → driver-sized)."""
-    with open(path, "rb") as f:
-        state = pickle.load(f)
-    if state.get("kind") == "table":
-        return TableSeenTiers.load(path)
-    if state.get("kind") == "distributed":
-        return DistributedSeenTiers.load(path)
-    return SeenTiers.load(path)
-
-
-class SeenTiers:
-    """Bloom cold tier + cuckoo hot tier with a single DataFrame probe."""
-
-    kind = "driver"
-
-    def __init__(
-        self,
-        expected_keys: int = 1 << 20,
-        *,
-        bloom_partitions: int | None = None,
-        hot_buckets: int = 1 << 12,
-        flush_every: int = DEFAULT_FLUSH_EVERY,
-    ):
-        self.bloom = PartitionedBloom.sized_for(
-            expected_keys=expected_keys, n_partitions=bloom_partitions
-        )
-        self.hot_buckets = hot_buckets
-        self.hot = CuckooFilter(hot_buckets)
-        self.flush_every = flush_every
-        self._pending: list[int] = []  # hot keys awaiting the next bloom flush
-        self._rounds_since_flush = 0
-        # probe broadcast reuse: republished only when the tier state changes
-        self._version = 0
-        self._bc = None
-        self._bc_version = -1
-
-    # ------------------------------------------------------------------ state
-
-    def add_settled(self, hashes: list[int]) -> None:
-        """Insert freshly settled url_hashes into the hot tier; on cuckoo
-        overflow flush immediately (correctness unaffected either way)."""
-        self._version += 1
-        overflow = False
-        for h in hashes:
-            self._pending.append(int(h))
-            if not self.hot.insert(int(h)):
-                overflow = True
-        if overflow:
-            self.flush()
-
-    def remove(self, hashes: list[int]) -> None:
-        """Drop re-enqueued URLs from the hot tier (the delete support Bloom
-        lacks). Keys already flushed into Bloom stay there — a stale Bloom
-        positive only routes the row through the exact confirm, it cannot
-        make the engine skip a URL that must be fetched again, because
-        'must fetch again' rows re-enter the frontier directly.
-
-        Implemented as a rebuild from the pending key list rather than a
-        raw cuckoo delete: deleting a key the filter doesn't hold (or whose
-        16-bit fingerprint collides with another hot key) can evict the
-        OTHER key's entry — a false negative that would let a seen URL skip
-        the exact anti-join. The pending list is bounded by
-        flush_every·batch, so the rebuild is O(pending).
-        """
-        self._version += 1
-        drop = {int(h) for h in hashes}
-        self._pending = [h for h in self._pending if h not in drop]
-        self.hot = CuckooFilter(self.hot_buckets)
-        for h in self._pending:
-            if not self.hot.insert(h):
-                self.flush()
-                break
-
-    def end_round(self) -> None:
-        self._rounds_since_flush += 1
-        if self._rounds_since_flush >= self.flush_every:
-            self.flush()
-
-    def flush(self) -> None:
-        """Absorb the hot tier into the Bloom blobs and reset it."""
-        self._version += 1
-        if self._pending:
-            self.bloom.add_hashes(np.asarray(self._pending, dtype=np.int64))
-        self._pending = []
-        self.hot = CuckooFilter(self.hot_buckets)
-        self._rounds_since_flush = 0
-
-    # ------------------------------------------------------------------ probe
-
-    def probe(self, df: DataFrame, hash_col: str = "url_hash") -> DataFrame:
-        """Attach ``might_contain`` = bloom-hit OR hot-hit (one Arrow pass).
-
-        Broadcasts the blob dict + the cuckoo table (both MB-sized); the
-        per-partition blob layout is preserved, so the cluster-scale variant
-        (blobs as a table cogrouped by pkey) is the same computation.
-        """
-        m, k, p = self.bloom.m, self.bloom.k, self.bloom.p
-        n_buckets, seed = self.hot.n, self.hot.seed
-        spark = df.sparkSession
-        # one broadcast per tier-state version, not per probe call — a long
-        # crawl would otherwise accumulate MB-scale stale broadcasts
-        if self._bc is None or self._bc_version != self._version:
-            if self._bc is not None:
-                try:
-                    self._bc.unpersist(blocking=False)
-                except Exception:  # noqa: BLE001 — best-effort cleanup
-                    pass
-            self._bc = spark.sparkContext.broadcast(
-                (
-                    {key: blob.tobytes() for key, blob in self.bloom.blobs.items()},
-                    self.hot.table.tobytes(),
-                    self.hot.victim,
-                )
-            )
-            self._bc_version = self._version
-        bc = self._bc
-
-        @F.pandas_udf(BooleanType())
-        def _probe(h: pd.Series) -> pd.Series:
-            blobs, hot_raw, victim = bc.value
-            hv = h.to_numpy(np.int64)
-            out = np.zeros(len(hv), dtype=bool)
-            # bloom tier
-            pk = (hv % p + p) % p
-            for key in np.unique(pk):
-                raw = blobs.get(int(key))
-                if raw is None:
-                    continue
-                sel = pk == key
-                out[sel] = _test_bits(np.frombuffer(raw, np.uint8), hv[sel], m, k)
-            # hot tier (vectorized cuckoo lookup against the broadcast table)
-            table = np.frombuffer(hot_raw, np.uint16).reshape(n_buckets, 4)
-            u = hv.astype(np.uint64)
-            mixed = mix64(u, seed)
-            fp = (mixed & np.uint64(0xFFFF)).astype(np.uint16)
-            fp[fp == 0] = 1
-            b1 = ((mixed >> np.uint64(16)) % np.uint64(n_buckets)).astype(np.int64)
-            tag = mix64(fp.astype(np.uint64), seed ^ 0x5BF0)
-            b2 = ((b1.astype(np.uint64) ^ tag) % np.uint64(n_buckets)).astype(np.int64)
-            out |= (table[b1] == fp[:, None]).any(axis=1)
-            out |= (table[b2] == fp[:, None]).any(axis=1)
-            if victim is not None:
-                vfp, vb = victim
-                out |= (fp == vfp) & ((b1 == vb) | (b2 == vb))
-            return pd.Series(out)
-
-        return df.withColumn("might_contain", _probe(F.col(hash_col)))
-
-    # ------------------------------------------------------------- persistence
-
-    def dump(self, path: str) -> None:
-        from ..functions.hashing import BLOOM_FAMILY
-
-        state = {
-            "kind": "driver",
-            "family": BLOOM_FAMILY,
-            "bloom": (self.bloom.p, self.bloom.m, self.bloom.k, self.bloom.to_rows()),
-            "hot_buckets": self.hot_buckets,
-            "hot_table": self.hot.table.tobytes(),
-            "hot_victim": self.hot.victim,
-            "hot_count": self.hot.count,
-            "pending": self._pending,
-            "rounds_since_flush": self._rounds_since_flush,
-            "flush_every": self.flush_every,
-        }
-        with open(path, "wb") as f:
-            pickle.dump(state, f)
-
-    @classmethod
-    def load(cls, path: str) -> "SeenTiers":
-        from ..functions.hashing import BLOOM_FAMILY
-
-        with open(path, "rb") as f:
-            state = pickle.load(f)
-        if state.get("family") != BLOOM_FAMILY:
-            # Unlike the distributed tiers, this driver-sized tier has no
-            # derived exact hot slice to fall back on — stale-family bits
-            # would silently drop seen URLs as definite negatives. Fail loud.
-            raise ValueError(
-                "seen-tiers checkpoint was written under bloom hash family "
-                f"{state.get('family')!r}; current family is {BLOOM_FAMILY!r}."
-                " Rebuild the tiers from the exact seen table."
-            )
-        p, m, k, rows = state["bloom"]
-        tiers = cls(flush_every=state["flush_every"], hot_buckets=state["hot_buckets"])
-        tiers.bloom = PartitionedBloom.from_rows(rows, p, m, k)
-        tiers.hot = CuckooFilter(state["hot_buckets"])
-        tiers.hot.table = (
-            np.frombuffer(state["hot_table"], np.uint16).reshape(tiers.hot.n, 4).copy()
-        )
-        tiers.hot.victim = state.get("hot_victim")
-        tiers.hot.count = state["hot_count"]
-        tiers._pending = list(state["pending"])
-        tiers._rounds_since_flush = state["rounds_since_flush"]
         return tiers

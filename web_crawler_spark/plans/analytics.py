@@ -2586,12 +2586,18 @@ FROM latest WHERE rn = 1 AND NOT deleted
 
 
 def q_bloom_prefilter_stats(spark, sf_dir):
-    """D4 scale tier: partitioned-Bloom membership prefilter. Build over the
-    orders keyspace (distributed applyInPandas blob build), probe a
-    half-overlapping key range. Oracle: a pure-numpy twin of the same blob
-    math — the counts (including the exact false-positive split) must
-    match bit-for-bit because the hash family and sizing are shared."""
-    from ..operators.bloom import PartitionedBloom
+    """D4 scale tier: partitioned-Bloom membership prefilter. Build the
+    words table over the orders keyspace (the tier's distributed OR-merge
+    flush), probe a half-overlapping key range with the JVM words probe.
+    Oracle: a pure-numpy twin of the same blob math — the counts (including
+    the exact false-positive split) must match bit-for-bit because the hash
+    family and sizing are shared."""
+    from ..operators.bloom import (
+        WORDS_SCHEMA,
+        PartitionedBloom,
+        or_merge_words,
+        probe_words_joined,
+    )
 
     _ensure_bloom_expected(sf_dir)
     o = t(spark, sf_dir, "orders").select(
@@ -2599,11 +2605,14 @@ def q_bloom_prefilter_stats(spark, sf_dir):
     )
     n_keys = o.count()
     bloom = PartitionedBloom.sized_for(expected_keys=max(n_keys, 1), n_partitions=16)
-    bloom.build_from(o)
+    sizing = dict(m=bloom.m, k=bloom.k, p=bloom.p)
+    words = or_merge_words(
+        o, spark.createDataFrame([], schema=WORDS_SCHEMA), **sizing
+    )
     probe = spark.range(0, 30000).select(
         F.col("id").alias("key"), F.xxhash64(F.col("id")).alias("url_hash")
     )
-    probed = bloom.probe(probe)
+    probed = probe_words_joined(probe, words, **sizing)
     return (
         probed.groupBy(F.col("might_contain").alias("maybe_seen"))
         .agg(F.count("*").alias("n"))

@@ -3,7 +3,7 @@
 Each round is one declarative DataFrame plan (SURVEY §7 minimum slice):
 
     frontier scan → best-discovery dedupe (first-wins window)
-      → exact seen anti-join (Bloom/cuckoo prefilter at scale)
+      → exact seen anti-join (Bloom words-table prefilter at scale)
       → robots broadcast-join filter
       → salted per-host budgeted window selection
       → deterministic fetch_seq total order
@@ -39,12 +39,7 @@ from ..functions.images import psnr_vs_reference_udf
 from ..operators import faults
 from ..operators.dedupe import anti_join_seen, first_wins
 from ..operators.errors import classify_fetch
-from ..operators.membership import (
-    DistributedSeenTiers,
-    SeenTiers,
-    TableSeenTiers,
-    load_tiers,
-)
+from ..operators.membership import TableSeenTiers
 from ..operators.politeness import (
     FETCH_SEQ_SAMPLE_MOD,
     assign_fetch_seq,
@@ -112,7 +107,6 @@ class CrawlConfig:
     # design point (10^10 keys ⇒ P=1024, ~17 MB blobs); an explicit value
     # that would give >64 MiB blobs raises at tier construction
     bloom_partitions: int | None = None
-    hot_buckets: int = 1 << 12
     flush_every: int = 4
     # frontier priority for discovered rows: 'depth' (reference band order)
     # or 'pagerank' — link-graph rank blended INTO the depth band
@@ -126,15 +120,8 @@ class CrawlConfig:
     # max(1, depth - age // priority_aging), replayed bit-for-bit by the
     # oracle crawler.
     priority_aging: int = 0
-    # False (default): DistributedSeenTiers — hot tier derived from the seen
-    # table, Bloom flushes via distributed build_from, zero per-key driver
-    # state. True: legacy driver-sized cuckoo hot tier (SeenTiers).
-    driver_hot_tier: bool = False
-    # explicit tier selection: 'distributed' | 'driver' | 'table'.
-    # None keeps the driver_hot_tier-derived default. 'table' stores the
-    # Bloom blobs in a snapshot table and probes/flushes them cogrouped —
-    # the configuration for filters too big for the driver or a broadcast
-    # (the 10^10 design point); byte-identical results, pinned by tests.
+    # single-valued: use_bloom always builds the words-table tier
+    # (TableSeenTiers at run_dir/bloom); None and 'table' mean the same
     tier_kind: str | None = None
     lineage_partitions: int = 16  # pkey strata for the per-partition lineage
     # frontier hygiene: quarantine hosts whose frontier URL population
@@ -145,6 +132,14 @@ class CrawlConfig:
     trap_variant_ratio_bp: int = 30000
     trap_dup_segments: int = 2
     trap_min_urls: int = 20
+
+    def __post_init__(self) -> None:
+        # fail where the bad value enters, not at tier construction
+        if self.tier_kind not in (None, TableSeenTiers.kind):
+            raise ValueError(
+                f"unknown tier_kind {self.tier_kind!r}: the only membership "
+                f"tier is {TableSeenTiers.kind!r}"
+            )
 
 
 class CrawlRun:
@@ -179,7 +174,7 @@ class CrawlRun:
         self.robots = robots
         os.makedirs(run_dir, exist_ok=True)
         self.frontier_t = SnapshotTable(os.path.join(run_dir, "frontier"))
-        # settled_round stats let the distributed tier's flush/hot-slice
+        # settled_round stats let the membership tier's flush/hot-slice
         # scans prune to only the post-watermark commits
         self.seen_t = SnapshotTable(
             os.path.join(run_dir, "seen"), stats_cols=["settled_round"]
@@ -189,8 +184,10 @@ class CrawlRun:
         self.lineage_t = SnapshotTable(os.path.join(run_dir, "lineage"))
         self.phash_seen_t = SnapshotTable(os.path.join(run_dir, "phash_seen"))
         self.trap_hosts_t = SnapshotTable(os.path.join(run_dir, "trap_hosts"))
+        # the membership tier's blob table (use_bloom only)
+        self._bloom_dir = os.path.join(run_dir, "bloom")
         self.round = 0
-        self.tiers: SeenTiers | DistributedSeenTiers | TableSeenTiers | None = None
+        self.tiers: TableSeenTiers | None = None
         self._rank_df: DataFrame | None = None
         # (round, rows): NEXT round's newly-flagged trap hosts, prefetched
         # by the previous round's commit pool; None → compute inline
@@ -278,40 +275,17 @@ class CrawlRun:
         self.phash_seen_t.overwrite_local([], PHASH_SEEN)
         self.trap_hosts_t.overwrite_local([], TRAP_HOSTS)
         if self.config.use_bloom:
-            kind = self.config.tier_kind or (
-                "driver" if self.config.driver_hot_tier else "distributed"
+            self.tiers = TableSeenTiers(
+                self._bloom_dir,
+                self.config.bloom_expected_keys,
+                bloom_partitions=self.config.bloom_partitions,
+                flush_every=self.config.flush_every,
             )
-            if kind not in ("driver", "table", "distributed"):
-                # the CLI validates choices; the library must too — a typo
-                # like 'Table' silently falling through to the distributed
-                # tier would only blow up at the 10^10 design point, far
-                # from the misconfiguration
-                raise ValueError(
-                    f"unknown tier_kind {kind!r}: expected 'driver', "
-                    f"'table', or 'distributed'"
-                )
-            if kind == "driver":
-                self.tiers = SeenTiers(
-                    self.config.bloom_expected_keys,
-                    bloom_partitions=self.config.bloom_partitions,
-                    hot_buckets=self.config.hot_buckets,
-                    flush_every=self.config.flush_every,
-                )
-            elif kind == "table":
-                self.tiers = TableSeenTiers(
-                    os.path.join(self.run_dir, "bloom"),
-                    self.config.bloom_expected_keys,
-                    bloom_partitions=self.config.bloom_partitions,
-                    flush_every=self.config.flush_every,
-                )
-                self.tiers.init_table()
-            else:
-                self.tiers = DistributedSeenTiers(
-                    self.config.bloom_expected_keys,
-                    bloom_partitions=self.config.bloom_partitions,
-                    flush_every=self.config.flush_every,
-                )
+            self.tiers.init_table()
         self.round = 0
+        # trap rows prefetched by a previous crawl in this object describe
+        # a frontier that no longer exists
+        self._next_traps = None
         # a fresh start must NOT inherit markers (stream_batch_id, …) from a
         # previous crawl that used the same run_dir — this is a new history
         self._checkpoint(fresh=True)
@@ -661,13 +635,9 @@ class CrawlRun:
             # dedupe exchange's hashpartitioning — no new shuffle. Bloom has
             # no false negatives, so seen ∩ batch ⊆ positives and
             # best − (positives ∩ seen) ≡ best − seen.
-            hashes = best.select("url_hash")
-            if self.tiers.kind == "driver":
-                probed = self.tiers.probe(hashes).persist()
-            else:  # distributed | table: derived hot tier, same signature
-                probed = self.tiers.probe(
-                    hashes, self.spark, self.seen_t, self.round
-                ).persist()
+            probed = self.tiers.probe(
+                best.select("url_hash"), self.spark, self.seen_t
+            ).persist()
             negatives = probed.filter(~F.col("might_contain")).drop("might_contain")
             positives = probed.filter(F.col("might_contain")).drop("might_contain")
             rescued = anti_join_seen(positives, seen_df)
@@ -964,24 +934,10 @@ class CrawlRun:
         def _commit_seen() -> None:
             self.seen_t.append(all_settled)
             if self.tiers is not None:
-                if self.tiers.kind != "driver":
-                    # no driver-side key traffic: the hot tier is the seen
-                    # table's post-watermark slice; a flush (every
-                    # flush_every rounds) rebuilds blobs distributed — only
-                    # P blob rows reach the driver ('distributed', VERDICT
-                    # r1 #1), or zero blob bytes at all ('table': cogrouped
-                    # OR-merge straight into the blob snapshot table).
-                    self.tiers.end_round(rnd, self.seen_t, self.spark)
-                else:
-                    # legacy driver hot tier: the settled batch is bounded
-                    # by Σ host budgets → O(batch) driver-side inserts
-                    self.tiers.add_settled(
-                        [
-                            r["url_hash"]
-                            for r in all_settled.select("url_hash").collect()
-                        ]
-                    )
-                    self.tiers.end_round()
+                # no driver-side key traffic: the hot tier is the seen
+                # table's post-watermark slice; a flush (every flush_every
+                # rounds) OR-merges it straight into the blob table
+                self.tiers.end_round(rnd, self.seen_t, self.spark)
 
         with ThreadPoolExecutor(max_workers=6) as pool:
             stats_future = pool.submit(stats.collect)
@@ -1179,7 +1135,7 @@ class CrawlRun:
           instead of one per round, with commit metadata (idempotence
           markers) carried forward by the compaction commit;
         - the **seen table is expired but never compacted**: its per-commit
-          settled_round min/max stats are what let the distributed tier's
+          settled_round min/max stats are what let the membership tier's
           hot-slice and flush scans prune to post-watermark commits, and a
           compacted dir would span every round (no pruning);
         - expire snapshots beyond ``keep_last``, reclaiming expired rounds'
@@ -1227,17 +1183,17 @@ class CrawlRun:
             expirable.append(("trap_hosts", self.trap_hosts_t))
         for name, table in expirable:
             stats[name] = len(table.expire_snapshots(keep_last=keep_last))
-        # the table tier's blob table accrues one snapshot per flush; expire
-        # it with the rest (never compacted — each overwrite is already a
-        # single data dir, and the checkpointed sid is the current one on a
-        # clean run, so keep_last ≥ 1 always retains it)
+        # the membership tier's blob table accrues one snapshot per flush;
+        # expire it with the rest (never compacted — each overwrite is
+        # already a single data dir, and the checkpointed sid is the current
+        # one on a clean run, so keep_last ≥ 1 always retains it)
         tiers = self.tiers
         if tiers is None and state.get("tiers_file"):
             try:
-                tiers = load_tiers(state["tiers_file"])
+                tiers = TableSeenTiers.load(state["tiers_file"], self._bloom_dir)
             except FileNotFoundError:
                 tiers = None
-        if tiers is not None and tiers.kind == "table":
+        if tiers is not None:
             stats["bloom"] = len(
                 tiers.blob_table.expire_snapshots(keep_last=keep_last)
             )
@@ -1260,7 +1216,7 @@ class CrawlRun:
             if table.current_snapshot_id() != sid:
                 table.rollback(sid)
         if state.get("tiers_file"):
-            self.tiers = load_tiers(state["tiers_file"])
+            self.tiers = TableSeenTiers.load(state["tiers_file"], self._bloom_dir)
         self.round = state["round"]
         # a prefetched trap list may predate the rollback — recompute inline
         self._next_traps = None
