@@ -81,10 +81,9 @@ def test_tiers_do_not_change_results(spark, plain, tiered):
     """The crawl with the membership tier enabled must produce the identical
     fetch log and seen set as the exact-only crawl (the north rule's
     exactness requirement), while actually routing rows through the
-    prefilter and keeping the blob bytes out of the driver."""
+    prefilter."""
     r_plain, _ = plain
     r_tiers, m_tiers = tiered
-    assert isinstance(r_tiers.tiers, TableSeenTiers)
     assert _log_rows(spark, r_plain) == _log_rows(spark, r_tiers)
     assert _seen_hashes(spark, r_plain) == _seen_hashes(spark, r_tiers)
     # the prefilter actually engaged: later rounds see tier positives
@@ -92,11 +91,28 @@ def test_tiers_do_not_change_results(spark, plain, tiered):
     later = [m for m in m_tiers if m["round"] >= 2]
     assert any(m["rows_tier_negative"] > 0 for m in later)
     assert any(m["rows_tier_positive"] > 0 for m in later)
+
+
+def test_table_tier_equals_distributed(spark, plain, tiered):
+    """The words-table tier (the 10^10 configuration where the filter fits
+    neither driver nor broadcast) must crawl byte-identically to the
+    distributed reference — the exact-only crawl, now that the broadcast
+    tier is gone — while keeping the blob bytes out of the driver (its
+    pickled checkpoint stays tiny)."""
+    r_plain, _ = plain
+    r_tbl, m_tbl = tiered
+    assert isinstance(r_tbl.tiers, TableSeenTiers)
+    assert _log_rows(spark, r_plain) == _log_rows(spark, r_tbl)
+    assert _seen_hashes(spark, r_plain) == _seen_hashes(spark, r_tbl)
+    # the prefilter engaged through the blob table
+    later = [m for m in m_tbl if m["round"] >= 2]
+    assert any(m["rows_tier_negative"] > 0 for m in later)
+    assert any(m["rows_tier_positive"] > 0 for m in later)
     # flushes landed as blob rows in the snapshot table, and the tiers
     # checkpoint carries metadata only (sizing + watermark + sid — no blobs)
-    blobs = r_tiers.tiers.blob_table.read(spark, schema=WORDS_SCHEMA).collect()
+    blobs = r_tbl.tiers.blob_table.read(spark, schema=WORDS_SCHEMA).collect()
     assert len(blobs) > 0
-    tf = r_tiers.checkpoint_state()["tiers_file"]
+    tf = r_tbl.checkpoint_state()["tiers_file"]
     assert os.path.getsize(tf) < 1024
 
 
