@@ -17,8 +17,10 @@ A side effect updates the per-query section of BENCH.md with a
 delta-vs-previous-round column read from the latest BENCH_r{N}.json.
 
 A synthetic-frontier throughput figure (the north metric, best-of-3) rides
-along; scripts/bench_scaling.py reports it at two parallelism levels for
-the N→4N scaling-efficiency evidence.
+along, untiered and with the membership tier: it times the crawl round's
+own scheduling code, ``plans.round.schedule``, over a generated frontier.
+scripts/bench_scaling.py reports it at two parallelism levels for the N→4N
+scaling-efficiency evidence.
 """
 
 from __future__ import annotations
@@ -80,155 +82,79 @@ def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _gen_frontier_and_seen(spark, n_rows: int):
-    """Shared generators for the frontier microbenches: a skewed frontier
-    with ~20% duplicate url ids and a seen set of n/10 hashes drawn from
-    the same url space."""
-    base = spark.range(n_rows)
-    # ~20% duplicate url ids; host distribution skewed (low ids frequent)
-    url_id = (F.col("id") * 809) % (n_rows * 4 // 5)
-    host_id = F.pmod(F.pmod(url_id, 997) * F.pmod(url_id, 997), F.lit(9973))
-    frontier = base.select(
-        F.concat(
-            F.lit("https://h"), host_id.cast("string"), F.lit(".example.com/p/"),
-            url_id.cast("string"),
-        ).alias("url"),
-        F.concat(F.lit("h"), host_id.cast("string"), F.lit(".example.com")).alias("host"),
-        (url_id % 100000).cast("double").alias("priority"),
-        F.col("id").alias("discovered_pos"),
-    ).withColumn("url_hash", F.xxhash64("url"))
-    seen = (
-        spark.range(n_rows // 10)
-        .select(((F.col("id") * 31) % (n_rows * 4 // 5)).alias("uid"))
-        .select(
-            F.xxhash64(
-                F.concat(
-                    F.lit("https://h"),
-                    F.pmod(F.pmod(F.col("uid"), 997) * F.pmod(F.col("uid"), 997), F.lit(9973)).cast("string"),
-                    F.lit(".example.com/p/"), F.col("uid").cast("string"),
-                )
-            ).alias("url_hash")
-        )
-    )
-    return frontier, seen
+def _url_and_host(uid):
+    """The generated url space: ``uid`` -> (url, host) with Zipfian-ish host
+    skew via pmod(uid^2), so the salted two-phase window earns its keep."""
+    host_id = F.pmod(F.pmod(uid, 997) * F.pmod(uid, 997), F.lit(9973))
+    host = F.concat(F.lit("h"), host_id.cast("string"), F.lit(".example.com"))
+    return F.concat(F.lit("https://"), host, F.lit("/p/"), uid.cast("string")), host
 
 
-def frontier_throughput(spark, n_rows: int = 5_000_000) -> tuple[float, int]:
-    """North-metric microbench: one scheduling round over a generated
-    frontier (no storage — the 10^10 design point is reached by raising
-    n_rows; per-row cost is what's being measured).
+def frontier_throughput(
+    spark, n_rows: int = 5_000_000, tiered: bool = False
+) -> tuple[float, frozenset[int]]:
+    """North-metric microbench: the crawl round's own scheduling half,
+    ``plans.round.schedule``, over a generated frontier (no frontier
+    storage — the 10^10 design point is reached by raising n_rows; per-row
+    cost is what's being measured).
 
-    range → url/host/priority synthesis → xxhash64 key → first-wins dedupe
-    → anti-join a generated seen-set → skew-safe per-host top-k. Zipfian-ish
-    host skew via pmod(id^2) so the salted two-phase window earns its keep.
-    """
-    from web_crawler_spark.operators.dedupe import anti_join_seen, first_wins
-    from web_crawler_spark.operators.politeness import two_phase_topk
-
-    frontier, seen = _gen_frontier_and_seen(spark, n_rows)
-    t0 = time.time()
-    deduped = first_wins(frontier, "url_hash", [F.col("discovered_pos").asc()])
-    unseen = anti_join_seen(deduped, seen)
-    selected = two_phase_topk(
-        unseen,
-        ["host"],
-        [F.col("priority").desc(), F.col("url_hash").asc()],
-        8,
-        F.col("url_hash"),
-        16,
-    )
-    n_sel = selected.count()
-    dt = time.time() - t0
-    return n_rows / dt, n_sel
-
-
-def frontier_tiered_throughput(spark, n_rows: int = 5_000_000) -> tuple[float, int]:
-    """The north-star round INCLUDING the membership tier: dedupe →
-    JVM-side Bloom probe (blobs-as-a-table of array<long> words, equi-joined
-    on pkey, k bit tests as column expressions in whole-stage codegen) →
-    positives confirmed exactly → skew-safe per-host top-k. Building the
-    filter is untimed setup: in production it persists across rounds
-    (TableSeenTiers) and is amortized over flush_every rounds; the measured
-    cost is ONE scheduling round.
-
-    Plan shape (the r3→r4 redesign — the VERDICT r3 'weak'): the probe runs
-    on a NARROW branch, ``frontier.select(url_hash)`` — one 8-byte column
-    through the blob join, so at the table design point it is a
-    single-column scan, not a second pass over full rows. Its positives are
-    confirmed against the exact seen set (semi-join of two SMALL sides:
-    ~positives × ~seen), and the full-width deduped frame is anti-joined
-    against that confirmed-drop set. ``first_wins`` windows by url_hash, so
-    the anti-join's big side reuses the dedupe exchange's hashpartitioning
-    AND its sort order — no new shuffle, no sort, no cache. The r3 layout
-    instead ``persist()``-ed the full-width probed frame (split into
-    negatives ∪ confirmed-positives): correct, but materializing 10^8
-    full-width rows thrashed the storage pool and ran 14× the untiered
-    per-row cost at 10^8 (2.4× at 2×10^7). Equivalence: Bloom has no false
-    negatives, so seen ∩ batch ⊆ positives ⇒ deduped − (positives ∩ seen) =
-    deduped − seen; ``selected`` must equal the untiered round's — the tier
-    only moves work, never the answer (pinned in tests)."""
-    import shutil
+    The frontier is ``spark.range`` synthesized into FRONTIER-schema rows,
+    ~20% of them duplicate urls, all at depth 0 so the generated priority
+    holds. Untimed setup writes a seen table of n/10 urls from the same
+    space and, with ``tiered``, flushes it into a ``TableSeenTiers`` blob
+    table — in a crawl the tier persists across rounds. Timed: one
+    ``schedule`` (8 URLs per host, 16 salt buckets, no robots rules) plus
+    collecting the batch with its fetch_seq. Returns (URLs/s, the selected
+    url_hashes); the tier moves work, never the selection."""
     import tempfile
 
-    from web_crawler_spark.operators.bloom import (
-        WORDS_SCHEMA,
-        PartitionedBloom,
-        or_merge_words,
-        probe_words_joined,
-    )
-    from web_crawler_spark.operators.dedupe import first_wins
-    from web_crawler_spark.operators.politeness import two_phase_topk
+    from web_crawler_spark.functions.urls import url_hash
+    from web_crawler_spark.operators.membership import TableSeenTiers
+    from web_crawler_spark.plans.round import CrawlConfig, schedule
+    from web_crawler_spark.schemas import FRONTIER, ROBOTS
+    from web_crawler_spark.sources.lake import SnapshotTable
 
-    frontier, seen = _gen_frontier_and_seen(spark, n_rows)
-    bf = PartitionedBloom.sized_for(
-        expected_keys=max(n_rows // 10, 1024), n_partitions=64
+    space = n_rows * 4 // 5
+    uid = (F.col("id") * 809) % space
+    url, host = _url_and_host(uid)
+    nulls = ["parent_url", "cookies", "auth_headers", "basic_auth_user",
+             "basic_auth_pass"]
+    frontier = spark.range(n_rows).select(
+        url.alias("url"),
+        url_hash(url).alias("url_hash"),
+        host.alias("host"),
+        (uid % 100000).cast("double").alias("priority"),
+        *[F.lit(0).alias(c) for c in ("depth", "attempts", "discovered_round")],
+        *[F.lit(None).cast(FRONTIER[c].dataType).alias(c) for c in nulls],
     )
-    empty = spark.createDataFrame([], schema=WORDS_SCHEMA)
-    seen = seen.localCheckpoint(eager=True)
-    blob_dir = tempfile.mkdtemp(prefix="wcs-bench-blobs-")
-    or_merge_words(seen, empty, m=bf.m, k=bf.k, p=bf.p).write.mode(
-        "overwrite"
-    ).parquet(blob_dir)
-    blobs = spark.read.parquet(blob_dir)
-
-    t0 = time.time()
-    deduped = first_wins(frontier, "url_hash", [F.col("discovered_pos").asc()])
-    positives = (
-        # INTENTIONAL divergence from plans/round.py (ADVICE r4 #4,
-        # resolved by documenting): the round probes the PERSISTED
-        # post-dedupe best rows; here the probe reads the raw frontier
-        # branch (~20% duplicate hashes — strictly MORE probe work, so
-        # the measured number is conservative). Mirroring exactly would
-        # require caching the full-width deduped frame, which at 10^8
-        # rows is the r3 storage-thrash this bench exists to avoid, and
-        # probing deduped WITHOUT caching computes the dedupe window
-        # twice (measured 3.7x the untiered round at 10^8 vs 1.7x for
-        # this layout).
-        probe_words_joined(
-            frontier.select("url_hash"), blobs, m=bf.m, k=bf.k, p=bf.p
+    robots = spark.createDataFrame([], ROBOTS)
+    cfg = CrawlConfig(default_host_budget=8, salt_buckets=16)
+    with tempfile.TemporaryDirectory(prefix="wcs-bench-frontier-") as work:
+        seen_t = SnapshotTable(
+            os.path.join(work, "seen"), stats_cols=["settled_round"]
         )
-        .filter(F.col("might_contain"))
-        .select("url_hash")
-    )
-    # confirmed true-positives: the only hashes the exact tier must drop.
-    # seen ⋉ positives (not the reverse) so the output is already distinct.
-    to_drop = seen.join(positives, "url_hash", "left_semi")
-    unseen = deduped.join(to_drop, "url_hash", "left_anti")
-    selected = two_phase_topk(
-        unseen,
-        ["host"],
-        [F.col("priority").desc(), F.col("url_hash").asc()],
-        8,
-        F.col("url_hash"),
-        16,
-    )
-    n_sel = selected.count()
-    dt = time.time() - t0
-    from web_crawler_spark.session import release_frame
+        seen_url, _ = _url_and_host((F.col("id") * 31) % space)
+        seen_t.overwrite(
+            spark.range(n_rows // 10).select(
+                url_hash(seen_url).alias("url_hash"),
+                seen_url.alias("url"),
+                F.lit(1).alias("settled_round"),
+            )
+        )
+        tiers = None
+        if tiered:
+            tiers = TableSeenTiers(
+                os.path.join(work, "bloom"), max(n_rows // 10, 1024), flush_every=1
+            )
+            tiers.init_table()
+            tiers.end_round(1, seen_t, spark)  # every seen key into the blobs
 
-    release_frame(seen)
-    shutil.rmtree(blob_dir, ignore_errors=True)
-    return n_rows / dt, n_sel
+        t0 = time.time()
+        sched = schedule(frontier, seen_t, robots, cfg, 1, tiers=tiers)
+        batch = sched.batch.select("url_hash", "fetch_seq").collect()
+        dt = time.time() - t0
+        sched.release()
+    return n_rows / dt, frozenset(r["url_hash"] for r in batch)
 
 
 def image_pipeline_throughput(
@@ -444,8 +370,8 @@ def main():
         )
 
     fr_runs = [frontier_throughput(spark) for _ in range(3)]
-    urls_per_sec, n_sel = max(fr_runs, key=lambda t: t[0])
-    ft_runs = [frontier_tiered_throughput(spark) for _ in range(3)]
+    urls_per_sec, sel = max(fr_runs, key=lambda t: t[0])
+    ft_runs = [frontier_throughput(spark, tiered=True) for _ in range(3)]
     tiered_per_sec, tiered_sel = max(ft_runs, key=lambda t: t[0])
     crawl = crawl_engine_bench(spark)
     total = round(sum(timings.values()), 3)
@@ -469,9 +395,9 @@ def main():
                 "sf": sf,
                 "frontier_urls_per_sec": round(urls_per_sec),
                 "frontier_rows": 5_000_000,
-                "frontier_selected": n_sel,
+                "frontier_selected": len(sel),
                 "frontier_tiered_urls_per_sec": round(tiered_per_sec),
-                "frontier_tiered_selected": tiered_sel,
+                "frontier_tiered_selected": len(tiered_sel),
                 "cpus": cpus,
                 **crawl,
             }

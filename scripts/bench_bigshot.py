@@ -18,48 +18,20 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
+from perfbench.spans import own_tree_jiffies, total_busy_jiffies  # noqa: E402
 from web_crawler_spark.session import get_spark  # noqa: E402
-
-# ---- quiet-window gate: the same criterion bench_scaling's CHILD applies
-# to every scaling run (< 0.5 foreign busy cores over a 5 s probe; the
-# post-run record carries the foreign CPU measured DURING the run).
 
 HZ = os.sysconf("SC_CLK_TCK")
 
 
-def total_busy_jiffies() -> int:
-    with open("/proc/stat") as f:
-        parts = f.readline().split()[1:]
-    vals = [int(x) for x in parts]
-    return sum(vals) - vals[3] - vals[4]  # everything except idle+iowait
-
-
-def own_tree_jiffies() -> int:
-    """utime+stime+cutime+cstime of this process and every live
-    descendant (cutime/cstime catch reaped pyspark workers)."""
-    me = os.getpid()
-    kids: dict[int, list[int]] = {}
-    own: dict[int, int] = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                st = f.read().rsplit(")", 1)[1].split()
-        except OSError:
-            continue
-        ppid = int(st[1])
-        own[int(pid)] = int(st[11]) + int(st[12]) + int(st[13]) + int(st[14])
-        kids.setdefault(ppid, []).append(int(pid))
-    total, stack = 0, [me]
-    while stack:
-        p = stack.pop()
-        total += own.get(p, 0)
-        stack.extend(kids.get(p, []))
-    return total
-
-
 def wait_quiet(threshold: float = 0.5, probe_s: float = 5, max_wait: float = 600):
+    """Quiet-window gate for every measured run (here and in
+    bench_scaling's levels): wait until foreign busy cores — /proc/stat
+    busy jiffies minus this process tree's — stay under ``threshold`` over
+    a ``probe_s`` probe, giving up after ``max_wait`` so a busy day still
+    completes; returns the 1-min load average seen at the start. Gating on
+    raw loadavg instead idled the harness for minutes after its own runs:
+    loadavg decays slowly even once the cores are free."""
     t0 = time.time()
     while True:
         b0, o0 = total_busy_jiffies(), own_tree_jiffies()
@@ -70,12 +42,23 @@ def wait_quiet(threshold: float = 0.5, probe_s: float = 5, max_wait: float = 600
         if foreign < threshold or time.time() - t0 > max_wait:
             return round(os.getloadavg()[0], 2)
 
+
 SHOTS_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "recorded_shots.json")
 
+
+def _frontier_job(tiered: bool):
+    def run(spark, n_rows: int) -> tuple[float, int]:
+        tput, selected = bench.frontier_throughput(spark, n_rows, tiered=tiered)
+        return tput, len(selected)
+
+    return run
+
+
+# job -> (fn(spark, n) -> (items/s, selected count), warmup floor)
 JOBS = {
-    "frontier": (bench.frontier_throughput, 1_000_000),
-    "frontier_tiered": (bench.frontier_tiered_throughput, 1_000_000),
+    "frontier": (_frontier_job(False), 1_000_000),
+    "frontier_tiered": (_frontier_job(True), 1_000_000),
     "image": (bench.image_pipeline_throughput, 2_000),
 }
 

@@ -23,93 +23,17 @@ import sys
 N_ROWS = 100_000_000
 N_IMAGES = 150_000
 LEVELS = [8, 32]
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r"""
-import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+import json, sys, time
+from perfbench.spans import own_tree_jiffies, total_busy_jiffies
+from scripts.bench_bigshot import HZ, JOBS, wait_quiet
 from web_crawler_spark.session import get_spark
-import bench
-
-HZ = os.sysconf("SC_CLK_TCK")
-
-def wait_quiet(threshold=0.5, probe_s=5, max_wait=600):
-    # shared host: another tenant's load spike during a measured run turns
-    # the N vs 4N comparison into noise (observed 0.9 -> 0.5 swings). Gate
-    # each measured run on actual foreign CPU over a short probe window —
-    # total /proc/stat busy minus our own process tree — the SAME criterion
-    # the post-run contention check applies. (Gating on raw 1-min loadavg
-    # made the child idle 4-6 min after each of its own runs: loadavg decays
-    # slowly even though the cores are already free, and at 32-core levels
-    # that pushed a whole level past the harness timeout.) Give up after
-    # max_wait so the harness completes on a busy day; the JSON records the
-    # load actually seen.
-    t0 = time.time()
-    while True:
-        b0, o0 = total_busy_jiffies(), own_tree_jiffies()
-        time.sleep(probe_s)
-        foreign = max(
-            0.0, (total_busy_jiffies() - b0) - (own_tree_jiffies() - o0)
-        ) / HZ / probe_s
-        if foreign < threshold or time.time() - t0 > max_wait:
-            return round(os.getloadavg()[0], 2)
-
-def total_busy_jiffies():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()[1:]
-    # user nice system idle iowait irq softirq steal guest guest_nice:
-    # busy = everything except idle+iowait
-    vals = [int(x) for x in parts]
-    return sum(vals) - vals[3] - vals[4]
-
-def own_tree_jiffies():
-    # CPU (utime+stime+cutime+cstime) of this process plus every live
-    # descendant — the JVM, its pyspark worker daemons, everything we own.
-    # cutime/cstime matter: pyspark workers are reaped and respawned
-    # mid-run, and a reaped worker's CPU survives only in its parent's
-    # cutime — counting just live utime made Python-heavy runs (the image
-    # job) misread their own dead workers as foreign-tenant load and
-    # discard clean measurements. Delta math stays correct: a worker alive
-    # at the start snapshot and reaped before the end one contributes
-    # (full lifetime via parent cutime) − (its own utime at start) = its
-    # CPU inside the window. Anything else consuming CPU is foreign.
-    me = os.getpid()
-    procs = {}
-    for pid in os.listdir("/proc"):
-        if not pid.isdigit():
-            continue
-        try:
-            with open(f"/proc/{pid}/stat") as f:
-                st = f.read()
-            # comm may contain spaces/parens: fields after the LAST ')'
-            tail = st.rsplit(")", 1)[1].split()
-            procs[int(pid)] = (
-                int(tail[1]),
-                int(tail[11]) + int(tail[12]) + int(tail[13]) + int(tail[14]),
-            )
-        except (FileNotFoundError, ProcessLookupError, IndexError):
-            continue
-    mine, frontier = 0, {me}
-    while frontier:
-        nxt = set()
-        for pid, (ppid, cpu) in procs.items():
-            if ppid in frontier:
-                nxt.add(pid)
-        for pid in frontier:
-            if pid in procs:
-                mine += procs[pid][1]
-        for pid in frontier:
-            procs.pop(pid, None)
-        frontier = nxt
-    return mine
 
 cpus = int(sys.argv[1])
 n_rows = int(sys.argv[2])
 job = sys.argv[3] if len(sys.argv) > 3 else "frontier"
-JOBS = {
-    "frontier": (bench.frontier_throughput, 1_000_000),
-    "frontier_tiered": (bench.frontier_tiered_throughput, 1_000_000),
-    "image": (bench.image_pipeline_throughput, 2_000),
-}
 job_fn, warm_floor = JOBS[job]
 # tasks-per-core: the JVM/shuffle jobs run TWO task waves per stage
 # (shuffle_partitions = 2x cores, the standard 2-3x-tasks-per-core
@@ -175,7 +99,7 @@ def _code_rev() -> str:
     try:
         return _sp.run(
             ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd="/root/repo", timeout=10,
+            capture_output=True, text=True, cwd=REPO, timeout=10,
         ).stdout.strip() or "unknown"
     except Exception:
         return "unknown"
@@ -194,7 +118,7 @@ def run_level(cpus: int, n_rows: int = N_ROWS, job: str = "frontier") -> dict:
     out = subprocess.run(
         [sys.executable, "-c", CHILD, str(cpus), str(n_rows), job],
         capture_output=True, text=True, timeout=5400,
-        cwd="/root/repo",
+        cwd=REPO,  # the child imports the repo's modules from its cwd
     )
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if out.returncode != 0 or not lines:
@@ -312,7 +236,7 @@ def main():
     ftn, ftn4 = ft["levels"][LEVELS[0]], ft["levels"][LEVELS[1]]
     imn, imn4 = im["levels"][LEVELS[0]], im["levels"][LEVELS[1]]
     try:
-        with open("/root/repo/scripts/recorded_shots.json") as f:
+        with open(os.path.join(REPO, "scripts", "recorded_shots.json")) as f:
             shots = json.load(f)
     except (FileNotFoundError, json.JSONDecodeError):
         shots = []
@@ -347,12 +271,14 @@ def main():
     }
     md = f"""# BENCH — scaling evidence (north rule)
 
-One frontier-scheduling round (generate → xxhash64 → first-wins dedupe →
-seen anti-join → skew-safe salted per-host top-k) over a generated
-{N_ROWS:,}-row frontier with Zipfian-ish host skew — the same DataFrame
-plan the engine runs per crawl round (`bench.frontier_throughput`). The
-10^10 design point is the same plan with a larger `spark.range`; per-row
-cost is what is measured here. Best of 3 contention-clean runs per level
+One frontier-scheduling round over a generated {N_ROWS:,}-row frontier with
+Zipfian-ish host skew, run by the crawl round's own scheduling code,
+`plans.round.schedule` (`bench.frontier_throughput`): priority blend →
+first-wins dedupe → exact seen anti-join → robots filter → salted per-host
+selection → fetch_seq, with the round's persists and its eager checkpoint
+of the selection. The seen table is a `SnapshotTable` written as untimed
+setup. The 10^10 design point is the same code over a larger
+`spark.range`; per-row cost is what is measured here. Best of 3 contention-clean runs per level
 (after a JIT warmup pass), one JVM per level. The host is shared, so each
 measured run first waits for a quiet window (< 0.5 foreign busy cores over
 a 5 s probe — total /proc/stat busy jiffies minus our own process tree's
@@ -413,13 +339,14 @@ verified by tests/test_politeness.py and the resume/roundtrip suites.
 ## Tiered-round scaling (with the membership probe)
 
 The north star's round dedupes against a Bloom membership filter before
-the exact confirm; this job measures the SAME round with the Bloom tier in
-the plan (`bench.frontier_tiered_throughput`): first-wins dedupe → JVM
-words probe (blobs as (pkey, words) table rows equi-joined on pkey — the
-layout that holds when the 10^10-key filter fits neither driver nor
-broadcast) → definite negatives skip the exact anti-join, positives are
-confirmed exactly → salted per-host top-k. Filter construction is untimed setup (it persists
-across rounds in `TableSeenTiers`).
+the exact confirm; this job runs the SAME `plans.round.schedule` with a
+`TableSeenTiers` (`bench.frontier_throughput(..., tiered=True)`):
+first-wins dedupe → JVM words probe of the deduped url_hashes (blobs as
+(pkey, words) table rows equi-joined on pkey — the layout that holds when
+the 10^10-key filter fits neither driver nor broadcast) → definite
+negatives skip the exact anti-join, positives are confirmed exactly →
+robots → salted per-host selection. Flushing the seen set into the blob
+table is untimed setup (it persists across rounds in `TableSeenTiers`).
 
 | parallelism | wall s | URLs/s | vs local[{LEVELS[0]}] |
 |---|---|---|---|
@@ -493,7 +420,9 @@ output at the deduped set.)
 ## Large-scale single-shot (recorded)
 
 Single timed passes at 10^9 rows (`scripts/bench_bigshot.py`, results kept
-in `scripts/recorded_shots.json`):
+in `scripts/recorded_shots.json`). Shots recorded before the jobs called
+`plans.round.schedule` timed a hand-kept copy of the select path without
+the round's persists; they are not comparable with later shots.
 
 | job | rows | wall s | URLs/s | selected | conditions |
 |---|---|---|---|---|---|
@@ -502,7 +431,7 @@ in `scripts/recorded_shots.json`):
 `selected` is identical at 5M, 100M and 10^9 rows — the politeness budget
 saturates every present host, so the scheduling result is scale-invariant
 while cost stays linear. The frontier is generated (`spark.range`), so the
-10^10 point needs no storage: it is the same plan at 10× the rows, which a
+10^10 point needs no frontier storage: it is the same plan at 10× the rows, which a
 1000-executor cluster covers at the measured per-row cost.
 
 Reproduce: `python scripts/bench_scaling.py`; a 10^9 shot:
@@ -510,7 +439,7 @@ Reproduce: `python scripts/bench_scaling.py`; a 10^9 shot:
 """
     # preserve bench.py's marker-delimited per-query section, if present
     try:
-        with open("/root/repo/BENCH.md") as f:
+        with open(os.path.join(REPO, "BENCH.md")) as f:
             old = f.read()
         if "<!-- QUERYBENCH:BEGIN -->" in old:
             block = (
@@ -523,7 +452,7 @@ Reproduce: `python scripts/bench_scaling.py`; a 10^9 shot:
             md = md.rstrip() + "\n\n" + block + "\n"
     except FileNotFoundError:
         pass
-    with open("/root/repo/BENCH.md", "w") as f:
+    with open(os.path.join(REPO, "BENCH.md"), "w") as f:
         f.write(md)
     print(json.dumps(summary))
 

@@ -320,15 +320,23 @@ def test_table_tier_million_row_flush_zero_driver_rows(spark, tmp_path, monkeypa
 
 
 def test_tiered_frontier_round_matches_untiered(spark):
-    """bench.frontier_tiered_throughput (dedupe -> JVM words probe ->
-    exact confirm of positives -> top-k) must select exactly what the
-    untiered round selects: the membership tier moves work, never the
-    answer."""
+    """bench.frontier_throughput runs the round's own ``schedule`` over a
+    generated frontier; with the tier (dedupe -> JVM words probe -> exact
+    confirm of positives -> per-host select) it must select exactly the
+    url_hashes the untiered schedule selects: the membership tier moves
+    work, never the answer. 7,976 is the selection of the hand-kept bench
+    plan this job replaced, over the same generated input. The bench
+    releases every frame ``schedule`` persisted."""
     import sys
+
+    from tests.conftest import leaked_blocks, storage_block_ids
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
 
+    before = storage_block_ids(spark)
     _, sel_plain = bench.frontier_throughput(spark, 200_000)
-    _, sel_tiered = bench.frontier_tiered_throughput(spark, 200_000)
-    assert sel_plain == sel_tiered > 0
+    _, sel_tiered = bench.frontier_throughput(spark, 200_000, tiered=True)
+    assert sel_plain == sel_tiered
+    assert len(sel_plain) == 7_976
+    assert not leaked_blocks(spark, before)

@@ -29,7 +29,7 @@ import json
 import os
 import uuid
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
@@ -60,6 +60,7 @@ from ..sources.lake import SnapshotTable
 
 _FETCH_LOG_COLS = [f.name for f in FETCH_LOG.fields]
 _FRONTIER_COLS = [f.name for f in FRONTIER.fields]
+_METRICS_COLS = [f.name for f in METRICS.fields if f.name != "round"]
 
 
 def _clone_session(spark: SparkSession) -> SparkSession:
@@ -140,6 +141,254 @@ class CrawlConfig:
                 f"unknown tier_kind {self.tier_kind!r}: the only membership "
                 f"tier is {TableSeenTiers.kind!r}"
             )
+
+
+def _link_children(links: DataFrame, exclude_anchors: bool) -> DataFrame:
+    """The link-discovery rule, shared by discovery and the pagerank edges:
+    skip-list before normalization (link_extractor.py:100-105), then
+    canonicalize against ``src_url`` (fragment-stripped when
+    ``exclude_anchors``, :157-169) and keep valid URLs as ``child_url``."""
+    kept = links.filter(~U.is_skippable_href(F.col("href")))
+    return kept.withColumn(
+        "child_url",
+        U.canonicalize(
+            F.col("href"), F.col("src_url"), strip_fragment=exclude_anchors
+        ),
+    ).filter(U.is_valid_url(F.col("child_url")))
+
+
+def _skipped_log(
+    df: DataFrame, rnd: int, fetch_seq, status: str, error_type: str, error_code: str
+) -> DataFrame:
+    """fetch_log rows for candidates that were never fetched (invalid
+    seeds, robots-blocked, trapped): ``df`` carries url, url_hash, host,
+    attempts and the logged credential columns; every fetch-result
+    column is NULL."""
+    unfetched = [
+        "image_id", "psnr_db", "caption_ok", "phash_dup",
+        "word_count", "char_count", "payload_len",
+    ]
+    return df.select(
+        F.lit(rnd).alias("round"),
+        fetch_seq.cast("long").alias("fetch_seq"),
+        "url",
+        "url_hash",
+        "host",
+        F.lit(status).alias("status"),
+        F.lit(error_type).alias("error_type"),
+        F.lit(error_code).alias("error_code"),
+        F.lit(False).alias("retry_possible"),
+        "attempts",
+        *[F.lit(None).cast(FETCH_LOG[c].dataType).alias(c) for c in unfetched],
+        "cookies",
+        "auth_headers",
+        "basic_auth_user",
+    )
+
+
+@dataclass
+class Schedule:
+    """What one round's scheduling half hands to the rest of the round.
+    The named frames but ``batch`` hold storage (persisted, or checkpointed
+    for ``selected``); ``release()`` frees it once the round is done."""
+
+    frontier: DataFrame  # the round's frontier, priorities blended
+    best: DataFrame  # first-wins per url_hash
+    allowed: DataFrame  # unseen, untrapped, robots-allowed
+    blocked: DataFrame  # robots-blocked: logged and settled, never fetched
+    selected: DataFrame  # per-host budgeted selection
+    batch: DataFrame  # ``selected`` with its fetch_seq (lazy)
+    trapped: DataFrame | None = None  # candidates on quarantined hosts
+    probed: DataFrame | None = None  # tier probe (url_hash, might_contain)
+    # tier counters: name -> frame (empty without tiers)
+    tier_frames: dict[str, DataFrame] = field(default_factory=dict)
+
+    def release(self) -> None:
+        for df in (
+            self.frontier, self.best, self.allowed, self.blocked,
+            self.selected, self.probed, self.trapped,
+        ):
+            if df is not None:
+                _release(df)
+
+
+def schedule(
+    frontier: DataFrame,
+    seen_t: SnapshotTable,
+    robots: DataFrame,
+    cfg: CrawlConfig,
+    rnd: int,
+    *,
+    tiers: TableSeenTiers | None = None,
+    ranks: DataFrame | None = None,
+    trap_hosts: DataFrame | None = None,
+) -> Schedule:
+    """Round ``rnd``'s scheduling half over a FRONTIER-schema frame:
+    priority blend (depth band, aging, pagerank ``ranks``) → first-wins
+    dedupe → exact seen anti-join (or the ``tiers`` probe plus exact
+    confirm) → trap-host split → robots filter → per-host selection →
+    fetch_seq. Everything up to ``selected`` materializes in its eager
+    checkpoint; ``batch`` stays lazy."""
+    spark = frontier.sparkSession
+    # depth-aware priority: rows discovered later carry their own depth.
+    # In pagerank mode (VERDICT r2 #6) the link-graph rank is blended
+    # INTO the depth band: priority = −STEP·depth + min(rank_int,
+    # STEP−1), so depth ordering still dominates (band invariant) while
+    # well-linked pages schedule first within their band. Seeds (depth
+    # 0) keep strict FIFO — the reference's bulk-order contract.
+    # anti-starvation aging (priority_aging > 0): a discovered row is
+    # promoted one band per `priority_aging` rounds waited, floored at
+    # band 1 — deep rows pinned behind a tight host budget eventually
+    # schedule instead of starving forever behind fresh shallow finds.
+    # age = rnd-1-discovered_round is >= 0 (a row discovered in round x
+    # first becomes schedulable in round x+1), so floor(age/a) is the
+    # integer division the oracle replays.
+    band_depth = F.col("depth").cast("long")
+    if cfg.priority_aging > 0:
+        age = F.lit(rnd - 1).cast("long") - F.col("discovered_round").cast("long")
+        band_depth = F.greatest(
+            F.lit(1).cast("long"),
+            band_depth - F.floor(age / F.lit(int(cfg.priority_aging))).cast("long"),
+        )
+    if ranks is not None:
+        bonus = F.least(
+            F.coalesce(F.col("rank_int"), F.lit(0).cast("long")),
+            F.lit(faults.DEPTH_PRIORITY_STEP - 1).cast("long"),
+        ).cast("double")
+        frontier = (
+            frontier.join(ranks, "url_hash", "left")
+            .withColumn(
+                "priority",
+                F.when(
+                    F.col("depth") > 0,
+                    faults.discovered_priority(band_depth) + bonus,
+                ).otherwise(F.col("priority")),
+            )
+            .drop("rank_int")
+        )
+    else:
+        frontier = frontier.withColumn(
+            "priority",
+            F.when(
+                F.col("depth") > 0, faults.discovered_priority(band_depth)
+            ).otherwise(F.col("priority")),
+        )
+
+    # persist the stage frames so the per-round counters don't recompute
+    # the dedupe window / probe / robots lineage once per count() action
+    frontier = frontier.persist()
+    best = first_wins(
+        frontier,
+        "url_hash",
+        [
+            F.col("priority").desc(),
+            F.col("discovered_round").asc(),
+            F.col("attempts").desc(),
+            # rows can tie on everything above and differ only in
+            # provenance (same child found from two parents in one
+            # round); parent_url closes the total order so frontier
+            # snapshots are byte-identical across cluster sizes
+            F.col("parent_url").asc_nulls_first(),
+        ],
+    ).persist()
+    seen_df = seen_t.read(spark, schema=SEEN)
+    tier_frames: dict[str, DataFrame] = {}
+    probed = None
+    if tiers is not None:
+        # two-tier prefilter: definite negatives skip the exact anti-join
+        # entirely; positives (hits + false positives) are confirmed
+        # against the exact seen table — the final set stays EXACT.
+        #
+        # The probe runs on a NARROW branch — url_hash only — so the
+        # persisted frame is 8 bytes/row instead of full frontier rows
+        # (the r3 layout persisted the full-width probed frame and split
+        # it; materializing 10^8 full rows thrashed the storage pool).
+        # ``best`` stays the only full-width frame: it anti-joins the
+        # small confirmed-drop set (seen ⋉ positives) reusing its own
+        # dedupe exchange's hashpartitioning — no new shuffle. Bloom has
+        # no false negatives, so seen ∩ batch ⊆ positives and
+        # best − (positives ∩ seen) ≡ best − seen.
+        probed = tiers.probe(best.select("url_hash"), spark, seen_t).persist()
+        negatives = probed.filter(~F.col("might_contain")).drop("might_contain")
+        positives = probed.filter(F.col("might_contain")).drop("might_contain")
+        rescued = anti_join_seen(positives, seen_df)
+        to_drop = seen_df.select("url_hash").join(
+            positives, "url_hash", "left_semi"
+        )
+        unseen = best.join(to_drop, "url_hash", "left_anti")
+        tier_frames = {
+            "rows_tier_negative": negatives,
+            "rows_tier_positive": positives,
+            "rows_tier_fp": rescued,  # bloom said yes, exact says new
+        }
+    else:
+        unseen = anti_join_seen(best, seen_df)
+
+    # frontier hygiene: candidates on quarantined hosts are split off
+    # (logged and settled by the caller, never fetched). Host cardinality
+    # is bounded — both joins broadcast
+    trapped = None
+    if trap_hosts is not None:
+        trapped = unseen.join(
+            F.broadcast(trap_hosts), "host", "left_semi"
+        ).persist()
+        unseen = unseen.join(F.broadcast(trap_hosts), "host", "left_anti")
+    allowed, blocked = robots_filter(unseen, robots)
+    allowed = allowed.persist()
+    blocked = blocked.persist()
+    # selected/batch/fetched are the round's hubs: a dozen downstream
+    # frames (log rows, settle/retry split, discovery, lineage,
+    # counters) build on them, and every one re-runs Catalyst analysis
+    # over the full upstream tree (windows, tier probe, robots join).
+    # localCheckpoint truncates the lineage at this boundary — all
+    # three are bounded by Σ host budgets (the politeness contract), and
+    # the crawl's own table checkpoint/resume covers executor-loss
+    # recovery, so the usual localCheckpoint durability caveat doesn't
+    # bite (a crashed round is rolled back and re-run). Checkpointing
+    # ``selected`` FIRST means the whole upstream pipeline materializes
+    # exactly once: assign_fetch_seq's boundary sample and the two
+    # later checkpoints all read the truncated frame instead of
+    # re-executing the plan (VERDICT r2 #2).
+    # assign_fetch_seq's boundary sample rides the checkpoint job as an
+    # observed metric (collect_list of the pmod==0 rows — bounded by
+    # |batch|/sample_mod) instead of a separate collect: one fewer
+    # sequential job per round, same value-deterministic sample.
+    sample_obs = Observation(f"fetch_seq_sample_{rnd}")
+    selected = (
+        select_per_host(
+            allowed,
+            robots,
+            cfg.default_host_budget,
+            cfg.salt_buckets,
+            cfg.round_window_ms,
+            rnd=rnd,  # hosts with crawl_delay > window: every Nth round
+        )
+        .observe(
+            sample_obs,
+            F.collect_list(
+                F.when(
+                    F.pmod(F.col("url_hash"), F.lit(FETCH_SEQ_SAMPLE_MOD)) == 0,
+                    F.struct("priority", "url_hash"),
+                )
+            ).alias("sample"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    # ``batch`` is NOT checkpointed (VERDICT r3 #4): the round's fetch is
+    # its only consumer — ``fetched`` carries every frontier column, so
+    # leftover/lineage read fetched — and assign_fetch_seq's two-phase
+    # plan over the already-checkpointed ``selected`` executes exactly
+    # once inside fetched's materialization. A third checkpoint here
+    # bought nothing but one more full materialization job per round.
+    # (Measured alternative: persist()ing selected and letting the
+    # boundary-sample collect warm the cache was ~15% SLOWER than the
+    # eager checkpoint — columnar cache build costs more than the
+    # checkpoint write at batch sizes, so the checkpoint stays.)
+    batch = assign_fetch_seq(selected, sample_rows=sample_obs.get["sample"])
+    return Schedule(
+        frontier, best, allowed, blocked, selected, batch,
+        trapped=trapped, probed=probed, tier_frames=tier_frames,
+    )
 
 
 class CrawlRun:
@@ -242,30 +491,15 @@ class CrawlRun:
         self.frontier_t.overwrite(frontier)
 
         # invalid seeds → round-0 validation_error rows, ordered by seed order
-        inv_log = (
-            invalid.withColumn("fetch_seq", F.row_number().over(w).cast("long"))
-            .select(
-                F.lit(0).alias("round"),
-                "fetch_seq",
-                F.col("url"),
-                U.url_hash(F.col("url")).alias("url_hash"),
-                U.url_host(F.col("url")).alias("host"),
-                F.lit("failed").alias("status"),
-                F.lit("validation_error").alias("error_type"),
-                F.lit("INVALID_URL").alias("error_code"),
-                F.lit(False).alias("retry_possible"),
-                F.lit(0).alias("attempts"),
-                F.lit(None).cast("string").alias("image_id"),
-                F.lit(None).cast("double").alias("psnr_db"),
-                F.lit(None).cast("boolean").alias("caption_ok"),
-                F.lit(None).cast("boolean").alias("phash_dup"),
-                F.lit(None).cast("int").alias("word_count"),
-                F.lit(None).cast("int").alias("char_count"),
-                F.lit(None).cast("int").alias("payload_len"),
-                "cookies",
-                "auth_headers",
-                "basic_auth_user",
-            )
+        inv_log = _skipped_log(
+            invalid.withColumn("url_hash", U.url_hash(F.col("url")))
+            .withColumn("host", U.url_host(F.col("url")))
+            .withColumn("attempts", F.lit(0)),
+            0,
+            F.row_number().over(w),
+            "failed",
+            "validation_error",
+            "INVALID_URL",
         )
         self.fetch_log_t.overwrite(inv_log)
         # empty-table initializations: driver-local commits, no Spark jobs
@@ -384,14 +618,7 @@ class CrawlRun:
             # and everything discovered on it, tasks.py:57)
             "cookies", "auth_headers", "basic_auth_user", "basic_auth_pass",
         ).join(self.links, fetched_ok["url"] == self.links["src_url"], "inner")
-        kept = raw.filter(~U.is_skippable_href(F.col("href")))
-        canon = kept.withColumn(
-            "child_url",
-            U.canonicalize(
-                F.col("href"), F.col("src_url"),
-                strip_fragment=self.config.exclude_anchors,
-            ),
-        ).filter(U.is_valid_url(F.col("child_url")))
+        canon = _link_children(raw, self.config.exclude_anchors)
         # in-page first-wins by document position (D1/D2)
         per_page = first_wins(
             canon, ["src_url", "child_url"], [F.col("pos").asc()]
@@ -415,10 +642,9 @@ class CrawlRun:
     def _pagerank_scores(self) -> DataFrame:
         """(url_hash, rank_int) over the link graph, computed once per run
         (production: a periodic offline job refreshing a rank table). The
-        edge derivation applies EXACTLY the discovery rules (_discover):
-        skip-list before canonicalization, fragment stripping per config,
-        validity filter — so ranked nodes are the URLs the crawl can reach,
-        and the pure-Python oracle derives the identical integer ranks.
+        edges come from the discovery rule itself (``_link_children``), so
+        ranked nodes are the URLs the crawl can reach, and the pure-Python
+        oracle derives the identical integer ranks.
 
         Ranks persist in a ``RankIndex`` SnapshotTable under run_dir keyed
         by (iters, links fingerprint) — a RESUMED run (new process, same
@@ -444,14 +670,7 @@ class CrawlRun:
                 F.count("*").alias("n"),
             ).collect()[0]
             corpus_key = f"links:{fp['h']}:{fp['n']}"
-            kept = self.links.filter(~U.is_skippable_href(F.col("href")))
-            canon = kept.withColumn(
-                "child_url",
-                U.canonicalize(
-                    F.col("href"), F.col("src_url"),
-                    strip_fragment=self.config.exclude_anchors,
-                ),
-            ).filter(U.is_valid_url(F.col("child_url")))
+            canon = _link_children(self.links, self.config.exclude_anchors)
             edges = canon.select(
                 U.url_hash(F.col("src_url")).alias("src"),
                 U.url_hash(F.col("child_url")).alias("dst"),
@@ -548,270 +767,81 @@ class CrawlRun:
             (r.asDict() for r in newly.collect()), key=lambda r: r["host"]
         )
 
+    def _trap_hosts(self, frontier: DataFrame, rnd: int) -> DataFrame:
+        """Round ``rnd``'s quarantined hosts (operators/traps.py). Signals
+        are evaluated over the WHOLE frontier (the strongest per-round
+        evidence that exists without extra state); flagged hosts ratchet
+        into trap_hosts_t because evidence shrinks once a quarantine
+        empties the host's frontier mass — re-deriving the flag each round
+        would let trap hosts oscillate back in."""
+        if self.trap_hosts_t.current_snapshot_id() is None:
+            # trap detection enabled on a run_dir from before the
+            # hygiene feature: initialize the quarantine table lazily
+            self.trap_hosts_t.overwrite_local([], TRAP_HOSTS)
+        # newly flagged hosts are rare and bounded by host cardinality:
+        # collect (sorted — byte-identical commits across parallelism)
+        # and commit driver-local ONLY when non-empty, so quiet rounds
+        # add neither a Spark write job nor an empty commit. The signal
+        # scan normally ran ALREADY — last round's commit pool computed
+        # it over the exact new_frontier rows this round read back
+        # (identical input, identical known-traps table state, so
+        # identical rows); the inline job remains for round 1, resume,
+        # and any round the precompute did not cover.
+        pre = self._next_traps
+        self._next_traps = None
+        if pre is not None and pre[0] == rnd:
+            new_rows = pre[1]
+        else:
+            new_rows = self._detect_new_traps(frontier, rnd)
+        if new_rows:
+            self.trap_hosts_t.append_local(new_rows, TRAP_HOSTS)
+        return self.trap_hosts_t.read(self.spark, schema=TRAP_HOSTS).select("host")
+
     def _run_round_body(self, checkpoint_extra: dict | None = None) -> dict:
         cfg = self.config
         rnd = self.round + 1
         frontier = self._with_auth_cols(
             self.frontier_t.read(self.spark, schema=FRONTIER)
         )
-
-        # depth-aware priority: rows discovered later carry their own depth.
-        # In pagerank mode (VERDICT r2 #6) the link-graph rank is blended
-        # INTO the depth band: priority = −STEP·depth + min(rank_int,
-        # STEP−1), so depth ordering still dominates (band invariant) while
-        # well-linked pages schedule first within their band. Seeds (depth
-        # 0) keep strict FIFO — the reference's bulk-order contract.
-        # anti-starvation aging (priority_aging > 0): a discovered row is
-        # promoted one band per `priority_aging` rounds waited, floored at
-        # band 1 — deep rows pinned behind a tight host budget eventually
-        # schedule instead of starving forever behind fresh shallow finds.
-        # age = rnd-1-discovered_round is >= 0 (a row discovered in round x
-        # first becomes schedulable in round x+1), so floor(age/a) is the
-        # integer division the oracle replays.
-        band_depth = F.col("depth").cast("long")
-        if cfg.priority_aging > 0:
-            age = F.lit(rnd - 1).cast("long") - F.col("discovered_round").cast("long")
-            band_depth = F.greatest(
-                F.lit(1).cast("long"),
-                band_depth - F.floor(age / F.lit(int(cfg.priority_aging))).cast("long"),
-            )
-        if cfg.priority_source == "pagerank":
-            ranks = self._pagerank_scores()
-            bonus = F.least(
-                F.coalesce(F.col("rank_int"), F.lit(0).cast("long")),
-                F.lit(faults.DEPTH_PRIORITY_STEP - 1).cast("long"),
-            ).cast("double")
-            frontier = (
-                frontier.join(ranks, "url_hash", "left")
-                .withColumn(
-                    "priority",
-                    F.when(
-                        F.col("depth") > 0,
-                        faults.discovered_priority(band_depth) + bonus,
-                    ).otherwise(F.col("priority")),
-                )
-                .drop("rank_int")
-            )
-        else:
-            frontier = frontier.withColumn(
-                "priority",
-                F.when(
-                    F.col("depth") > 0, faults.discovered_priority(band_depth)
-                ).otherwise(F.col("priority")),
-            )
-
-        # persist the stage frames so the per-round counters don't recompute
-        # the dedupe window / probe / robots lineage once per count() action
-        frontier = frontier.persist()
-        best = first_wins(
+        ranks = (
+            self._pagerank_scores() if cfg.priority_source == "pagerank" else None
+        )
+        sched = schedule(
             frontier,
-            "url_hash",
-            [
-                F.col("priority").desc(),
-                F.col("discovered_round").asc(),
-                F.col("attempts").desc(),
-                # rows can tie on everything above and differ only in
-                # provenance (same child found from two parents in one
-                # round); parent_url closes the total order so frontier
-                # snapshots are byte-identical across cluster sizes
-                F.col("parent_url").asc_nulls_first(),
-            ],
-        ).persist()
-        seen_df = self.seen_t.read(self.spark, schema=SEEN)
-        tier_frames: dict[str, DataFrame] = {}
-        probed = None
-        if self.tiers is not None:
-            # two-tier prefilter: definite negatives skip the exact anti-join
-            # entirely; positives (hits + false positives) are confirmed
-            # against the exact seen table — the final set stays EXACT.
-            #
-            # The probe runs on a NARROW branch — url_hash only — so the
-            # persisted frame is 8 bytes/row instead of full frontier rows
-            # (the r3 layout persisted the full-width probed frame and split
-            # it; materializing 10^8 full rows thrashed the storage pool —
-            # 14× the untiered per-row cost in the bench twin of this plan).
-            # ``best`` stays the only full-width frame: it anti-joins the
-            # small confirmed-drop set (seen ⋉ positives) reusing its own
-            # dedupe exchange's hashpartitioning — no new shuffle. Bloom has
-            # no false negatives, so seen ∩ batch ⊆ positives and
-            # best − (positives ∩ seen) ≡ best − seen.
-            probed = self.tiers.probe(
-                best.select("url_hash"), self.spark, self.seen_t
-            ).persist()
-            negatives = probed.filter(~F.col("might_contain")).drop("might_contain")
-            positives = probed.filter(F.col("might_contain")).drop("might_contain")
-            rescued = anti_join_seen(positives, seen_df)
-            to_drop = seen_df.select("url_hash").join(
-                positives, "url_hash", "left_semi"
-            )
-            unseen = best.join(to_drop, "url_hash", "left_anti")
-            tier_frames = {
-                "rows_tier_negative": negatives,
-                "rows_tier_positive": positives,
-                "rows_tier_fp": rescued,  # bloom said yes, exact says new
-            }
-        else:
-            unseen = anti_join_seen(best, seen_df)
-
-        # ---- frontier hygiene: trap-host quarantine (operators/traps.py).
-        # Signals are evaluated over the WHOLE persisted frontier (the
-        # strongest per-round evidence that exists without extra state);
-        # flagged hosts ratchet into trap_hosts_t because evidence shrinks
-        # once a quarantine empties the host's frontier mass — re-deriving
-        # the flag each round would let trap hosts oscillate back in.
-        trapped = None
-        if cfg.trap_detection:
-            if self.trap_hosts_t.current_snapshot_id() is None:
-                # trap detection enabled on a run_dir from before the
-                # hygiene feature: initialize the quarantine table lazily
-                self.trap_hosts_t.overwrite_local([], TRAP_HOSTS)
-            # newly flagged hosts are rare and bounded by host cardinality:
-            # collect (sorted — byte-identical commits across parallelism)
-            # and commit driver-local ONLY when non-empty, so quiet rounds
-            # add neither a Spark write job nor an empty commit. The signal
-            # scan normally ran ALREADY — last round's commit pool computed
-            # it over the exact new_frontier rows this round read back
-            # (identical input, identical known-traps table state, so
-            # identical rows); the inline job remains for round 1, resume,
-            # and any round the precompute did not cover.
-            pre = self._next_traps
-            self._next_traps = None
-            if pre is not None and pre[0] == rnd:
-                new_rows = pre[1]
-            else:
-                new_rows = self._detect_new_traps(frontier, rnd)
-            if new_rows:
-                self.trap_hosts_t.append_local(new_rows, TRAP_HOSTS)
-            all_traps = self.trap_hosts_t.read(
-                self.spark, schema=TRAP_HOSTS
-            ).select("host")
-            # host cardinality is bounded — both joins broadcast
-            trapped = unseen.join(
-                F.broadcast(all_traps), "host", "left_semi"
-            ).persist()
-            unseen = unseen.join(F.broadcast(all_traps), "host", "left_anti")
-        allowed, blocked = robots_filter(unseen, self.robots)
-        allowed = allowed.persist()
-        blocked = blocked.persist()
-        # selected/batch/fetched are the round's hubs: a dozen downstream
-        # frames (log rows, settle/retry split, discovery, lineage,
-        # counters) build on them, and every one re-runs Catalyst analysis
-        # over the full upstream tree (windows, tier probe, robots join).
-        # localCheckpoint truncates the lineage at this boundary — all
-        # three are bounded by Σ host budgets (the politeness contract), and
-        # the crawl's own table checkpoint/resume covers executor-loss
-        # recovery, so the usual localCheckpoint durability caveat doesn't
-        # bite (a crashed round is rolled back and re-run). Checkpointing
-        # ``selected`` FIRST means the whole upstream pipeline materializes
-        # exactly once: assign_fetch_seq's boundary sample and the two
-        # later checkpoints all read the truncated frame instead of
-        # re-executing the plan (VERDICT r2 #2).
-        # assign_fetch_seq's boundary sample rides the checkpoint job as an
-        # observed metric (collect_list of the pmod==0 rows — bounded by
-        # |batch|/sample_mod) instead of a separate collect: one fewer
-        # sequential job per round, same value-deterministic sample.
-        sample_obs = Observation(f"fetch_seq_sample_{rnd}")
-        selected = (
-            select_per_host(
-                allowed,
-                self.robots,
-                cfg.default_host_budget,
-                cfg.salt_buckets,
-                cfg.round_window_ms,
-                rnd=rnd,  # hosts with crawl_delay > window: every Nth round
-            )
-            .observe(
-                sample_obs,
-                F.collect_list(
-                    F.when(
-                        F.pmod(F.col("url_hash"), F.lit(FETCH_SEQ_SAMPLE_MOD)) == 0,
-                        F.struct("priority", "url_hash"),
-                    )
-                ).alias("sample"),
-            )
-            .localCheckpoint(eager=True)
+            self.seen_t,
+            self.robots,
+            cfg,
+            rnd,
+            tiers=self.tiers,
+            ranks=ranks,
+            trap_hosts=(
+                self._trap_hosts(frontier, rnd) if cfg.trap_detection else None
+            ),
         )
-        # ``batch`` is NOT checkpointed (VERDICT r3 #4): _simulate_fetch is
-        # its only consumer — ``fetched`` carries every frontier column, so
-        # leftover/lineage read fetched — and assign_fetch_seq's two-phase
-        # plan over the already-checkpointed ``selected`` executes exactly
-        # once inside fetched's materialization. A third checkpoint here
-        # bought nothing but one more full materialization job per round.
-        # (Measured alternative: persist()ing selected and letting the
-        # boundary-sample collect warm the cache was ~15% SLOWER than the
-        # eager checkpoint — columnar cache build costs more than the
-        # checkpoint write at batch sizes, so the checkpoint stays.)
-        batch = assign_fetch_seq(selected, sample_rows=sample_obs.get["sample"])
-        fetched = self._simulate_fetch(batch).localCheckpoint(eager=True)
+        allowed, blocked, trapped = sched.allowed, sched.blocked, sched.trapped
+        fetched = self._simulate_fetch(sched.batch).localCheckpoint(eager=True)
 
-        # ---- fetch_log rows for this round
-        log_rows = fetched.select(
-            F.lit(rnd).alias("round"), *[c for c in _FETCH_LOG_COLS if c != "round"]
-        )
-        # robots-blocked rows are logged (skipped) and settled, never fetched
-        blocked_log = blocked.select(
-            F.lit(rnd).alias("round"),
-            F.lit(0).cast("long").alias("fetch_seq"),
-            "url",
-            "url_hash",
-            "host",
-            F.lit("skipped").alias("status"),
-            F.lit("permission_error").alias("error_type"),
-            F.lit("ROBOTS_DISALLOWED").alias("error_code"),
-            F.lit(False).alias("retry_possible"),
-            "attempts",
-            F.lit(None).cast("string").alias("image_id"),
-            F.lit(None).cast("double").alias("psnr_db"),
-            F.lit(None).cast("boolean").alias("caption_ok"),
-            F.lit(None).cast("boolean").alias("phash_dup"),
-            F.lit(None).cast("int").alias("word_count"),
-            F.lit(None).cast("int").alias("char_count"),
-            F.lit(None).cast("int").alias("payload_len"),
-            "cookies",
-            "auth_headers",
-            "basic_auth_user",
-        )
-        all_log = log_rows.unionByName(blocked_log)
-        if trapped is not None:
-            trapped_log = trapped.select(
-                F.lit(rnd).alias("round"),
-                F.lit(0).cast("long").alias("fetch_seq"),
-                "url",
-                "url_hash",
-                "host",
-                F.lit("skipped").alias("status"),
-                F.lit("trap_error").alias("error_type"),
-                F.lit("TRAP_HOST").alias("error_code"),
-                F.lit(False).alias("retry_possible"),
-                "attempts",
-                F.lit(None).cast("string").alias("image_id"),
-                F.lit(None).cast("double").alias("psnr_db"),
-                F.lit(None).cast("boolean").alias("caption_ok"),
-                F.lit(None).cast("boolean").alias("phash_dup"),
-                F.lit(None).cast("int").alias("word_count"),
-                F.lit(None).cast("int").alias("char_count"),
-                F.lit(None).cast("int").alias("payload_len"),
-                "cookies",
-                "auth_headers",
-                "basic_auth_user",
-            )
-            all_log = all_log.unionByName(trapped_log)
-
-        # ---- settle / retry split (E2: fetcher.py:73-93, ≤3 attempts)
-        retryable = (
+        # ---- fetch_log rows and settled rows for this round: robots-blocked
+        # and trapped rows are logged (skipped) and settled, never fetched
+        retryable = (  # E2: fetcher.py:73-93, ≤3 attempts
             F.col("retry_possible") & ((F.col("attempts") + 1) < cfg.max_attempts)
         )
-        settled = fetched.filter(~retryable).select(
-            "url_hash", "url", F.lit(rnd).alias("settled_round")
+
+        def settle(df: DataFrame) -> DataFrame:
+            return df.select("url_hash", "url", F.lit(rnd).alias("settled_round"))
+
+        all_log = fetched.select(
+            F.lit(rnd).alias("round"), *[c for c in _FETCH_LOG_COLS if c != "round"]
         )
-        blocked_settled = blocked.select(
-            "url_hash", "url", F.lit(rnd).alias("settled_round")
-        )
-        all_settled = settled.unionByName(blocked_settled)
+        all_settled = settle(fetched.filter(~retryable))
+        skipped = [(blocked, "permission_error", "ROBOTS_DISALLOWED")]
         if trapped is not None:
-            all_settled = all_settled.unionByName(
-                trapped.select("url_hash", "url", F.lit(rnd).alias("settled_round"))
+            skipped.append((trapped, "trap_error", "TRAP_HOST"))
+        for df_, error_type, error_code in skipped:
+            all_log = all_log.unionByName(
+                _skipped_log(df_, rnd, F.lit(0), "skipped", error_type, error_code)
             )
+            all_settled = all_settled.unionByName(settle(df_))
         retries = fetched.filter(retryable).select(
             "url",
             "url_hash",
@@ -886,7 +916,7 @@ class CrawlRun:
 
         lin_cols = ["rows_in", "rows_selected", "rows_fetched_ok", "rows_failed"]
         lin_counts = (
-            strata_src(frontier, "rows_in")
+            strata_src(sched.frontier, "rows_in")
             .unionByName(strata_src(fetched, "rows_selected"))
             .unionByName(strata_src(ok, "rows_fetched_ok"))
             .unionByName(
@@ -898,15 +928,15 @@ class CrawlRun:
         )
 
         stats_src = [
-            _tagged("rows_in", frontier),
-            _tagged("__best", best),
+            _tagged("rows_in", sched.frontier),
+            _tagged("__best", sched.best),
             _tagged("rows_robots_blocked", blocked),
             _tagged("rows_selected", fetched),
             _tagged("rows_fetched_ok", fetched, F.col("status") == "success"),
             _tagged("rows_failed", fetched, F.col("status") == "failed"),
             _tagged("rows_retried", fetched, retryable),
             _tagged("rows_discovered", discovered),
-        ] + [_tagged(name, df_) for name, df_ in tier_frames.items()]
+        ] + [_tagged(name, df_) for name, df_ in sched.tier_frames.items()]
         if trapped is not None:
             stats_src.append(_tagged("rows_trapped", trapped))
         stats = stats_src[0]
@@ -968,20 +998,9 @@ class CrawlRun:
         for r in collected:
             if r["pkey"] is not None:
                 strata.setdefault(int(r["pkey"]), {})[r["k"]] = int(r["n"])
-        counts = {
-            c: got[c]
-            for c in [
-                "rows_in",
-                "rows_robots_blocked",
-                "rows_selected",
-                "rows_fetched_ok",
-                "rows_failed",
-                "rows_retried",
-                "rows_discovered",
-            ]
-        }
-        counts["rows_deduped"] = counts["rows_in"] - got["__best"]
-        tier_counts = {k: got[k] for k in tier_frames}
+        got["rows_deduped"] = got["rows_in"] - got["__best"]
+        counts = {c: got[c] for c in _METRICS_COLS}
+        tier_counts = {k: got[k] for k in sched.tier_frames}
         if trapped is not None:
             # METRICS schema (oracle-checked) is unchanged; the trapped
             # count rides in the returned dict like the tier counters
@@ -989,27 +1008,7 @@ class CrawlRun:
 
         # metrics + lineage are a handful of driver-resident rows — commit
         # them via the driver-local parquet path (zero Spark write jobs)
-        self.metrics_t.append_local(
-            [
-                {
-                    "round": rnd,
-                    **{
-                        c: int(counts[c])
-                        for c in [
-                            "rows_in",
-                            "rows_deduped",
-                            "rows_robots_blocked",
-                            "rows_selected",
-                            "rows_fetched_ok",
-                            "rows_failed",
-                            "rows_retried",
-                            "rows_discovered",
-                        ]
-                    },
-                }
-            ],
-            METRICS,
-        )
+        self.metrics_t.append_local([{"round": rnd, **counts}], METRICS)
         self.lineage_t.append_local(
             [
                 {
@@ -1022,20 +1021,9 @@ class CrawlRun:
             LINEAGE,
         )
 
-        for df_ in (
-            frontier,
-            best,
-            allowed,
-            blocked,
-            selected,
-            fetched,
-            discovered,
-        ):
-            _release(df_)
-        if probed is not None:
-            _release(probed)
-        if trapped is not None:
-            _release(trapped)
+        sched.release()
+        _release(fetched)
+        _release(discovered)
         self.round = rnd
         self._checkpoint(extra=checkpoint_extra)
         return {"round": rnd, **counts, **tier_counts}
