@@ -1,10 +1,16 @@
 from __future__ import annotations
 
+import os
 import time
 
 import pytest
 
 from web_crawler_spark.session import get_spark
+
+# get_spark's default driver heap (32g) can outgrow the RAM of a 15 GB
+# machine, where the OOM killer then takes the one suite JVM mid-run; cap
+# it unless the caller chose a size
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 
 @pytest.fixture(scope="session")

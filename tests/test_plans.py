@@ -268,3 +268,26 @@ def test_round_confs_do_not_leak_into_caller_session(spark, tmp_path):
     # and the flip is gone from the clone too once the round ends
     # (restored to the effective pre-round value, which is the default)
     assert run.spark.conf.get(key) == spark.conf.get(key)
+
+
+def test_phash_prune_labels_are_a_local_broadcast(spark):
+    """The union-find labels of a small near-dup graph enter the survivor
+    joins as a sized local relation: both joins broadcast it, with no
+    sort-merge join and no unsized ExistingRDD scan of (doc_id, cluster_id)."""
+    from web_crawler_spark.functions.images import encode_image, render_pixels
+    from web_crawler_spark.operators.multimodal import phash_prune
+
+    rows = []
+    for k in range(64):
+        # every 8th id is a planted near-duplicate of the id 7 before it
+        mid = f"img_{k - 7:03d}~d1" if k % 8 == 7 else f"img_{k:03d}"
+        rows.append((mid, bytearray(encode_image(render_pixels(mid, 32, 32), "png"))))
+    corpus = spark.createDataFrame(rows, "media_id string, bytes binary")
+    out = phash_prune(corpus, max_hamming=2, bands=4)
+    kept = {r.media_id for r in out.collect()}
+    assert len(kept) < len(rows)  # the planted pairs were pruned
+    p = _plan(out)
+    assert "SortMergeJoin" not in p
+    assert "ExistingRDD[doc_id" not in p
+    assert p.count("BroadcastHashJoin") >= 2
+    assert "LocalTableScan" in p

@@ -19,13 +19,18 @@ When PIL is importable (real clusters), ``HAVE_PIL`` flips and the real
 encoders are used behind the same encode/decode API; all Spark-side plumbing
 (schemas, UDF signatures, batch shapes) is identical either way.
 
-All Spark entry points are vectorized pandas UDFs over Arrow batches — no
-per-row Python in the hot path (BASELINE.json input_hint).
+All Spark entry points are vectorized pandas UDFs over Arrow batches. The
+perceptual hash has no per-row Python: ``phash_many`` groups a batch's
+decoded arrays by shape and hashes each group in one ``phash64_batch`` numpy
+call. What stays per row is decode (header parse + ``zlib``, or PIL) and
+the PSNR check against each row's reference render.
 """
 
 from __future__ import annotations
 
+import math
 import zlib
+from collections.abc import Iterable
 
 import numpy as np
 import pandas as pd
@@ -191,33 +196,109 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
 
 
 def phash64(pixels: np.ndarray) -> int:
-    """64-bit average-hash: 8×8 block-mean grayscale, threshold at the mean.
+    """64-bit average-hash of one (h, w, 3) uint8 image: 8×8 block-mean
+    grayscale, each bit set where its block is brighter than the mean block.
 
-    Robust to the codec's quantization noise; flips bits under real content
-    change. Signed int64 (Spark LongType convention).
-    """
-    h, w = pixels.shape[:2]
-    gray = pixels.astype(np.float64).mean(axis=2)
-    # images narrower/shorter than 8px would produce empty 8×8 cells (NaN
-    # means → phash 0 for every tiny image); upsample by repetition first
+    Blocks follow the ``linspace(0, h, 9)`` × ``linspace(0, w, 9)`` grid
+    (images under 8 px on a side are first upsampled by repetition). The
+    comparison is exact integer arithmetic: with S a block's channel sum, c
+    its pixel count and P the product of the distinct block heights times
+    the product of the distinct block widths, the bit is
+    ``64·S_ij·(P/c_ij) > Σ_k S_k·(P/c_k)``. A tie is 0, so a flat image (any
+    1×1 image included) hashes to 0. Robust to the codec's quantization
+    noise; flips bits under real content change. Signed int64 (Spark
+    LongType convention), the first block in the most significant bit."""
+    return int(phash64_batch(pixels[None])[0])
+
+
+def _blocks(n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Start offsets and sizes of the 8 hash blocks along an axis of n ≥ 8."""
+    edges = np.linspace(0, n, 9).astype(int)
+    return edges[:-1], np.diff(edges)
+
+
+def phash_bits(sums: np.ndarray, heights, widths) -> np.ndarray:
+    """The exact bit rule of ``phash64`` over (n, 8, 8) integer block sums
+    with block heights/widths (8 each) → (n, 8, 8) bool. Runs in int64 when
+    ``64·765·P`` fits and in Python ints otherwise (WCSI dims reach 65535)."""
+    hs = [int(b) for b in heights]
+    ws = [int(b) for b in widths]
+    p_h, p_w = math.prod(set(hs)), math.prod(set(ws))
+    weight = np.outer(
+        np.array([p_h // b for b in hs], dtype=object),
+        np.array([p_w // b for b in ws], dtype=object),
+    )
+    if 64 * 765 * p_h * p_w < 2**63:
+        weighted = sums.astype(np.int64) * weight.astype(np.int64)
+    else:
+        weighted = sums.astype(object) * weight
+    total = weighted.sum(axis=(1, 2))
+    return 64 * weighted > total[:, None, None]
+
+
+def phash64_batch(stack: np.ndarray) -> np.ndarray:
+    """``phash64`` of every image in an (n, h, w, 3) uint8 stack → int64[n]:
+    channel sums, block sums by ``np.add.reduceat``, then ``phash_bits``."""
+    # channel sums, ≤ 765 per pixel (three adds: a reduction over the
+    # 3-wide inner axis runs ~10x slower)
+    gray = stack[..., 0].astype(np.uint16) + stack[..., 1] + stack[..., 2]
+    n, h, w = gray.shape
     if h < 8:
-        gray = np.repeat(gray, -(-8 // h), axis=0)
-        h = gray.shape[0]
+        gray = np.repeat(gray, -(-8 // h), axis=1)
     if w < 8:
-        gray = np.repeat(gray, -(-8 // w), axis=1)
-        w = gray.shape[1]
-    # block-mean downsample to 8×8 using cumulative trick (any w, h ≥ 8)
-    ys = (np.linspace(0, h, 9)).astype(int)
-    xs = (np.linspace(0, w, 9)).astype(int)
-    cells = np.empty((8, 8))
-    for i in range(8):
-        for j in range(8):
-            cells[i, j] = gray[ys[i] : ys[i + 1], xs[j] : xs[j + 1]].mean()
-    bits = (cells > cells.mean()).flatten()
-    v = 0
-    for bit in bits:
-        v = (v << 1) | int(bit)
-    return v - (1 << 64) if v >= (1 << 63) else v
+        gray = np.repeat(gray, -(-8 // w), axis=2)
+    ys, heights = _blocks(gray.shape[1])
+    xs, widths = _blocks(gray.shape[2])
+    sums = np.add.reduceat(
+        np.add.reduceat(gray, ys, axis=1, dtype=np.int64), xs, axis=2
+    )
+    bits = phash_bits(sums, heights, widths).reshape(n, 64)
+    return np.packbits(bits, axis=1).view(">i8").astype(np.int64).reshape(n)
+
+
+# Decoded pixels held before the pending shape groups are hashed: bounds a
+# batch's memory whatever its row count and image sizes.
+_STACK_BYTES = 64 << 20
+
+
+def phash_many(pixels: Iterable[np.ndarray | None], n: int) -> pd.arrays.IntegerArray:
+    """``phash64`` of n decoded images (NA where an item is None) as a
+    nullable Int64 array. Same-shape arrays are stacked and hashed in one
+    ``phash64_batch`` call; the pending groups are hashed whenever they hold
+    ``_STACK_BYTES``, so the items may come from a lazy decode loop."""
+    out = np.zeros(n, dtype=np.int64)
+    present = np.zeros(n, dtype=bool)
+    groups: dict[tuple, tuple[list[int], list[np.ndarray]]] = {}
+
+    def flush():
+        for idx, arrs in groups.values():
+            out[idx] = phash64_batch(np.stack(arrs))
+        groups.clear()
+
+    held = 0
+    for i, px in enumerate(pixels):
+        if px is None:
+            continue
+        present[i] = True
+        idx, arrs = groups.setdefault(px.shape, ([], []))
+        idx.append(i)
+        arrs.append(px)
+        held += px.nbytes
+        if held >= _STACK_BYTES:
+            flush()
+            held = 0
+    flush()
+    return pd.arrays.IntegerArray(out, ~present)
+
+
+def _try_decode(blob) -> np.ndarray | None:
+    """``decode_image`` for a UDF cell: None for a NULL or corrupt blob."""
+    if blob is None:
+        return None
+    try:
+        return decode_image(bytes(blob))
+    except (ValueError, zlib.error):
+        return None
 
 
 def hamming64(a: int, b: int) -> int:
@@ -235,33 +316,17 @@ def psnr_vs_reference_udf(image_id: pd.Series, blob: pd.Series) -> pd.Series:
     bytes → NaN (mapped to a content_error row downstream, not an exception)."""
     out = np.full(len(blob), np.nan)
     for i, (iid, b) in enumerate(zip(image_id, blob)):
-        if iid is None or b is None:
-            continue
-        try:
-            px = decode_image(bytes(b))
-        except (ValueError, zlib.error):
-            continue
-        ref = render_pixels(iid, px.shape[1], px.shape[0])
-        out[i] = psnr(px, ref)
+        px = None if iid is None else _try_decode(b)
+        if px is not None:
+            out[i] = psnr(px, render_pixels(iid, px.shape[1], px.shape[0]))
     return pd.Series(out)
 
 
 @pandas_udf(LongType())
 def phash_udf(blob: pd.Series) -> pd.Series:
-    """Recompute the 64-bit perceptual hash from stored bytes."""
-    out = np.zeros(len(blob), dtype=np.int64)
-    mask = np.ones(len(blob), dtype=bool)
-    for i, b in enumerate(blob):
-        if b is None:
-            mask[i] = False
-            continue
-        try:
-            out[i] = phash64(decode_image(bytes(b)))
-        except (ValueError, zlib.error):
-            mask[i] = False
-    s = pd.Series(out, dtype="Int64")
-    s[~mask] = pd.NA
-    return s
+    """Recompute the 64-bit perceptual hash from stored bytes; NULL where the
+    blob is NULL/corrupt."""
+    return pd.Series(phash_many((_try_decode(b) for b in blob), len(blob)))
 
 
 @pandas_udf(
@@ -278,31 +343,20 @@ def profile_udf(blob: pd.Series) -> pd.DataFrame:
     NULL/corrupt (error-as-data — NULLness IS the decode gate). Joint
     gating pipelines (curate_pairs) need both the perceptual hash and the
     dimensions, and decoding is the dominant cost: this keeps it one pass."""
-    ph = pd.array([None] * len(blob), dtype="Int64")
     w = pd.array([None] * len(blob), dtype="Int32")
     h = pd.array([None] * len(blob), dtype="Int32")
-    for i, b in enumerate(blob):
-        if b is None:
-            continue
-        try:
-            px = decode_image(bytes(b))
-        except (ValueError, zlib.error):
-            continue
-        ph[i] = phash64(px)
-        w[i] = int(px.shape[1])
-        h[i] = int(px.shape[0])
+
+    def decoded():
+        for i, b in enumerate(blob):
+            px = _try_decode(b)
+            if px is not None:
+                h[i], w[i] = px.shape[:2]
+            yield px
+
+    ph = phash_many(decoded(), len(blob))
     return pd.DataFrame({"phash": ph, "w": w, "h": h})
 
 
 @pandas_udf(BooleanType())
 def decodable_udf(blob: pd.Series) -> pd.Series:
-    out = np.zeros(len(blob), dtype=bool)
-    for i, b in enumerate(blob):
-        if b is None:
-            continue
-        try:
-            decode_image(bytes(b))
-            out[i] = True
-        except (ValueError, zlib.error):
-            pass
-    return pd.Series(out)
+    return pd.Series([_try_decode(b) is not None for b in blob], dtype=bool)

@@ -194,45 +194,49 @@ def _decode_blob(blob: bytes) -> np.ndarray:
 
 
 def extract_features(df: DataFrame, *, bytes_col: str = "bytes") -> DataFrame:
-    """Decode + feature-extract via ``mapInPandas``: per-channel means and a
-    perceptual hash. Narrow map — one Arrow batch in, one out; undecodable
-    rows yield decoded=false rows (error-as-data, E1 discipline)."""
+    """Decode + feature-extract via ``mapInPandas``: per-channel means (one
+    numpy mean per image) and a perceptual hash (``phash_many``: one batched
+    kernel call per shape). Narrow map — one Arrow batch in, one out;
+    undecodable rows yield decoded=false rows (error-as-data, E1
+    discipline)."""
     cols = ["media_id", bytes_col]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = []
-            for mid, blob in zip(pdf["media_id"], pdf[bytes_col]):
-                row = {
-                    "media_id": mid, "decoded": False, "w": None, "h": None,
-                    "mean_r": None, "mean_g": None, "mean_b": None, "phash": None,
-                }
-                if blob is not None:
-                    try:
-                        px = _decode_blob(bytes(blob))
-                        means = px.astype(np.float64).mean(axis=(0, 1))
-                        row.update(
-                            decoded=True, w=int(px.shape[1]), h=int(px.shape[0]),
-                            mean_r=float(means[0]), mean_g=float(means[1]),
-                            mean_b=float(means[2]), phash=I.phash64(px),
-                        )
-                    except (ValueError, zlib.error, NotImplementedError):
-                        pass
-                out.append(row)
-            # explicit nullable dtypes: a list-of-dicts DataFrame infers
-            # float64 for int+None columns, and float64's 53-bit mantissa
-            # silently zeroes the low ~11 bits of 64-bit phashes before
-            # Arrow casts back to int64
+            n = len(pdf)
+            w = pd.array([None] * n, dtype="Int32")
+            h = pd.array([None] * n, dtype="Int32")
+            means = np.zeros((n, 3))
+            decoded = np.zeros(n, dtype=bool)
+
+            def pixels():
+                for i, blob in enumerate(pdf[bytes_col]):
+                    px = None
+                    if blob is not None:
+                        try:
+                            px = _decode_blob(bytes(blob))
+                        except (ValueError, zlib.error, NotImplementedError):
+                            pass
+                    if px is not None:
+                        decoded[i] = True
+                        h[i], w[i] = px.shape[:2]
+                        means[i] = px.astype(np.float64).mean(axis=(0, 1))
+                    yield px
+
+            # explicit nullable dtypes: float64 would silently zero the low
+            # ~11 bits of 64-bit phashes before Arrow casts back to int64
+            phash = I.phash_many(pixels(), n)
             yield pd.DataFrame(
                 {
-                    "media_id": [r["media_id"] for r in out],
-                    "decoded": [r["decoded"] for r in out],
-                    "w": pd.array([r["w"] for r in out], dtype="Int32"),
-                    "h": pd.array([r["h"] for r in out], dtype="Int32"),
-                    "mean_r": pd.array([r["mean_r"] for r in out], dtype="Float64"),
-                    "mean_g": pd.array([r["mean_g"] for r in out], dtype="Float64"),
-                    "mean_b": pd.array([r["mean_b"] for r in out], dtype="Float64"),
-                    "phash": pd.array([r["phash"] for r in out], dtype="Int64"),
+                    "media_id": pdf["media_id"].to_numpy(),
+                    "decoded": decoded,
+                    "w": w,
+                    "h": h,
+                    **{
+                        f"mean_{c}": pd.arrays.FloatingArray(means[:, k], ~decoded)
+                        for k, c in enumerate("rgb")
+                    },
+                    "phash": phash,
                 }
             )
 

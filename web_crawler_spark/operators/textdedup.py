@@ -25,6 +25,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql.types import StructField, StructType
 from pyspark.sql import functions as F
@@ -304,12 +305,12 @@ def connected_components(
     # regime never touches the driver.
     if n_edges <= 1_000_000:
         out = _cc_driver_union_find(edges)
-        # the labels frame is a fresh local createDataFrame — the edge
-        # checkpoint is not in its plan, so it must be freed HERE or its
-        # blocks linger until the nondeterministic ContextCleaner GC
-        # (observed as a flaky storage-leak assert in the pair stream,
-        # r4 VERDICT Wrong #1: the collect above is the checkpoint's
-        # last reader)
+        # the labels frame is a local relation built from the collected
+        # edges — the edge checkpoint is not in its plan, so it must be
+        # freed HERE or its blocks linger until the nondeterministic
+        # ContextCleaner GC (observed as a flaky storage-leak assert in
+        # the pair stream: the collect inside is the checkpoint's last
+        # reader)
         release_frame(edges)
         return out
     # Mid-size fast path: below ~5M edges every round is pure fixed
@@ -369,9 +370,11 @@ def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
             StructField("cluster_id", edges.schema[1].dataType, False),
         ]
     )
-    return edges.sparkSession.createDataFrame(
-        [(n, find(n)) for n in nodes], schema=out_schema
-    )
+    # a pandas frame goes through Arrow into a LocalRelation: a sized
+    # LocalTableScan the planner can broadcast (a list of tuples becomes an
+    # unsized ExistingRDD scan, planned as shuffled sort-merge joins)
+    labels = pd.DataFrame({"doc_id": nodes, "cluster_id": [find(n) for n in nodes]})
+    return edges.sparkSession.createDataFrame(labels, schema=out_schema)
 
 
 def _cc_loop(edges, prev_ckpt, fp_prev, converged, max_iters):
