@@ -29,6 +29,8 @@ SUBSET = [
     "frontier_schedule",
     "dedup_exact",
     "dedup_simhash",
+    "dedup_prune",
+    "corpus_curation",
     "token_counts",
     "ann_cosine_topk",
     "media_meta",

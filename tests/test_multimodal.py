@@ -174,11 +174,25 @@ def test_phash_neardup_pairs(spark):
     for (a, b), h in pairs.items():
         assert h <= 3
         assert "bad" not in a + b and "null" not in a + b
-    # exact-recall pigeonhole guard
+    # parameter guards raise where the value enters (they must survive
+    # python -O): pigeonhole exact recall, bands tiling the hash, and the
+    # power-of-two winnow window
     import pytest as _pytest
+    from pyspark.sql import functions as F
 
-    with _pytest.raises(AssertionError):
-        M.phash_neardup_pairs(df, max_hamming=4, bands=4)
+    from web_crawler_spark.functions import text as T
+    from web_crawler_spark.operators import textdedup as TD
+
+    docs = spark.createDataFrame([(1, "some text here")], "doc_id long, text string")
+    for bad in (
+        lambda: M.phash_neardup_pairs(df, max_hamming=4, bands=4),
+        lambda: M.phash_neardup_pairs(df, max_hamming=2, bands=3),
+        lambda: TD.simhash_pairs(docs, "doc_id", "text", max_hamming=4, bands=4),
+        lambda: TD.simhash_pairs(docs, "doc_id", "text", max_hamming=3, bands=8),
+        lambda: T.winnow_fingerprints(F.col("text"), 8, 3),
+    ):
+        with _pytest.raises(ValueError):
+            bad()
 
 
 def test_phash_neardup_matches_bruteforce(spark):

@@ -279,8 +279,8 @@ def _sliding_min(hashes: Column, w: int) -> Column:
     """O(n·log w) sliding-window minima via associative doubling: pairwise
     mins, then mins of mins at stride 2, 4, … — never a per-window slice
     (which is O(n·w) with an array copy per window). Requires w a power of
-    two; window j's min lands at position j for j ≤ n−w+1."""
-    assert w & (w - 1) == 0, "window must be a power of two"
+    two (``winnow_fingerprints`` checks it); window j's min lands at
+    position j for j ≤ n−w+1."""
     acc = hashes
     span = 1
     n = F.size(hashes)
@@ -296,7 +296,10 @@ def _sliding_min(hashes: Column, w: int) -> Column:
 def winnow_fingerprints(c: Column, k: int = 8, w: int = 4) -> Column:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD'03):
     distinct minima of each w-window over the rolling k-gram hash stream.
-    Returns array<bigint>; empty when the text has fewer than k chars."""
+    Returns array<bigint>; empty when the text has fewer than k chars.
+    ``w`` must be a power of two (the doubling sliding minimum)."""
+    if w < 1 or w & (w - 1):
+        raise ValueError(f"winnow window must be a power of two, got w={w}")
     n = F.length(c)
     grams = F.transform(
         F.sequence(F.lit(1), n - k + 1), lambda i: md5_long(F.substring(c, i, F.lit(k)))

@@ -43,6 +43,12 @@ from pyspark.sql.types import (
 )
 
 from ..functions import images as I
+from .textdedup import (
+    _band_explode, _check_bands, banded_pairs, hamming_clusters, keep_survivors,
+)
+
+# phash is a full signed 64-bit long: the band join runs over all 64 bits
+PHASH_BITS = 64
 
 MEDIA = StructType(
     [
@@ -390,28 +396,25 @@ def phash_neardup_pairs(
     max_hamming: int = 3,
     bands: int = 4,
 ) -> DataFrame:
-    """Image near-duplicate pairs by 64-bit perceptual hash (the image-axis
-    twin of ``textdedup.simhash_pairs``): hamming(phash_a, phash_b) ≤
-    ``max_hamming`` over decoded pixel content — catches re-encodes,
-    quantization noise, and the fixture's ``~dN`` noise variants, which
-    byte-level exact dedup (D1/D2) cannot.
-
-    Candidate generation is the pigeonhole band trick: split the 64-bit
-    phash into ``bands`` contiguous chunks; any pair within hamming ≤
-    bands−1 agrees exactly on ≥1 chunk, so per-chunk equi-joins find every
-    qualifying pair (bands = max_hamming+1 → exact recall, no all-pairs
-    stage — the property that holds at 100 TB). Undecodable/NULL blobs are
-    dropped (error-as-data upstream, E1). Unlike simhash's 60-bit hashes,
-    phash uses the full signed 64-bit range, so band extraction must be the
-    UNSIGNED shift — an arithmetic shift would smear the sign bit across
-    the high band and split buckets.
+    """Image near-duplicate pairs by 64-bit perceptual hash:
+    hamming(phash_a, phash_b) ≤ ``max_hamming`` over decoded pixel content
+    — catches re-encodes, quantization noise, and the fixture's ``~dN``
+    noise variants, which byte-level exact dedup (D1/D2) cannot. It runs
+    the same banded join as ``textdedup.simhash_pairs``
+    (``textdedup.banded_pairs``, here over all 64 bits of the signed
+    phash; bands = max_hamming+1 → exact recall, no all-pairs stage).
+    Undecodable/NULL blobs are dropped (error-as-data upstream, E1).
 
     Output (media_a, media_b, hamming), media_a < media_b.
     """
+    _check_bands(PHASH_BITS, max_hamming, bands)
     ph = phash_table(df, id_col=id_col, bytes_col=bytes_col).filter(
         F.col("phash").isNotNull()
     )
-    return _pairs_from_hashes(ph, max_hamming=max_hamming, bands=bands)
+    return banded_pairs(
+        ph, "media_id", "phash", "media_a", "media_b",
+        bits=PHASH_BITS, max_hamming=max_hamming, bands=bands,
+    )
 
 
 def phash_table(
@@ -436,71 +439,6 @@ def phash_table(
     )
 
 
-def _band_explode(
-    df: DataFrame, id_col: str, id_out: str, ph_out: str, *, bands: int
-) -> DataFrame:
-    """One row per (id, band) with the band's chunk of the 64-bit phash —
-    the shared band-explode of the self-join (``_pairs_from_hashes``) and
-    the probe-vs-index join (``banded_matches``). One definition so the
-    band count / masking / unsigned-shift handling can never diverge
-    between the batch and streaming near-dup paths (stream admission
-    depends on both computing identical (band_idx, band_val) keys).
-    ``shiftrightunsigned`` because phash is a SIGNED long: an arithmetic
-    shift would smear the sign bit across high bands."""
-    assert 64 % bands == 0, "bands must divide 64"
-    chunk = 64 // bands
-    # bands=1 (exact phash match) needs the full-width mask: (1<<64)-1
-    # overflows LongType, but -1 is the same bit pattern in two's complement
-    mask = (1 << chunk) - 1 if chunk < 64 else -1
-    return df.select(
-        F.col(id_col).alias(id_out),
-        F.col("phash").alias(ph_out),
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("phash"), b * chunk).bitwiseAND(
-                        F.lit(mask).cast("long")
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-
-
-def _pairs_from_hashes(
-    ph: DataFrame, *, max_hamming: int, bands: int
-) -> DataFrame:
-    """Banded self-join over a non-null (media_id, phash) frame."""
-    assert bands >= max_hamming + 1, "need bands > max_hamming for exact recall"
-    bandified = _band_explode(ph, "media_id", "media_id", "phash", bands=bands)
-    a = bandified.alias("a")
-    b = bandified.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.media_id") < F.col("b.media_id")),
-        )
-        .select(
-            F.col("a.media_id").alias("media_a"),
-            F.col("b.media_id").alias("media_b"),
-            F.col("a.phash").alias("ph_a"),
-            F.col("b.phash").alias("ph_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))).cast("long"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("media_a", "media_b", "hamming")
-    )
-
-
 def banded_matches(
     probe: DataFrame, index: DataFrame, *, max_hamming: int, bands: int
 ) -> DataFrame:
@@ -511,15 +449,14 @@ def banded_matches(
     bands−1), same shape at scale: band-explode both sides, one equi-join
     on (band_idx, band_val), no all-pairs stage. Inputs: (pair_id, phash)
     with non-null phash."""
-    assert bands >= max_hamming + 1, "need bands > max_hamming for exact recall"
-    p = _band_explode(probe, "pair_id", "probe_id", "ph_p", bands=bands)
-    x = _band_explode(index, "pair_id", "index_id", "ph_x", bands=bands)
+    _check_bands(PHASH_BITS, max_hamming, bands)
+    p = _band_explode(probe, "pair_id", "phash", bits=PHASH_BITS, bands=bands)
+    x = _band_explode(index, "pair_id", "phash", bits=PHASH_BITS, bands=bands)
+    xor = F.col("p.phash").bitwiseXOR(F.col("x.phash"))
     return (
-        p.join(x, ["band_idx", "band_val"])
-        .filter(
-            F.bit_count(F.col("ph_p").bitwiseXOR(F.col("ph_x"))) <= F.lit(max_hamming)
-        )
-        .select(F.col("probe_id").alias("pair_id"))
+        p.alias("p").join(x.alias("x"), ["band_idx", "band_val"])
+        .filter(F.bit_count(xor) <= F.lit(max_hamming))
+        .select("p.pair_id")
         .distinct()
     )
 
@@ -534,24 +471,20 @@ def phash_neardup_clusters(
 ) -> DataFrame:
     """Cluster assignment over image near-dup pairs: connected components
     with the min-id representative (lexicographic min for string media
-    ids) — the image twin of ``textdedup.dedup_clusters`` /
-    ``similarity.neardup_clusters``, built on the same label-propagation
-    operator, so the image suite emits the same prunable (id, cluster_id)
-    shape as the text and embedding suites and feeds the same corpus-prune
-    step. Output (media_id, cluster_id) for every image with ≥1
-    near-duplicate; singletons never enter the frame (join back LEFT to
-    keep them)."""
-    from .textdedup import connected_components
-
-    pairs = phash_neardup_pairs(
-        df, id_col=id_col, bytes_col=bytes_col,
-        max_hamming=max_hamming, bands=bands,
+    ids) — the shared cluster step (``textdedup.hamming_clusters``) over
+    the ``phash_neardup_pairs`` join, so the image suite emits the same
+    prunable (id, cluster_id) shape as the text and embedding suites and
+    feeds the same corpus-prune step. Output (media_id, cluster_id) for
+    every image with ≥1 near-duplicate; singletons never enter the frame
+    (join back LEFT to keep them)."""
+    _check_bands(PHASH_BITS, max_hamming, bands)
+    ph = phash_table(df, id_col=id_col, bytes_col=bytes_col).filter(
+        F.col("phash").isNotNull()
     )
-    return connected_components(
-        pairs.select(
-            F.col("media_a").alias("doc_a"), F.col("media_b").alias("doc_b")
-        )
-    ).select(F.col("doc_id").alias("media_id"), "cluster_id")
+    return hamming_clusters(
+        ph, "media_id", "phash",
+        bits=PHASH_BITS, max_hamming=max_hamming, bands=bands,
+    )
 
 
 def phash_prune(
@@ -573,34 +506,15 @@ def phash_prune(
     Linear dataflow at any scale: one decode+hash pass (checkpointed,
     shared by the pair join and the survivor join), the banded equi-join,
     O(log diameter) component rounds, then two anti/left joins on
-    media_id."""
-    from .textdedup import connected_components
-
+    media_id (``textdedup.keep_survivors``)."""
+    _check_bands(PHASH_BITS, max_hamming, bands)
     ph = phash_table(df, id_col=id_col, bytes_col=bytes_col)
     valid = ph.filter(F.col("phash").isNotNull())
-    pairs = _pairs_from_hashes(valid, max_hamming=max_hamming, bands=bands)
-    clusters = connected_components(
-        pairs.select(
-            F.col("media_a").alias("doc_a"), F.col("media_b").alias("doc_b")
-        )
-    ).select(F.col("doc_id").alias("media_id"), "cluster_id")
-    dupes = clusters.filter(F.col("media_id") != F.col("cluster_id")).select(
-        "media_id"
+    clusters = hamming_clusters(
+        valid, "media_id", "phash",
+        bits=PHASH_BITS, max_hamming=max_hamming, bands=bands,
     )
-    reps = clusters.filter(F.col("media_id") == F.col("cluster_id")).select(
-        "media_id", F.lit(True).alias("__rep")
-    )
-    return (
-        valid.select("media_id")
-        .join(dupes, "media_id", "left_anti")
-        .join(reps, "media_id", "left")
-        .select(
-            "media_id",
-            F.when(F.col("__rep"), F.lit("representative"))
-            .otherwise(F.lit("unique"))
-            .alias("kept_as"),
-        )
-    )
+    return keep_survivors(valid.select("media_id"), clusters, "media_id")
 
 
 def pair_metrics(
@@ -710,8 +624,7 @@ def curate_pairs(
     driver-side loop; the checkpointed metrics frame is a few dozen bytes
     per row regardless of blob size.
     """
-    from .textdedup import connected_components
-
+    _check_bands(PHASH_BITS, max_hamming, bands)
     base = pair_metrics(
         df, id_col=id_col, bytes_col=bytes_col, caption_col=caption_col
     )
@@ -724,15 +637,10 @@ def curate_pairs(
             min_tokens=min_tokens,
         ),
     )
-    survivors = flagged.filter(F.col("_fail").isNull())
-    pairs = _pairs_from_hashes(
-        survivors.select(F.col("pair_id").alias("media_id"), "phash"),
-        max_hamming=max_hamming,
-        bands=bands,
+    clusters = hamming_clusters(
+        flagged.filter(F.col("_fail").isNull()), "pair_id", "phash",
+        bits=PHASH_BITS, max_hamming=max_hamming, bands=bands,
     )
-    clusters = connected_components(
-        pairs.select(F.col("media_a").alias("doc_a"), F.col("media_b").alias("doc_b"))
-    ).select(F.col("doc_id").alias("pair_id"), "cluster_id")
     return flagged.join(clusters, "pair_id", "left").select(
         "pair_id",
         "w",

@@ -407,9 +407,9 @@ def neardup_clusters(
         corpus, id_col=id_col, vec_col=vec_col,
         threshold=threshold, planes=planes, dims=dims,
     )
-    return connected_components(
-        pairs.select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-    ).select(F.col("doc_id").alias("vec_id"), "cluster_id")
+    return connected_components(pairs, "id_a", "id_b").select(
+        F.col("doc_id").alias("vec_id"), "cluster_id"
+    )
 
 
 def ivf_assign(

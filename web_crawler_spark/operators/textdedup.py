@@ -11,6 +11,12 @@ these are the operators a 100 TB corpus pipeline needs over ``documents``:
                            exact Jaccard
 - ``simhash_pairs``        SimHash near-dup pairs via band-join + hamming
 
+The near-dup tail, shared with the image suite and the pair stream:
+``banded_pairs`` (the one banded Hamming self-join, 60-bit simhash or
+64-bit phash), ``hamming_clusters`` (banded pairs → connected components
+→ (id, cluster_id)) and ``keep_survivors`` (the survivor rule: drop each
+clustered non-representative, label the rest representative/unique).
+
 Scale notes (100 TB):
 - Every pair-generating join is an equi-join on a hash key (shingle hash,
   band bucket, simhash band) — shuffle-partitioned, AQE-skew-safe, and
@@ -299,7 +305,9 @@ def connected_components(
     # same order as an AQE broadcast threshold — and a driver union-find
     # beats ANY distributed formulation: each star-contraction round is
     # ~10 stages of pure scheduling latency (measured 2-4s/round on a
-    # 19k-edge graph, >8s total), vs ~0.1s of driver CPU. The collect is
+    # 19k-edge graph, >8s total), vs ~2.5s wall for a 950k-edge chain on 4
+    # vCPUs (~1s of it the union-find, the rest the Arrow collect and the
+    # labels frame; a 19k-edge graph is well under 0.1s). The collect is
     # BOUNDED by the measured edge count, not hoped-for smallness; above
     # the bound the operator stays fully distributed, so the 10^9-edge
     # regime never touches the driver.
@@ -358,8 +366,11 @@ def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in edges.collect():
-        ru, rv = find(row[0]), find(row[1])
+    # the two edge columns come back through Arrow: a Row object per edge
+    # costs more driver time than the union-find itself
+    e = edges.toPandas()
+    for u, v in zip(e["u"].tolist(), e["v"].tolist()):
+        ru, rv = find(u), find(v)
         if ru != rv:
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo  # union by min ⇒ every root is its set's min
@@ -493,22 +504,30 @@ def dedup_prune(
     clusters = dedup_clusters(
         df, id_col, text_col, k=k, perms=perms, bands=bands, threshold=threshold
     )
-    dupes = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
-    reps = clusters.filter(F.col("doc_id") == F.col("cluster_id")).select(
-        "doc_id", F.lit(True).alias("__rep")
+    return keep_survivors(
+        df.select(F.col(id_col).cast("long").alias("doc_id")), clusters, "doc_id"
     )
-    kept = (
-        df.select(F.col(id_col).cast("long").alias("doc_id"))
-        .join(dupes, "doc_id", "left_anti")
-        .join(reps, "doc_id", "left")
+
+
+def keep_survivors(ids: DataFrame, clusters: DataFrame, id_col: str) -> DataFrame:
+    """The survivor rule of every near-dup prune: drop the rows of ``ids``
+    whose id is clustered but not its cluster's representative, and add
+    ``kept_as`` ∈ {representative, unique}. ``clusters`` is (id_col,
+    cluster_id); payload columns of ``ids`` pass through."""
+    dupes = clusters.filter(F.col(id_col) != F.col("cluster_id")).select(id_col)
+    reps = clusters.filter(F.col(id_col) == F.col("cluster_id")).select(
+        id_col, F.lit(True).alias("__rep")
+    )
+    return (
+        ids.join(dupes, id_col, "left_anti")
+        .join(reps, id_col, "left")
         .select(
-            "doc_id",
+            *ids.columns,
             F.when(F.col("__rep"), F.lit("representative"))
             .otherwise(F.lit("unique"))
             .alias("kept_as"),
         )
     )
-    return kept
 
 
 # test instrumentation: index builds this process (the split's contract is
@@ -628,23 +647,10 @@ class NearDupIndex:
     def prune(self, corpus: DataFrame, id_col: str = "doc_id") -> DataFrame:
         """``dedup_prune`` against the prebuilt components — two doc_id
         joins, zero shingling. Output (doc_id, kept_as) as in dedup_prune."""
-        clusters = self.clusters()
-        dupes = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
-            "doc_id"
-        )
-        reps = clusters.filter(F.col("doc_id") == F.col("cluster_id")).select(
-            "doc_id", F.lit(True).alias("__rep")
-        )
-        return (
-            corpus.select(F.col(id_col).cast("long").alias("doc_id"))
-            .join(dupes, "doc_id", "left_anti")
-            .join(reps, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.when(F.col("__rep"), F.lit("representative"))
-                .otherwise(F.lit("unique"))
-                .alias("kept_as"),
-            )
+        return keep_survivors(
+            corpus.select(F.col(id_col).cast("long").alias("doc_id")),
+            self.clusters(),
+            "doc_id",
         )
 
 
@@ -730,60 +736,107 @@ def simhash_pairs(
     bands: int = 4,
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
-    """SimHash near-dup pairs: hamming(simhash_a, simhash_b) ≤ max_hamming.
-
-    Candidate generation by the pigeonhole band trick: split the ``bits``-bit
-    simhash into ``bands`` contiguous chunks; any pair within hamming ≤
-    bands−1 shares at least one exact chunk, so an equi-join per chunk finds
-    every qualifying pair (bands = max_hamming+1 gives exact recall).
+    """SimHash near-dup pairs: hamming(simhash_a, simhash_b) ≤ max_hamming,
+    found by the shared pigeonhole join (``banded_pairs``) over the
+    ``bits``-bit simhash; bands = max_hamming+1 gives exact recall.
     Output (doc_a, doc_b, hamming).
     """
-    assert bands >= max_hamming + 1, "need bands > max_hamming for exact recall"
-    chunk = bits // bands
+    _check_bands(bits, max_hamming, bands)
     # Both sides of the band self-join re-execute their lineage (the build
     # side's BroadcastExchange is never a ReusedExchange of the probe side),
     # so without a cut the shingle-explode + 60-counter aggregation — the
     # expensive stage — runs twice over the full corpus. The hash table is
     # 16 bytes/row, the cheapest possible materialization point.
     sh = simhash_table(df, id_col, text_col, bits=bits).localCheckpoint(eager=True)
-    bandified = sh.select(
-        "doc_id",
-        "sh",
+    return banded_pairs(
+        sh, "doc_id", "sh", "doc_a", "doc_b",
+        bits=bits, max_hamming=max_hamming, bands=bands,
+    )
+
+
+def _check_bands(bits: int, max_hamming: int, bands: int) -> None:
+    """The band join's parameter rule for every hash width: the bands tile
+    the hash, and outnumber the allowed differing bits, so a pair within
+    ``max_hamming`` shares ≥1 band (pigeonhole: exact recall)."""
+    if bands < 1 or bits % bands or bands <= max_hamming:
+        raise ValueError(
+            f"bands must divide {bits} and exceed max_hamming, "
+            f"got bands={bands}, max_hamming={max_hamming}"
+        )
+
+
+def _band_explode(
+    df: DataFrame, id_col: str, hash_col: str, *, bits: int, bands: int
+) -> DataFrame:
+    """(id, hash, band_idx, band_val): one row per band of the ``bits``-bit
+    hash — the key of both the self-join (``banded_pairs``) and the
+    probe-vs-index join (``multimodal.banded_matches``), so the batch and
+    streaming near-dup paths compute identical keys. The UNSIGNED shift
+    because phash is a signed long: an arithmetic shift would smear the
+    sign bit across the high band (60-bit simhashes shift the same)."""
+    chunk = bits // bands
+    # bands=1 over 64 bits (exact phash match) needs the full-width mask:
+    # (1<<64)-1 overflows LongType, but -1 is the same bit pattern
+    mask = (1 << chunk) - 1 if chunk < 64 else -1
+    return df.select(
+        id_col,
+        hash_col,
         F.posexplode(
             F.array(
                 *[
-                    F.shiftright(F.col("sh"), b * chunk).bitwiseAND(
-                        F.lit((1 << chunk) - 1).cast("long")
+                    F.shiftrightunsigned(F.col(hash_col), b * chunk).bitwiseAND(
+                        F.lit(mask).cast("long")
                     )
                     for b in range(bands)
                 ]
             )
         ).alias("band_idx", "band_val"),
     )
-    a = bandified.alias("a")
-    b = bandified.alias("b")
-    cand = (
+
+
+def banded_pairs(
+    hashes: DataFrame, id_col: str, hash_col: str, a_col: str, b_col: str,
+    *, bits: int, max_hamming: int, bands: int,
+) -> DataFrame:
+    """The one banded Hamming self-join over a non-null (id, hash) frame:
+    any pair within hamming ≤ bands−1 agrees exactly on ≥1 of the ``bands``
+    chunks, so one equi-join on (band_idx, band_val) finds every pair
+    within ``max_hamming`` — no all-pairs stage. Output (a_col, b_col,
+    hamming), a < b."""
+    _check_bands(bits, max_hamming, bands)
+    bandified = _band_explode(hashes, id_col, hash_col, bits=bits, bands=bands)
+    a, b = bandified.alias("a"), bandified.alias("b")
+    xor = F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
+    return (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn(
-            "hamming",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("long"),
+            F.col(f"a.{id_col}").alias(a_col),
+            F.col(f"b.{id_col}").alias(b_col),
+            F.bit_count(xor).cast("long").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+        .distinct()
+    )
+
+
+def hamming_clusters(
+    hashes: DataFrame, id_col: str, hash_col: str,
+    *, bits: int, max_hamming: int, bands: int,
+) -> DataFrame:
+    """The near-dup cluster step: ``banded_pairs`` →
+    ``connected_components`` → (id_col, cluster_id = component min id) for
+    every id with ≥1 near-duplicate."""
+    pairs = banded_pairs(
+        hashes, id_col, hash_col, "id_a", "id_b",
+        bits=bits, max_hamming=max_hamming, bands=bands,
+    )
+    return connected_components(pairs, "id_a", "id_b").select(
+        F.col("doc_id").alias(id_col), "cluster_id"
     )
 
 

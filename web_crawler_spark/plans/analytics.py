@@ -1487,25 +1487,35 @@ def q_corpus_curation(spark, sf_dir):
     language-ID gate (en) → quality-score gate (≥ 0.5) → near-dup pruning
     WITHIN the filtered corpus → per-survivor (doc_id, score, ws_tokens,
     kept_as). Every stage is an operator with its own oracle entry; this
-    entry pins their composition."""
+    entry pins their composition.
+
+    The near-dup stage is served from the NearDupIndex: LSH candidacy and
+    the exact-Jaccard check depend only on the two documents of a pair, so
+    the filtered corpus's pairs are exactly the index pairs with both ends
+    in it — no second shingle/MinHash/LSH pass."""
     d = t(spark, sf_dir, "documents")
-    scored = d.select(
-        "doc_id",
-        "text",
-        T.lang_id(F.col("text")).alias("lang"),
-        T.quality_score(F.col("text")).alias("score"),
-        T.ws_token_count(F.col("text")).cast("long").alias("ws_tokens"),
-    )
-    # persist: kept feeds BOTH the dedup pipeline and the final join — the
+    # persist: kept feeds BOTH the pair filter and the survivor rule — the
     # lang/quality expression chains are the dominant per-row cost and must
     # not be evaluated twice (bounded: the filtered corpus)
-    kept = scored.filter(
-        (F.col("lang") == "en") & (F.col("score") >= 0.5)
-    ).persist()
-    survivors = TD.dedup_prune(kept.select("doc_id", "text"), "doc_id", "text")
-    return kept.join(survivors, "doc_id").select(
-        "doc_id", "score", "ws_tokens", "kept_as"
+    kept = (
+        d.select(
+            "doc_id",
+            T.lang_id(F.col("text")).alias("lang"),
+            T.quality_score(F.col("text")).alias("score"),
+            T.ws_token_count(F.col("text")).cast("long").alias("ws_tokens"),
+        )
+        .filter((F.col("lang") == "en") & (F.col("score") >= 0.5))
+        .select("doc_id", "score", "ws_tokens")
+        .persist()
     )
+    ids = kept.select("doc_id")
+    pairs = (
+        _neardup_index(spark, sf_dir).pairs()
+        .join(ids.withColumnRenamed("doc_id", "doc_a"), "doc_a", "left_semi")
+        .join(ids.withColumnRenamed("doc_id", "doc_b"), "doc_b", "left_semi")
+    )
+    clusters = TD.connected_components(pairs, "doc_a", "doc_b")
+    return TD.keep_survivors(kept, clusters, "doc_id")
 
 
 SQL_CORPUS_CURATION = rf"""

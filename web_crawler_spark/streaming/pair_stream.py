@@ -36,11 +36,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import (
-    _pairs_from_hashes,
+    PHASH_BITS,
     banded_matches,
     pair_gate_expr,
     pair_metrics,
 )
+from ..operators.textdedup import _check_bands, hamming_clusters
 from ..schemas import ADMITTED_PAIRS
 from ..session import release_frame
 from .marker import marker_value
@@ -68,8 +69,7 @@ def admit_pair_batch(
     (no checkpoint_dir → the marker is the caller's bare batch_id; stream
     callers pass their checkpoint so markers are scoped per stream
     incarnation, see streaming/marker.py)."""
-    from ..operators.textdedup import connected_components
-
+    _check_bands(PHASH_BITS, max_hamming, bands)
     mark = (
         marker_value(checkpoint_dir, batch_id)
         if checkpoint_dir is not None
@@ -91,14 +91,10 @@ def admit_pair_batch(
     ).filter(F.col("_fail").isNull())
 
     # within-batch near-dup prune: identical semantics to curate_pairs
-    pairs = _pairs_from_hashes(
-        survivors.select(F.col("pair_id").alias("media_id"), "phash"),
-        max_hamming=max_hamming,
-        bands=bands,
+    clusters = hamming_clusters(
+        survivors, "pair_id", "phash",
+        bits=PHASH_BITS, max_hamming=max_hamming, bands=bands,
     )
-    clusters = connected_components(
-        pairs.select(F.col("media_a").alias("doc_a"), F.col("media_b").alias("doc_b"))
-    ).select(F.col("doc_id").alias("pair_id"), "cluster_id")
     reps = (
         survivors.join(clusters, "pair_id", "left")
         .filter(
