@@ -82,7 +82,7 @@ class OracleCrawler:
     success_phashes: set[int] = field(default_factory=set)
     round: int = 0
     # per-round, per-hash-partition counters — twin of the engine's lineage
-    # table (plans/round.py: pkey = pmod(url_hash, lineage_partitions))
+    # table (plans/round.py: pkey = pmod(url_hash, LINEAGE_PARTITIONS))
     lineage: list[dict] = field(default_factory=list)
     lineage_partitions: int = 16
 

@@ -164,18 +164,3 @@ def test_single_batch_admission_matches_batch_curation(spark, tmp_path):
     }
     assert admitted == kept
     assert admitted == {"imgA", "imgB", "imgC"}
-
-
-def test_pair_batch_accepts_legacy_bare_int_markers(spark, tmp_path):
-    """Markers written before app-id scoping were bare int batch ids
-    (ADVICE r3 #2): a replay of the last committed micro-batch across an
-    in-place upgrade must be skipped, not re-admitted as duplicate rows."""
-    table = SnapshotTable(str(tmp_path / "admitted"))
-    rows = [("imgL", _blob("imgL"), GOOD_EN)]
-    batch = spark.createDataFrame(rows, "pair_id string, bytes binary, caption string")
-    # pre-upgrade release: bare int marker (the no-checkpoint batch path)
-    admit_pair_batch(batch, 0, table)
-    n1 = table.read(spark, schema=ADMITTED_PAIRS).count()
-    # post-upgrade replay of the SAME batch id through the scoped path
-    admit_pair_batch(batch, 0, table, checkpoint_dir=str(tmp_path / "ck"))
-    assert table.read(spark, schema=ADMITTED_PAIRS).count() == n1 == 1

@@ -351,9 +351,29 @@ def test_crawl_delay_longer_than_window_fetches_every_nth_round(spark):
 
     # period = ceil(180000/60000) = 3: fetch on rounds 1, 4, 7, ...
     assert [budget(r) for r in (1, 2, 3, 4, 5, 6, 7)] == [1, 0, 0, 1, 0, 0, 1]
-    # without rnd the legacy once-per-round floor applies (disclosed)
-    out = with_host_budget(frontier, robots, default_budget=8, round_window_ms=60_000)
-    assert out.select("host_budget").distinct().collect()[0]["host_budget"] == 1
+    # omitting rnd is round 1, for delays below, at and above the window
+    # and for a NULL delay
+    hosts = spark.createDataFrame(
+        [(f"https://{h}.com/{i}", f"{h}.com")
+         for h in ("below", "at", "above", "nodelay") for i in range(10)],
+        ["url", "host"],
+    )
+    delays = spark.createDataFrame(
+        [("below.com", None, 15_000, 8), ("at.com", None, 60_000, 8),
+         ("above.com", None, 180_000, 8), ("nodelay.com", None, None, 8)],
+        "host string, disallow_prefixes array<string>, crawl_delay_ms long, max_per_round int",
+    )
+
+    def budgets(**kw):
+        out = with_host_budget(
+            hosts, delays, default_budget=8, round_window_ms=60_000, **kw
+        )
+        rows = out.select("host", "host_budget").distinct().collect()
+        return {r["host"]: r["host_budget"] for r in rows}
+
+    implicit = budgets()
+    assert implicit == budgets(rnd=1)
+    assert implicit == {"below.com": 4, "at.com": 1, "above.com": 1, "nodelay.com": 8}
     # the Python oracle replays the same gate
     for rnd, want in [(1, 1), (2, 0), (3, 0), (4, 1)]:
         period = -(-180_000 // 60_000)

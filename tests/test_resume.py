@@ -20,7 +20,7 @@ def fixture_dir(tmp_path_factory):
     return d
 
 
-def _mk_run(spark, fixture_dir, run_dir, max_rounds=4):
+def _mk_run(spark, fixture_dir, run_dir, max_rounds=4, config=None):
     return CrawlRun(
         spark,
         run_dir,
@@ -28,7 +28,7 @@ def _mk_run(spark, fixture_dir, run_dir, max_rounds=4):
         links=load_fixture(spark, fixture_dir, "links"),
         pages=load_fixture(spark, fixture_dir, "pages"),
         robots=load_fixture(spark, fixture_dir, "robots"),
-        config=CrawlConfig(max_rounds=max_rounds),
+        config=config or CrawlConfig(max_rounds=max_rounds),
     )
 
 
@@ -82,11 +82,12 @@ def test_kill_and_resume_identical(spark, fixture_dir, tmp_path_factory):
 
 
 def test_resume_rolls_back_lazily_created_table(spark, fixture_dir, tmp_path_factory):
-    """A pre-hygiene run_dir (checkpoint has no trap_hosts_sid, table absent)
-    where trap detection lazily created + committed trap_hosts mid-round and
-    the round then crashed: resume() must discard those commits entirely —
-    otherwise dirty_vs_checkpoint() stays True after resume() and maintain()
-    is blocked until a full round happens to complete."""
+    """A run_dir whose checkpoint has no trap_hosts_sid (table absent)
+    where trap_hosts was created + committed mid-round and the round then
+    crashed: resume() must discard those commits entirely — otherwise
+    dirty_vs_checkpoint() stays True after resume() and maintain() is
+    blocked until a full round happens to complete. The crawl then runs
+    trap detection over the uninitialized table."""
     import json
     import os
     import shutil
@@ -106,8 +107,11 @@ def test_resume_rolls_back_lazily_created_table(spark, fixture_dir, tmp_path_fac
     shutil.rmtree(os.path.join(rdir, "trap_hosts"))
     del run  # crash boundary
 
-    fresh = _mk_run(spark, fixture_dir, rdir)
-    # simulate the crash window: the next round lazily initialized the
+    fresh = _mk_run(
+        spark, fixture_dir, rdir,
+        config=CrawlConfig(max_rounds=4, trap_detection=True),
+    )
+    # simulate the crash window: the next round initialized the
     # table and committed a flagged host, then died before its checkpoint
     from web_crawler_spark.schemas import TRAP_HOSTS
 

@@ -347,23 +347,3 @@ def test_seed_stream_new_checkpoint_applies_new_data(spark, tmp_path):
 
     urls = sorted(r["url"] for r in frontier.read(spark, schema=FRONTIER).collect())
     assert urls == ["https://first.com/x", "https://second.com/y"]
-
-
-def test_seed_stream_accepts_legacy_bare_int_markers(spark, tmp_path):
-    """Markers written before app-id scoping were bare int batch ids
-    (ADVICE r3 #2): a foreachBatch replay straddling an in-place upgrade
-    must still skip the already-committed micro-batch, not re-append it."""
-    from web_crawler_spark.schemas import FRONTIER
-    from web_crawler_spark.sources.lake import SnapshotTable
-    from web_crawler_spark.streaming.ingest import _admit_batch, _idempotent_admit
-
-    frontier = SnapshotTable(str(tmp_path / "frontier"))
-    batch = spark.createDataFrame(
-        [("https://legacy.com/x",)], "url string"
-    )
-    # pre-upgrade release: marker recorded as the bare int batch id
-    _admit_batch(batch, 0, frontier, meta={"ingest_batch_id": 0})
-    n1 = frontier.read(spark, schema=FRONTIER).count()
-    # post-upgrade replay of the SAME batch id through the scoped path
-    _idempotent_admit(batch, 0, frontier, str(tmp_path / "ck"))
-    assert frontier.read(spark, schema=FRONTIER).count() == n1 == 1

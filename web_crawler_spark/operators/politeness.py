@@ -198,7 +198,7 @@ def with_host_budget(
     robots: DataFrame,
     default_budget: int = DEFAULT_HOST_BUDGET,
     round_window_ms: int = DEFAULT_ROUND_WINDOW_MS,
-    rnd: int | None = None,
+    rnd: int = 1,
 ) -> DataFrame:
     """Attach the per-host round budget.
 
@@ -208,11 +208,10 @@ def with_host_budget(
     limiting (the reference only aspires to it — docs/dev-spec.md:1708).
 
     A delay LONGER than the round window means less than one fetch per
-    round: with ``rnd`` (1-based round number) the host is fetched once
-    every ``ceil(delay / window)`` rounds and skipped otherwise — flooring
-    at 1 every round would over-fetch an N-window-delay host N-fold.
-    Without ``rnd`` (stateless uses: the contract queries) the legacy
-    once-per-round floor applies and is disclosed here.
+    round: the host is fetched on round ``rnd`` (1-based) once every
+    ``ceil(delay / window)`` rounds and skipped otherwise — flooring at 1
+    every round would over-fetch an N-window-delay host N-fold. Round 1,
+    the default, is a due round for every host.
     """
     base = F.coalesce(F.col("max_per_round"), F.lit(default_budget))
     delay = F.col("crawl_delay_ms")
@@ -220,20 +219,17 @@ def with_host_budget(
     per_round = F.greatest(
         (F.lit(round_window_ms) / delay).cast("int"), F.lit(1)
     )
-    if rnd is None:
-        delay_cap = F.when(has_delay, per_round)
-    else:
-        # exact integer ceil(delay / window); fetch on rounds 1, 1+p, 1+2p…
-        period = F.floor(
-            (delay + F.lit(round_window_ms - 1)) / F.lit(round_window_ms)
-        ).cast("long")
-        due = F.pmod(F.lit(int(rnd) - 1), period) == 0
-        delay_cap = F.when(
-            has_delay,
-            F.when(period <= 1, per_round).otherwise(
-                F.when(due, F.lit(1)).otherwise(F.lit(0))
-            ),
-        )
+    # exact integer ceil(delay / window); fetch on rounds 1, 1+p, 1+2p…
+    period = F.floor(
+        (delay + F.lit(round_window_ms - 1)) / F.lit(round_window_ms)
+    ).cast("long")
+    due = F.pmod(F.lit(int(rnd) - 1), period) == 0
+    delay_cap = F.when(
+        has_delay,
+        F.when(period <= 1, per_round).otherwise(
+            F.when(due, F.lit(1)).otherwise(F.lit(0))
+        ),
+    )
     return (
         frontier.join(
             F.broadcast(robots.select("host", "max_per_round", "crawl_delay_ms")),
@@ -285,7 +281,7 @@ def select_per_host(
     default_budget: int = DEFAULT_HOST_BUDGET,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
     round_window_ms: int = DEFAULT_ROUND_WINDOW_MS,
-    rnd: int | None = None,
+    rnd: int = 1,
 ) -> DataFrame:
     """W4: ≤ budget rows per host, by (priority DESC, url_hash ASC), two-phase."""
     budgeted = with_host_budget(

@@ -689,7 +689,7 @@ pairs AS (
   JOIN sizes sa ON sa.doc_id = c.da
   JOIN sizes sb ON sb.doc_id = c.db
   WHERE 5 * i.ni >= 4 * (sa.n + sb.n - i.ni)),
-edges AS (
+edges AS MATERIALIZED (
   SELECT doc_a AS src, doc_b AS dst FROM pairs
   UNION
   SELECT doc_b, doc_a FROM pairs),
@@ -697,7 +697,7 @@ reach(doc, l) AS (
   SELECT src, src FROM edges
   UNION
   SELECT e.src, r.l FROM edges e JOIN reach r ON r.doc = e.dst),
-comp AS (
+comp AS MATERIALIZED (
   SELECT doc, MIN(l) AS cluster FROM reach GROUP BY doc)"""
 
 

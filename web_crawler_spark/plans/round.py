@@ -56,11 +56,14 @@ from ..schemas import (
     TRAP_HOSTS,
 )
 from ..session import release_frame as _release
+from ..session import scoped_confs
 from ..sources.lake import SnapshotTable
 
 _FETCH_LOG_COLS = [f.name for f in FETCH_LOG.fields]
 _FRONTIER_COLS = [f.name for f in FRONTIER.fields]
 _METRICS_COLS = [f.name for f in METRICS.fields if f.name != "round"]
+# url_hash pmod strata of the per-partition lineage table
+LINEAGE_PARTITIONS = 16
 
 
 def _clone_session(spark: SparkSession) -> SparkSession:
@@ -69,33 +72,14 @@ def _clone_session(spark: SparkSession) -> SparkSession:
     SessionState from the context conf, dropping anything set at runtime
     via ``spark.conf.set``. The JVM's ``cloneSession()`` copies runtime
     confs (plus temp views/UDFs) while staying fully isolated — mutations
-    on either side never cross; if that internal API ever drifts, fall
-    back to ``newSession()`` plus an explicit conf replay."""
-    try:
-        return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
-    except Exception:
-        pass
-    clone = spark.newSession()
-    try:
-        it = spark._jsparkSession.sessionState().conf().getAllConfs().iterator()
-        while it.hasNext():
-            kv = it.next()
-            k, v = kv._1(), kv._2()
-            try:
-                if clone.conf.get(k, None) != v:
-                    clone.conf.set(k, v)
-            except Exception:
-                pass  # static conf or unknown key: cannot / need not copy
-    except Exception:
-        pass  # Connect or API drift: clone still inherits context confs
-    return clone
+    on either side never cross."""
+    return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
 
 
 @dataclass
 class CrawlConfig:
     default_host_budget: int = 4
     salt_buckets: int = 16
-    max_attempts: int = faults.MAX_ATTEMPTS
     max_rounds: int = 50
     follow_links: bool = True
     exclude_anchors: bool = True  # reference default: fragment-stripped dedupe
@@ -113,7 +97,6 @@ class CrawlConfig:
     # or 'pagerank' — link-graph rank blended INTO the depth band
     # (operators/graph.py; integer-exact, oracle-replayed)
     priority_source: str = "depth"
-    pagerank_iters: int = 3
     # anti-starvation aging: every `priority_aging` rounds a discovered row
     # waits in the frontier, it is promoted one depth band (never above
     # band 1 — seeds at depth 0 keep strict precedence). 0 = off (the
@@ -124,15 +107,11 @@ class CrawlConfig:
     # single-valued: use_bloom always builds the words-table tier
     # (TableSeenTiers at run_dir/bloom); None and 'table' mean the same
     tier_kind: str | None = None
-    lineage_partitions: int = 16  # pkey strata for the per-partition lineage
     # frontier hygiene: quarantine hosts whose frontier URL population
     # trips the trap signals (operators/traps.py). Flagged hosts ratchet
     # into the trap_hosts table; their candidates are logged as skipped
     # (trap_error/TRAP_HOST) and settled, never fetched.
     trap_detection: bool = False
-    trap_variant_ratio_bp: int = 30000
-    trap_dup_segments: int = 2
-    trap_min_urls: int = 20
 
     def __post_init__(self) -> None:
         # fail where the bad value enters, not at tier construction
@@ -405,15 +384,14 @@ class CrawlRun:
         config: CrawlConfig | None = None,
     ):
         # round jobs execute on a PRIVATE cloned session (same
-        # SparkContext, own SQLConf): the round-scoped AQE flips in
-        # ``_round_confs`` are session-global while they hold, so on the
+        # SparkContext, own SQLConf): the round-scoped AQE flips of
+        # ``run_round`` are session-global while they hold, so on the
         # caller's session they would leak into whatever a concurrent
         # ingest stream / ad-hoc query happens to plan mid-round (the
-        # README explicitly sanctions that concurrency). newSession()
-        # starts from context-level confs only, so the caller's RUNTIME
-        # conf.set calls (timezone, ANSI, shuffle partitions, ...) are
-        # copied across explicitly — otherwise round jobs would silently
-        # plan under different semantics than the rest of the app.
+        # README explicitly sanctions that concurrency). The clone keeps
+        # the caller's RUNTIME conf.set calls (timezone, ANSI, shuffle
+        # partitions, ...), so round jobs plan under the same semantics
+        # as the rest of the app.
         self.spark = _clone_session(spark)
         self.run_dir = run_dir
         self.config = config or CrawlConfig()
@@ -457,10 +435,8 @@ class CrawlRun:
 
     @classmethod
     def _with_auth_cols(cls, df: DataFrame) -> DataFrame:
-        """Fill any missing credential columns with typed NULLs — accepts
-        ad-hoc seed frames and pre-upgrade frontier tables (legacy commits
-        lack the columns; parquet mergeSchema surfaces them only once a
-        post-upgrade commit exists)."""
+        """Fill any missing credential columns of an ad-hoc seed frame
+        with typed NULLs."""
         for c, t in cls._AUTH_COLS.items():
             if c not in df.columns:
                 df = df.withColumn(c, F.lit(None).cast(t))
@@ -678,7 +654,6 @@ class CrawlRun:
             idx = RankIndex.load_or_build(
                 SnapshotTable(os.path.join(self.run_dir, "ranks")),
                 edges,
-                iters=self.config.pagerank_iters,
                 corpus_key=corpus_key,
             )
             self._rank_df = idx.ranks(self.spark).select(
@@ -701,30 +676,6 @@ class CrawlRun:
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
     }
 
-    def _round_confs(self):
-        import contextlib
-
-        @contextlib.contextmanager
-        def scoped():
-            conf = self.spark.conf
-            prev = {}
-            for k, v in self._ROUND_CONFS.items():
-                try:
-                    prev[k] = conf.get(k)
-                except Exception:
-                    prev[k] = None
-                conf.set(k, v)
-            try:
-                yield
-            finally:
-                for k, v in prev.items():
-                    if v is None:
-                        conf.unset(k)
-                    else:
-                        conf.set(k, v)
-
-        return scoped()
-
     def run_round(self, checkpoint_extra: dict | None = None) -> dict:
         """Execute one round; returns the metrics dict (rows_selected == 0 and
         rows_in == 0 means the crawl is complete). ``checkpoint_extra`` is
@@ -732,7 +683,7 @@ class CrawlRun:
         commit) — the streaming driver's exactly-once micro-batch marker:
         present ⇒ the whole round committed; absent ⇒ a replay first rolls
         back whatever partial commits exist (``resume``) and re-runs."""
-        with self._round_confs():
+        with scoped_confs(self.spark, self._ROUND_CONFS):
             return self._run_round_body(checkpoint_extra)
 
     def _detect_new_traps(self, frontier_df: DataFrame, flag_round: int) -> list:
@@ -743,14 +694,8 @@ class CrawlRun:
         read-back are the same rows by construction."""
         from ..operators.traps import detect_url_traps
 
-        cfg = self.config
         known = self.trap_hosts_t.read(self.spark, schema=TRAP_HOSTS)
-        signals = detect_url_traps(
-            frontier_df,
-            variant_ratio_bp=cfg.trap_variant_ratio_bp,
-            dup_segment_threshold=cfg.trap_dup_segments,
-            min_urls=cfg.trap_min_urls,
-        )
+        signals = detect_url_traps(frontier_df)
         newly = (
             signals.filter(F.col("is_trap"))
             .join(known.select("host"), "host", "left_anti")
@@ -774,10 +719,6 @@ class CrawlRun:
         into trap_hosts_t because evidence shrinks once a quarantine
         empties the host's frontier mass — re-deriving the flag each round
         would let trap hosts oscillate back in."""
-        if self.trap_hosts_t.current_snapshot_id() is None:
-            # trap detection enabled on a run_dir from before the
-            # hygiene feature: initialize the quarantine table lazily
-            self.trap_hosts_t.overwrite_local([], TRAP_HOSTS)
         # newly flagged hosts are rare and bounded by host cardinality:
         # collect (sorted — byte-identical commits across parallelism)
         # and commit driver-local ONLY when non-empty, so quiet rounds
@@ -800,9 +741,7 @@ class CrawlRun:
     def _run_round_body(self, checkpoint_extra: dict | None = None) -> dict:
         cfg = self.config
         rnd = self.round + 1
-        frontier = self._with_auth_cols(
-            self.frontier_t.read(self.spark, schema=FRONTIER)
-        )
+        frontier = self.frontier_t.read(self.spark, schema=FRONTIER)
         ranks = (
             self._pagerank_scores() if cfg.priority_source == "pagerank" else None
         )
@@ -824,7 +763,8 @@ class CrawlRun:
         # ---- fetch_log rows and settled rows for this round: robots-blocked
         # and trapped rows are logged (skipped) and settled, never fetched
         retryable = (  # E2: fetcher.py:73-93, ≤3 attempts
-            F.col("retry_possible") & ((F.col("attempts") + 1) < cfg.max_attempts)
+            F.col("retry_possible")
+            & ((F.col("attempts") + 1) < faults.MAX_ATTEMPTS)
         )
 
         def settle(df: DataFrame) -> DataFrame:
@@ -907,11 +847,10 @@ class CrawlRun:
         # operator can audit exactly which hash ranges progressed, a resume
         # can prove no partition silently lost rows). One union + one
         # groupBy (a single shuffle of ≤ 4·P tiny groups) instead of round
-        # 2's four groupBys stitched by three full outer joins.
-        P = self.config.lineage_partitions
-
+        # 2's four groupBys stitched by three full outer joins. The four
+        # round totals are the sums of their strata.
         def strata_src(df: DataFrame, name: str) -> DataFrame:
-            pk = F.pmod(F.col("url_hash"), F.lit(P)).cast("int")
+            pk = F.pmod(F.col("url_hash"), F.lit(LINEAGE_PARTITIONS)).cast("int")
             return df.select(pk.alias("pkey"), F.lit(name).alias("m"))
 
         lin_cols = ["rows_in", "rows_selected", "rows_fetched_ok", "rows_failed"]
@@ -928,12 +867,8 @@ class CrawlRun:
         )
 
         stats_src = [
-            _tagged("rows_in", sched.frontier),
             _tagged("__best", sched.best),
             _tagged("rows_robots_blocked", blocked),
-            _tagged("rows_selected", fetched),
-            _tagged("rows_fetched_ok", fetched, F.col("status") == "success"),
-            _tagged("rows_failed", fetched, F.col("status") == "failed"),
             _tagged("rows_retried", fetched, retryable),
             _tagged("rows_discovered", discovered),
         ] + [_tagged(name, df_) for name, df_ in sched.tier_frames.items()]
@@ -998,6 +933,8 @@ class CrawlRun:
         for r in collected:
             if r["pkey"] is not None:
                 strata.setdefault(int(r["pkey"]), {})[r["k"]] = int(r["n"])
+        for c in lin_cols:
+            got[c] = sum(m.get(c, 0) for m in strata.values())
         got["rows_deduped"] = got["rows_in"] - got["__best"]
         counts = {c: got[c] for c in _METRICS_COLS}
         tier_counts = {k: got[k] for k in sched.tier_frames}
@@ -1058,11 +995,15 @@ class CrawlRun:
         ("metrics_t", "metrics_sid"),
         ("lineage_t", "lineage_sid"),
         ("phash_seen_t", "phash_seen_sid"),
-        # trap_hosts_sid is absent from pre-hygiene checkpoints; an
-        # uninitialized table's current_snapshot_id() is None, so old
-        # run_dirs compare clean and resume untouched
         ("trap_hosts_t", "trap_hosts_sid"),
     ]
+
+    def _sids(self) -> dict:
+        """Checkpoint key -> current snapshot id of every round table."""
+        return {
+            key: getattr(self, attr).current_snapshot_id()
+            for attr, key in self._TABLE_SIDS
+        }
 
     def checkpoint_state(self) -> dict:
         """The last committed checkpoint (atomic os.replace write)."""
@@ -1073,10 +1014,13 @@ class CrawlRun:
         """True iff any table has commits past the last checkpoint — i.e. a
         round started but did not reach its checkpoint (crash window)."""
         state = self.checkpoint_state()
-        return any(
-            getattr(self, attr).current_snapshot_id() != state.get(key)
-            for attr, key in self._TABLE_SIDS
-        )
+        return any(sid != state.get(key) for key, sid in self._sids().items())
+
+    def _write_checkpoint(self, state: dict) -> None:
+        tmp = os.path.join(self.run_dir, f".ckpt-{uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            json.dump(state, f)
+        os.replace(tmp, os.path.join(self.run_dir, "checkpoint.json"))
 
     def _checkpoint(self, extra: dict | None = None, fresh: bool = False) -> None:
         # Start from the ON-DISK checkpoint so keys persisted by other
@@ -1096,23 +1040,14 @@ class CrawlRun:
             **prior,
             **(extra or {}),
             "round": self.round,
-            "frontier_sid": self.frontier_t.current_snapshot_id(),
-            "seen_sid": self.seen_t.current_snapshot_id(),
-            "fetch_log_sid": self.fetch_log_t.current_snapshot_id(),
-            "metrics_sid": self.metrics_t.current_snapshot_id(),
-            "lineage_sid": self.lineage_t.current_snapshot_id(),
-            "phash_seen_sid": self.phash_seen_t.current_snapshot_id(),
-            "trap_hosts_sid": self.trap_hosts_t.current_snapshot_id(),
+            **self._sids(),
             "tiers_file": None,
         }
         if self.tiers is not None:
             tf = os.path.join(self.run_dir, f"tiers-{self.round}.pkl")
             self.tiers.dump(tf)
             state["tiers_file"] = tf
-        tmp = os.path.join(self.run_dir, f".ckpt-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, os.path.join(self.run_dir, "checkpoint.json"))
+        self._write_checkpoint(state)
 
     def maintain(self, keep_last: int = 4) -> dict:
         """Table maintenance between rounds (run it every K rounds on a
@@ -1155,20 +1090,14 @@ class CrawlRun:
         for _name, table in compactable:
             table.compact(self.spark)
         # re-checkpoint from the ON-DISK state + the new snapshot ids
-        state = self.checkpoint_state()
-        for attr, key in self._TABLE_SIDS:
-            state[key] = getattr(self, attr).current_snapshot_id()
-        tmp = os.path.join(self.run_dir, f".ckpt-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, os.path.join(self.run_dir, "checkpoint.json"))
+        state = {**self.checkpoint_state(), **self._sids()}
+        self._write_checkpoint(state)
         stats: dict[str, int] = {}
-        expirable = compactable + [("seen", self.seen_t)]
-        if self.trap_hosts_t.current_snapshot_id() is not None:
-            # never compacted (driver-local commits only on flagging
-            # rounds — already one small file each); absent on pre-hygiene
-            # run_dirs, hence the guard
-            expirable.append(("trap_hosts", self.trap_hosts_t))
+        # trap_hosts is never compacted: driver-local commits only on
+        # flagging rounds, already one small file each
+        expirable = compactable + [
+            ("seen", self.seen_t), ("trap_hosts", self.trap_hosts_t)
+        ]
         for name, table in expirable:
             stats[name] = len(table.expire_snapshots(keep_last=keep_last))
         # the membership tier's blob table accrues one snapshot per flush;
@@ -1195,12 +1124,9 @@ class CrawlRun:
         for attr, key in self._TABLE_SIDS:
             table = getattr(self, attr)
             sid = state.get(key)
-            # sid None covers two cases that must both roll back to the
-            # UNINITIALIZED state, not be skipped: a table lazily created
-            # mid-round (trap_hosts on a pre-hygiene run_dir) whose commits
-            # landed after the checkpoint, and a pre-hygiene checkpoint key
-            # that is simply absent. rollback(None) is a no-op when the
-            # table was never initialized, so old run_dirs resume untouched.
+            # sid None: the checkpoint recorded no snapshot, so every
+            # commit of the table came after it — roll back to the
+            # uninitialized state (a no-op when it never was initialized)
             if table.current_snapshot_id() != sid:
                 table.rollback(sid)
         if state.get("tiers_file"):

@@ -58,7 +58,7 @@ def get_spark(
         # size-based coalescing can under-partition a large scan and idle
         # 3/4 of the cluster (measured: N→4N efficiency 0.895 → 0.64 when
         # size-first was global). The crawl ROUND flips to size-based
-        # coalescing for its own jobs only (plans/round.py:_round_confs) —
+        # coalescing for its own jobs only (plans/round.py:run_round) —
         # orchestration stages are tiny and task latency dominates there.
         "spark.sql.adaptive.skewJoin.enabled": "true",
         # Arrow for every pandas UDF / mapInPandas / toPandas hop.

@@ -77,13 +77,7 @@ def crawl_round_stream(
         # marker scoped by the stream's query id: batch ids of a recreated
         # checkpoint renumber from 0 and must not be confused with the old
         # stream's — each tick of the new stream runs its round normally.
-        # Markers written before app-id scoping existed carry no
-        # stream_app_id; treat those as same-stream (legacy behavior) so an
-        # in-place upgrade doesn't re-run the last committed round.
-        recorded_app = state.get("stream_app_id")
-        same_stream = recorded_app == app_id or (
-            recorded_app is None and "stream_batch_id" in state
-        )
+        same_stream = state.get("stream_app_id") == app_id
         if same_stream and batch_id <= state.get("stream_batch_id", -1):
             # round fully committed before the crash → skip replay, but
             # still adopt the on-disk state for the next non-replayed batch

@@ -112,12 +112,7 @@ def _idempotent_admit(batch, batch_id, frontier_table, checkpoint_dir, **kw) -> 
     only meaningful within one checkpoint's lifetime, and a recreated
     checkpoint must not silently skip never-applied data."""
     mark = marker_value(checkpoint_dir, batch_id)
-    applied = frontier_table.applied_meta("ingest_batch_id")
-    # markers written before app-id scoping were bare batch ids; accept
-    # them as same-stream for one release (mirrors crawl_stream's legacy
-    # handling) so an in-place upgrade doesn't re-apply the last committed
-    # micro-batch on the foreachBatch replay
-    if mark in applied or batch_id in applied:
+    if mark in frontier_table.applied_meta("ingest_batch_id"):
         return
     _admit_batch(
         batch, batch_id, frontier_table, meta={"ingest_batch_id": mark}, **kw

@@ -75,11 +75,7 @@ def admit_pair_batch(
         if checkpoint_dir is not None
         else batch_id
     )
-    applied = admitted_table.applied_meta("pair_batch_id")
-    # pre-scoping markers were bare batch ids; accept them as same-stream
-    # for one release (mirrors crawl_stream's legacy handling) so an
-    # in-place upgrade doesn't re-admit the last committed micro-batch
-    if mark in applied or batch_id in applied:
+    if mark in admitted_table.applied_meta("pair_batch_id"):
         return
     spark = batch.sparkSession
     base = pair_metrics(batch)
