@@ -2,7 +2,8 @@
 
 Runs the SAME crawl (generated fixture, fixed seed) in two separate JVMs at
 local[4] (N) and local[16] (4N) and diffs the complete fetch logs, seen
-sets, and per-round metrics. The north rule requires the fetch ordering and
+sets, per-round metrics and final checkpoints (round, table snapshot ids,
+membership tier state). The north rule requires the fetch ordering and
 final URL-seen set to be identical across cluster sizes; the engine's total
 order (priority DESC, url_hash ASC; frontier dedupe closed over parent_url)
 is what makes this hold.
@@ -14,13 +15,16 @@ Prints one JSON line with "identical": true/false per artifact.
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import tempfile
 
+# the checkout this script belongs to: both children import its package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 CHILD = r"""
 import sys, json, tempfile
-sys.path.insert(0, "/root/repo")
 from web_crawler_spark.session import get_spark
 from web_crawler_spark.plans.round import CrawlConfig, CrawlRun
 from web_crawler_spark.sources.fixtures import load_fixture
@@ -45,14 +49,15 @@ seen = sorted(r["url_hash"] for r in run.seen_t.read(spark, schema=SEEN).collect
 frontier = sorted(map(tuple, run.frontier_t.read(spark).collect()))
 print("RESULT" + json.dumps({
     "log": log, "seen": seen, "frontier": frontier,
-    "metrics": [{k: m[k] for k in sorted(m)} for m in metrics]}))
+    "metrics": [{k: m[k] for k in sorted(m)} for m in metrics],
+    "checkpoint": run.checkpoint_state()}))
 """
 
 
 def run_level(cpus: int, fixture_dir: str) -> dict:
     out = subprocess.run(
         [sys.executable, "-c", CHILD, str(cpus), fixture_dir],
-        capture_output=True, text=True, timeout=900, cwd="/root/repo",
+        capture_output=True, text=True, timeout=900, cwd=ROOT,
     )
     lines = [l for l in out.stdout.splitlines() if l.startswith("RESULT")]
     if out.returncode != 0 or not lines:
@@ -65,12 +70,13 @@ def run_level(cpus: int, fixture_dir: str) -> dict:
 def main():
     # build the fixture once, shared by both child JVMs
     gen = (
-        "import sys; sys.path.insert(0, '/root/repo');"
-        "from web_crawler_spark.sources.fixtures import generate_site;"
+        "import sys; from web_crawler_spark.sources.fixtures import generate_site;"
         f"generate_site(sys.argv[1], n_pages=400, n_hosts=20, n_seeds=8, neardup_rate=0.1)"
     )
     fixture_dir = tempfile.mkdtemp(prefix="det-fixture-")
-    subprocess.run([sys.executable, "-c", gen, fixture_dir], check=True, timeout=300)
+    subprocess.run(
+        [sys.executable, "-c", gen, fixture_dir], check=True, timeout=300, cwd=ROOT
+    )
 
     a = run_level(4, fixture_dir)
     b = run_level(16, fixture_dir)
@@ -80,13 +86,16 @@ def main():
         "seen_set_identical": a["seen"] == b["seen"],
         "frontier_identical": a["frontier"] == b["frontier"],
         "metrics_identical": a["metrics"] == b["metrics"],
+        # snapshot ids are sequential per table, so equal commit histories
+        # give equal checkpoints
+        "checkpoint_identical": a["checkpoint"] == b["checkpoint"],
         "fetch_log_rows": len(a["log"]),
         "rounds": len(a["metrics"]),
     }
     report["pass"] = all(
         report[k] for k in (
             "fetch_log_identical", "seen_set_identical",
-            "frontier_identical", "metrics_identical",
+            "frontier_identical", "metrics_identical", "checkpoint_identical",
         )
     )
     print(json.dumps(report))

@@ -125,35 +125,38 @@ def test_stream_restart_with_clean_checkpoint_resumes_round_counter(
     spark, fixture_dir, tmp_path_factory
 ):
     """ADVICE r2 #2: a process restart hands the stream a brand-new CrawlRun
-    (round=0, tiers=None) over a CLEAN checkpoint — no table is dirty, so
-    the old code never resumed, renumbered rounds from 1 (duplicate round
-    values in metrics/fetch_log) and re-checkpointed tiers_file=None,
-    discarding the bloom-tier state. The restarted stream must instead
-    adopt the on-disk round counter and tiers before its first round."""
+    (round=0, tier at watermark 0) over a CLEAN checkpoint — no table is
+    dirty, so the old code never resumed and renumbered rounds from 1
+    (duplicate round values in metrics/fetch_log). The restarted stream
+    must instead adopt the on-disk round counter and tier state before
+    its first round."""
     run_dir = str(tmp_path_factory.mktemp("restart-run"))
     tmp = tmp_path_factory.mktemp("restart-aux")
     ticks = tmp / "ticks"
     ticks.mkdir()
-    run = _new_run(spark, fixture_dir, run_dir, use_bloom=True)
+    run = _new_run(spark, fixture_dir, run_dir, use_bloom=True, flush_every=2)
     for i in range(2):
         (ticks / f"t{i}.csv").write_text(f"{i}\n")
     q = crawl_round_stream(spark, run, str(ticks), str(tmp / "ckpt"))
     q.awaitTermination(300)
     assert run.round == 2
-    assert run.checkpoint_state()["tiers_file"] is not None
+    assert run.checkpoint_state()["tiers"] is not None
 
     # "process restart": fresh CrawlRun object, same run_dir + stream ckpt;
     # tables are exactly at the checkpoint (nothing dirty)
-    run2 = _raw_run(spark, fixture_dir, run_dir, use_bloom=True)
-    assert run2.round == 0 and run2.tiers is None
+    run2 = _raw_run(spark, fixture_dir, run_dir, use_bloom=True, flush_every=2)
+    assert run2.round == 0 and run2.tiers is not None
+    assert run2.tiers.flushed_round == 0
     assert not run2.dirty_vs_checkpoint()
     (ticks / "t2.csv").write_text("2\n")
     q2 = crawl_round_stream(spark, run2, str(ticks), str(tmp / "ckpt"))
     q2.awaitTermination(300)
     # the new round continued the numbering and the tier state survived
     assert run2.round == 3
-    assert run2.tiers is not None
-    assert run2.checkpoint_state()["tiers_file"] is not None
+    # the tier state was adopted: round 2's flush watermark, not the
+    # fresh object's 0 (round 3 does not flush at flush_every=2)
+    assert run2.tiers.flushed_round == 2
+    assert run2.tiers.state() == run2.checkpoint_state()["tiers"]
     m = run2.metrics_t.read(spark, schema=METRICS).select("round").collect()
     assert sorted(r["round"] for r in m) == [1, 2, 3]  # no renumbering
 
@@ -221,27 +224,27 @@ def test_stream_restart_in_round_zero_window_keeps_tiers(
     spark, fixture_dir, tmp_path_factory
 ):
     """The round-0 window of the restart hole: the process dies between
-    start() (checkpoint written: round 0 + tiers_file) and the FIRST tick.
-    The restarted CrawlRun agrees on the round counter (both 0), so the
-    round-mismatch guard alone never fires — but its tiers handle is gone,
-    and running without adoption would skip the tier probe and checkpoint
-    tiers_file=None, silently discarding the bloom tier for the whole run."""
+    start() (checkpoint written: round 0 + tier state) and the FIRST tick.
+    The restarted CrawlRun agrees on the round counter (both 0), so no
+    resume runs — its tier, built from the config at construction, must
+    already equal the checkpointed one, so the first round probes it and
+    checkpoints it instead of silently dropping the bloom tier."""
     run_dir = str(tmp_path_factory.mktemp("r0-run"))
     tmp = tmp_path_factory.mktemp("r0-aux")
     ticks = tmp / "ticks"
     ticks.mkdir()
     run = _new_run(spark, fixture_dir, run_dir, use_bloom=True)
-    assert run.checkpoint_state()["tiers_file"] is not None
+    assert run.checkpoint_state()["tiers"] is not None
     del run  # crash before any tick
 
     run2 = _raw_run(spark, fixture_dir, run_dir, use_bloom=True)
-    assert run2.round == 0 and run2.tiers is None
+    assert run2.round == 0 and run2.tiers is not None
+    assert run2.tiers.state() == run2.checkpoint_state()["tiers"]
     (ticks / "t0.csv").write_text("0\n")
     q = crawl_round_stream(spark, run2, str(ticks), str(tmp / "ckpt"))
     q.awaitTermination(300)
     assert run2.round == 1
-    assert run2.tiers is not None, "bloom tier must be adopted, not dropped"
-    assert run2.checkpoint_state()["tiers_file"] is not None
+    assert run2.checkpoint_state()["tiers"] is not None, "bloom tier dropped"
 
 
 def test_gated_ingest_invalid_urls_do_not_burn_budget(spark, tmp_path):

@@ -1,10 +1,10 @@
 """Bloom URL-seen tier: no false negatives ever; fp-rate sane; the
 distributed words build/probe round-trips and matches the numpy reference;
-tier checkpoints of other families, kinds and sizings reset safely."""
+tier checkpoint states of other families and sizings reset safely."""
 
 from __future__ import annotations
 
-import pickle
+import json
 
 import numpy as np
 import pytest
@@ -114,11 +114,12 @@ def test_words_probe_jvm_matches_all_other_paths(spark, hashes):
 
 
 def test_tiers_checkpoint_family_mismatch_resets_safely(spark, tmp_path):
-    """A tiers checkpoint written under a different bloom hash family, or by
-    one of the removed tier kinds ('distributed', 'driver', kind-less), must
-    not surface its bits (false negatives = exactness bug): the tier resets
-    to an empty words table + watermark 0, so the exact hot slice covers
-    everything. A same-family table checkpoint round-trips intact."""
+    """A tier state written under a different bloom hash family, or no
+    state at all (a checkpoint from before the tier state moved into
+    checkpoint.json), must not surface the table's bits (false negatives
+    = exactness bug): the tier resets to an empty words table + watermark
+    0 with the config's sizing, so the exact hot slice covers everything.
+    A same-family state round-trips intact through JSON."""
     from web_crawler_spark.functions.hashing import BLOOM_FAMILY
     from web_crawler_spark.operators.membership import TableSeenTiers
 
@@ -129,61 +130,44 @@ def test_tiers_checkpoint_family_mismatch_resets_safely(spark, tmp_path):
         [{"pkey": 0, "words": [-1] * (tiers.bloom.m // 64)}], WORDS_SCHEMA
     )
     tiers.flushed_round = 7
-    ck = str(tmp_path / "tiers.pkl")
-    tiers.dump(ck)
-    with open(ck, "rb") as f:
-        state = pickle.load(f)
+    state = json.loads(json.dumps(tiers.state()))
     assert state["family"] == BLOOM_FAMILY
 
-    same = TableSeenTiers.load(ck, path)
+    same = TableSeenTiers(path, expected_keys=1024, bloom_partitions=4)
+    same.restore(state)
     assert same.flushed_round == 7
     assert same.blob_table.read(spark, schema=WORDS_SCHEMA).count() == 1
 
     sizing = (tiers.bloom.p, tiers.bloom.m, tiers.bloom.k)
-    blob_rows = [(0, b"\xff" * (tiers.bloom.m // 8))]
-    stale = [
-        {**state, "family": "km0"},  # a pre-change hash family
-        {"kind": "distributed", "family": BLOOM_FAMILY,
-         "bloom": (*sizing, blob_rows), "flushed_round": 7, "flush_every": 4},
-        {"kind": "driver", "family": BLOOM_FAMILY,
-         "bloom": (*sizing, blob_rows), "flush_every": 4},
-        {"family": BLOOM_FAMILY, "bloom": (*sizing, blob_rows), "flush_every": 4},
-    ]
-    for legacy in stale:
+    for stale in ({**state, "family": "km0"}, None):
         tiers.blob_table.overwrite_local(
             [{"pkey": 0, "words": [-1] * (tiers.bloom.m // 64)}], WORDS_SCHEMA
         )
-        with open(ck, "wb") as f:
-            pickle.dump(legacy, f)
-        loaded = TableSeenTiers.load(ck, path)
-        assert loaded.flushed_round == 0, legacy  # hot slice covers all
+        loaded = TableSeenTiers(path, expected_keys=1024, bloom_partitions=4)
+        loaded.restore(stale)
+        assert loaded.flushed_round == 0, stale  # hot slice covers all
         assert (loaded.bloom.p, loaded.bloom.m, loaded.bloom.k) == sizing
         # stale bits discarded
         assert loaded.blob_table.read(spark, schema=WORDS_SCHEMA).count() == 0
 
 
 def test_legacy_unaligned_checkpoint_loads_and_flushes(spark, tmp_path):
-    """A checkpoint from before the blocked family recorded an m that is
-    64- but not 512-aligned. Resetting it must rebuild the sizing through
-    the constructor (which pads m to whole 512-bit blocks) — restoring m
-    raw made the next flush fail in ``bloom_indices``."""
+    """A state from before the blocked family recorded an m that is 64-
+    but not 512-aligned. It resets to the config's sizing (m padded to
+    whole 512-bit blocks) — adopting m raw made the next flush fail in
+    ``bloom_indices``."""
     from web_crawler_spark.operators.membership import TableSeenTiers
     from web_crawler_spark.schemas import SEEN
     from web_crawler_spark.sources.lake import SnapshotTable
 
     path = str(tmp_path / "bloom")
-    ck = str(tmp_path / "tiers.pkl")
-    with open(ck, "wb") as f:
-        pickle.dump(
-            {
-                "kind": "table", "family": "xr2", "layout": "words",
-                "sizing": (4, 1088, 10), "expected_keys": 1024,
-                "flushed_round": 3, "flush_every": 1,
-                "table_path": path, "table_sid": None,
-            },
-            f,
-        )
-    tiers = TableSeenTiers.load(ck, path)
+    tiers = TableSeenTiers(path, expected_keys=1024, bloom_partitions=4)
+    tiers.restore(
+        {
+            "family": "xr2", "sizing": [4, 1088, 10],
+            "flushed_round": 3, "flush_every": 1, "table_sid": None,
+        }
+    )
     assert tiers.bloom.m % 512 == 0 and tiers.bloom.m >= 1088
     assert (tiers.bloom.p, tiers.bloom.k, tiers.flushed_round) == (4, 10, 0)
 
@@ -222,11 +206,10 @@ def test_derived_partitions_cap_blob_size_at_design_point(tmp_path):
     assert bf.p == 1024
     blob_mb = bf.m / 8 / 2**20
     assert 10 <= blob_mb <= 32, f"blob {blob_mb:.1f} MiB"
-    # derived sizing round-trips through checkpoint/resume
+    # derived sizing round-trips through the checkpoint's JSON state
     tiers.init_table()
-    ck = str(tmp_path / "tiers.pkl")
-    tiers.dump(ck)
-    loaded = TableSeenTiers.load(ck, str(tmp_path / "bloom"))
+    loaded = TableSeenTiers(str(tmp_path / "bloom"))
+    loaded.restore(json.loads(json.dumps(tiers.state())))
     assert (loaded.bloom.p, loaded.bloom.m, loaded.bloom.k) == (bf.p, bf.m, bf.k)
     # small filters keep the 16-partition floor (probe parallelism never
     # collapses), exactly the previous default

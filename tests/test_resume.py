@@ -226,9 +226,9 @@ def test_maintain_on_fresh_handle_preserves_checkpoint_round(spark, tmp_path_fac
 
 def test_maintain_expires_table_tier_blob_snapshots(spark, tmp_path_factory):
     """With tier_kind='table', maintain() must expire the blob table's
-    per-flush snapshots (on a fresh handle too — derived from the on-disk
-    tiers file), keep the checkpointed blob snapshot live, and the crawl
-    must continue byte-identically afterwards."""
+    per-flush snapshots (on a fresh handle too — its tier is built from
+    the config at construction), keep the checkpointed blob snapshot live,
+    and the crawl must continue byte-identically afterwards."""
     from web_crawler_spark.plans.round import CrawlConfig, CrawlRun
     from web_crawler_spark.schemas import FETCH_LOG
     from web_crawler_spark.sources.fixtures import generate_site, load_fixture

@@ -1,11 +1,13 @@
 """The membership tier (Bloom words table + derived hot tier) wired into the
 round: exactness invariance, prefilter routing, lineage strata, resume with
-tiers (including checkpoints of the removed tier kinds)."""
+tiers (including checkpoints of other families and from before the tier
+state moved into checkpoint.json)."""
 
 from __future__ import annotations
 
+import glob
+import json
 import os
-import pickle
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,7 +100,7 @@ def test_table_tier_equals_distributed(spark, plain, tiered):
     neither driver nor broadcast) must crawl byte-identically to the
     distributed reference — the exact-only crawl, now that the broadcast
     tier is gone — while keeping the blob bytes out of the driver (its
-    pickled checkpoint stays tiny)."""
+    state in checkpoint.json stays tiny, and no sidecar file exists)."""
     r_plain, _ = plain
     r_tbl, m_tbl = tiered
     assert isinstance(r_tbl.tiers, TableSeenTiers)
@@ -108,12 +110,16 @@ def test_table_tier_equals_distributed(spark, plain, tiered):
     later = [m for m in m_tbl if m["round"] >= 2]
     assert any(m["rows_tier_negative"] > 0 for m in later)
     assert any(m["rows_tier_positive"] > 0 for m in later)
-    # flushes landed as blob rows in the snapshot table, and the tiers
-    # checkpoint carries metadata only (sizing + watermark + sid — no blobs)
+    # flushes landed as blob rows in the snapshot table, and the tier
+    # state carries metadata only (sizing + watermark + sid — no blobs)
     blobs = r_tbl.tiers.blob_table.read(spark, schema=WORDS_SCHEMA).collect()
     assert len(blobs) > 0
-    tf = r_tbl.checkpoint_state()["tiers_file"]
-    assert os.path.getsize(tf) < 1024
+    state = r_tbl.checkpoint_state()["tiers"]
+    assert set(state) == {
+        "family", "sizing", "flushed_round", "flush_every", "table_sid"
+    }
+    assert len(json.dumps(state)) < 1024
+    assert glob.glob(os.path.join(r_tbl.run_dir, "**", "*.pkl"), recursive=True) == []
 
 
 def test_tier_kind_accepts_only_the_table_tier():
@@ -172,14 +178,14 @@ def test_lineage_strata_sum_to_metrics(spark, tiered):
 
 
 def test_resume_restores_tiers(spark, fixture_dir, tiered, tmp_path_factory):
-    """Kill after round 2, resume: the tier state (watermark) is restored.
-    Then replace the tiers checkpoint with one written by the removed
-    'distributed' tier kind — its bits must NOT be trusted (here they are
-    all zero, so trusting them with its watermark would re-fetch settled
-    URLs); the reset path makes the exact hot slice cover the whole seen
-    set, and the finished run equals the uninterrupted one."""
-    from web_crawler_spark.functions.hashing import BLOOM_FAMILY
-
+    """Kill after round 2, resume: the tier state (watermark) is restored
+    from checkpoint.json. Then replace that state with one of another hash
+    family, and with a checkpoint written before the state moved into
+    checkpoint.json (a ``tiers_file`` key, no ``tiers``) — the blob
+    table's bits must NOT be trusted (trusting another family's bits with
+    its watermark could re-fetch settled URLs); the reset path makes the
+    exact hot slice cover the whole seen set, and each finished run
+    equals the uninterrupted one."""
     r_full, _ = tiered
     d_int = str(tmp_path_factory.mktemp("interrupted"))
     run1 = _run(spark, fixture_dir, d_int, True)
@@ -191,23 +197,24 @@ def test_resume_restores_tiers(spark, fixture_dir, tiered, tmp_path_factory):
     assert run2.resume() == 2
     assert isinstance(run2.tiers, TableSeenTiers)
     assert run2.tiers.flushed_round == 2
-
-    bf = run2.tiers.bloom
-    legacy = {
-        "kind": "distributed",
-        "family": BLOOM_FAMILY,
-        "bloom": (bf.p, bf.m, bf.k, [(key, bytes(bf.m // 8)) for key in range(bf.p)]),
-        "flushed_round": 2,
-        "flush_every": 2,
+    round2 = run2.checkpoint_state()
+    cases = {
+        "other family": {**round2, "tiers": {**round2["tiers"], "family": "km0"}},
+        "before the move": {
+            **{k: v for k, v in round2.items() if k != "tiers"},
+            "tiers_file": os.path.join(d_int, "tiers-2.pkl"),
+        },
     }
-    with open(run2.checkpoint_state()["tiers_file"], "wb") as f:
-        pickle.dump(legacy, f)
-    run3 = _run(spark, fixture_dir, d_int, True)
-    assert run3.resume() == 2
-    assert run3.tiers.flushed_round == 0
-    assert run3.tiers.blob_table.read(spark, schema=WORDS_SCHEMA).count() == 0
-    run3.run(until_empty=True)
-    assert _log_rows(spark, r_full) == _log_rows(spark, run3)
+    for case, state in cases.items():
+        # every case resumes from round 2's checkpoint and its tables
+        with open(os.path.join(d_int, "checkpoint.json"), "w") as f:
+            json.dump(state, f)
+        run3 = _run(spark, fixture_dir, d_int, True)
+        assert run3.resume() == 2
+        assert run3.tiers.flushed_round == 0, case
+        assert run3.tiers.blob_table.read(spark, schema=WORDS_SCHEMA).count() == 0
+        run3.run(until_empty=True)
+        assert _log_rows(spark, r_full) == _log_rows(spark, run3), case
 
 
 def _seen_table(spark, path, rounds: dict[int, range]) -> SnapshotTable:

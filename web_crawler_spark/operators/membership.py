@@ -23,8 +23,6 @@ Routing per round (plans/round.py):
 
 from __future__ import annotations
 
-import pickle
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -49,10 +47,12 @@ class TableSeenTiers:
     - **flush**: ``bloom.or_merge_words`` ORs the post-watermark seen slice
       into the blob rows and overwrites the table — one distributed job,
       zero blob bytes through the driver.
-    - **checkpoint/resume**: ``dump`` records only sizing + watermark + the
-      blob table's snapshot id; ``load`` rolls the table back to it, so a
-      crash between a flush and the round checkpoint discards the
-      uncheckpointed blob commit exactly like the six row tables.
+    - **checkpoint/resume**: ``state()`` is a few JSON-safe integers
+      (family, sizing, watermark, flush_every, the blob table's snapshot
+      id) that ride in the round's ``checkpoint.json``; ``restore`` rolls
+      the table back to that id, so a crash between a flush and the round
+      checkpoint discards the uncheckpointed blob commit exactly like the
+      seven row tables.
 
     Exactness: might_contain=False skips the exact anti-join, positives are
     confirmed against the exact seen table, so the seen set stays EXACT.
@@ -83,9 +83,11 @@ class TableSeenTiers:
         self.blob_table = SnapshotTable(table_path)
 
     def init_table(self) -> None:
-        """Fresh start: an empty blob table (no partitions have blobs yet —
-        every probe is a definite negative until the first flush)."""
+        """Reset: an empty blob table and watermark 0 (no partitions have
+        blobs yet — every probe is a definite negative until the first
+        flush, and the exact hot slice covers the whole seen set)."""
         self.blob_table.overwrite_local([], WORDS_SCHEMA)
+        self.flushed_round = 0
 
     def _words_df(self, spark) -> DataFrame:
         return self.blob_table.read(spark, schema=WORDS_SCHEMA)
@@ -146,55 +148,35 @@ class TableSeenTiers:
 
     # ------------------------------------------------------------- persistence
 
-    def dump(self, path: str) -> None:
+    def state(self) -> dict:
+        """The JSON-safe tier state recorded in the round checkpoint."""
         from ..functions.hashing import BLOOM_FAMILY
 
-        state = {
-            "kind": self.kind,
+        return {
             "family": BLOOM_FAMILY,
-            "layout": "words",
-            "sizing": (self.bloom.p, self.bloom.m, self.bloom.k),
+            "sizing": [self.bloom.p, self.bloom.m, self.bloom.k],
             "flushed_round": self.flushed_round,
             "flush_every": self.flush_every,
             "table_sid": self.blob_table.current_snapshot_id(),
         }
-        with open(path, "wb") as f:
-            pickle.dump(state, f)
 
-    @classmethod
-    def load(cls, path: str, table_path: str) -> "TableSeenTiers":
-        """Restore the tiers checkpointed at ``path`` over the blob table at
-        ``table_path``. Checkpoints of the removed tier kinds ('distributed',
-        'driver', kind-less) and of other hash families reset safely."""
+    def restore(self, state: dict | None) -> None:
+        """Adopt a checkpointed ``state()``: its sizing, watermark and
+        flush_every, with the blob table rolled back to its snapshot id
+        (discarding blob commits past the checkpoint). Anything else —
+        None, another hash family — resets through ``init_table``:
+        reusing bits written under another family would create false
+        negatives (an exactness bug), while an empty table + watermark 0
+        lets the exact hot slice cover the whole seen set until the next
+        flush rebuilds the filter. Slower, never wrong."""
         from ..functions.hashing import BLOOM_FAMILY
 
-        with open(path, "rb") as f:
-            state = pickle.load(f)
-        tiers = cls(table_path, flush_every=state["flush_every"])
-        # restore the CHECKPOINTED sizing, not the derived one: the stored
-        # bits are only meaningful under the (p, m, k) they were written
-        # with, and a legacy checkpoint whose explicit P predates the
-        # blob-size guard must still resume. Rebuilding through the
-        # constructor re-pads a legacy m to whole 512-bit blocks.
-        sizing = state["sizing"] if "sizing" in state else state["bloom"][:3]
-        tiers.bloom = PartitionedBloom(*sizing)
-        if (
-            state.get("kind") == cls.kind
-            and state.get("family") == BLOOM_FAMILY
-            and state.get("layout") == "words"
-        ):
-            tiers.flushed_round = state["flushed_round"]
-            sid = state["table_sid"]
-            if sid is not None and tiers.blob_table.current_snapshot_id() != sid:
-                # discard blob commits past the checkpoint (crash mid-round)
-                tiers.blob_table.rollback(sid)
-        else:
-            # A different hash family, the legacy binary layout, or a tier
-            # kind whose blobs never lived in this table: reusing those bits
-            # would create false negatives (an exactness bug). Reset to an
-            # empty words table + watermark 0 — the derived hot tier covers
-            # the whole seen set exactly until the next flush rebuilds the
-            # filter. Slower, never wrong.
-            tiers.init_table()
-            tiers.flushed_round = 0
-        return tiers
+        if state is None or state.get("family") != BLOOM_FAMILY:
+            self.init_table()
+            return
+        self.bloom = PartitionedBloom(*state["sizing"])
+        self.flushed_round = state["flushed_round"]
+        self.flush_every = state["flush_every"]
+        sid = state["table_sid"]
+        if self.blob_table.current_snapshot_id() != sid:
+            self.blob_table.rollback(sid)

@@ -234,12 +234,12 @@ class FileLeaseCatalog:
       gets from the kernel and a shared-directory backend must implement
       explicitly; a crashed STEALER's mutex (critical section:
       microseconds) is cleared once demonstrably ancient.
-    - **release** = rename-to-unique (atomic take), verify the content
-      is our own lease, unlink. If the content is NOT ours — possible
-      only when our TTL expired mid-critical-section and a stealer took
-      over, already a protocol violation window — the file is restored
-      via ``link`` (which cannot clobber a newer lease) and the release
-      becomes a no-op.
+    - **release** = read first: a lease that is not ours (released, or
+      taken over after our TTL expired) is left untouched. Our own lease
+      is rename-to-unique (atomic take), re-verified, unlinked. If the
+      taken content is NOT ours — our TTL expired between the read and
+      the rename and a stealer took over — it is restored via ``link``
+      (which cannot clobber a newer lease) and the release is a no-op.
 
     An unparsable lease file (a reader racing a writer's first write) is
     treated as HELD, with the file mtime + 60 s as the fallback expiry,
@@ -368,17 +368,20 @@ class FileLeaseCatalog:
         import uuid as _uuid
 
         path = self._path(table_id)
+        held = self._read(path)
+        if held is None or held[0] != owner:
+            return  # already released, or not ours: leave it untouched
         taken = path + ".rel." + _uuid.uuid4().hex
         try:
             os.rename(path, taken)
         except FileNotFoundError:
-            return  # already released/stolen+released
+            return  # stolen and released since the read
         held = self._read(taken)
         if held is not None and held[0] == owner:
             os.unlink(taken)
             return
-        # not ours (TTL expired mid-section and a stealer took over):
-        # restore without clobbering any newer lease, then back off
+        # our TTL expired between the read and the rename and a stealer
+        # took over: restore without clobbering any newer lease
         try:
             os.link(taken, path)
         except FileExistsError:

@@ -64,16 +64,12 @@ def crawl_round_stream(
         state = run.checkpoint_state()
         app_id = stream_app_id(checkpoint_dir)
         # this CrawlRun object must mirror the on-disk checkpoint before it
-        # runs (or skips) anything. Two restart windows need adoption:
-        # round mismatch (restart after round >= 1), and the round-0 window
-        # — a restart between start() and the first tick leaves a brand-new
-        # CrawlRun (round=0, tiers=None) that AGREES on the round counter
-        # but has lost the bloom-tier handle; running on it would silently
-        # skip the tier probe and checkpoint tiers_file=None, discarding
-        # the tier state for the rest of the run (ADVICE r2 #2).
-        stale = run.round != state.get("round", 0) or (
-            run.tiers is None and state.get("tiers_file")
-        )
+        # runs (or skips) anything: a restart after round >= 1 hands the
+        # stream a brand-new CrawlRun whose round counter (and tier state)
+        # lags the checkpoint. At round 0 a fresh CrawlRun already equals
+        # the checkpoint (its tier is built from the config: watermark 0,
+        # config sizing, blob table at its start() commit).
+        stale = run.round != state.get("round", 0)
         # marker scoped by the stream's query id: batch ids of a recreated
         # checkpoint renumber from 0 and must not be confused with the old
         # stream's — each tick of the new stream runs its round normally.
@@ -87,7 +83,7 @@ def crawl_round_stream(
         if run.dirty_vs_checkpoint() or stale:
             # dirty: discard the crashed attempt's partial commits.
             # stale with CLEAN tables: adopt the checkpoint's round
-            # counter and tiers_file (no rollback needed).
+            # counter and tier state (no rollback needed).
             run.resume()
         run.run_round(
             checkpoint_extra={"stream_batch_id": batch_id, "stream_app_id": app_id}
