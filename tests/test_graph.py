@@ -53,19 +53,18 @@ def test_rank_index_builds_once_and_loads(spark, tmp_path):
     object — load the SnapshotTable. PageRank is integer-exact, so loaded
     ranks are bit-identical to rebuilt ones."""
     import web_crawler_spark.operators.graph as G
-    from web_crawler_spark.sources.lake import SnapshotTable
 
     edges = spark.createDataFrame(
         [(i, (i * 7) % 50) for i in range(400) if i != (i * 7) % 50],
         ["src", "dst"],
     )
-    table = SnapshotTable(str(tmp_path / "ranks"))
+    root = str(tmp_path / "ranks")
     before = G.RANK_BUILDS
-    idx = G.RankIndex.load_or_build(table, edges, iters=3, corpus_key="fix")
+    idx = G.RankIndex.load_or_build(edges, root, iters=3, corpus_key="fix")
     built = sorted(map(tuple, idx.ranks().select("node", "rank_int").collect()))
     assert G.RANK_BUILDS == before + 1
     # second load_or_build: no retrain, identical ranks
-    idx2 = G.RankIndex.load_or_build(table, edges, iters=3, corpus_key="fix")
+    idx2 = G.RankIndex.load_or_build(edges, root, iters=3, corpus_key="fix")
     loaded = sorted(map(tuple, idx2.ranks().select("node", "rank_int").collect()))
     assert G.RANK_BUILDS == before + 1
     assert loaded == built == sorted(
@@ -73,9 +72,9 @@ def test_rank_index_builds_once_and_loads(spark, tmp_path):
     )
     # params or corpus key mismatch → rebuild (a refreshed links snapshot
     # must invalidate the index, never serve stale ranks)
-    G.RankIndex.load_or_build(table, edges, iters=2, corpus_key="fix")
+    G.RankIndex.load_or_build(edges, root, iters=2, corpus_key="fix")
     assert G.RANK_BUILDS == before + 2
-    G.RankIndex.load_or_build(table, edges, iters=2, corpus_key="other")
+    G.RankIndex.load_or_build(edges, root, iters=2, corpus_key="other")
     assert G.RANK_BUILDS == before + 3
 
 

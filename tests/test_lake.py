@@ -809,6 +809,41 @@ def test_file_lease_two_writers(spark, tmp_path, monkeypatch):
     catalog.release("t", "D")
 
 
+def test_file_lease_steal_mutex_judged_by_its_deadline(tmp_path):
+    """A live stealer's mutex is judged by the deadline its creator wrote
+    into it, not by its mtime (the file server's clock): with the mtime 20 s
+    back, a contender must neither clear the mutex nor take the expired
+    lease. Once that deadline has passed (a crashed stealer), the mutex is
+    cleared and the takeover proceeds."""
+    import json
+    import os
+    import time
+
+    from web_crawler_spark.sources.lake import FileLeaseCatalog
+
+    catalog = FileLeaseCatalog(str(tmp_path / "leases"))
+    assert catalog.try_acquire("t", "dead", ttl_sec=0.05)
+    time.sleep(0.1)
+    mutex = catalog._path("t") + ".steal"
+
+    def stealer_mutex(deadline: float) -> None:
+        with open(mutex, "w") as f:
+            json.dump({"table_id": "t", "owner": "stealer", "deadline": deadline}, f)
+        back = time.time() - 20
+        os.utime(mutex, (back, back))
+
+    stealer_mutex(time.time() + 30)
+    assert not catalog.try_acquire("t", "C", ttl_sec=30)
+    assert not catalog.try_acquire("t", "C", ttl_sec=30)
+    assert os.path.exists(mutex)
+
+    stealer_mutex(time.time() - 1)
+    assert not catalog.try_acquire("t", "C", ttl_sec=30)  # clears it
+    assert catalog.try_acquire("t", "C", ttl_sec=30)
+    assert not os.path.exists(mutex)
+    catalog.release("t", "C")
+
+
 def test_file_lease_single_winner_under_contention(tmp_path):
     """16 threads race one conditional put (fresh AND post-expiry steal):
     exactly one wins each time — the property the O_EXCL create and the

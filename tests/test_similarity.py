@@ -163,20 +163,18 @@ def test_ivf_index_build_probe_split_reuses_training(spark, tmp_path):
     """VERDICT r2 #1 done-criteria: two successive queries through the index
     run ONE training pass; a saved index reloads without retraining and
     probes bit-identically; mismatched build params force a rebuild."""
-    from web_crawler_spark.sources.lake import SnapshotTable
-
     df = _vecs(spark)
-    table = SnapshotTable(str(tmp_path / "ivf"))
+    root = str(tmp_path / "ivf")
 
     before = S.TRAIN_RUNS
-    idx = S.IvfIndex.load_or_build(table, df, n_cells=4, kmeans_iters=2)
+    idx = S.IvfIndex.load_or_build(df, root, n_cells=4, kmeans_iters=2)
     r1 = sorted(map(tuple, idx.topk(k=3, nprobe=2, n_queries=8).collect()))
     r2 = sorted(map(tuple, idx.topk(k=3, nprobe=2, n_queries=8).collect()))
     assert S.TRAIN_RUNS == before + 1  # built once, probed twice
     assert r1 == r2
 
     # reload (fresh handle, e.g. next session): no retraining, same results
-    idx2 = S.IvfIndex.load_or_build(table, df, n_cells=4, kmeans_iters=2)
+    idx2 = S.IvfIndex.load_or_build(df, root, n_cells=4, kmeans_iters=2)
     r3 = sorted(map(tuple, idx2.topk(k=3, nprobe=2, n_queries=8).collect()))
     assert S.TRAIN_RUNS == before + 1  # loaded, not rebuilt
     assert idx2.centroids == idx.centroids
@@ -194,7 +192,7 @@ def test_ivf_index_build_probe_split_reuses_training(spark, tmp_path):
     assert legacy == r1
 
     # different params must not reuse the stored centroids
-    idx3 = S.IvfIndex.load_or_build(table, df, n_cells=4, kmeans_iters=1)
+    idx3 = S.IvfIndex.load_or_build(df, root, n_cells=4, kmeans_iters=1)
     assert idx3.centroids != idx.centroids or idx3.kmeans_iters != idx.kmeans_iters
     idx.unpersist()
     idx2.unpersist()

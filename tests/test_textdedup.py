@@ -238,7 +238,8 @@ def test_connected_components_star_contraction_worst_cases(spark):
 def test_neardup_index_build_probe_split(spark, tmp_path):
     """The NearDupIndex materializes pairs+components once; probes (pairs,
     clusters, prune) match the direct operators bit-for-bit; a reload does
-    not rebuild; mismatched params force a rebuild."""
+    not rebuild; mismatched params force a rebuild, and so does a half-built
+    index (pairs current, clusters stale)."""
     d = _docs(spark)
     root = str(tmp_path / "ndi")
     before = TD.INDEX_BUILDS
@@ -290,6 +291,17 @@ def test_neardup_index_build_probe_split(spark, tmp_path):
         k=5, perms=32, bands=4, threshold=0.8,
     )
     assert TD.INDEX_BUILDS == before + 2
+
+    # half-built (a crash between the two commits): pairs current for 0.5,
+    # clusters still at 0.8 → one rebuild of both, then a plain load
+    idx2.pairs_t.rollback(idx2.pairs_t.current_snapshot_id() - 1)
+    for _ in range(2):
+        idx3 = TD.NearDupIndex.load_or_build(
+            d, root, id_col="doc_id", text_col="text",
+            k=5, perms=32, bands=4, threshold=0.5,
+        )
+        assert TD.INDEX_BUILDS == before + 3
+    assert sorted(map(tuple, idx3.clusters().collect())) == direct_clusters
 
 
 def test_contamination_check_direction_and_threshold(spark):

@@ -215,6 +215,8 @@ def test_resume_restores_tiers(spark, fixture_dir, tiered, tmp_path_factory):
         assert run3.tiers.blob_table.read(spark, schema=WORDS_SCHEMA).count() == 0
         run3.run(until_empty=True)
         assert _log_rows(spark, r_full) == _log_rows(spark, run3), case
+        # keys the engine no longer writes are not carried forward
+        assert "tiers_file" not in run3.checkpoint_state(), case
 
 
 def _seen_table(spark, path, rounds: dict[int, range]) -> SnapshotTable:

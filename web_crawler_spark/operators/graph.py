@@ -119,77 +119,46 @@ class RankIndex:
     frontier scheduler, analytics, audits — reads the rank TABLE. The index
     factors it so:
 
-    - **build** (once per links snapshot): ``pagerank`` over the edges,
-      ranks committed to a ``SnapshotTable`` with ``{iters, corpus_key}``
-      as commit metadata. ``corpus_key`` identifies the edge snapshot the
-      ranks were trained on (links-table snapshot id, corpus fingerprint,
-      or sf_dir slug) so a refreshed corpus invalidates the index.
-    - **load / load_or_build**: reuse when params + corpus key match.
-      ``pagerank`` is integer-exact (no float summation), so a loaded
-      index is bit-identical to a rebuilt one — correctness oracles are
-      unchanged. The ``edges`` argument of ``load_or_build`` is a LAZY
-      DataFrame: on the load path it is never executed, so callers may
-      pass arbitrarily expensive edge derivations for free.
+    - **load_or_build** (build once per links snapshot): ``pagerank`` over
+      the edges, ranks committed to the ``SnapshotTable`` at ``root``
+      unless it is current for ``{iters, corpus_key}``
+      (``sources.lake.load_or_build``). ``corpus_key`` identifies the edge
+      snapshot the ranks were trained on (links-table snapshot id, corpus
+      fingerprint, or sf_dir slug) so a refreshed corpus invalidates the
+      index. ``pagerank`` is integer-exact (no float summation), so a
+      loaded index is bit-identical to a rebuilt one — correctness oracles
+      are unchanged. ``edges`` is a LAZY DataFrame: on the load path it is
+      never executed, so callers may pass arbitrarily expensive edge
+      derivations for free.
     - **probe**: ``ranks()`` is a table scan; join it on ``node``.
     """
 
     SCHEMA = "node long, rank_int long"
 
-    def __init__(self, spark, table, *, iters: int, corpus_key: str):
+    def __init__(self, spark, table):
         self.spark = spark
         self.table = table
-        self.iters = iters
-        self.corpus_key = corpus_key
-
-    @staticmethod
-    def _params(iters: int, corpus_key: str) -> dict:
-        return {"iters": int(iters), "corpus_key": str(corpus_key)}
-
-    @classmethod
-    def build(
-        cls, edges: DataFrame, table, *, iters: int = 3, corpus_key: str = ""
-    ) -> "RankIndex":
-        import json
-
-        global RANK_BUILDS
-        RANK_BUILDS += 1
-        ranked = pagerank(edges, iters=iters).select("node", "rank_int")
-        table.overwrite(
-            ranked,
-            meta={"rank_params": json.dumps(cls._params(iters, corpus_key))},
-        )
-        # the table commit materialized the final iterate; free its
-        # localCheckpoint blocks (``ranked`` projects over it, owned here)
-        release_frame(ranked, deep=True)
-        return cls(edges.sparkSession, table, iters=iters, corpus_key=corpus_key)
-
-    @classmethod
-    def load(
-        cls, table, spark, *, iters: int = 3, corpus_key: str = ""
-    ) -> "RankIndex | None":
-        """Reload a saved index; None when absent or params/key mismatch."""
-        import json
-
-        sid = table.current_snapshot_id()
-        if sid is None:
-            return None
-        meta = table._manifest(sid).get("meta") or {}
-        if json.loads(meta.get("rank_params", "{}")) != cls._params(
-            iters, corpus_key
-        ):
-            return None
-        return cls(spark, table, iters=iters, corpus_key=corpus_key)
 
     @classmethod
     def load_or_build(
-        cls, table, edges: DataFrame, *, iters: int = 3, corpus_key: str = ""
+        cls, edges: DataFrame, root: str, *, iters: int = 3, corpus_key: str = ""
     ) -> "RankIndex":
-        idx = cls.load(
-            table, edges.sparkSession, iters=iters, corpus_key=corpus_key
-        )
-        if idx is None:
-            idx = cls.build(edges, table, iters=iters, corpus_key=corpus_key)
-        return idx
+        from ..sources.lake import SnapshotTable, load_or_build
+
+        table = SnapshotTable(root)
+
+        def build(meta: dict) -> None:
+            global RANK_BUILDS
+            RANK_BUILDS += 1
+            ranked = pagerank(edges, iters=iters).select("node", "rank_int")
+            table.overwrite(ranked, meta=meta)
+            # the table commit materialized the final iterate; free its
+            # localCheckpoint blocks (``ranked`` projects over it, owned here)
+            release_frame(ranked, deep=True)
+
+        params = {"iters": int(iters), "corpus_key": str(corpus_key)}
+        load_or_build([table], params, build)
+        return cls(edges.sparkSession, table)
 
     def ranks(self, spark=None) -> DataFrame:
         """(node, rank_int, rank) — a scan of the persisted rank table,

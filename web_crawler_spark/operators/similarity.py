@@ -29,7 +29,6 @@ Scale notes (100 TB):
 from __future__ import annotations
 
 import hashlib
-import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -442,12 +441,12 @@ class IvfIndex:
     - **build** (once): train centroids (``kmeans_centroids``) and assign
       the corpus to cells; the assignment frame is persisted in-session so
       repeated probes reuse it without recomputation.
-    - **save/load** (across sessions): centroids are tiny (n_cells × dims
-      int64) and land in a ``SnapshotTable`` with the build parameters as
-      commit metadata; ``load_or_build`` reloads them when the parameters
-      match and only trains when they don't. Training is deterministic
-      (seeded init, integer-exact Lloyd), so a loaded index is bit-identical
-      to a rebuilt one — the correctness oracle is unchanged.
+    - **load_or_build** (across sessions): centroids are tiny (n_cells ×
+      dims int64) and land in a ``SnapshotTable`` at ``root``, trained only
+      when the table was not committed with these build parameters
+      (``sources.lake.load_or_build``). Training is deterministic (seeded
+      init, integer-exact Lloyd), so a loaded index is bit-identical to a
+      rebuilt one — the correctness oracle is unchanged.
     - **probe** (per query batch): broadcast the centroids, pick each
       query's ``nprobe`` nearest cells, equi-join candidates on cell id.
 
@@ -456,6 +455,8 @@ class IvfIndex:
     assignment is a narrow broadcast projection recomputed per session,
     which costs one codegen pass and no shuffle.
     """
+
+    CENTROIDS = "cell long, cv array<bigint>"
 
     def __init__(
         self,
@@ -468,12 +469,13 @@ class IvfIndex:
         kmeans_iters: int = 2,
     ):
         self.corpus = corpus
+        self.spark = corpus.sparkSession
         self.centroids = centroids
         self.id_col = id_col
         self.vec_col = vec_col
         self.n_cells = n_cells
         self.kmeans_iters = kmeans_iters
-        self._cents_df = _centroids_df(corpus.sparkSession, centroids)
+        self._cents_df = _centroids_df(self.spark, centroids)
         self._assigned: DataFrame | None = None
 
     # -- construction ------------------------------------------------------
@@ -497,51 +499,46 @@ class IvfIndex:
             n_cells=n_cells, kmeans_iters=kmeans_iters,
         )
 
-    def _params(self) -> dict:
-        return {"n_cells": self.n_cells, "kmeans_iters": self.kmeans_iters}
-
-    def save(self, table) -> int:
-        """Persist centroids to a SnapshotTable (params in commit meta)."""
-        spark = self.corpus.sparkSession
-        rows = spark.createDataFrame(
-            [(int(c), [int(x) for x in v]) for c, v in self.centroids],
-            "cell long, cv array<bigint>",
-        )
-        return table.overwrite(rows, meta={"ivf_params": json.dumps(self._params())})
-
     @classmethod
-    def load(
+    def load_or_build(
         cls,
-        table,
         corpus: DataFrame,
+        root: str,
         *,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
         n_cells: int = 8,
         kmeans_iters: int = 2,
-    ) -> "IvfIndex | None":
-        """Reload a saved index; None when absent or params mismatch."""
-        sid = table.current_snapshot_id()
-        if sid is None:
-            return None
-        meta = table._manifest(sid).get("meta") or {}
-        want = {"n_cells": n_cells, "kmeans_iters": kmeans_iters}
-        if json.loads(meta.get("ivf_params", "{}")) != want:
-            return None
+    ) -> "IvfIndex":
+        """The index persisted at ``root``: centroids read back from its
+        table, trained and committed first when the table is not current
+        for (n_cells, kmeans_iters)."""
+        from pyspark.sql.types import _parse_datatype_string
+
+        from ..sources.lake import SnapshotTable, load_or_build
+
+        table = SnapshotTable(root)
+
+        def build(meta: dict) -> None:
+            cents = kmeans_centroids(
+                corpus, id_col=id_col, vec_col=vec_col, n_cells=n_cells,
+                iters=kmeans_iters,
+            )
+            table.overwrite_local(
+                [{"cell": c, "cv": v} for c, v in cents],
+                _parse_datatype_string(cls.CENTROIDS),
+                meta=meta,
+            )
+
+        load_or_build(
+            [table], {"n_cells": n_cells, "kmeans_iters": kmeans_iters}, build
+        )
         rows = table.read(corpus.sparkSession).collect()
         cents = sorted((int(r["cell"]), [int(x) for x in r["cv"]]) for r in rows)
         return cls(
             corpus, cents, id_col=id_col, vec_col=vec_col,
             n_cells=n_cells, kmeans_iters=kmeans_iters,
         )
-
-    @classmethod
-    def load_or_build(cls, table, corpus: DataFrame, **kw) -> "IvfIndex":
-        idx = cls.load(table, corpus, **kw)
-        if idx is None:
-            idx = cls.build(corpus, **kw)
-            idx.save(table)
-        return idx
 
     # -- probe -------------------------------------------------------------
 

@@ -543,13 +543,12 @@ class NearDupIndex:
     snapshot and reused by every consumer (cluster lookup, corpus prune,
     curation, audit queries).
 
-    - ``build``: run ``minhash_dedupe`` + ``connected_components`` once and
-      commit both results to SnapshotTables (build params in commit
-      metadata).
-    - ``load / load_or_build``: reuse when the params match; the whole
-      pipeline is deterministic (md5-derived permutation family, integer
-      thresholds), so loaded == rebuilt bit-for-bit and correctness oracles
-      are unchanged.
+    - ``load_or_build``: run ``minhash_dedupe`` + ``connected_components``
+      and commit both results to the SnapshotTables under ``root`` unless
+      both are current for these params (``sources.lake.load_or_build``);
+      the whole pipeline is deterministic (md5-derived permutation family,
+      integer thresholds), so loaded == rebuilt bit-for-bit and correctness
+      oracles are unchanged.
     - probes: ``pairs()``, ``clusters()``, ``prune(corpus)`` — table scans
       plus at most two doc_id joins; no shingling anywhere.
     """
@@ -557,26 +556,17 @@ class NearDupIndex:
     PAIRS = "doc_a long, doc_b long, n_inter long, n_union long, jaccard double"
     CLUSTERS = "doc_id long, cluster_id long"
 
-    def __init__(self, spark, root: str, params: dict):
+    def __init__(self, spark, root: str):
         import os
 
         from ..sources.lake import SnapshotTable
 
         self.spark = spark
-        self.params = params
         self.pairs_t = SnapshotTable(os.path.join(root, "pairs"))
         self.clusters_t = SnapshotTable(os.path.join(root, "clusters"))
 
-    @staticmethod
-    def _params(id_col, text_col, k, perms, bands, threshold) -> dict:
-        return {
-            "id_col": id_col, "text_col": text_col, "k": k,
-            "perms": perms, "bands": bands,
-            "threshold_bp": int(round(threshold * 10000)),
-        }
-
     @classmethod
-    def build(
+    def load_or_build(
         cls,
         corpus: DataFrame,
         root: str,
@@ -588,45 +578,29 @@ class NearDupIndex:
         bands: int = DEFAULT_BANDS,
         threshold: float = 0.8,
     ) -> "NearDupIndex":
-        import json
+        from ..sources.lake import load_or_build
 
-        global INDEX_BUILDS
-        INDEX_BUILDS += 1
-        params = cls._params(id_col, text_col, k, perms, bands, threshold)
-        idx = cls(corpus.sparkSession, root, params)
-        pairs = minhash_dedupe(
-            corpus, id_col, text_col, k=k, perms=perms, bands=bands,
-            threshold=threshold,
-        ).localCheckpoint(eager=True)  # consumed twice: commit + components
-        meta = {"neardup_params": json.dumps(params, sort_keys=True)}
-        idx.pairs_t.overwrite(pairs, meta=meta)
-        idx.clusters_t.overwrite(
-            connected_components(pairs.select("doc_a", "doc_b")), meta=meta
-        )
+        idx = cls(corpus.sparkSession, root)
+
+        def build(meta: dict) -> None:
+            global INDEX_BUILDS
+            INDEX_BUILDS += 1
+            pairs = minhash_dedupe(
+                corpus, id_col, text_col, k=k, perms=perms, bands=bands,
+                threshold=threshold,
+            ).localCheckpoint(eager=True)  # consumed twice: commit + components
+            idx.pairs_t.overwrite(pairs, meta=meta)
+            idx.clusters_t.overwrite(
+                connected_components(pairs.select("doc_a", "doc_b")), meta=meta
+            )
+
+        params = {
+            "id_col": id_col, "text_col": text_col, "k": k,
+            "perms": perms, "bands": bands,
+            "threshold_bp": int(round(threshold * 10000)),
+        }
+        load_or_build([idx.pairs_t, idx.clusters_t], params, build)
         return idx
-
-    @classmethod
-    def load(
-        cls, spark, root: str, *, id_col="doc_id", text_col="text", k=5,
-        perms=DEFAULT_PERMS, bands=DEFAULT_BANDS, threshold=0.8,
-    ) -> "NearDupIndex | None":
-        import json
-
-        params = cls._params(id_col, text_col, k, perms, bands, threshold)
-        idx = cls(spark, root, params)
-        want = json.dumps(params, sort_keys=True)
-        for t in (idx.pairs_t, idx.clusters_t):
-            sid = t.current_snapshot_id()
-            if sid is None:
-                return None
-            if (t._manifest(sid).get("meta") or {}).get("neardup_params") != want:
-                return None
-        return idx
-
-    @classmethod
-    def load_or_build(cls, corpus: DataFrame, root: str, **kw) -> "NearDupIndex":
-        idx = cls.load(corpus.sparkSession, root, **kw)
-        return idx if idx is not None else cls.build(corpus, root, **kw)
 
     # -- probes ------------------------------------------------------------
 

@@ -590,29 +590,34 @@ WHERE 5 * ni >= 4 * (sa.n + sb.n - ni)
 """
 
 
-def _neardup_index(spark, sf_dir):
-    """Per-sf_dir NearDupIndex (build/probe split — the IVF pattern applied
-    to the dedup suite): the first call materializes confirmed pairs +
-    components into SnapshotTables; every later call (any process) loads.
-    The pipeline is deterministic, so loaded == rebuilt and the oracles are
-    unchanged."""
-    import os as _o
-    import tempfile as _t
+def _sf_slug(sf_dir: str) -> str:
+    return sf_dir.strip("/").replace("/", "-")
 
-    from ..operators.textdedup import NearDupIndex
 
-    key = ("neardup_index", sf_dir)
+def _sf_index(spark, sf_dir, name: str, cls, source: DataFrame, **params):
+    """The persisted ``cls`` index (``IvfIndex``, ``NearDupIndex`` or
+    ``RankIndex``) of one sf_dir, at ``$TMPDIR/wcs-{name}-index-{slug}``:
+    the first call of any process builds it, every later call loads it
+    (``sources.lake.load_or_build``), and one index object per session is
+    kept in ``_FIXTURE_CACHE``. Every build is deterministic, so loaded ==
+    rebuilt and the oracles are unchanged."""
+    key = (f"{name}_index", sf_dir)
     idx = _FIXTURE_CACHE.get(key)
     if idx is None or idx.spark is not spark:
-        slug = sf_dir.strip("/").replace("/", "-")
-        root = _o.path.join(_t.gettempdir(), f"wcs-neardup-index-{slug}")
-        idx = NearDupIndex.load_or_build(
-            t(spark, sf_dir, "documents"), root,
-            id_col="doc_id", text_col="text",
-            k=5, perms=32, bands=4, threshold=0.8,
+        root = _os.path.join(
+            _tempfile.gettempdir(), f"wcs-{name}-index-{_sf_slug(sf_dir)}"
         )
-        _FIXTURE_CACHE[key] = idx
+        idx = _FIXTURE_CACHE[key] = cls.load_or_build(source, root, **params)
     return idx
+
+
+def _neardup_index(spark, sf_dir):
+    """The sf_dir's NearDupIndex: confirmed pairs + components, shared by
+    the dedup suite's queries."""
+    return _sf_index(
+        spark, sf_dir, "neardup", TD.NearDupIndex, t(spark, sf_dir, "documents"),
+        id_col="doc_id", text_col="text", k=5, perms=32, bands=4, threshold=0.8,
+    )
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
@@ -1644,22 +1649,8 @@ def q_ann_ivf_topk(spark, sf_dir):
     per-sf_dir SnapshotTable; the first call trains + saves, every later
     call (this process or the next) loads and only probes. Training is
     deterministic, so loaded == rebuilt and the oracle is unchanged."""
-    import os as _o
-    import tempfile as _t
-
-    from ..operators.similarity import IvfIndex
-    from ..sources.lake import SnapshotTable
-
     e = t(spark, sf_dir, "embeddings")
-    key = ("ivf_index", sf_dir)
-    idx = _FIXTURE_CACHE.get(key)
-    if idx is None or idx.corpus.sparkSession is not spark:
-        slug = sf_dir.strip("/").replace("/", "-")
-        table = SnapshotTable(
-            _o.path.join(_t.gettempdir(), f"wcs-ivf-index-{slug}")
-        )
-        idx = IvfIndex.load_or_build(table, e, n_cells=8, kmeans_iters=2)
-        _FIXTURE_CACHE[key] = idx
+    idx = _sf_index(spark, sf_dir, "ivf", SIM.IvfIndex, e, n_cells=8, kmeans_iters=2)
     return SIM.ann_ivf_topk(e, k=3, nprobe=2, n_queries=32, index=idx)
 
 
@@ -1881,26 +1872,15 @@ def q_link_pagerank(spark, sf_dir):
     SnapshotTable; the first call trains + saves, every later call (this
     process or the next) is a table scan. PageRank is integer-exact, so
     loaded == rebuilt and the oracle is unchanged."""
-    import os as _o
-    import tempfile as _t
-
     from ..operators.graph import RankIndex
-    from ..sources.lake import SnapshotTable
 
-    li = t(spark, sf_dir, "lineitem")
-    edges = li.select(
+    edges = t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("src"), F.col("l_partkey").alias("dst")
     )
-    key = ("rank_index", sf_dir)
-    idx = _FIXTURE_CACHE.get(key)
-    if idx is None or idx.spark is not spark:
-        slug = sf_dir.strip("/").replace("/", "-")
-        table = SnapshotTable(
-            _o.path.join(_t.gettempdir(), f"wcs-rank-index-{slug}")
-        )
-        idx = RankIndex.load_or_build(table, edges, iters=3, corpus_key=slug)
-        _FIXTURE_CACHE[key] = idx
-    return idx.ranks()
+    return _sf_index(
+        spark, sf_dir, "rank", RankIndex, edges,
+        iters=3, corpus_key=_sf_slug(sf_dir),
+    ).ranks()
 
 
 def _pagerank_sql(iters: int = 3) -> str:

@@ -660,9 +660,7 @@ class CrawlRun:
                 U.url_hash(F.col("child_url")).alias("dst"),
             )  # lazy: never executed when the saved index matches
             idx = RankIndex.load_or_build(
-                SnapshotTable(os.path.join(self.run_dir, "ranks")),
-                edges,
-                corpus_key=corpus_key,
+                edges, os.path.join(self.run_dir, "ranks"), corpus_key=corpus_key
             )
             self._rank_df = idx.ranks(self.spark).select(
                 F.col("node").alias("url_hash"), "rank_int"
@@ -990,6 +988,8 @@ class CrawlRun:
         ("phash_seen_t", "phash_seen_sid"),
         ("trap_hosts_t", "trap_hosts_sid"),
     ]
+    # the exactly-once markers streaming.crawl_stream passes as checkpoint_extra
+    _STREAM_MARKERS = ("stream_batch_id", "stream_app_id")
 
     def _sids(self) -> dict:
         """Checkpoint key -> current snapshot id of every round table."""
@@ -1015,20 +1015,25 @@ class CrawlRun:
             json.dump(state, f)
         os.replace(tmp, os.path.join(self.run_dir, "checkpoint.json"))
 
+    def _carried(self, keys: tuple[str, ...]) -> dict:
+        """``keys`` of the ON-DISK checkpoint, where present. Each writer
+        carries forward only what it names, so a key the engine no longer
+        writes (an old checkpoint's ``tiers_file``) drops out."""
+        try:
+            state = self.checkpoint_state()
+        except FileNotFoundError:
+            return {}
+        return {k: state[k] for k in keys if k in state}
+
     def _checkpoint(self, extra: dict | None = None, fresh: bool = False) -> None:
-        # Start from the ON-DISK checkpoint so keys persisted by other
-        # drivers (e.g. the stream's stream_batch_id marker) survive rounds
-        # that don't pass checkpoint_extra — mixing batch and stream driving
-        # must not silently reset the exactly-once marker to -1 and replay
-        # an already-applied micro-batch (ADVICE r2 #3). Fresh keys override.
-        # ``fresh=True`` (start()) deliberately drops prior keys instead: a
-        # new crawl in a reused run_dir begins a new marker history.
-        prior: dict = {}
-        if not fresh:
-            try:
-                prior = self.checkpoint_state()
-            except FileNotFoundError:
-                prior = {}
+        # Carry the stream markers from the ON-DISK checkpoint so they
+        # survive rounds that don't pass checkpoint_extra — mixing batch and
+        # stream driving must not silently reset the exactly-once marker to
+        # -1 and replay an already-applied micro-batch (ADVICE r2 #3). Fresh
+        # keys override. ``fresh=True`` (start()) deliberately drops them
+        # instead: a new crawl in a reused run_dir begins a new marker
+        # history.
+        prior = {} if fresh else self._carried(self._STREAM_MARKERS)
         state = {
             **prior,
             **(extra or {}),
@@ -1079,8 +1084,8 @@ class CrawlRun:
         for _name, table in compactable:
             table.compact(self.spark)
         # re-checkpoint from the ON-DISK state + the new snapshot ids
-        state = {**self.checkpoint_state(), **self._sids()}
-        self._write_checkpoint(state)
+        carried = self._carried(("round", "tiers", *self._STREAM_MARKERS))
+        self._write_checkpoint({**carried, **self._sids()})
         stats: dict[str, int] = {}
         # trap_hosts is never compacted: driver-local commits only on
         # flagging rounds, already one small file each

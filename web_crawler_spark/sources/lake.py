@@ -232,14 +232,19 @@ class FileLeaseCatalog:
       the 16-thread contention test). A crashed holder therefore expires
       after ttl_sec instead of wedging the table — the property flock
       gets from the kernel and a shared-directory backend must implement
-      explicitly; a crashed STEALER's mutex (critical section:
-      microseconds) is cleared once demonstrably ancient.
+      explicitly. The mutex holds the same JSON as a lease, with a
+      10 s deadline on its creator's clock: a crashed STEALER's mutex
+      (critical section: microseconds) is cleared once that deadline has
+      passed, and a holder removes the mutex only while it is still its
+      own.
     - **release** = read first: a lease that is not ours (released, or
       taken over after our TTL expired) is left untouched. Our own lease
       is rename-to-unique (atomic take), re-verified, unlinked. If the
       taken content is NOT ours — our TTL expired between the read and
       the rename and a stealer took over — it is restored via ``link``
       (which cannot clobber a newer lease) and the release is a no-op.
+      Clearing a stale mutex and dropping one's own use the same
+      read/take/re-verify removal.
 
     An unparsable lease file (a reader racing a writer's first write) is
     treated as HELD, with the file mtime + 60 s as the fallback expiry,
@@ -247,6 +252,7 @@ class FileLeaseCatalog:
     file per table; no daemon, no catalog service."""
 
     _PARSE_GRACE_SEC = 60.0
+    _STEAL_MUTEX_SEC = 10.0
 
     def __init__(self, root_dir: str):
         self.root = root_dir
@@ -338,14 +344,18 @@ class FileLeaseCatalog:
         except FileExistsError:
             # a crashed stealer's mutex (its critical section is
             # microseconds) must not wedge takeover forever: clear it once
-            # it is demonstrably ancient
-            try:
-                if os.stat(mutex).st_mtime < time.time() - 10.0:
-                    os.unlink(mutex)
-            except OSError:
-                pass
+            # the deadline its creator wrote into it has passed — judged on
+            # the creator's clock, like a lease, never on the file's mtime
+            self._remove_if(mutex, lambda held: held[1] <= time.time())
             return False  # live stealer in progress; re-poll
+        token = _uuid.uuid4().hex
         try:
+            try:
+                self._write_payload(
+                    mfd, table_id, token, time.time() + self._STEAL_MUTEX_SEC
+                )
+            finally:
+                os.close(mfd)
             current = self._read(path)
             if current is None or current[1] > time.time():
                 return False  # released or already re-granted; re-poll
@@ -358,34 +368,35 @@ class FileLeaseCatalog:
             os.replace(tmp, path)
             return True
         finally:
-            os.close(mfd)
-            try:
-                os.unlink(mutex)
-            except OSError:
-                pass
+            # only our own mutex: a slow holder whose mutex was cleared as
+            # stale must not delete the next stealer's
+            self._remove_if(mutex, lambda held: held[0] == token)
 
     def release(self, table_id: str, owner: str) -> None:
+        self._remove_if(self._path(table_id), lambda held: held[0] == owner)
+
+    def _remove_if(self, path: str, match) -> None:
+        """Unlink ``path`` iff its (owner, deadline) satisfies ``match`` —
+        read first, then rename-to-unique (an atomic take) and re-check the
+        taken content: if the file changed hands between the read and the
+        rename it is restored via ``link``, which cannot clobber a newer
+        file, and nothing is removed."""
         import uuid as _uuid
 
-        path = self._path(table_id)
         held = self._read(path)
-        if held is None or held[0] != owner:
-            return  # already released, or not ours: leave it untouched
+        if held is None or not match(held):
+            return  # already gone, or not ours: leave it untouched
         taken = path + ".rel." + _uuid.uuid4().hex
         try:
             os.rename(path, taken)
         except FileNotFoundError:
-            return  # stolen and released since the read
+            return  # removed since the read
         held = self._read(taken)
-        if held is not None and held[0] == owner:
-            os.unlink(taken)
-            return
-        # our TTL expired between the read and the rename and a stealer
-        # took over: restore without clobbering any newer lease
-        try:
-            os.link(taken, path)
-        except FileExistsError:
-            pass
+        if held is None or not match(held):
+            try:
+                os.link(taken, path)
+            except FileExistsError:
+                pass
         os.unlink(taken)
 
 
@@ -1249,3 +1260,25 @@ class SnapshotTable:
                 )
             return spark.createDataFrame([], schema)
         return self._read_paths(spark, paths, kept_dirs, m)
+
+
+INDEX_META_KEY = "index_params"
+
+
+def load_or_build(tables: list[SnapshotTable], params: dict, build) -> None:
+    """The one reuse rule of the persisted indexes (``IvfIndex``,
+    ``NearDupIndex``, ``RankIndex``): ``build(meta)`` runs — and commits
+    every table in ``tables`` with ``meta`` — unless each table's current
+    snapshot was already committed with these ``params`` (as sorted JSON
+    under ``INDEX_META_KEY``). One missing, mismatched or half-built table
+    rebuilds them all. Every index build is deterministic, so a loaded
+    index equals a rebuilt one."""
+    want = json.dumps(params, sort_keys=True)
+
+    def current(t: SnapshotTable) -> bool:
+        sid = t.current_snapshot_id()
+        meta = (t._manifest(sid).get("meta") or {}) if sid is not None else {}
+        return meta.get(INDEX_META_KEY) == want
+
+    if not all(current(t) for t in tables):
+        build({INDEX_META_KEY: want})
