@@ -190,13 +190,17 @@ def test_ivf_index_build_probe_split_reuses_training(spark, tmp_path):
         )
     )
     assert legacy == r1
+    assert S.TRAIN_RUNS == before + 2  # the legacy path trains its own
 
-    # different params must not reuse the stored centroids
+    # different params must not reuse the stored centroids: they retrain
+    # once, and the retrained index is then loaded, not rebuilt
     idx3 = S.IvfIndex.load_or_build(df, root, n_cells=4, kmeans_iters=1)
-    assert idx3.centroids != idx.centroids or idx3.kmeans_iters != idx.kmeans_iters
-    idx.unpersist()
-    idx2.unpersist()
-    idx3.unpersist()
+    assert S.TRAIN_RUNS == before + 3
+    idx4 = S.IvfIndex.load_or_build(df, root, n_cells=4, kmeans_iters=1)
+    assert S.TRAIN_RUNS == before + 3
+    assert idx4.centroids == idx3.centroids
+    for i in (idx, idx2, idx3, idx4):
+        i.unpersist()
 
 
 def test_ivf_results_are_exact_within_probed_cells(spark):

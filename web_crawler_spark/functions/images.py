@@ -54,7 +54,6 @@ except ImportError:
 _MAGIC = b"WCSI"
 _VERSION = 1
 _FMT_CODES = {"png": 0, "jpeg": 1, "webp": 2}
-_FMT_NAMES = {v: k for k, v in _FMT_CODES.items()}
 # quantization step per lossy format (step q → PSNR ≈ 20*log10(255*sqrt(12)/q))
 _QUANT = {"png": 1, "jpeg": 4, "webp": 2}
 
@@ -173,12 +172,6 @@ def decode_image(blob: bytes) -> np.ndarray:
     if len(raw) != w * h * 3:
         raise ValueError("corrupt WCSI payload")
     return np.frombuffer(raw, dtype=np.uint8).reshape(h, w, 3)
-
-
-def image_format(blob: bytes) -> str | None:
-    if blob is None or len(blob) < 6 or blob[:4] != _MAGIC:
-        return None
-    return _FMT_NAMES.get(blob[5])
 
 
 # ---------------------------------------------------------------------------

@@ -72,6 +72,7 @@ conditional-put).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -117,37 +118,46 @@ class CommitConflictError(RuntimeError):
 _UNSET = object()
 
 
+def _poll(try_once, timeout_sec: float, what: str, why: str) -> None:
+    """Call ``try_once`` every 20 ms until it returns True; at the deadline
+    raise a loud TimeoutError that names ``what`` and ``why`` it is held."""
+    deadline = time.time() + timeout_sec
+    while not try_once():
+        if time.time() >= deadline:
+            raise TimeoutError(
+                f"could not acquire {what} within {timeout_sec}s — {why}; "
+                f"refusing to race"
+            )
+        time.sleep(0.02)
+
+
+@contextlib.contextmanager
 def file_lock(lock_path: str, timeout_sec: float = 60.0, what: str | None = None):
     """Exclusive flock with a loud deadline — the single-filesystem
     concurrency primitive the whole lake layer builds on. The kernel
     releases the lock on process death (no stale lockfiles); a holder that
     cannot acquire within ``timeout_sec`` gets a TimeoutError instead of
     blocking forever behind a wedged peer."""
-    import contextlib
     import fcntl
 
-    @contextlib.contextmanager
-    def held():
-        fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o644)
+    def try_once() -> bool:
         try:
-            deadline = time.time() + timeout_sec
-            while True:
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    break
-                except BlockingIOError:
-                    if time.time() >= deadline:
-                        raise TimeoutError(
-                            f"could not acquire {what or lock_path} within "
-                            f"{timeout_sec}s — another holder is live (or "
-                            f"wedged); refusing to race"
-                        ) from None
-                    time.sleep(0.02)
-            yield
-        finally:
-            os.close(fd)  # closing drops the flock
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            return True
+        except BlockingIOError:
+            return False
 
-    return held()
+    fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o644)
+    try:
+        _poll(
+            try_once,
+            timeout_sec,
+            what or lock_path,
+            "another holder is live (or wedged)",
+        )
+        yield
+    finally:
+        os.close(fd)  # closing drops the flock
 
 
 # ---------------------------------------------------------------------------
@@ -162,9 +172,10 @@ def file_lock(lock_path: str, timeout_sec: float = 60.0, what: str | None = None
 # interface below keeps flock as the default and lets a deployment inject
 # the catalog implementation without touching any commit code;
 # ``FileLeaseCatalog`` is the shipped shared-directory backend (NFS/FUSE),
-# ``InMemoryLeaseCatalog`` the in-process model of a remote catalog; the CAS
-# conflict detection (``expected_parent`` → CommitConflictError) is the
-# same on every backend because it runs INSIDE the held lease.
+# and a remote catalog implements the same ``try_acquire``/``release``
+# surface; the CAS conflict detection (``expected_parent`` →
+# CommitConflictError) is the same on every backend because it runs INSIDE
+# the held lease.
 # ---------------------------------------------------------------------------
 
 
@@ -179,41 +190,11 @@ class FlockCommitLease:
         return file_lock(self._lock_path, timeout_sec=timeout_sec, what=self._what)
 
 
-class InMemoryLeaseCatalog:
-    """Models an external catalog's conditional-put lease API for tests and
-    docs: ``try_acquire`` succeeds iff no UNEXPIRED lease exists for the
-    table (the object-store analog of DynamoDB's attribute_not_exists put).
-    Leases carry a TTL so a crashed holder expires instead of wedging the
-    table forever — the property flock gets from the kernel for free and a
-    remote catalog must implement explicitly. Thread-safe; one instance
-    stands in for the shared catalog service."""
-
-    def __init__(self):
-        import threading
-
-        self._mu = threading.Lock()
-        self._leases: dict[str, tuple[str, float]] = {}  # table -> (owner, deadline)
-
-    def try_acquire(self, table_id: str, owner: str, ttl_sec: float) -> bool:
-        now = time.time()
-        with self._mu:
-            held = self._leases.get(table_id)
-            if held is not None and held[1] > now and held[0] != owner:
-                return False
-            self._leases[table_id] = (owner, now + ttl_sec)
-            return True
-
-    def release(self, table_id: str, owner: str) -> None:
-        with self._mu:
-            if self._leases.get(table_id, (None,))[0] == owner:
-                del self._leases[table_id]
-
-
 class FileLeaseCatalog:
-    """Deployable conditional-put lease catalog over a shared directory —
-    the concrete backend ``InMemoryLeaseCatalog`` models (VERDICT r4
-    Missing #1): usable the day two drivers share a table over NFS/FUSE
-    or any mount where ``flock`` is unreliable but ``open(O_EXCL)`` and
+    """Deployable conditional-put lease catalog over a shared directory
+    (VERDICT r4 Missing #1), the one lease catalog the package ships:
+    usable the day two drivers share a table over NFS/FUSE or any mount
+    where ``flock`` is unreliable but ``open(O_EXCL)`` and
     ``rename`` are atomic (NFSv3+, most FUSE object-store adapters).
 
     Protocol per table_id (one lease file ``<dir>/<sha>.lease`` holding
@@ -269,12 +250,10 @@ class FileLeaseCatalog:
     def _read(path: str):
         """(owner, deadline) from a lease file, or None if unreadable;
         unparsable content maps to (None, mtime + grace)."""
-        import json as _json
-
         try:
             with open(path, "rb") as f:
                 raw = f.read()
-            doc = _json.loads(raw)
+            doc = json.loads(raw)
             return doc["owner"], float(doc["deadline"])
         except FileNotFoundError:
             return None
@@ -286,19 +265,15 @@ class FileLeaseCatalog:
             return None, mt + FileLeaseCatalog._PARSE_GRACE_SEC
 
     def _write_payload(self, fd: int, table_id: str, owner: str, deadline: float):
-        import json as _json
-
         os.write(
             fd,
-            _json.dumps(
+            json.dumps(
                 {"table_id": table_id, "owner": owner, "deadline": deadline}
             ).encode(),
         )
         os.fsync(fd)
 
     def try_acquire(self, table_id: str, owner: str, ttl_sec: float) -> bool:
-        import uuid as _uuid
-
         path = self._path(table_id)
         deadline = time.time() + ttl_sec
         # fresh conditional put
@@ -321,7 +296,7 @@ class FileLeaseCatalog:
             # (an expired own lease falls through to the takeover path
             # below — blind-replacing it could clobber a stealer that
             # legitimately took over at expiry)
-            tmp = path + "." + _uuid.uuid4().hex
+            tmp = path + "." + uuid.uuid4().hex
             fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
             try:
                 self._write_payload(fd, table_id, owner, deadline)
@@ -348,7 +323,7 @@ class FileLeaseCatalog:
             # the creator's clock, like a lease, never on the file's mtime
             self._remove_if(mutex, lambda held: held[1] <= time.time())
             return False  # live stealer in progress; re-poll
-        token = _uuid.uuid4().hex
+        token = uuid.uuid4().hex
         try:
             try:
                 self._write_payload(
@@ -359,7 +334,7 @@ class FileLeaseCatalog:
             current = self._read(path)
             if current is None or current[1] > time.time():
                 return False  # released or already re-granted; re-poll
-            tmp = path + ".take." + _uuid.uuid4().hex
+            tmp = path + ".take." + uuid.uuid4().hex
             fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
             try:
                 self._write_payload(fd, table_id, owner, deadline)
@@ -381,12 +356,10 @@ class FileLeaseCatalog:
         taken content: if the file changed hands between the read and the
         rename it is restored via ``link``, which cannot clobber a newer
         file, and nothing is removed."""
-        import uuid as _uuid
-
         held = self._read(path)
         if held is None or not match(held):
             return  # already gone, or not ours: leave it untouched
-        taken = path + ".rel." + _uuid.uuid4().hex
+        taken = path + ".rel." + uuid.uuid4().hex
         try:
             os.rename(path, taken)
         except FileNotFoundError:
@@ -413,36 +386,23 @@ class CatalogCommitLease:
         owner: str | None = None,
         ttl_sec: float = 30.0,
     ):
-        import uuid as _uuid
-
         self.catalog = catalog
         self.table_id = table_id
-        self.owner = owner or _uuid.uuid4().hex
+        self.owner = owner or uuid.uuid4().hex
         self.ttl_sec = ttl_sec
 
+    @contextlib.contextmanager
     def acquire(self, timeout_sec: float = 60.0):
-        import contextlib
-
-        @contextlib.contextmanager
-        def held():
-            deadline = time.time() + timeout_sec
-            while not self.catalog.try_acquire(
-                self.table_id, self.owner, self.ttl_sec
-            ):
-                if time.time() >= deadline:
-                    raise TimeoutError(
-                        f"could not acquire the catalog lease for "
-                        f"{self.table_id} within {timeout_sec}s — another "
-                        f"writer is live (or its lease has not expired); "
-                        f"refusing to race"
-                    )
-                time.sleep(0.02)
-            try:
-                yield
-            finally:
-                self.catalog.release(self.table_id, self.owner)
-
-        return held()
+        _poll(
+            lambda: self.catalog.try_acquire(self.table_id, self.owner, self.ttl_sec),
+            timeout_sec,
+            f"the catalog lease for {self.table_id}",
+            "another writer is live (or its lease has not expired)",
+        )
+        try:
+            yield
+        finally:
+            self.catalog.release(self.table_id, self.owner)
 
 
 class SnapshotTable:
