@@ -33,10 +33,10 @@ def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for each query (omitted entries get the
     driver's weaker rows-only check).
 
-    The crawl-engine entries compare against the independent pure-Python
-    oracle crawler: its expected outputs are materialized here (no Spark
-    needed) so their read_parquet oracles run regardless of whether the
-    driver executes SQL before or after the Spark side."""
+    The read_parquet oracles (crawl, Bloom, render, zip, media) compare
+    against expected parquet that independent pure-Python twins write; it
+    is materialized here (no Spark needed), the only place that builds it,
+    so those oracles run whichever side executes first."""
     from web_crawler_spark.plans.analytics import ensure_expected_outputs
 
     ensure_expected_outputs()

@@ -221,11 +221,11 @@ def crawl_engine_bench(spark, n_pages: int = 1500, rounds: int = 3) -> dict:
     from web_crawler_spark.sources.fixtures import generate_site, load_fixture
     from web_crawler_spark.sources.seeds import read_seeds
 
-    # salt the cache path with the fixture-content version (see
-    # analytics._fixture_salt): render_pixels changes self-invalidate
-    from web_crawler_spark.plans.analytics import _SALT
+    # key the cache path by the oracle source tag (see
+    # analytics._oracle_tag): generator and image-kernel edits self-invalidate
+    from web_crawler_spark.plans.analytics import ORACLE_TAG
 
-    fdir = os.path.join(tempfile.gettempdir(), f"wcs-bench-fixture-{n_pages}-{_SALT}")
+    fdir = os.path.join(tempfile.gettempdir(), f"wcs-bench-fixture-{n_pages}-{ORACLE_TAG}")
     marker = os.path.join(fdir, "_COMPLETE")
     if not os.path.exists(marker):
         generate_site(fdir, n_pages=n_pages, n_hosts=100, n_seeds=20)

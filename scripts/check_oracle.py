@@ -9,8 +9,9 @@ Usage: python scripts/check_oracle.py [--json OUT.json] [name ...]
 
 With ``--json`` it also writes a CORRECTNESS_r{N}.json-shaped artifact
 (one object per entry: rows_match / schema_match / hash_match /
-spark_rows / oracle_rows / err) so every round leaves a committed local
-record covering ALL registry entries, not just the driver's window.
+spark_rows / oracle_rows / err, plus oracle_s, the DuckDB wall time) so
+every round leaves a committed local record covering ALL registry entries,
+not just the first 50.
 """
 
 from __future__ import annotations
@@ -129,6 +130,8 @@ def main():
             rec["err"] = f"duckdb: {ex}"[:500]
             n_fail += 1
             continue
+        t2 = time.time()
+        rec["oracle_s"] = round(t2 - t1, 3)
         rec["oracle_rows"] = len(ddf)
         problems = compare(name, sdf, ddf)
         rec["schema_match"] = not any(p.startswith("columns differ") for p in problems)
@@ -137,11 +140,11 @@ def main():
         if problems:
             n_fail += 1
             rec["err"] = "; ".join(problems[:3])[:500]
-            print(f"FAIL {name} ({len(sdf)} vs {len(ddf)} rows):")
+            print(f"FAIL {name} ({len(sdf)} vs {len(ddf)} rows, spark {t1-t0:.1f}s, duckdb {t2-t1:.2f}s):")
             for p in problems:
                 print(f"  - {p}")
         else:
-            print(f"PASS {name} ({len(sdf)} rows, spark {t1-t0:.1f}s)")
+            print(f"PASS {name} ({len(sdf)} rows, spark {t1-t0:.1f}s, duckdb {t2-t1:.2f}s)")
     print(f"\n{n_fail} failures")
     if json_out:
         import json

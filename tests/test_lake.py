@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import tempfile
@@ -833,16 +834,20 @@ def test_file_lease_single_winner_under_contention(tmp_path):
 _OWNERS = ("A", "B", "C")
 _OS_CALLS = ("open", "rename", "link", "replace", "unlink")
 _owners = st.sampled_from(_OWNERS)
-# None, or (contender, os call): the contender polls just before that call
-_contentions = st.none() | st.tuples(_owners, st.sampled_from(_OS_CALLS))
+# up to two (contender, os call) pairs: each contender polls just before
+# the step's first such call
+_contentions = st.lists(
+    st.tuples(_owners, st.sampled_from(_OS_CALLS)), max_size=2
+)
 
 
 class _SteppedOs:
     """``lake.os`` as the lease machine swaps it in: the real ``os``, except
-    that the first call named by ``armed`` runs its hook just before it."""
+    that each ``armed`` (os call name, hook) pair runs its hook just before
+    the first call of that name, once."""
 
     def __init__(self):
-        self.armed = None  # (os call name, hook) or None
+        self.armed: list = []
 
     def __getattr__(self, name):
         real = getattr(os, name)
@@ -850,10 +855,12 @@ class _SteppedOs:
             return real
 
         def call(*args, **kwargs):
-            if self.armed is not None and self.armed[0] == name:
-                hook = self.armed[1]
-                self.armed = None  # the contender's own calls run unhooked
-                hook()
+            hit = next((a for a in self.armed if a[0] == name), None)
+            if hit is not None:
+                rest = [a for a in self.armed if a is not hit]
+                self.armed = []  # the contender's own calls run unhooked
+                hit[1]()
+                self.armed = rest
             return real(*args, **kwargs)
 
         return call
@@ -862,8 +869,8 @@ class _SteppedOs:
 class FileLeaseMachine(RuleBasedStateMachine):
     """Steps ``FileLeaseCatalog`` through acquire/renew, release and clock
     advances for three owners over one lease directory. An acquire or a
-    release may carry a contender that polls ``try_acquire`` (up to twice)
-    just before one of the protocol's ``os`` calls. The clock is fake and
+    release may carry up to two contenders, each polling ``try_acquire``
+    (up to twice) just before one of the protocol's ``os`` calls. The clock is fake and
     starts at the wall clock, so file mtimes (the file server's clock) fall
     behind it as it advances: single steps cross the 10 s steal-mutex
     deadline, both TTLs and the 60 s parse grace."""
@@ -889,28 +896,30 @@ class FileLeaseMachine(RuleBasedStateMachine):
         self.believed[owner] = self.now + ttl
         return True
 
+    def _poll(self, contender: str) -> None:
+        # twice: a first poll may only clear a stale mutex
+        self._acquire(contender, 30.0) or self._acquire(contender, 30.0)
+
     @contextmanager
-    def _contended(self, owner: str, contention):
-        if contention is not None and contention[0] != owner:
-            contender, os_call = contention
-
-            def poll():  # twice: a first poll may only clear a stale mutex
-                self._acquire(contender, 30.0) or self._acquire(contender, 30.0)
-
-            self.stepped_os.armed = (os_call, poll)
+    def _contended(self, owner: str, contentions):
+        self.stepped_os.armed = [
+            (os_call, functools.partial(self._poll, contender))
+            for contender, os_call in contentions
+            if contender != owner
+        ]
         try:
             yield
         finally:
-            self.stepped_os.armed = None
+            self.stepped_os.armed = []
 
-    @rule(owner=_owners, ttl=st.sampled_from((5.0, 30.0)), contention=_contentions)
-    def try_acquire(self, owner, ttl, contention):  # also renews a held lease
-        with self._contended(owner, contention):
+    @rule(owner=_owners, ttl=st.sampled_from((5.0, 30.0)), contentions=_contentions)
+    def try_acquire(self, owner, ttl, contentions):  # also renews a held lease
+        with self._contended(owner, contentions):
             self._acquire(owner, ttl)
 
-    @rule(owner=_owners, contention=_contentions)
-    def release(self, owner, contention):
-        with self._contended(owner, contention):
+    @rule(owner=_owners, contentions=_contentions)
+    def release(self, owner, contentions):
+        with self._contended(owner, contentions):
             self.catalog.release("t", owner)
         self.believed.pop(owner, None)
 
@@ -943,3 +952,19 @@ def test_file_lease_state_machine():
             stateful_step_count=25,
         ),
     )
+
+
+def test_file_lease_late_release_with_two_contenders():
+    """The late-release window, stepped by hand through the machine: C's
+    5 s lease has run out when C releases; A polls just before C's
+    ``os.rename`` and B just before C's ``os.link``. A release that takes
+    the lease path away grants both A and B; one that keeps it present
+    grants at most one."""
+    machine = FileLeaseMachine()
+    try:
+        machine.try_acquire(owner="C", ttl=5.0, contentions=[])
+        machine.advance(dt=10.5)
+        machine.release(owner="C", contentions=[("A", "rename"), ("B", "link")])
+        machine.one_live_holder_named_by_the_lease_file()
+    finally:
+        machine.teardown()

@@ -6,6 +6,8 @@ through the actual read_parquet DuckDB oracles."""
 from __future__ import annotations
 
 import math
+import os
+import re
 
 import duckdb
 import pytest
@@ -71,12 +73,12 @@ def test_oracle_lineage_strata_shape():
         _DEMO_BUDGET,
         _DEMO_ROUNDS,
         _demo_fixture_dir,
-        _import_oracle_crawler,
+        _oracle_module,
     )
     import pandas as pd
 
     fdir = _demo_fixture_dir()
-    oc = _import_oracle_crawler().from_fixture(fdir, default_budget=_DEMO_BUDGET)
+    oc = _oracle_module("crawler").OracleCrawler.from_fixture(fdir, default_budget=_DEMO_BUDGET)
     oc.start(list(pd.read_csv(f"{fdir}/seeds.csv").url))
     metrics = oc.run(max_rounds=_DEMO_ROUNDS)
     assert oc.lineage
@@ -91,3 +93,33 @@ def test_oracle_lineage_strata_shape():
         assert got["rows_in"] == m["rows_in"]
         assert got["rows_selected"] == m["rows_selected"]
         assert got["rows_fetched_ok"] == m["rows_fetched_ok"]
+
+
+def test_expected_outputs_built_once_by_one_rule():
+    """After ``ensure_expected_outputs()`` every expected file a REGISTRY
+    oracle reads exists — exactly the files the twins write — and a second
+    call rewrites none of them. No Spark."""
+    from web_crawler_spark.plans.analytics import (
+        _TWINS,
+        ORACLE_EXPECTED_DIR,
+        REGISTRY,
+        _keyed_path,
+        ensure_expected_outputs,
+    )
+
+    ensure_expected_outputs()
+    read = {
+        p
+        for _fn, sql in REGISTRY.values()
+        if sql
+        for p in re.findall(r"read_parquet\('([^']+)'\)", sql)
+    }
+    expected = {p for p in read if p.startswith(ORACLE_EXPECTED_DIR)}
+    # the only other read is the saved-jobs log glob the Spark side writes
+    assert all("*" in p for p in read - expected)
+    assert expected == {_keyed_path(n) for names in _TWINS.values() for n in names}
+    missing = sorted(p for p in expected if not os.path.exists(p))
+    assert not missing, missing
+    mtimes = {p: os.stat(p).st_mtime_ns for p in expected}
+    ensure_expected_outputs()
+    assert {p: os.stat(p).st_mtime_ns for p in expected} == mtimes

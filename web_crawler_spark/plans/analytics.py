@@ -669,9 +669,29 @@ def q_dedup_clusters(spark, sf_dir):
     return _neardup_index(spark, sf_dir).clusters()
 
 
-# shared CTE chain: minhash-LSH pairs → undirected edges → transitive
-# min-reachable components (used by dedup_clusters, dedup_prune AND the
-# corpus-curation pipeline, which runs it over a filtered source)
+def _components_ctes(pairs: str, a: str, b: str) -> str:
+    """The one SQL replay of connected components: the pairs ``(a, b)`` of
+    CTE ``pairs`` become undirected ``edges``, a recursive ``reach`` walks
+    them, and ``comp(node, cluster)`` holds each node's minimum reachable
+    id — equal to connected_components' component minimum, independent of
+    iteration order. MIN over VARCHAR is lexicographic in both engines.
+    Needs ``WITH RECURSIVE``; ``edges`` and ``comp`` are materialized so
+    the recursion and its consumers scan them once."""
+    return f"""edges AS MATERIALIZED (
+  SELECT {a} AS src, {b} AS dst FROM {pairs}
+  UNION
+  SELECT {b}, {a} FROM {pairs}),
+reach(node, l) AS (
+  SELECT src, src FROM edges
+  UNION
+  SELECT e.src, r.l FROM edges e JOIN reach r ON r.node = e.dst),
+comp AS MATERIALIZED (
+  SELECT node, MIN(l) AS cluster FROM reach GROUP BY node)"""
+
+
+# shared CTE chain: minhash-LSH pairs → components (used by dedup_clusters,
+# dedup_prune AND the corpus-curation pipeline, which runs it over a
+# filtered source)
 def _cluster_ctes(src: str = "documents") -> str:
     return f"""{_shingle_cte(src)},
 pm AS (
@@ -694,23 +714,14 @@ pairs AS (
   JOIN sizes sa ON sa.doc_id = c.da
   JOIN sizes sb ON sb.doc_id = c.db
   WHERE 5 * i.ni >= 4 * (sa.n + sb.n - i.ni)),
-edges AS MATERIALIZED (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b, doc_a FROM pairs),
-reach(doc, l) AS (
-  SELECT src, src FROM edges
-  UNION
-  SELECT e.src, r.l FROM edges e JOIN reach r ON r.doc = e.dst),
-comp AS MATERIALIZED (
-  SELECT doc, MIN(l) AS cluster FROM reach GROUP BY doc)"""
+{_components_ctes("pairs", "doc_a", "doc_b")}"""
 
 
 _CLUSTER_CTES = _cluster_ctes()
 
 SQL_DEDUP_CLUSTERS = f"""
 WITH RECURSIVE {_CLUSTER_CTES}
-SELECT doc AS doc_id, CAST(cluster AS BIGINT) AS cluster_id FROM comp
+SELECT node AS doc_id, CAST(cluster AS BIGINT) AS cluster_id FROM comp
 """
 
 
@@ -726,10 +737,10 @@ def q_dedup_prune(spark, sf_dir):
 SQL_DEDUP_PRUNE = f"""
 WITH RECURSIVE {_CLUSTER_CTES}
 SELECT d.doc_id,
-       CASE WHEN c.doc IS NOT NULL THEN 'representative' ELSE 'unique' END AS kept_as
+       CASE WHEN c.node IS NOT NULL THEN 'representative' ELSE 'unique' END AS kept_as
 FROM documents d
-LEFT JOIN comp c ON c.doc = d.doc_id AND c.doc = c.cluster
-WHERE NOT EXISTS (SELECT 1 FROM comp x WHERE x.doc = d.doc_id AND x.doc <> x.cluster)
+LEFT JOIN comp c ON c.node = d.doc_id AND c.node = c.cluster
+WHERE NOT EXISTS (SELECT 1 FROM comp x WHERE x.node = d.doc_id AND x.node <> x.cluster)
 """
 
 
@@ -1539,12 +1550,12 @@ filtered AS (
   WHERE l.lang_pred = 'en' AND q.score >= 0.5),
 {_cluster_ctes("filtered")}
 SELECT f.doc_id, q.score, w2.ws_tokens,
-       CASE WHEN c.doc IS NOT NULL THEN 'representative' ELSE 'unique' END AS kept_as
+       CASE WHEN c.node IS NOT NULL THEN 'representative' ELSE 'unique' END AS kept_as
 FROM filtered f
 JOIN qual q USING (doc_id)
 JOIN wt w2 USING (doc_id)
-LEFT JOIN comp c ON c.doc = f.doc_id AND c.doc = c.cluster
-WHERE NOT EXISTS (SELECT 1 FROM comp x WHERE x.doc = f.doc_id AND x.doc <> x.cluster)
+LEFT JOIN comp c ON c.node = f.doc_id AND c.node = c.cluster
+WHERE NOT EXISTS (SELECT 1 FROM comp x WHERE x.node = f.doc_id AND x.node <> x.cluster)
 """
 
 
@@ -1782,16 +1793,8 @@ def q_embedding_neardup_clusters(spark, sf_dir):
 
 SQL_EMBEDDING_NEARDUP_CLUSTERS = f"""
 WITH RECURSIVE {_NEARDUP_CTES},
-ndedges AS (
-  SELECT id_a AS src, id_b AS dst FROM ndpairs
-  UNION
-  SELECT id_b, id_a FROM ndpairs),
-ndreach(doc, l) AS (
-  SELECT src, src FROM ndedges
-  UNION
-  SELECT e.src, r.l FROM ndedges e JOIN ndreach r ON r.doc = e.dst)
-SELECT doc AS vec_id, CAST(MIN(l) AS BIGINT) AS cluster_id
-FROM ndreach GROUP BY doc
+{_components_ctes("ndpairs", "id_a", "id_b")}
+SELECT node AS vec_id, CAST(cluster AS BIGINT) AS cluster_id FROM comp
 """
 
 
@@ -2175,74 +2178,220 @@ FROM part
 
 
 # ---------------------------------------------------------------------------
-# Crawl-engine entries with an independently-computed oracle (VERDICT r1 #3):
-# the pure-Python oracle crawler (tests/oracle/crawler.py — no Spark) replays
-# the crawl on the same deterministic fixture; its output is written as
-# parquet that the DuckDB side SELECTs via read_parquet. The check is
-# therefore the full driver gate (rows + schema + value hash), with the
-# oracle side produced by a genuinely independent single-process dataflow.
+# Oracle twins. Entries whose operator is not SQL-expressible (the crawl
+# round, the Bloom blob math, the DOM renderer, zip packing, image decode)
+# are checked against expected parquet written by independent pure-Python
+# twins (the crawl twin is the single-process oracle crawler in
+# tests/oracle/crawler.py); their DuckDB SQL SELECTs it via read_parquet.
+# The check is therefore the full contract gate (rows + schema + values),
+# with the oracle side produced by a separate single-process dataflow. No
+# twin calls the engine operator it checks; twins and engine share only the
+# synthetic inputs (one per-pk row function per corpus) and the kernels
+# named in ``_oracle_tag``.
 # ---------------------------------------------------------------------------
-
-_FIXTURE_CACHE: dict[str, object] = {}
 
 import os as _os
 import tempfile as _tempfile
 
-def _fixture_salt() -> str:
-    """Content-version tag for every on-disk expected/fixture cache dir.
+_FIXTURE_CACHE: dict[str, object] = {}
 
-    The cache rule ("contents are a pure function of the path, so
-    existence == freshness") only holds if the path also keys the CONTENT
-    GENERATORS. This probes the actual image-render function — any change
-    to render_pixels/phash64 (e.g. the r4 multi-octave entropy fix)
-    changes the probe hash and self-invalidates every cached expected
-    table and demo fixture, instead of silently comparing a fresh engine
-    run against stale oracle parquet."""
-    from ..functions.images import phash64, render_pixels
+# The oracle-vs-Spark compare runs at this scale (TESTDATA.md);
+# static SQL strings must bake in a concrete expected-file path, so every
+# expected file is built from this one.
+ORACLE_SF_DIR = "/root/testdata/sf0.01"
 
-    return f"{phash64(render_pixels('cache-key-probe', 32, 32)) & 0xFFFFFFFF:08x}"
-
-
-_SALT = _fixture_salt()
-ORACLE_EXPECTED_DIR = _os.path.join(
-    _tempfile.gettempdir(), f"wcs-oracle-expected-{_SALT}"
-)
-_DEMO_FIXTURE_DIR = _os.path.join(
-    _tempfile.gettempdir(), f"wcs-demo-fixture-{_SALT}"
-)
 _DEMO_SPEC = dict(n_pages=120, n_hosts=8, n_seeds=6, neardup_rate=0.1)
 _DEMO_BUDGET = 3
 _DEMO_ROUNDS = 4
+_CORRUPT_MOD = 97      # planted undecodable blobs at pk ≡ 0 (mod 97)
+_PAIR_DOC_MOD = 512    # caption pairing: doc_id = pk % 512 — slots past the
+                       # document count stay unpaired (missing_caption gate)
+_PAIR_MIN_DIM = 28     # resolution gate: drops the 24-px families
+_VIDEO_FRAMES = 4      # frames packed per synthetic video
+_VIDEO_EVERY = 2       # sampling stride under test
 
-EXPECTED_FETCH_LOG = _os.path.join(ORACLE_EXPECTED_DIR, "crawl_fetch_log.parquet")
-EXPECTED_METRICS = _os.path.join(ORACLE_EXPECTED_DIR, "crawl_metrics.parquet")
-EXPECTED_LINEAGE = _os.path.join(ORACLE_EXPECTED_DIR, "crawl_lineage.parquet")
+# One template, two consumers: the Spark side concats (literal, column)
+# pieces, the oracle twin formats the same pieces — the fixture HTML cannot
+# drift between engine and oracle. Exercises every branch of the reference
+# walk (parser.py:113-178): dropped style/script, entity decoding, block
+# nesting (newline only when in_block), span inside vs outside <p>, the
+# top-level-block no-newline quirk, inline space-joining.
+_RENDER_HTML_PIECES: list[tuple[str, str | None]] = [
+    ("<html><head><title>Part ", "pk"),
+    ('</title><style>.m{color:red}</style></head><body><div class="m"><h1>', "nm"),
+    ("</h1><p>Brand <b>", "br"),
+    ("</b> &amp; type <span>", "ty"),
+    ("</span>.</p><span>badge ", "sz"),
+    ("</span><div><p>inner ", "nm"),
+    ("</p><p>size ", "sz"),
+    ("</p></div><script>var a=1;</script><ul><li>first ", "br"),
+    ("</li><li>second</li></ul></div><p>tail note ", "pk"),
+    ("</p><span>coda</span></body></html>", None),
+]
 
-# The driver's oracle-vs-Spark compare runs at this scale (TESTDATA.md);
-# static SQL strings must bake in a concrete expected-file path, so they
-# bake in this one. Bench/test runs at OTHER sf_dirs get their own files.
-ORACLE_SF_DIR = "/root/testdata/sf0.01"
+
+def _render_fixture_html(row: dict) -> str:
+    """Python-side construction of the SAME fixture HTML (shared pieces)."""
+    out = []
+    for lit, col in _RENDER_HTML_PIECES:
+        out.append(lit)
+        if col is not None:
+            out.append(row[col])
+    return "".join(out)
 
 
-def _expected_bloom_path(sf_dir: str) -> str:
-    """Bloom expected-output path KEYED BY sf_dir (ADVICE r2 #4): the file's
-    contents derive from ``{sf_dir}/orders.parquet``, so a shared fixed path
-    could leave a stale file from another scale on disk (bench at sf0.1 vs
-    the driver gate at sf0.01) and make the parity compare spuriously pass
-    or fail. One deterministic file per sf_dir removes the aliasing; the
-    contents are a pure function of the path, so existence == freshness.
-    The hash-family tag keys the file the same way: a family change (e.g.
-    the KM→xor-rotate move for the ANSI-safe JVM probe) flips the exact
-    false-positive split, so stale-family fixtures must self-invalidate."""
-    from ..functions.hashing import BLOOM_FAMILY
+def _planted_corrupt(pk: int) -> bool:
+    return pk % _CORRUPT_MOD == 0
 
-    slug = sf_dir.strip("/").replace("/", "-")
-    return _os.path.join(
-        ORACLE_EXPECTED_DIR, f"bloom_prefilter_stats-{BLOOM_FAMILY}-{slug}.parquet"
+
+def _phash_image_id(pk: int) -> str:
+    """Deterministic corpus: every 8th part is a ``~d1`` noise variant of
+    the base seven rows earlier (functions/images.py near-dup convention) —
+    pairs the operator must find; all other images are mutually distant."""
+    return f"img_{pk - 7}~d1" if pk % 8 == 7 else f"img_{pk}"
+
+
+def _pair_side(pk: int) -> int:
+    """Render side per near-dup FAMILY (pk // 8): {24, 32, 40} — varied so
+    the resolution gate has real work to do, constant within a family so
+    the planted ``~d1`` near-dup stays phash-close to its base."""
+    return 24 + 8 * ((pk // 8) % 3)
+
+
+def _video_id(pk: int) -> str:
+    return f"vid_{pk}"
+
+
+# Per-pk row functions of the synthetic media corpora: the engine side
+# materializes them through ``_media_corpus``, the twins decode the same rows.
+def _phash_row(pk: int, corrupt: bool = False) -> tuple[str, bytes]:
+    """(media_id, bytes): a 32×32 WCSI image, or with ``corrupt`` an
+    undecodable blob at the planted-corrupt pks."""
+    from ..functions.images import encode_image, render_pixels
+
+    mid = _phash_image_id(pk)
+    if corrupt and _planted_corrupt(pk):
+        return mid, f"corrupt-{pk}".encode()
+    return mid, encode_image(render_pixels(mid, 32, 32), "png")
+
+
+def _pair_row(pk: int) -> tuple[int, str, bytes]:
+    """(doc_id, pair_id, bytes): family-sized image, corrupt at the planted
+    pks, captioned by document ``pk % _PAIR_DOC_MOD``."""
+    from ..functions.images import encode_image, render_pixels
+
+    mid = _phash_image_id(pk)
+    if _planted_corrupt(pk):
+        blob = f"corrupt-{pk}".encode()
+    else:
+        s = _pair_side(pk)
+        blob = encode_image(render_pixels(mid, s, s), "png")
+    return pk % _PAIR_DOC_MOD, mid, blob
+
+
+def _video_row(pk: int) -> tuple[str, bytes]:
+    """(media_id, bytes): 4 deterministic 8×8 WCSI frames in the
+    length-prefixed stream format."""
+    from ..functions.images import encode_image, render_pixels
+    from ..operators.multimodal import pack_frames
+
+    mid = _video_id(pk)
+    frames = [
+        encode_image(render_pixels(f"{mid}/f{j}", 8, 8), "png")
+        for j in range(_VIDEO_FRAMES)
+    ]
+    return mid, pack_frames(frames)
+
+
+def _media_corpus(spark, sf_dir: str, name: str, row, schema: str) -> DataFrame:
+    """Generate-once synthetic media corpus: ``row(pk)`` gives one tuple of
+    ``schema``'s columns per part row. Production media tables arrive
+    STORED (the crawl wrote the blobs); re-encoding a synthetic corpus
+    inside every timed query invocation charges fixture construction to the
+    operator under test. The first call materializes the corpus to a
+    parquet keyed by (``ORACLE_TAG``, sf_dir); later calls scan it. The
+    build repartitions the pks (small-SF part is one parquet split, so the
+    encode would otherwise run on one core), and so does the read (the
+    small files would otherwise coalesce into a couple of scan splits and
+    starve the downstream Python decode stage)."""
+    import shutil as _shutil
+    import uuid as _uuid
+
+    n = spark.sparkContext.defaultParallelism
+    path = _keyed_path(name, sf_dir)
+    if not _os.path.exists(path):
+        import pandas as _pd
+
+        cols = [c.split()[0] for c in schema.split(",")]
+
+        def gen(batches):
+            for pdf in batches:
+                yield _pd.DataFrame([row(int(pk)) for pk in pdf["pk"]], columns=cols)
+
+        pks = t(spark, sf_dir, "part").select(
+            F.col("p_partkey").cast("long").alias("pk")
+        )
+        tmp = f"{path}.tmp-{_uuid.uuid4().hex}"
+        pks.repartition(n).mapInPandas(gen, schema).write.mode("overwrite").parquet(tmp)
+        try:
+            _os.rename(tmp, path)
+        except OSError:  # lost a concurrent-materialization race: theirs
+            _shutil.rmtree(tmp, ignore_errors=True)
+    return spark.read.parquet(path).repartition(n)
+
+
+def _phash_corpus(spark, sf_dir, corrupt: bool = False):
+    """Deterministic 32×32 WCSI image corpus derived from part — shared by
+    the phash pair/cluster/resize/curation/features queries. The
+    decode/phash path stays fully in the timed queries; only blob
+    SYNTHESIS (which a real media table never does at read time) is
+    materialized. With ``corrupt``, every planted-corrupt row carries an
+    undecodable blob — the decode gate's planted failures (error-as-data,
+    E1)."""
+    import functools
+
+    return _media_corpus(
+        spark,
+        sf_dir,
+        "img_corpus_corrupt" if corrupt else "img_corpus",
+        functools.partial(_phash_row, corrupt=corrupt),
+        "media_id string, bytes binary",
     )
 
 
-EXPECTED_BLOOM = _expected_bloom_path(ORACLE_SF_DIR)
+def _pair_corpus(spark, sf_dir):
+    """(doc_id, pair_id, bytes) pair rows from part: deterministic WCSI
+    blobs at family-keyed sizes, corrupt at the planted pks, near-dup
+    variants every 8th row (the _phash_image_id convention). Materialized
+    once per sf_dir (see ``_media_corpus``); decode and every gate stay in
+    the timed path."""
+    return _media_corpus(
+        spark, sf_dir, "pair_corpus", _pair_row,
+        "doc_id long, pair_id string, bytes binary",
+    )
+
+
+def _video_corpus(spark, sf_dir):
+    """(media_id, bytes) synthetic videos from part (``_video_row``),
+    materialized once per sf_dir like the image corpora."""
+    return _media_corpus(
+        spark, sf_dir, "video_corpus", _video_row, "media_id string, bytes binary"
+    )
+
+
+def _oracle_module(name: str):
+    """Import ``tests/oracle/<name>.py``: the independent twins live under
+    tests/ (test infrastructure, not engine code); this makes them
+    importable from the library side for expected-output generation."""
+    import importlib
+    import sys
+
+    root = _os.path.dirname(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+    )
+    if root not in sys.path:
+        sys.path.insert(0, root)
+    return importlib.import_module(f"tests.oracle.{name}")
 
 
 def _demo_fixture_dir() -> str:
@@ -2258,101 +2407,67 @@ def _demo_fixture_dir() -> str:
     return _DEMO_FIXTURE_DIR
 
 
-def _import_oracle_crawler():
-    """The in-repo single-process oracle lives under tests/ (it is test
-    infrastructure, not engine code); make it importable from the library
-    side for expected-output generation."""
-    import sys
+def _part(*cols: str):
+    import pandas as pd
 
-    root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    if root not in sys.path:
-        sys.path.insert(0, root)
-    from tests.oracle.crawler import OracleCrawler
-
-    return OracleCrawler
+    return pd.read_parquet(f"{ORACLE_SF_DIR}/part.parquet", columns=list(cols))
 
 
-def _write_expected(path: str, pdf, schema) -> None:
-    """Atomic parquet write with explicit arrow types (the driver compares
-    schemas, so the oracle side must carry the exact dtypes)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    _os.makedirs(_os.path.dirname(path), exist_ok=True)
-    table = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
-    tmp = path + f".tmp-{_os.getpid()}"
-    pq.write_table(table, tmp)
-    _os.replace(tmp, path)
+def _pks() -> list[int]:
+    return [int(v) for v in _part("p_partkey")["p_partkey"]]
 
 
-def _ensure_crawl_expected() -> None:
-    """Run the pure-Python oracle crawler (same fixture, same budget/rounds
-    as the Spark demo crawl) and persist its fetch log / metrics / lineage
-    as the DuckDB-readable expected outputs. Pure Python — no Spark."""
-    if _FIXTURE_CACHE.get("crawl_expected"):
-        return
+# Each twin returns {expected name: (pandas frame, arrow schema)}; the
+# schemas are explicit because the schema compare checks dtypes too.
+
+
+def _crawl_twin() -> dict:
+    """The pure-Python oracle crawler over the demo fixture, with the same
+    budget/rounds as the Spark demo crawl: fetch log, metrics, lineage."""
     import pandas as pd
     import pyarrow as pa
 
-    OracleCrawler = _import_oracle_crawler()
     fdir = _demo_fixture_dir()
-    seeds = pd.read_csv(f"{fdir}/seeds.csv")
-    oc = OracleCrawler.from_fixture(fdir, default_budget=_DEMO_BUDGET)
-    oc.start(list(seeds.url))
-    metrics = oc.run(max_rounds=_DEMO_ROUNDS)
-
-    log = pd.DataFrame(
-        [
-            {
-                "round": r["round"],
-                "fetch_seq": r["fetch_seq"],
-                "url": r["url"],
-                "status": r["status"],
-                "error_type": r["error_type"],
-                "psnr_db": r["psnr_db"],
-            }
-            for r in oc.fetch_log
-        ]
+    oc = _oracle_module("crawler").OracleCrawler.from_fixture(
+        fdir, default_budget=_DEMO_BUDGET
     )
-    _write_expected(
-        EXPECTED_FETCH_LOG,
-        log,
-        pa.schema(
-            [
-                ("round", pa.int64()),
-                ("fetch_seq", pa.int64()),
-                ("url", pa.string()),
-                ("status", pa.string()),
-                ("error_type", pa.string()),
-                ("psnr_db", pa.float64()),
-            ]
-        ),
+    oc.start(list(pd.read_csv(f"{fdir}/seeds.csv").url))
+    metrics = oc.run(max_rounds=_DEMO_ROUNDS)
+    log_schema = pa.schema(
+        [
+            ("round", pa.int64()),
+            ("fetch_seq", pa.int64()),
+            ("url", pa.string()),
+            ("status", pa.string()),
+            ("error_type", pa.string()),
+            ("psnr_db", pa.float64()),
+        ]
     )
     mcols = [
         "round", "rows_in", "rows_deduped", "rows_robots_blocked",
         "rows_selected", "rows_fetched_ok", "rows_failed", "rows_retried",
         "rows_discovered",
     ]
-    _write_expected(
-        EXPECTED_METRICS,
-        pd.DataFrame([{c: m[c] for c in mcols} for m in metrics]),
-        pa.schema([(c, pa.int64()) for c in mcols]),
-    )
     lcols = ["round", "pkey", "rows_in", "rows_selected", "rows_fetched_ok", "rows_failed"]
-    _write_expected(
-        EXPECTED_LINEAGE,
-        pd.DataFrame([{c: r[c] for c in lcols} for r in oc.lineage]),
-        pa.schema([(c, pa.int64()) for c in lcols]),
-    )
-    _FIXTURE_CACHE["crawl_expected"] = True
+
+    def table(rows, cols):
+        return pd.DataFrame([{c: r[c] for c in cols} for r in rows])
+
+    return {
+        "crawl_fetch_log": (table(oc.fetch_log, log_schema.names), log_schema),
+        "crawl_metrics": (
+            table(metrics, mcols), pa.schema([(c, pa.int64()) for c in mcols])
+        ),
+        "crawl_lineage": (
+            table(oc.lineage, lcols), pa.schema([(c, pa.int64()) for c in lcols])
+        ),
+    }
 
 
-def _ensure_bloom_expected(sf_dir: str) -> None:
-    """Driver-side twin of the distributed Bloom build/probe: same hashes
-    (xxh64 of the 8-byte LE key — bit-exact with Spark's xxhash64 on
-    LongType), same blob math, same counts. Pure Python — no Spark."""
+def _bloom_twin() -> dict:
+    """Twin of the distributed Bloom build/probe: same hashes (xxh64 of the
+    8-byte LE key — bit-exact with Spark's xxhash64 on LongType), same blob
+    math, same counts."""
     import struct
 
     import numpy as np
@@ -2362,20 +2477,7 @@ def _ensure_bloom_expected(sf_dir: str) -> None:
     from ..functions.hashing import xxh64
     from ..operators.bloom import PartitionedBloom
 
-    out_path = _expected_bloom_path(sf_dir)
-    # per-sf_dir file, deterministic contents: on-disk presence is the
-    # cross-process freshness stamp; the dict is just a same-process shortcut
-    if _FIXTURE_CACHE.get("bloom_expected_for") == sf_dir and _os.path.exists(
-        out_path
-    ):
-        return
-    if _os.path.exists(out_path):
-        _FIXTURE_CACHE["bloom_expected_for"] = sf_dir
-        return
-    if not _os.path.exists(f"{sf_dir}/orders.parquet"):
-        return  # pre-materialization with a guessed sf_dir: the query
-        # callable re-ensures with its real sf_dir before the SQL runs
-    keys = pd.read_parquet(f"{sf_dir}/orders.parquet", columns=["o_orderkey"])[
+    keys = pd.read_parquet(f"{ORACLE_SF_DIR}/orders.parquet", columns=["o_orderkey"])[
         "o_orderkey"
     ]
     hashes = np.fromiter(
@@ -2392,33 +2494,344 @@ def _ensure_bloom_expected(sf_dir: str) -> None:
     pdf = pd.DataFrame(
         {"maybe_seen": [False, True], "n": [int((~hits).sum()), int(hits.sum())]}
     )
-    _write_expected(
-        out_path,
-        pdf[pdf["n"] > 0].reset_index(drop=True),
-        pa.schema([("maybe_seen", pa.bool_()), ("n", pa.int64())]),
+    return {
+        "bloom_prefilter_stats": (
+            pdf[pdf["n"] > 0].reset_index(drop=True),
+            pa.schema([("maybe_seen", pa.bool_()), ("n", pa.int64())]),
+        )
+    }
+
+
+def _render_twin() -> dict:
+    """The regex-tokenizer + iterative-walk renderer of tests/oracle/render.py
+    over the same fixture HTML (the engine parses with html.parser and walks
+    recursively — two implementations of the reference spec)."""
+    import pandas as pd
+    import pyarrow as pa
+
+    render = _oracle_module("render").render_text_oracle
+    p = _part("p_partkey", "p_name", "p_brand", "p_type", "p_size")
+    texts = [
+        render(
+            _render_fixture_html(
+                {
+                    "pk": str(int(r.p_partkey)),
+                    "nm": r.p_name,
+                    "br": r.p_brand,
+                    "ty": r.p_type,
+                    "sz": str(int(r.p_size)),
+                }
+            )
+        )
+        for r in p.itertuples()
+    ]
+    return {
+        "block_inline_render": (
+            pd.DataFrame({"doc_id": p["p_partkey"].astype("int64"), "text": texts}),
+            pa.schema([("doc_id", pa.int64()), ("text", pa.string())]),
+        )
+    }
+
+
+def _zip_twin() -> dict:
+    import pandas as pd
+    import pyarrow as pa
+
+    from ..operators.archive import zip_oracle_rows
+
+    p = _part("p_partkey", "p_name", "p_type")
+    rows = (
+        {
+            "job_id": int(r.p_partkey) % 3,
+            "folder": f"page_{int(r.p_partkey) % 24}",
+            "file_name": f"part_{int(r.p_partkey)}.md",
+            "content": (r.p_name + "\n" + r.p_type).encode("utf-8"),
+        }
+        for r in p.itertuples()
     )
-    _FIXTURE_CACHE["bloom_expected_for"] = sf_dir
+    schema = pa.schema(
+        [
+            ("level", pa.string()),
+            ("job_id", pa.int64()),
+            ("folder", pa.string()),
+            ("zip_name", pa.string()),
+            ("n_files", pa.int64()),
+            ("total_bytes", pa.int64()),
+            ("zip_size", pa.int64()),
+            ("zip_sha256", pa.string()),
+        ]
+    )
+    return {"zip_archives": (pd.DataFrame(zip_oracle_rows(rows)), schema)}
 
 
-def ensure_expected_outputs(sf_dir: str = ORACLE_SF_DIR) -> None:
-    """Materialize every oracle-side expected parquet (pure Python). Called
-    from ``__spark_entry__.oracle_sql()`` so the DuckDB SQL can run no
-    matter whether the driver executes SQL before or after the Spark side."""
-    _ensure_crawl_expected()
-    _ensure_bloom_expected(sf_dir)
-    _ensure_render_expected(sf_dir)
-    _ensure_zip_expected(sf_dir)
-    _ensure_phash_expected(sf_dir)
-    _ensure_resize_expected(sf_dir)
-    _ensure_frames_expected(sf_dir)
-    _ensure_features_expected(sf_dir)
-    _ensure_pair_profile_expected(sf_dir)
+def _image32_twin() -> dict:
+    """One decode pass over the 32-px phash corpus feeds three twins:
+    (media_id, phash) for the banded-join replays, q_media_features' means
+    and phash (decoded=false rows at the planted-corrupt pks) and
+    q_media_resize's re-encoded 16×16 bytes (shared ``nn_resize`` kernel).
+    Means are the same numpy expression as extract_features, so the floats
+    compare exactly."""
+    import hashlib
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+
+    from ..functions.images import decode_image, encode_image, phash64
+    from ..operators.multimodal import nn_resize
+
+    ids, phashes, sizes, digests, feats = [], [], [], [], []
+    for pk in _pks():
+        mid, blob = _phash_row(pk)
+        px = decode_image(blob)
+        ph = phash64(px)
+        ids.append(mid)
+        phashes.append(ph)
+        resized = encode_image(nn_resize(px, 16, 16), "png")
+        sizes.append(len(resized))
+        digests.append(hashlib.sha256(resized).hexdigest())
+        if _planted_corrupt(pk):  # q_media_features reads the corrupt corpus
+            feats.append((False, None, None, None, None, None, None))
+        else:
+            means = px.astype(np.float64).mean(axis=(0, 1))
+            feats.append(
+                (True, int(px.shape[1]), int(px.shape[0]), *map(float, means), ph)
+            )
+    decoded, w, h, r, g, b, fph = zip(*feats)
+    # explicit nullable dtypes (same rule as extract_features): float64
+    # inference on int+None columns destroys the low bits of 64-bit phashes
+    features = pd.DataFrame(
+        {
+            "media_id": ids,
+            "decoded": list(decoded),
+            "w": pd.array(w, dtype="Int32"),
+            "h": pd.array(h, dtype="Int32"),
+            "mean_r": pd.array(r, dtype="Float64"),
+            "mean_g": pd.array(g, dtype="Float64"),
+            "mean_b": pd.array(b, dtype="Float64"),
+            "phash": pd.array(fph, dtype="Int64"),
+        }
+    )
+    return {
+        "image_phash": (
+            pd.DataFrame({"media_id": ids, "phash": pd.array(phashes, dtype="int64")}),
+            pa.schema([("media_id", pa.string()), ("phash", pa.int64())]),
+        ),
+        "media_features": (
+            features,
+            pa.schema(
+                [
+                    ("media_id", pa.string()),
+                    ("decoded", pa.bool_()),
+                    ("w", pa.int32()),
+                    ("h", pa.int32()),
+                    ("mean_r", pa.float64()),
+                    ("mean_g", pa.float64()),
+                    ("mean_b", pa.float64()),
+                    ("phash", pa.int64()),
+                ]
+            ),
+        ),
+        "media_resize": (
+            pd.DataFrame({"media_id": ids, "n_bytes": sizes, "sha256": digests}),
+            pa.schema(
+                [("media_id", pa.string()), ("n_bytes", pa.int64()), ("sha256", pa.string())]
+            ),
+        ),
+    }
+
+
+def _pair_profile_twin() -> dict:
+    """The pair corpus' decode pass: (pair_id, phash, w, h) per part row,
+    NULLs at the planted-corrupt pks. The SQL replay joins this table for
+    the image-side gates."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from ..functions.images import decode_image, phash64
+
+    rows = []
+    for pk in _pks():
+        _doc, mid, blob = _pair_row(pk)
+        if _planted_corrupt(pk):
+            rows.append((mid, None, None, None))
+            continue
+        px = decode_image(blob)
+        rows.append((mid, phash64(px), int(px.shape[1]), int(px.shape[0])))
+    ids, phashes, w, h = zip(*rows)
+    # explicit nullable dtypes: float64's 53-bit mantissa would silently
+    # zero the low ~11 bits of 64-bit phashes
+    pdf = pd.DataFrame(
+        {
+            "pair_id": list(ids),
+            "phash": pd.array(phashes, dtype="Int64"),
+            "w": pd.array(w, dtype="Int32"),
+            "h": pd.array(h, dtype="Int32"),
+        }
+    )
+    schema = pa.schema(
+        [
+            ("pair_id", pa.string()),
+            ("phash", pa.int64()),
+            ("w", pa.int32()),
+            ("h", pa.int32()),
+        ]
+    )
+    return {"pair_profile": (pdf, schema)}
+
+
+def _frames_twin() -> dict:
+    """Twin of q_video_frame_sample: shares only the byte format
+    (unpack_frames) with the engine, replays the sampling stride itself."""
+    import hashlib
+
+    import pandas as pd
+    import pyarrow as pa
+
+    from ..operators.multimodal import unpack_frames
+
+    rows = []
+    for pk in _pks():
+        mid, packed = _video_row(pk)
+        for j, fr in enumerate(unpack_frames(packed)):
+            if j % _VIDEO_EVERY == 0:
+                rows.append(
+                    {
+                        "media_id": mid,
+                        "frame_idx": j,
+                        "n_bytes": len(fr),
+                        "sha256": hashlib.sha256(fr).hexdigest(),
+                    }
+                )
+    schema = pa.schema(
+        [
+            ("media_id", pa.string()),
+            ("frame_idx", pa.int64()),
+            ("n_bytes", pa.int64()),
+            ("sha256", pa.string()),
+        ]
+    )
+    return {"video_frames": (pd.DataFrame(rows), schema)}
+
+
+# twin → the expected files it writes
+_TWINS = {
+    _crawl_twin: ("crawl_fetch_log", "crawl_metrics", "crawl_lineage"),
+    _bloom_twin: ("bloom_prefilter_stats",),
+    _render_twin: ("block_inline_render",),
+    _zip_twin: ("zip_archives",),
+    _image32_twin: ("image_phash", "media_features", "media_resize"),
+    _pair_profile_twin: ("pair_profile",),
+    _frames_twin: ("video_frames",),
+}
+
+
+def _oracle_tag() -> str:
+    """Source hash that keys every expected file, materialized corpus and
+    demo fixture: contents are a pure function of the path, so existence ==
+    freshness, and an edit to anything that feeds them rolls the key
+    instead of leaving a stale file that still counts as fresh. Hashed:
+
+    - the twins in ``_TWINS``, the row functions and id rules they and the
+      corpora share (``_phash_row``, ``_pair_row``, ``_video_row``,
+      ``_phash_image_id``, ``_pair_side``, ``_video_id``,
+      ``_planted_corrupt``, ``_render_fixture_html``), the corpus scaffold
+      and its three callers (``_media_corpus``, ``_phash_corpus``,
+      ``_pair_corpus``, ``_video_corpus``), ``_part``, ``_pks``,
+      ``_demo_fixture_dir`` and ``_write_expected``;
+    - the constants they read (``ORACLE_SF_DIR``, ``_DEMO_*``,
+      ``_CORRUPT_MOD``, ``_PAIR_DOC_MOD``, ``_VIDEO_*``,
+      ``_RENDER_HTML_PIECES``);
+    - ``tests/oracle/*.py`` (the oracle crawler and renderer);
+    - the kernel modules the twins call: functions/images.py (render,
+      encode, decode, phash), functions/hashing.py (xxh64, BLOOM_FAMILY),
+      operators/bloom.py (PartitionedBloom), operators/archive.py
+      (zip_oracle_rows), operators/multimodal.py (nn_resize,
+      pack/unpack_frames) and sources/fixtures.py (generate_site)."""
+    import glob
+    import hashlib
+    import inspect
+
+    fns = [
+        *_TWINS, _phash_row, _pair_row, _video_row, _phash_image_id,
+        _pair_side, _video_id, _planted_corrupt, _render_fixture_html,
+        _media_corpus, _phash_corpus, _pair_corpus, _video_corpus,
+        _part, _pks, _demo_fixture_dir, _write_expected,
+    ]
+    consts = (
+        ORACLE_SF_DIR, _DEMO_SPEC, _DEMO_BUDGET, _DEMO_ROUNDS, _CORRUPT_MOD,
+        _PAIR_DOC_MOD, _VIDEO_FRAMES, _VIDEO_EVERY, _RENDER_HTML_PIECES,
+    )
+    pkg = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+    files = [
+        _os.path.join(pkg, m)
+        for m in (
+            "functions/images.py", "functions/hashing.py", "operators/bloom.py",
+            "operators/archive.py", "operators/multimodal.py", "sources/fixtures.py",
+        )
+    ]
+    files += sorted(glob.glob(_os.path.join(_os.path.dirname(pkg), "tests/oracle/*.py")))
+    h = hashlib.md5(repr(consts).encode())
+    for f in fns:
+        h.update(inspect.getsource(f).encode())
+    for path in files:
+        with open(path, "rb") as fh:
+            h.update(fh.read())
+    return h.hexdigest()[:10]
+
+
+def _write_expected(path: str, pdf, schema) -> None:
+    """Atomic parquet write with explicit arrow types (the contract compares
+    schemas, so the oracle side must carry the exact dtypes)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _os.makedirs(_os.path.dirname(path), exist_ok=True)
+    table = pa.Table.from_pandas(pdf, schema=schema, preserve_index=False)
+    tmp = path + f".tmp-{_os.getpid()}"
+    pq.write_table(table, tmp)
+    _os.replace(tmp, path)
+
+
+ORACLE_TAG = _oracle_tag()
+ORACLE_EXPECTED_DIR = _os.path.join(
+    _tempfile.gettempdir(), f"wcs-oracle-expected-{ORACLE_TAG}"
+)
+_DEMO_FIXTURE_DIR = _os.path.join(
+    _tempfile.gettempdir(), f"wcs-demo-fixture-{ORACLE_TAG}"
+)
+
+
+def _keyed_path(name: str, sf_dir: str = ORACLE_SF_DIR) -> str:
+    """``ORACLE_EXPECTED_DIR/<name>-<sf slug>.parquet``: keyed by the source
+    tag (the directory) and by the scale the contents derive from."""
+    slug = sf_dir.strip("/").replace("/", "-")
+    return _os.path.join(ORACLE_EXPECTED_DIR, f"{name}-{slug}.parquet")
+
+
+def _expected_sql(name: str) -> str:
+    return f"read_parquet('{_keyed_path(name)}')"
+
+
+def ensure_expected_outputs() -> None:
+    """The one expected-output rule: build a twin's files only if one is
+    missing (their path already keys their freshness), each with one atomic
+    write. Called from ``__spark_entry__.oracle_sql()``, so the files exist
+    before any oracle SQL runs, whichever side executes first;
+    nothing else builds them."""
+    for twin, names in _TWINS.items():
+        if all(_os.path.exists(_keyed_path(n)) for n in names):
+            continue
+        for name, (pdf, schema) in twin().items():
+            _write_expected(_keyed_path(name), pdf, schema)
 
 
 def _crawl_demo(spark, sf_dir: str):
     """Run the real CrawlRun end-to-end on the shared deterministic site
-    fixture and return the tables. Cached per-process."""
-    import tempfile
+    fixture and return the tables. Cached per-process; its run dir is
+    removed at interpreter exit (nothing reads it after the process)."""
+    import atexit
+    import shutil
 
     from ..plans.round import CrawlConfig, CrawlRun
     from ..sources.fixtures import load_fixture
@@ -2427,7 +2840,8 @@ def _crawl_demo(spark, sf_dir: str):
     if "run" in _FIXTURE_CACHE:
         return _FIXTURE_CACHE["run"]
     fdir = _demo_fixture_dir()
-    run_dir = tempfile.mkdtemp(prefix="wcs-demo-run-")
+    run_dir = _tempfile.mkdtemp(prefix="wcs-demo-run-")
+    atexit.register(shutil.rmtree, run_dir, True)
     run = CrawlRun(
         spark,
         run_dir,
@@ -2447,10 +2861,9 @@ def q_crawl_fetch_log(spark, sf_dir):
     """The flagship engine end-to-end: deterministic fetch log of a 4-round
     crawl over the seeded fixture. Oracle: the single-process Python
     crawler's log for the identical seed list + politeness budget (the
-    north-rule round-trip check, now driver-visible)."""
+    north-rule round-trip check as a contract query)."""
     from ..schemas import FETCH_LOG
 
-    _ensure_crawl_expected()
     run = _crawl_demo(spark, sf_dir)
     return run.fetch_log_t.read(spark, schema=FETCH_LOG).select(
         F.col("round").cast("long").alias("round"),
@@ -2464,7 +2877,7 @@ def q_crawl_fetch_log(spark, sf_dir):
 
 SQL_CRAWL_FETCH_LOG = f"""
 SELECT round, fetch_seq, url, status, error_type, psnr_db
-FROM read_parquet('{EXPECTED_FETCH_LOG}')
+FROM {_expected_sql("crawl_fetch_log")}
 """
 
 
@@ -2473,7 +2886,6 @@ def q_crawl_metrics(spark, sf_dir):
     per-round metrics."""
     from ..schemas import METRICS
 
-    _ensure_crawl_expected()
     run = _crawl_demo(spark, sf_dir)
     m = run.metrics_t.read(spark, schema=METRICS)
     return m.select(
@@ -2482,7 +2894,7 @@ def q_crawl_metrics(spark, sf_dir):
 
 
 SQL_CRAWL_METRICS = f"""
-SELECT * FROM read_parquet('{EXPECTED_METRICS}')
+SELECT * FROM {_expected_sql("crawl_metrics")}
 """
 
 
@@ -2492,7 +2904,6 @@ def q_crawl_lineage(spark, sf_dir):
     hash partitioning."""
     from ..schemas import LINEAGE
 
-    _ensure_crawl_expected()
     run = _crawl_demo(spark, sf_dir)
     lin = run.lineage_t.read(spark, schema=LINEAGE)
     return lin.select(
@@ -2501,7 +2912,7 @@ def q_crawl_lineage(spark, sf_dir):
 
 
 SQL_CRAWL_LINEAGE = f"""
-SELECT * FROM read_parquet('{EXPECTED_LINEAGE}')
+SELECT * FROM {_expected_sql("crawl_lineage")}
 """
 
 
@@ -2575,6 +2986,8 @@ FROM latest WHERE rn = 1 AND NOT deleted
 """
 
 
+
+
 def q_bloom_prefilter_stats(spark, sf_dir):
     """D4 scale tier: partitioned-Bloom membership prefilter. Build the
     words table over the orders keyspace (the tier's distributed OR-merge
@@ -2589,7 +3002,6 @@ def q_bloom_prefilter_stats(spark, sf_dir):
         probe_words_joined,
     )
 
-    _ensure_bloom_expected(sf_dir)
     o = t(spark, sf_dir, "orders").select(
         F.xxhash64(F.col("o_orderkey").cast("long")).alias("url_hash")
     )
@@ -2611,46 +3023,8 @@ def q_bloom_prefilter_stats(spark, sf_dir):
 
 
 SQL_BLOOM_PREFILTER_STATS = f"""
-SELECT maybe_seen, n FROM read_parquet('{EXPECTED_BLOOM}')
+SELECT maybe_seen, n FROM {_expected_sql("bloom_prefilter_stats")}
 """
-
-
-# ---------------------------------------------------------------------------
-# U16 block/inline render + K6 zip archives (read_parquet oracles: the
-# renderer is a recursive DOM walk and the archive a byte-format packing —
-# neither is SQL-expressible, so the DuckDB side reads expected outputs
-# materialized by independent pure-Python twins, the crawl-oracle pattern).
-# ---------------------------------------------------------------------------
-
-
-def _expected_keyed_path(name: str, sf_dir: str) -> str:
-    """Expected-output path keyed by sf_dir (ADVICE r2 #4 rule: contents
-    are a pure function of the path, so existence == freshness)."""
-    slug = sf_dir.strip("/").replace("/", "-")
-    return _os.path.join(ORACLE_EXPECTED_DIR, f"{name}-{slug}.parquet")
-
-
-EXPECTED_RENDER = _expected_keyed_path("block_inline_render", ORACLE_SF_DIR)
-EXPECTED_ZIP = _expected_keyed_path("zip_archives", ORACLE_SF_DIR)
-
-# One template, two consumers: the Spark side concats (literal, column)
-# pieces, the oracle twin formats the same pieces — the fixture HTML cannot
-# drift between engine and oracle. Exercises every branch of the reference
-# walk (parser.py:113-178): dropped style/script, entity decoding, block
-# nesting (newline only when in_block), span inside vs outside <p>, the
-# top-level-block no-newline quirk, inline space-joining.
-_RENDER_HTML_PIECES: list[tuple[str, str | None]] = [
-    ("<html><head><title>Part ", "pk"),
-    ('</title><style>.m{color:red}</style></head><body><div class="m"><h1>', "nm"),
-    ("</h1><p>Brand <b>", "br"),
-    ("</b> &amp; type <span>", "ty"),
-    ("</span>.</p><span>badge ", "sz"),
-    ("</span><div><p>inner ", "nm"),
-    ("</p><p>size ", "sz"),
-    ("</p></div><script>var a=1;</script><ul><li>first ", "br"),
-    ("</li><li>second</li></ul></div><p>tail note ", "pk"),
-    ("</p><span>coda</span></body></html>", None),
-]
 
 
 def q_block_inline_render(spark, sf_dir):
@@ -2681,75 +3055,8 @@ def q_block_inline_render(spark, sf_dir):
     )
 
 
-def _import_oracle_render():
-    """Import the independent renderer twin from tests/oracle (regex
-    tokenizer + iterative walk vs the engine's html.parser tree + recursive
-    walk — two implementations of the reference spec)."""
-    import sys
-
-    root = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    if root not in sys.path:
-        sys.path.insert(0, root)
-    from tests.oracle.render import render_text_oracle
-
-    return render_text_oracle
-
-
-def _render_fixture_html(row: dict) -> str:
-    """Python-side construction of the SAME fixture HTML (shared pieces)."""
-    out = []
-    for lit, col in _RENDER_HTML_PIECES:
-        out.append(lit)
-        if col is not None:
-            out.append(row[col])
-    return "".join(out)
-
-
-def _ensure_render_expected(sf_dir: str) -> None:
-    import pandas as pd
-    import pyarrow as pa
-
-    out_path = _expected_keyed_path("block_inline_render", sf_dir)
-    if _FIXTURE_CACHE.get("render_expected_for") == sf_dir and _os.path.exists(
-        out_path
-    ):
-        return
-    if _os.path.exists(out_path):
-        _FIXTURE_CACHE["render_expected_for"] = sf_dir
-        return
-    src = f"{sf_dir}/part.parquet"
-    if not _os.path.exists(src):
-        return
-    render = _import_oracle_render()
-    p = pd.read_parquet(
-        src, columns=["p_partkey", "p_name", "p_brand", "p_type", "p_size"]
-    )
-    texts = [
-        render(
-            _render_fixture_html(
-                {
-                    "pk": str(int(r.p_partkey)),
-                    "nm": r.p_name,
-                    "br": r.p_brand,
-                    "ty": r.p_type,
-                    "sz": str(int(r.p_size)),
-                }
-            )
-        )
-        for r in p.itertuples()
-    ]
-    _write_expected(
-        out_path,
-        pd.DataFrame({"doc_id": p["p_partkey"].astype("int64"), "text": texts}),
-        pa.schema([("doc_id", pa.int64()), ("text", pa.string())]),
-    )
-    _FIXTURE_CACHE["render_expected_for"] = sf_dir
-
-
 SQL_BLOCK_INLINE_RENDER = f"""
-SELECT doc_id, text FROM read_parquet('{EXPECTED_RENDER}')
+SELECT doc_id, text FROM {_expected_sql("block_inline_render")}
 """
 
 
@@ -2777,172 +3084,10 @@ def q_zip_archives(spark, sf_dir):
     )
 
 
-def _ensure_zip_expected(sf_dir: str) -> None:
-    import pandas as pd
-    import pyarrow as pa
-
-    from ..operators.archive import zip_oracle_rows
-
-    out_path = _expected_keyed_path("zip_archives", sf_dir)
-    if _FIXTURE_CACHE.get("zip_expected_for") == sf_dir and _os.path.exists(out_path):
-        return
-    if _os.path.exists(out_path):
-        _FIXTURE_CACHE["zip_expected_for"] = sf_dir
-        return
-    src = f"{sf_dir}/part.parquet"
-    if not _os.path.exists(src):
-        return
-    p = pd.read_parquet(src, columns=["p_partkey", "p_name", "p_type"])
-    rows = (
-        {
-            "job_id": int(r.p_partkey) % 3,
-            "folder": f"page_{int(r.p_partkey) % 24}",
-            "file_name": f"part_{int(r.p_partkey)}.md",
-            "content": (r.p_name + "\n" + r.p_type).encode("utf-8"),
-        }
-        for r in p.itertuples()
-    )
-    out = pd.DataFrame(zip_oracle_rows(rows))
-    _write_expected(
-        out_path,
-        out,
-        pa.schema(
-            [
-                ("level", pa.string()),
-                ("job_id", pa.int64()),
-                ("folder", pa.string()),
-                ("zip_name", pa.string()),
-                ("n_files", pa.int64()),
-                ("total_bytes", pa.int64()),
-                ("zip_size", pa.int64()),
-                ("zip_sha256", pa.string()),
-            ]
-        ),
-    )
-    _FIXTURE_CACHE["zip_expected_for"] = sf_dir
-
-
 SQL_ZIP_ARCHIVES = f"""
 SELECT "level", job_id, folder, zip_name, n_files, total_bytes, zip_size, zip_sha256
-FROM read_parquet('{EXPECTED_ZIP}')
+FROM {_expected_sql("zip_archives")}
 """
-
-
-EXPECTED_PHASH = _expected_keyed_path("image_phash", ORACLE_SF_DIR)
-
-
-def _phash_image_id(pk: int) -> str:
-    """Deterministic corpus: every 8th part is a ``~d1`` noise variant of
-    the base seven rows earlier (functions/images.py near-dup convention) —
-    pairs the operator must find; all other images are mutually distant."""
-    return f"img_{pk - 7}~d1" if pk % 8 == 7 else f"img_{pk}"
-
-
-_CORPUS_VERSION_CACHE: list[str] = []
-
-
-def _corpus_version() -> str:
-    """Content hash over the corpus GENERATORS, baked into the cache key:
-    unlike oracle expected files (outputs pinned by reference semantics),
-    the corpora are synthetic INPUTS whose generators this repo iterates
-    on — existence==freshness alone would silently serve stale blobs
-    after a generator edit. Hashing the generator sources makes any such
-    edit a new cache key automatically."""
-    if not _CORPUS_VERSION_CACHE:
-        import hashlib as _hashlib
-        import inspect as _inspect
-
-        from ..functions import images as _I
-
-        parts = [
-            _inspect.getsource(f)
-            for f in (
-                _I.render_pixels,
-                _I.encode_image,
-                _phash_image_id,
-                _gen_phash_corpus,
-                _gen_pair_corpus,
-                _pair_side,
-            )
-        ]
-        parts.append(str(_PAIR_DOC_MOD))
-        h = _hashlib.md5("\n".join(parts).encode()).hexdigest()[:10]
-        _CORPUS_VERSION_CACHE.append(h)
-    return _CORPUS_VERSION_CACHE[0]
-
-
-def _materialized_corpus(spark, sf_dir: str, name: str, builder) -> DataFrame:
-    """Generate-once media corpus: production media tables arrive STORED
-    (the crawl wrote the blobs); re-encoding a synthetic corpus inside
-    every timed query invocation charges fixture construction to the
-    operator under test. First call materializes the deterministic corpus
-    to a parquet keyed by (sf_dir, generator-source hash) — a pure
-    function of the path, and a generator edit rolls the key (see
-    ``_corpus_version``); later calls scan it. The post-read repartition
-    keeps the downstream Python decode stage honest about parallelism
-    (the small files would otherwise coalesce into a couple of scan
-    splits)."""
-    import shutil as _shutil
-    import uuid as _uuid
-
-    path = _expected_keyed_path(f"{name}-{_corpus_version()}", sf_dir)
-    if not _os.path.exists(path):
-        tmp = f"{path}.tmp-{_uuid.uuid4().hex}"
-        builder().write.mode("overwrite").parquet(tmp)
-        try:
-            _os.rename(tmp, path)
-        except OSError:  # lost a concurrent-materialization race: theirs
-            _shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-
-
-def _phash_corpus(spark, sf_dir, corrupt_mod: int | None = None):
-    """Deterministic 32×32 WCSI image corpus derived from part — shared by
-    the phash pair/cluster/resize/curation queries, materialized once per
-    (sf_dir, corrupt_mod) via ``_materialized_corpus``. The decode/phash
-    path stays fully in the timed queries; only blob SYNTHESIS (which a
-    real media table never does at read time) is cached. With
-    ``corrupt_mod``, every pk ≡ 0 (mod corrupt_mod) row carries an
-    undecodable blob — the decode gate's planted failures
-    (error-as-data, E1)."""
-    return _materialized_corpus(
-        spark,
-        sf_dir,
-        f"img_corpus_c{corrupt_mod or 0}",
-        lambda: _gen_phash_corpus(spark, sf_dir, corrupt_mod),
-    )
-
-
-def _gen_phash_corpus(spark, sf_dir, corrupt_mod: int | None = None):
-    import pandas as _pd
-
-    # Small-SF part is a single parquet split; without a repartition the
-    # whole generate→encode pipeline would run on one core.
-    p = (
-        t(spark, sf_dir, "part")
-        .select(F.col("p_partkey").cast("long").alias("pk"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def gen(batches):
-        from ..functions.images import encode_image, render_pixels
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for v in pdf["pk"]:
-                pk = int(v)
-                ids.append(_phash_image_id(pk))
-                if corrupt_mod is not None and pk % corrupt_mod == 0:
-                    blobs.append(f"corrupt-{pk}".encode())
-                else:
-                    blobs.append(
-                        encode_image(render_pixels(ids[-1], 32, 32), "png")
-                    )
-            yield _pd.DataFrame({"media_id": ids, "bytes": blobs})
-
-    return p.mapInPandas(gen, "media_id string, bytes binary")
 
 
 def q_image_phash_neardup(spark, sf_dir):
@@ -2969,95 +3114,49 @@ def q_image_phash_clusters(spark, sf_dir):
     )
 
 
-def _ensure_phash_expected(sf_dir: str) -> None:
-    """Pure-Python twin: (media_id, phash) for the same corpus; the SQL
-    side replays the banding + join + hamming filter in DuckDB, so the
-    candidate-generation logic (not just the hash) is oracle-checked."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from ..functions.images import decode_image, encode_image, phash64, render_pixels
-
-    out_path = _expected_keyed_path("image_phash", sf_dir)
-    if _FIXTURE_CACHE.get("phash_expected_for") == sf_dir and _os.path.exists(
-        out_path
-    ):
-        return
-    if _os.path.exists(out_path):
-        _FIXTURE_CACHE["phash_expected_for"] = sf_dir
-        return
-    src = f"{sf_dir}/part.parquet"
-    if not _os.path.exists(src):
-        return
-    p = pd.read_parquet(src, columns=["p_partkey"])
-    ids = [_phash_image_id(int(v)) for v in p["p_partkey"]]
-    hashes = [
-        phash64(decode_image(encode_image(render_pixels(i, 32, 32), "png")))
-        for i in ids
-    ]
-    _write_expected(
-        out_path,
-        pd.DataFrame({"media_id": ids, "phash": pd.array(hashes, dtype="int64")}),
-        pa.schema([("media_id", pa.string()), ("phash", pa.int64())]),
-    )
-    _FIXTURE_CACHE["phash_expected_for"] = sf_dir
-
-
 # Band extraction must match Spark's shiftrightunsigned on SIGNED 64-bit
 # hashes: lift to the unsigned HUGEINT value first, then exact integer
-# div/mod per 16-bit chunk. Shared CTE chain for the phash family
-# (pairs + clusters + curation), ending at the qualifying pair set;
-# ``where`` narrows the hash table (the curation oracle excludes the
-# planted-corrupt ids there, mirroring the engine's NULL-phash gate).
-def _phash_pair_ctes(where: str = "") -> str:
+# div/mod per 16-bit chunk. Shared CTE chain for the phash family (pairs,
+# clusters, image and pair curation), ending at the qualifying pairs
+# ``phpairs(id_a, id_b, hamming)``; ``where`` narrows the hash table.
+def _phash_pair_ctes(
+    src: str = _expected_sql("image_phash"), id_col: str = "media_id", where: str = ""
+) -> str:
     return f"""ph AS (
-  SELECT media_id, phash,
+  SELECT {id_col}, phash,
          CAST(phash AS HUGEINT)
            + CASE WHEN phash < 0 THEN CAST('18446744073709551616' AS HUGEINT)
                   ELSE CAST(0 AS HUGEINT) END AS u
-  FROM read_parquet('{EXPECTED_PHASH}') {where}),
+  FROM {src} {where}),
 bands AS (
-  SELECT media_id, phash, v.band_idx,
+  SELECT {id_col}, phash, v.band_idx,
          CAST((u // v.d) % 65536 AS BIGINT) AS band_val
   FROM ph, (VALUES (0, CAST(1 AS HUGEINT)),
                    (1, CAST(65536 AS HUGEINT)),
                    (2, CAST(4294967296 AS HUGEINT)),
                    (3, CAST(281474976710656 AS HUGEINT))) AS v(band_idx, d)),
 cand AS (
-  SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,
+  SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b,
                   a.phash AS ph_a, b.phash AS ph_b
   FROM bands a JOIN bands b
     ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.media_id < b.media_id),
+   AND a.{id_col} < b.{id_col}),
 phpairs AS (
-  SELECT media_a, media_b,
+  SELECT id_a, id_b,
          CAST(bit_count(xor(ph_a, ph_b)) AS BIGINT) AS hamming
   FROM cand
   WHERE bit_count(xor(ph_a, ph_b)) <= 2)"""
 
 
-_PHASH_PAIR_CTES = _phash_pair_ctes()
-
 SQL_IMAGE_PHASH_NEARDUP = f"""
-WITH {_PHASH_PAIR_CTES}
-SELECT media_a, media_b, hamming FROM phpairs
+WITH {_phash_pair_ctes()}
+SELECT id_a AS media_a, id_b AS media_b, hamming FROM phpairs
 """
 
-# Components replayed as a recursive min-reachable CTE; MIN over VARCHAR is
-# lexicographic in both engines, matching connected_components' F.min on
-# string media ids.
 SQL_IMAGE_PHASH_CLUSTERS = f"""
-WITH RECURSIVE {_PHASH_PAIR_CTES},
-phedges AS (
-  SELECT media_a AS src, media_b AS dst FROM phpairs
-  UNION
-  SELECT media_b, media_a FROM phpairs),
-phreach(m, l) AS (
-  SELECT src, src FROM phedges
-  UNION
-  SELECT e.src, r.l FROM phedges e JOIN phreach r ON r.m = e.dst)
-SELECT m AS media_id, MIN(l) AS cluster_id
-FROM phreach GROUP BY m
+WITH RECURSIVE {_phash_pair_ctes()},
+{_components_ctes("phpairs", "id_a", "id_b")}
+SELECT node AS media_id, cluster AS cluster_id FROM comp
 """
 
 
@@ -3069,43 +3168,29 @@ def q_image_curation(spark, sf_dir):
     One decode pass, banded equi-joins only — linear composition."""
     from ..operators.multimodal import phash_prune
 
-    corpus = _phash_corpus(spark, sf_dir, corrupt_mod=97)
-    return phash_prune(corpus, max_hamming=2, bands=4)
+    return phash_prune(_phash_corpus(spark, sf_dir, corrupt=True), max_hamming=2, bands=4)
 
 
-# The oracle rebuilds the corrupt-id set from part with the same id mapping
-# (_phash_image_id) and excludes it from the hash table — replaying the
-# engine's decode gate — then replays prune over components.
-_CORRUPT_IDS_SQL = """corrupt AS (
-  SELECT CASE WHEN p_partkey % 8 = 7
+# _phash_image_id in SQL: both SQL replays that rebuild image ids from part
+_IMAGE_ID_SQL = """CASE WHEN p_partkey % 8 = 7
               THEN 'img_' || CAST(p_partkey - 7 AS VARCHAR) || '~d1'
-              ELSE 'img_' || CAST(p_partkey AS VARCHAR) END AS media_id
-  FROM part WHERE p_partkey % 97 = 0)"""
+              ELSE 'img_' || CAST(p_partkey AS VARCHAR) END"""
 
+# The oracle rebuilds the planted-corrupt id set from part and excludes it
+# from the hash table — replaying the engine's decode gate — then replays
+# prune over components.
 SQL_IMAGE_CURATION = f"""
-WITH RECURSIVE {_CORRUPT_IDS_SQL},
-{_phash_pair_ctes("WHERE media_id NOT IN (SELECT media_id FROM corrupt)")},
-phedges AS (
-  SELECT media_a AS src, media_b AS dst FROM phpairs
-  UNION
-  SELECT media_b, media_a FROM phpairs),
-phreach(m, l) AS (
-  SELECT src, src FROM phedges
-  UNION
-  SELECT e.src, r.l FROM phedges e JOIN phreach r ON r.m = e.dst),
-phclusters AS (
-  SELECT m AS media_id, MIN(l) AS cluster_id FROM phreach GROUP BY m)
+WITH RECURSIVE corrupt AS (
+  SELECT {_IMAGE_ID_SQL} AS media_id
+  FROM part WHERE p_partkey % {_CORRUPT_MOD} = 0),
+{_phash_pair_ctes(where="WHERE media_id NOT IN (SELECT media_id FROM corrupt)")},
+{_components_ctes("phpairs", "id_a", "id_b")}
 SELECT v.media_id,
-       CASE WHEN c.cluster_id = v.media_id THEN 'representative'
+       CASE WHEN c.cluster = v.media_id THEN 'representative'
             ELSE 'unique' END AS kept_as
-FROM ph v LEFT JOIN phclusters c USING (media_id)
-WHERE c.cluster_id IS NULL OR c.cluster_id = v.media_id
+FROM ph v LEFT JOIN comp c ON c.node = v.media_id
+WHERE c.cluster IS NULL OR c.cluster = v.media_id
 """
-
-
-EXPECTED_RESIZE = _expected_keyed_path("media_resize", ORACLE_SF_DIR)
-EXPECTED_FRAMES = _expected_keyed_path("video_frames", ORACLE_SF_DIR)
-EXPECTED_FEATURES = _expected_keyed_path("media_features", ORACLE_SF_DIR)
 
 
 def q_media_features(spark, sf_dir):
@@ -3116,83 +3201,12 @@ def q_media_features(spark, sf_dir):
     sides run the identical numpy expression)."""
     from ..operators.multimodal import extract_features
 
-    return extract_features(_phash_corpus(spark, sf_dir, corrupt_mod=97))
-
-
-def _ensure_features_expected(sf_dir: str) -> None:
-    """Pure-Python twin of q_media_features — same numpy mean expression,
-    same phash, zero Spark."""
-    import numpy as _np
-    import pandas as pd
-    import pyarrow as pa
-
-    from ..functions.images import decode_image, encode_image, phash64, render_pixels
-
-    out_path = _expected_keyed_path("media_features", sf_dir)
-    if _os.path.exists(out_path):
-        return
-    src = f"{sf_dir}/part.parquet"
-    if not _os.path.exists(src):
-        return
-    p = pd.read_parquet(src, columns=["p_partkey"])
-    rows = []
-    for v in p["p_partkey"]:
-        pk = int(v)
-        mid = _phash_image_id(pk)
-        if pk % 97 == 0:
-            rows.append(
-                {
-                    "media_id": mid, "decoded": False, "w": None, "h": None,
-                    "mean_r": None, "mean_g": None, "mean_b": None,
-                    "phash": None,
-                }
-            )
-            continue
-        px = decode_image(encode_image(render_pixels(mid, 32, 32), "png"))
-        means = px.astype(_np.float64).mean(axis=(0, 1))
-        rows.append(
-            {
-                "media_id": mid, "decoded": True,
-                "w": int(px.shape[1]), "h": int(px.shape[0]),
-                "mean_r": float(means[0]), "mean_g": float(means[1]),
-                "mean_b": float(means[2]), "phash": phash64(px),
-            }
-        )
-    # explicit nullable dtypes (same rule as extract_features): float64
-    # inference on int+None columns destroys the low bits of 64-bit phashes
-    pdf = pd.DataFrame(
-        {
-            "media_id": [r["media_id"] for r in rows],
-            "decoded": [r["decoded"] for r in rows],
-            "w": pd.array([r["w"] for r in rows], dtype="Int32"),
-            "h": pd.array([r["h"] for r in rows], dtype="Int32"),
-            "mean_r": pd.array([r["mean_r"] for r in rows], dtype="Float64"),
-            "mean_g": pd.array([r["mean_g"] for r in rows], dtype="Float64"),
-            "mean_b": pd.array([r["mean_b"] for r in rows], dtype="Float64"),
-            "phash": pd.array([r["phash"] for r in rows], dtype="Int64"),
-        }
-    )
-    _write_expected(
-        out_path,
-        pdf,
-        pa.schema(
-            [
-                ("media_id", pa.string()),
-                ("decoded", pa.bool_()),
-                ("w", pa.int32()),
-                ("h", pa.int32()),
-                ("mean_r", pa.float64()),
-                ("mean_g", pa.float64()),
-                ("mean_b", pa.float64()),
-                ("phash", pa.int64()),
-            ]
-        ),
-    )
+    return extract_features(_phash_corpus(spark, sf_dir, corrupt=True))
 
 
 SQL_MEDIA_FEATURES = f"""
 SELECT media_id, decoded, w, h, mean_r, mean_g, mean_b, phash
-FROM read_parquet('{EXPECTED_FEATURES}')
+FROM {_expected_sql("media_features")}
 """
 
 
@@ -3203,57 +3217,6 @@ FROM read_parquet('{EXPECTED_FEATURES}')
 # suite (decode, resolution, phash near-dup) with the text suite (lang,
 # quality, token count) over ONE pair frame.
 # ---------------------------------------------------------------------------
-
-_PAIR_DOC_MOD = 512    # caption pairing: doc_id = pk % 512 — slots past the
-                       # document count stay unpaired (missing_caption gate)
-_PAIR_MIN_DIM = 28     # resolution gate: drops the 24-px families
-
-
-def _pair_side(pk: int) -> int:
-    """Render side per near-dup FAMILY (pk // 8): {24, 32, 40} — varied so
-    the resolution gate has real work to do, constant within a family so
-    the planted ``~d1`` near-dup stays phash-close to its base."""
-    return 24 + 8 * ((pk // 8) % 3)
-
-
-def _pair_corpus(spark, sf_dir):
-    """(doc_id, pair_id, bytes) pair rows from part: deterministic WCSI
-    blobs at family-keyed sizes, corrupt at pk ≡ 0 (mod 97), near-dup
-    variants every 8th row (the _phash_image_id convention). Materialized
-    once per sf_dir (see ``_materialized_corpus``); decode and every gate
-    stay in the timed path."""
-    return _materialized_corpus(
-        spark, sf_dir, "pair_corpus", lambda: _gen_pair_corpus(spark, sf_dir)
-    )
-
-
-def _gen_pair_corpus(spark, sf_dir):
-    import pandas as _pd
-
-    p = (
-        t(spark, sf_dir, "part")
-        .select(F.col("p_partkey").cast("long").alias("pk"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def gen(batches):
-        from ..functions.images import encode_image, render_pixels
-
-        for pdf in batches:
-            ids, docs, blobs = [], [], []
-            for v in pdf["pk"]:
-                pk = int(v)
-                mid = _phash_image_id(pk)
-                ids.append(mid)
-                docs.append(pk % _PAIR_DOC_MOD)
-                if pk % 97 == 0:
-                    blobs.append(f"corrupt-{pk}".encode())
-                else:
-                    s = _pair_side(pk)
-                    blobs.append(encode_image(render_pixels(mid, s, s), "png"))
-            yield _pd.DataFrame({"doc_id": docs, "pair_id": ids, "bytes": blobs})
-
-    return p.mapInPandas(gen, "doc_id long, pair_id string, bytes binary")
 
 
 def q_pair_curation(spark, sf_dir):
@@ -3283,76 +3246,13 @@ def q_pair_curation(spark, sf_dir):
     )
 
 
-EXPECTED_PAIR_PROFILE = _expected_keyed_path("pair_profile", ORACLE_SF_DIR)
-
-
-def _ensure_pair_profile_expected(sf_dir: str) -> None:
-    """Pure-Python twin of the pair corpus' decode pass: (pair_id, phash,
-    w, h) per part row — same render/encode/decode/phash chain, zero
-    Spark. The SQL replay joins this table for the image-side gates."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from ..functions.images import decode_image, encode_image, phash64, render_pixels
-
-    out_path = _expected_keyed_path("pair_profile", sf_dir)
-    if _os.path.exists(out_path):
-        return
-    src = f"{sf_dir}/part.parquet"
-    if not _os.path.exists(src):
-        return
-    p = pd.read_parquet(src, columns=["p_partkey"])
-    rows = []
-    for v in p["p_partkey"]:
-        pk = int(v)
-        mid = _phash_image_id(pk)
-        if pk % 97 == 0:
-            rows.append({"pair_id": mid, "phash": None, "w": None, "h": None})
-            continue
-        s = _pair_side(pk)
-        px = decode_image(encode_image(render_pixels(mid, s, s), "png"))
-        rows.append(
-            {
-                "pair_id": mid,
-                "phash": phash64(px),
-                "w": int(px.shape[1]),
-                "h": int(px.shape[0]),
-            }
-        )
-    # build int columns with explicit nullable dtypes — a list-of-dicts
-    # DataFrame infers float64 for int+None columns, and float64's 53-bit
-    # mantissa silently zeroes the low ~11 bits of 64-bit phashes
-    pdf = pd.DataFrame(
-        {
-            "pair_id": [r["pair_id"] for r in rows],
-            "phash": pd.array([r["phash"] for r in rows], dtype="Int64"),
-            "w": pd.array([r["w"] for r in rows], dtype="Int32"),
-            "h": pd.array([r["h"] for r in rows], dtype="Int32"),
-        }
-    )
-    _write_expected(
-        out_path,
-        pdf,
-        pa.schema(
-            [
-                ("pair_id", pa.string()),
-                ("phash", pa.int64()),
-                ("w", pa.int32()),
-                ("h", pa.int32()),
-            ]
-        ),
-    )
-
-
 SQL_PAIR_CURATION = f"""
 WITH RECURSIVE
 corpus AS (
-  SELECT CASE WHEN p_partkey % 8 = 7
-              THEN 'img_' || CAST(p_partkey - 7 AS VARCHAR) || '~d1'
-              ELSE 'img_' || CAST(p_partkey AS VARCHAR) END AS pair_id,
+  SELECT {_IMAGE_ID_SQL} AS pair_id,
          p_partkey % {_PAIR_DOC_MOD} AS doc_id
   FROM part),
-prof AS (SELECT * FROM read_parquet('{EXPECTED_PAIR_PROFILE}')),
+prof AS (SELECT * FROM {_expected_sql("pair_profile")}),
 {_lang_ctes()},
 plang AS (SELECT doc_id, {_LANG_CASE_EXPR} AS lang_pred FROM s),
 {_quality_f_cte(name="pqf")},
@@ -3376,43 +3276,14 @@ pbase AS (
   LEFT JOIN plang l ON l.doc_id = c.doc_id
   LEFT JOIN pqual q ON q.doc_id = c.doc_id
   LEFT JOIN pwt w2 ON w2.doc_id = c.doc_id),
-psurv AS (
-  SELECT pair_id, phash,
-         CAST(phash AS HUGEINT)
-           + CASE WHEN phash < 0 THEN CAST('18446744073709551616' AS HUGEINT)
-                  ELSE CAST(0 AS HUGEINT) END AS u
-  FROM pbase WHERE fail IS NULL),
-pbands AS (
-  SELECT pair_id, phash, v.band_idx,
-         CAST((u // v.d) % 65536 AS BIGINT) AS band_val
-  FROM psurv, (VALUES (0, CAST(1 AS HUGEINT)),
-                      (1, CAST(65536 AS HUGEINT)),
-                      (2, CAST(4294967296 AS HUGEINT)),
-                      (3, CAST(281474976710656 AS HUGEINT))) AS v(band_idx, d)),
-pcand AS (
-  SELECT DISTINCT a.pair_id AS pa, b.pair_id AS pb,
-                  a.phash AS ph_a, b.phash AS ph_b
-  FROM pbands a JOIN pbands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-   AND a.pair_id < b.pair_id),
-ppairs AS (
-  SELECT pa, pb FROM pcand WHERE bit_count(xor(ph_a, ph_b)) <= 2),
-pedges AS (
-  SELECT pa AS src, pb AS dst FROM ppairs
-  UNION
-  SELECT pb, pa FROM ppairs),
-preach(m, l) AS (
-  SELECT src, src FROM pedges
-  UNION
-  SELECT e.src, r.l FROM pedges e JOIN preach r ON r.m = e.dst),
-pclusters AS (
-  SELECT m AS pair_id, MIN(l) AS cluster_id FROM preach GROUP BY m)
+{_phash_pair_ctes("pbase", "pair_id", "WHERE fail IS NULL")},
+{_components_ctes("phpairs", "id_a", "id_b")}
 SELECT b.pair_id, b.w, b.h, b.lang, b.score, b.ws_tokens,
        COALESCE(b.fail,
-                CASE WHEN c.cluster_id IS NULL THEN 'kept_unique'
-                     WHEN c.cluster_id = b.pair_id THEN 'kept_representative'
+                CASE WHEN c.cluster IS NULL THEN 'kept_unique'
+                     WHEN c.cluster = b.pair_id THEN 'kept_representative'
                      ELSE 'near_dup' END) AS verdict
-FROM pbase b LEFT JOIN pclusters c ON c.pair_id = b.pair_id
+FROM pbase b LEFT JOIN comp c ON c.node = b.pair_id
 """
 
 
@@ -3432,50 +3303,15 @@ def q_media_resize(spark, sf_dir):
     )
 
 
-def _video_id(pk: int) -> str:
-    return f"vid_{pk}"
-
-
-_VIDEO_FRAMES = 4  # frames packed per synthetic video
-_VIDEO_EVERY = 2   # sampling stride under test
-
-
 def q_video_frame_sample(spark, sf_dir):
-    """Video frame sampling as a contract query: pack 4 deterministic 8×8
-    WCSI frames per part row into the length-prefixed stream format, sample
+    """Video frame sampling as a contract query: 4 deterministic 8×8 WCSI
+    frames per part row packed into the length-prefixed stream format
+    (``_video_row``, materialized once like the image corpora), sample
     every 2nd frame (byte slicing only — no decode), and pin each sampled
     frame's exact bytes via (media_id, frame_idx, n_bytes, sha256)."""
-    import pandas as _pd
-
     from ..operators.multimodal import sample_frames
 
-    p = (
-        t(spark, sf_dir, "part")
-        .select(F.col("p_partkey").cast("long").alias("pk"))
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def gen(batches):
-        from ..functions.images import encode_image, render_pixels
-        from ..operators.multimodal import pack_frames
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for v in pdf["pk"]:
-                mid = _video_id(int(v))
-                ids.append(mid)
-                blobs.append(
-                    pack_frames(
-                        [
-                            encode_image(render_pixels(f"{mid}/f{j}", 8, 8), "png")
-                            for j in range(_VIDEO_FRAMES)
-                        ]
-                    )
-                )
-            yield _pd.DataFrame({"media_id": ids, "bytes": blobs})
-
-    vids = p.mapInPandas(gen, "media_id string, bytes binary")
-    sampled = sample_frames(vids, every=_VIDEO_EVERY)
+    sampled = sample_frames(_video_corpus(spark, sf_dir), every=_VIDEO_EVERY)
     return sampled.select(
         "media_id",
         F.col("frame_idx").cast("long").alias("frame_idx"),
@@ -3484,103 +3320,12 @@ def q_video_frame_sample(spark, sf_dir):
     )
 
 
-def _ensure_resize_expected(sf_dir: str) -> None:
-    """Pure-Python twin of q_media_resize: same corpus, same shared
-    ``nn_resize`` kernel, zero Spark."""
-    import hashlib
-
-    import pandas as pd
-    import pyarrow as pa
-
-    from ..functions.images import decode_image, encode_image, render_pixels
-    from ..operators.multimodal import nn_resize
-
-    out_path = _expected_keyed_path("media_resize", sf_dir)
-    if _os.path.exists(out_path):
-        return
-    src = f"{sf_dir}/part.parquet"
-    if not _os.path.exists(src):
-        return
-    p = pd.read_parquet(src, columns=["p_partkey"])
-    rows = []
-    for v in p["p_partkey"]:
-        mid = _phash_image_id(int(v))
-        px = decode_image(encode_image(render_pixels(mid, 32, 32), "png"))
-        blob = encode_image(nn_resize(px, 16, 16), "png")
-        rows.append(
-            {
-                "media_id": mid,
-                "n_bytes": len(blob),
-                "sha256": hashlib.sha256(blob).hexdigest(),
-            }
-        )
-    _write_expected(
-        out_path,
-        pd.DataFrame(rows),
-        pa.schema(
-            [("media_id", pa.string()), ("n_bytes", pa.int64()), ("sha256", pa.string())]
-        ),
-    )
-
-
-def _ensure_frames_expected(sf_dir: str) -> None:
-    """Pure-Python twin of q_video_frame_sample: shares only the byte
-    format (pack_frames) with the engine, replays the sampling stride
-    itself."""
-    import hashlib
-
-    import pandas as pd
-    import pyarrow as pa
-
-    from ..functions.images import encode_image, render_pixels
-    from ..operators.multimodal import pack_frames, unpack_frames
-
-    out_path = _expected_keyed_path("video_frames", sf_dir)
-    if _os.path.exists(out_path):
-        return
-    src = f"{sf_dir}/part.parquet"
-    if not _os.path.exists(src):
-        return
-    p = pd.read_parquet(src, columns=["p_partkey"])
-    rows = []
-    for v in p["p_partkey"]:
-        mid = _video_id(int(v))
-        packed = pack_frames(
-            [
-                encode_image(render_pixels(f"{mid}/f{j}", 8, 8), "png")
-                for j in range(_VIDEO_FRAMES)
-            ]
-        )
-        for j, fr in enumerate(unpack_frames(packed)):
-            if j % _VIDEO_EVERY == 0:
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "frame_idx": j,
-                        "n_bytes": len(fr),
-                        "sha256": hashlib.sha256(fr).hexdigest(),
-                    }
-                )
-    _write_expected(
-        out_path,
-        pd.DataFrame(rows),
-        pa.schema(
-            [
-                ("media_id", pa.string()),
-                ("frame_idx", pa.int64()),
-                ("n_bytes", pa.int64()),
-                ("sha256", pa.string()),
-            ]
-        ),
-    )
-
-
 SQL_MEDIA_RESIZE = f"""
-SELECT media_id, n_bytes, sha256 FROM read_parquet('{EXPECTED_RESIZE}')
+SELECT media_id, n_bytes, sha256 FROM {_expected_sql("media_resize")}
 """
 
 SQL_VIDEO_FRAME_SAMPLE = f"""
-SELECT media_id, frame_idx, n_bytes, sha256 FROM read_parquet('{EXPECTED_FRAMES}')
+SELECT media_id, frame_idx, n_bytes, sha256 FROM {_expected_sql("video_frames")}
 """
 
 
@@ -3593,14 +3338,34 @@ SELECT media_id, frame_idx, n_bytes, sha256 FROM read_parquet('{EXPECTED_FRAMES}
 # entries are ordered by verification debt, not by topic:
 #   1. entries with no driver-green row yet (or the stalest one) come FIRST;
 #   2. entries green in the single most recent round follow;
-#   3. entries green in the last TWO consecutive driver rounds rotate to the
-#      back (positions 51+), where they ride on accumulated evidence.
+#   3. the longer an entry's unbroken run of green rounds, the
+#      further back it goes; the longest runs fill positions 51+, where
+#      they ride on accumulated evidence.
 # When adding an entry, insert it at the TOP. After each round, re-rotate
 # against the new CORRECTNESS_r{N}.json so nothing silently ages out.
 REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    # --- tier 1 (r5 rotation): absent from CORRECTNESS_r04's 50-entry
-    # window — last driver-green in r3, the stalest evidence in the
-    # registry (r4 VERDICT "Next round" #4 names exactly these 15) -------
+    # --- tier 1: absent from CORRECTNESS_r05's 50-entry window (they sat
+    # at positions 51-65) — last green in r4, the stalest evidence
+    # in the registry ----------------------------------------------------
+    "dedup_minhash_lsh": (q_dedup_minhash_lsh, SQL_DEDUP_MINHASH_LSH),
+    "dedup_clusters": (q_dedup_clusters, SQL_DEDUP_CLUSTERS),
+    "dedup_prune": (q_dedup_prune, SQL_DEDUP_PRUNE),
+    "corpus_curation": (q_corpus_curation, SQL_CORPUS_CURATION),
+    "dedup_simhash": (q_dedup_simhash, SQL_DEDUP_SIMHASH),
+    "text_lang_id": (q_text_lang_id, SQL_TEXT_LANG_ID),
+    "text_quality": (q_text_quality, SQL_TEXT_QUALITY),
+    "token_counts": (q_token_counts, SQL_TOKEN_COUNTS),
+    "doc_fingerprints": (q_doc_fingerprints, SQL_DOC_FINGERPRINTS),
+    "ann_cosine_topk": (q_ann_cosine_topk, SQL_ANN_COSINE_TOPK),
+    "ann_lsh_topk": (q_ann_lsh_topk, SQL_ANN_LSH_TOPK),
+    "ann_ivf_topk": (q_ann_ivf_topk, SQL_ANN_IVF_TOPK),
+    "embedding_neardup": (q_embedding_neardup, SQL_EMBEDDING_NEARDUP),
+    "embedding_neardup_clusters": (
+        q_embedding_neardup_clusters,
+        SQL_EMBEDDING_NEARDUP_CLUSTERS,
+    ),
+    "media_meta": (q_media_meta, SQL_MEDIA_META),
+    # --- tier 2: green in r5 only (outside r4's window) -----------------
     "agg_link_stats": (q_agg_link_stats, SQL_AGG_LINK_STATS),
     "agg_success_rate": (q_agg_success_rate, SQL_AGG_SUCCESS_RATE),
     "topk_freq": (q_topk_freq, SQL_TOPK_FREQ),
@@ -3616,7 +3381,7 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "content_stats": (q_content_stats, SQL_CONTENT_STATS),
     "events_hourly": (q_events_hourly, SQL_EVENTS_HOURLY),
     "dedup_exact": (q_dedup_exact, SQL_DEDUP_EXACT),
-    # --- tier 2: green in r4 only (first driver check last round) -------
+    # --- tier 3: green in r4 AND r5 -------------------------------------
     "crawl_fetch_log": (q_crawl_fetch_log, SQL_CRAWL_FETCH_LOG),
     "crawl_metrics": (q_crawl_metrics, SQL_CRAWL_METRICS),
     "crawl_lineage": (q_crawl_lineage, SQL_CRAWL_LINEAGE),
@@ -3632,8 +3397,8 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "scoped_extract": (q_scoped_extract, SQL_SCOPED_EXTRACT),
     "robots_parse": (q_robots_parse, SQL_ROBOTS_PARSE),
     "link_pagerank": (q_link_pagerank, SQL_LINK_PAGERANK),
-    # --- tier 3: double-green (r3 AND r4) — ride on accumulated evidence;
-    # the last 15 of these fall outside the 50-entry window this round ---
+    # --- tier 4: green in r3, r4 AND r5 — ride on accumulated evidence;
+    # the last 15 of these fall outside the 50-entry window --------------
     "stratified_sample": (q_stratified_sample, SQL_STRATIFIED_SAMPLE),
     "hash_split": (q_hash_split, SQL_HASH_SPLIT),
     "text_repetition": (q_text_repetition, SQL_TEXT_REPETITION),
@@ -3654,23 +3419,5 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "per_key_budget": (q_per_key_budget, SQL_PER_KEY_BUDGET),
     "frontier_schedule": (q_frontier_schedule, SQL_FRONTIER_SCHEDULE),
     "dedup_ngram_jaccard": (q_dedup_ngram_jaccard, SQL_DEDUP_NGRAM_JACCARD),
-    "dedup_minhash_lsh": (q_dedup_minhash_lsh, SQL_DEDUP_MINHASH_LSH),
-    "dedup_clusters": (q_dedup_clusters, SQL_DEDUP_CLUSTERS),
-    "dedup_prune": (q_dedup_prune, SQL_DEDUP_PRUNE),
-    "corpus_curation": (q_corpus_curation, SQL_CORPUS_CURATION),
-    "dedup_simhash": (q_dedup_simhash, SQL_DEDUP_SIMHASH),
-    "text_lang_id": (q_text_lang_id, SQL_TEXT_LANG_ID),
-    "text_quality": (q_text_quality, SQL_TEXT_QUALITY),
-    "token_counts": (q_token_counts, SQL_TOKEN_COUNTS),
-    "doc_fingerprints": (q_doc_fingerprints, SQL_DOC_FINGERPRINTS),
-    "ann_cosine_topk": (q_ann_cosine_topk, SQL_ANN_COSINE_TOPK),
-    "ann_lsh_topk": (q_ann_lsh_topk, SQL_ANN_LSH_TOPK),
-    "ann_ivf_topk": (q_ann_ivf_topk, SQL_ANN_IVF_TOPK),
-    "embedding_neardup": (q_embedding_neardup, SQL_EMBEDDING_NEARDUP),
-    "embedding_neardup_clusters": (
-        q_embedding_neardup_clusters,
-        SQL_EMBEDDING_NEARDUP_CLUSTERS,
-    ),
-    "media_meta": (q_media_meta, SQL_MEDIA_META),
 }
 

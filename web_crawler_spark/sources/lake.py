@@ -220,12 +220,15 @@ class FileLeaseCatalog:
       own.
     - **release** = read first: a lease that is not ours (released, or
       taken over after our TTL expired) is left untouched. Our own lease
-      is rename-to-unique (atomic take), re-verified, unlinked. If the
-      taken content is NOT ours — our TTL expired between the read and
-      the rename and a stealer took over — it is restored via ``link``
-      (which cannot clobber a newer lease) and the release is a no-op.
-      Clearing a stale mutex and dropping one's own use the same
-      read/take/re-verify removal.
+      is replaced, under the steal mutex and re-checked there, by an
+      expired tombstone (``owner`` null, deadline 0), so the path stays
+      present: the next acquirer takes it over like any expired lease,
+      and no late release opens a window for a fresh O_EXCL create. A
+      live stealer's mutex means our lease has expired and is being taken
+      over (or the stealer is about to back off and the lease runs to its
+      TTL); the release then leaves it alone. Clearing a stale mutex and
+      dropping one's own use a read/take/re-verify removal
+      (``_remove_if``).
 
     An unparsable lease file (a reader racing a writer's first write) is
     treated as HELD, with the file mtime + 60 s as the fallback expiry,
@@ -296,13 +299,7 @@ class FileLeaseCatalog:
             # (an expired own lease falls through to the takeover path
             # below — blind-replacing it could clobber a stealer that
             # legitimately took over at expiry)
-            tmp = path + "." + uuid.uuid4().hex
-            fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-            try:
-                self._write_payload(fd, table_id, owner, deadline)
-            finally:
-                os.close(fd)
-            os.replace(tmp, path)
+            self._replace(path, table_id, owner, deadline)
             return True
         if held_deadline > time.time():
             return False
@@ -313,16 +310,50 @@ class FileLeaseCatalog:
         # short-lived steal-mutex (itself an O_EXCL create), and the
         # expiry decision is RE-CHECKED under the mutex, so a stealer that
         # lost the race sees its winner's fresh deadline and backs off.
-        mutex = path + ".steal"
+        with self._steal_mutex(table_id) as held_mutex:
+            if not held_mutex:
+                return False  # live stealer in progress; re-poll
+            current = self._read(path)
+            if current is None or current[1] > time.time():
+                return False  # already re-granted; re-poll
+            self._replace(path, table_id, owner, deadline)
+            return True
+
+    def release(self, table_id: str, owner: str) -> None:
+        path = self._path(table_id)
+        held = self._read(path)
+        if held is None or held[0] != owner:
+            return  # not ours: leave it untouched
+        with self._steal_mutex(table_id) as held_mutex:
+            current = self._read(path)
+            if held_mutex and current is not None and current[0] == owner:
+                self._replace(path, table_id, None, 0.0)  # expired tombstone
+
+    def _replace(self, path: str, table_id: str, owner, deadline: float) -> None:
+        """Atomically swap the lease file's content: write-temp + replace."""
+        tmp = path + "." + uuid.uuid4().hex
+        fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+        try:
+            self._write_payload(fd, table_id, owner, deadline)
+        finally:
+            os.close(fd)
+        os.replace(tmp, path)
+
+    @contextlib.contextmanager
+    def _steal_mutex(self, table_id: str):
+        """Yield True while holding the lease's steal mutex (an O_EXCL
+        create), or False if a live stealer holds it. A crashed stealer's
+        mutex (its critical section is microseconds) must not wedge the
+        lease forever: it is cleared once the deadline its creator wrote
+        into it has passed — judged on the creator's clock, like a lease,
+        never on the file's mtime."""
+        mutex = self._path(table_id) + ".steal"
         try:
             mfd = os.open(mutex, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
         except FileExistsError:
-            # a crashed stealer's mutex (its critical section is
-            # microseconds) must not wedge takeover forever: clear it once
-            # the deadline its creator wrote into it has passed — judged on
-            # the creator's clock, like a lease, never on the file's mtime
             self._remove_if(mutex, lambda held: held[1] <= time.time())
-            return False  # live stealer in progress; re-poll
+            yield False
+            return
         token = uuid.uuid4().hex
         try:
             try:
@@ -331,24 +362,11 @@ class FileLeaseCatalog:
                 )
             finally:
                 os.close(mfd)
-            current = self._read(path)
-            if current is None or current[1] > time.time():
-                return False  # released or already re-granted; re-poll
-            tmp = path + ".take." + uuid.uuid4().hex
-            fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-            try:
-                self._write_payload(fd, table_id, owner, deadline)
-            finally:
-                os.close(fd)
-            os.replace(tmp, path)
-            return True
+            yield True
         finally:
             # only our own mutex: a slow holder whose mutex was cleared as
             # stale must not delete the next stealer's
             self._remove_if(mutex, lambda held: held[0] == token)
-
-    def release(self, table_id: str, owner: str) -> None:
-        self._remove_if(self._path(table_id), lambda held: held[0] == owner)
 
     def _remove_if(self, path: str, match) -> None:
         """Unlink ``path`` iff its (owner, deadline) satisfies ``match`` —
