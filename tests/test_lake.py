@@ -834,10 +834,10 @@ def test_file_lease_single_winner_under_contention(tmp_path):
 _OWNERS = ("A", "B", "C")
 _OS_CALLS = ("open", "rename", "link", "replace", "unlink")
 _owners = st.sampled_from(_OWNERS)
-# up to two (contender, os call) pairs: each contender polls just before
-# the step's first such call
+# os calls to contend: the two owners other than the stepping one take
+# turns, one polling just before the step's first call of each name
 _contentions = st.lists(
-    st.tuples(_owners, st.sampled_from(_OS_CALLS)), max_size=2
+    st.sampled_from(_OS_CALLS), unique=True, max_size=len(_OS_CALLS)
 )
 
 
@@ -848,6 +848,7 @@ class _SteppedOs:
 
     def __init__(self):
         self.armed: list = []
+        self.fired: list[str] = []  # os call names whose hook ran
 
     def __getattr__(self, name):
         real = getattr(os, name)
@@ -859,6 +860,7 @@ class _SteppedOs:
             if hit is not None:
                 rest = [a for a in self.armed if a is not hit]
                 self.armed = []  # the contender's own calls run unhooked
+                self.fired.append(name)
                 hit[1]()
                 self.armed = rest
             return real(*args, **kwargs)
@@ -869,11 +871,13 @@ class _SteppedOs:
 class FileLeaseMachine(RuleBasedStateMachine):
     """Steps ``FileLeaseCatalog`` through acquire/renew, release and clock
     advances for three owners over one lease directory. An acquire or a
-    release may carry up to two contenders, each polling ``try_acquire``
-    (up to twice) just before one of the protocol's ``os`` calls. The clock is fake and
-    starts at the wall clock, so file mtimes (the file server's clock) fall
-    behind it as it advances: single steps cross the 10 s steal-mutex
-    deadline, both TTLs and the 60 s parse grace."""
+    release may be contended at any of the protocol's ``os`` calls: there
+    the two other owners, in turn, poll ``try_acquire`` (up to twice). The
+    clock is fake and starts at the wall clock, so file mtimes (the file
+    server's clock) fall behind it as it advances: single steps cross the
+    10 s steal-mutex deadline, both TTLs and the 60 s parse grace.
+    ``time.sleep`` (a release polling for the steal mutex) advances it
+    too."""
 
     def __init__(self):
         super().__init__()
@@ -882,7 +886,7 @@ class FileLeaseMachine(RuleBasedStateMachine):
         self.believed: dict[str, float] = {}  # owner -> deadline granted
         self.stepped_os = _SteppedOs()
         self.saved = (lake.time, lake.os)
-        lake.time = SimpleNamespace(time=lambda: self.now)
+        lake.time = SimpleNamespace(time=lambda: self.now, sleep=self.advance)
         lake.os = self.stepped_os
         self.catalog = lake.FileLeaseCatalog(self.dir)
 
@@ -902,10 +906,10 @@ class FileLeaseMachine(RuleBasedStateMachine):
 
     @contextmanager
     def _contended(self, owner: str, contentions):
+        others = [o for o in _OWNERS if o != owner]
         self.stepped_os.armed = [
-            (os_call, functools.partial(self._poll, contender))
-            for contender, os_call in contentions
-            if contender != owner
+            (os_call, functools.partial(self._poll, others[i % 2]))
+            for i, os_call in enumerate(contentions)
         ]
         try:
             yield
@@ -948,7 +952,7 @@ def test_file_lease_state_machine():
             derandomize=True,
             database=None,
             deadline=None,
-            max_examples=300,
+            max_examples=500,
             stateful_step_count=25,
         ),
     )
@@ -956,15 +960,48 @@ def test_file_lease_state_machine():
 
 def test_file_lease_late_release_with_two_contenders():
     """The late-release window, stepped by hand through the machine: C's
-    5 s lease has run out when C releases; A polls just before C's
-    ``os.rename`` and B just before C's ``os.link``. A release that takes
-    the lease path away grants both A and B; one that keeps it present
-    grants at most one."""
+    5 s lease has run out when C releases. A polls just before the
+    tombstone's ``os.replace``, while C holds the steal mutex, so A must
+    back off; B polls just before the ``os.unlink`` that drops C's mutex,
+    when the lease is a tombstone, so B takes it over. Both polls must
+    run, and B alone ends up holding a live lease."""
     machine = FileLeaseMachine()
     try:
         machine.try_acquire(owner="C", ttl=5.0, contentions=[])
         machine.advance(dt=10.5)
-        machine.release(owner="C", contentions=[("A", "rename"), ("B", "link")])
+        machine.release(owner="C", contentions=["replace", "unlink"])
+        assert machine.stepped_os.fired == ["replace", "unlink"]
+        assert list(machine.believed) == ["B"]
+        machine.one_live_holder_named_by_the_lease_file()
+    finally:
+        machine.teardown()
+
+
+def test_file_lease_release_waits_for_a_contenders_mutex():
+    """A contender holding the steal mutex only to re-check and back off
+    does not make a release give up: the release polls until it takes the
+    mutex and tombstones the lease, so the next owner acquires at once,
+    long before the released lease's TTL runs out."""
+    import json
+
+    machine = FileLeaseMachine()
+    mutex = machine.catalog._path("t") + ".steal"
+    polls = []
+
+    def contender_backs_off(dt):
+        polls.append(dt)
+        machine.advance(dt)
+        os.unlink(mutex)
+
+    try:
+        machine.try_acquire(owner="A", ttl=30.0, contentions=[])
+        a_deadline = machine.believed["A"]
+        with open(mutex, "w") as f:
+            json.dump({"table_id": "t", "owner": "x", "deadline": machine.now + 10}, f)
+        lake.time.sleep = contender_backs_off
+        machine.release(owner="A", contentions=[])
+        assert polls == [0.02]
+        assert machine._acquire("B", 30.0) and machine.now < a_deadline
         machine.one_live_holder_named_by_the_lease_file()
     finally:
         machine.teardown()

@@ -123,3 +123,30 @@ def test_expected_outputs_built_once_by_one_rule():
     mtimes = {p: os.stat(p).st_mtime_ns for p in expected}
     ensure_expected_outputs()
     assert {p: os.stat(p).st_mtime_ns for p in expected} == mtimes
+
+
+def test_oracle_tag_hashes_every_module_the_twins_import():
+    """``ORACLE_TAG`` keys the expected files, so every package module
+    loaded with the twins (``plans/analytics.py``) and ``tests/oracle/*.py``
+    must be among the files it hashes: an edit to an unhashed one would
+    leave a stale expected file that still counts as fresh. No Spark."""
+    import glob
+    import importlib
+    import sys
+
+    from web_crawler_spark.plans import analytics
+
+    oracle_dir = os.path.join(os.path.dirname(__file__), "oracle")
+    oracle_files = sorted(glob.glob(os.path.join(oracle_dir, "*.py")))
+    for path in oracle_files:
+        name = os.path.splitext(os.path.basename(path))[0]
+        if name != "__init__":
+            importlib.import_module(f"tests.oracle.{name}")
+    hashed = {os.path.realpath(p) for p in analytics._oracle_sources()}
+    imported = {
+        os.path.realpath(m.__file__)
+        for n, m in list(sys.modules.items())
+        if n.split(".")[0] == "web_crawler_spark" and getattr(m, "__file__", None)
+    }
+    assert not imported - hashed, sorted(imported - hashed)
+    assert {os.path.realpath(p) for p in oracle_files} <= hashed

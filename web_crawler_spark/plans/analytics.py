@@ -2186,8 +2186,8 @@ FROM part
 # The check is therefore the full contract gate (rows + schema + values),
 # with the oracle side produced by a separate single-process dataflow. No
 # twin calls the engine operator it checks; twins and engine share only the
-# synthetic inputs (one per-pk row function per corpus) and the kernels
-# named in ``_oracle_tag``.
+# synthetic inputs (one per-pk row function per corpus) and the package
+# kernels hashed by ``_oracle_tag``.
 # ---------------------------------------------------------------------------
 
 import os as _os
@@ -2726,55 +2726,34 @@ _TWINS = {
 }
 
 
+def _oracle_sources() -> list[str]:
+    """The files ``ORACLE_TAG`` hashes, whole: every module of the
+    ``web_crawler_spark`` package (this one with its twins, row functions
+    and constants, and every kernel a twin or an oracle module imports,
+    at top level or inside a function) and ``tests/oracle/*.py`` (the
+    oracle crawler and renderer). Collected by globbing, so a new twin
+    helper or kernel import needs no list kept by hand."""
+    import glob
+
+    pkg = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+    return sorted(
+        glob.glob(_os.path.join(pkg, "**", "*.py"), recursive=True)
+        + glob.glob(_os.path.join(_os.path.dirname(pkg), "tests", "oracle", "*.py"))
+    )
+
+
 def _oracle_tag() -> str:
     """Source hash that keys every expected file, materialized corpus and
     demo fixture: contents are a pure function of the path, so existence ==
-    freshness, and an edit to anything that feeds them rolls the key
-    instead of leaving a stale file that still counts as fresh. Hashed:
-
-    - the twins in ``_TWINS``, the row functions and id rules they and the
-      corpora share (``_phash_row``, ``_pair_row``, ``_video_row``,
-      ``_phash_image_id``, ``_pair_side``, ``_video_id``,
-      ``_planted_corrupt``, ``_render_fixture_html``), the corpus scaffold
-      and its three callers (``_media_corpus``, ``_phash_corpus``,
-      ``_pair_corpus``, ``_video_corpus``), ``_part``, ``_pks``,
-      ``_demo_fixture_dir`` and ``_write_expected``;
-    - the constants they read (``ORACLE_SF_DIR``, ``_DEMO_*``,
-      ``_CORRUPT_MOD``, ``_PAIR_DOC_MOD``, ``_VIDEO_*``,
-      ``_RENDER_HTML_PIECES``);
-    - ``tests/oracle/*.py`` (the oracle crawler and renderer);
-    - the kernel modules the twins call: functions/images.py (render,
-      encode, decode, phash), functions/hashing.py (xxh64, BLOOM_FAMILY),
-      operators/bloom.py (PartitionedBloom), operators/archive.py
-      (zip_oracle_rows), operators/multimodal.py (nn_resize,
-      pack/unpack_frames) and sources/fixtures.py (generate_site)."""
-    import glob
+    freshness, and an edit to any of ``_oracle_sources()`` rolls the key
+    instead of leaving a stale file that still counts as fresh. The price
+    is a cold rebuild after any package edit."""
     import hashlib
-    import inspect
 
-    fns = [
-        *_TWINS, _phash_row, _pair_row, _video_row, _phash_image_id,
-        _pair_side, _video_id, _planted_corrupt, _render_fixture_html,
-        _media_corpus, _phash_corpus, _pair_corpus, _video_corpus,
-        _part, _pks, _demo_fixture_dir, _write_expected,
-    ]
-    consts = (
-        ORACLE_SF_DIR, _DEMO_SPEC, _DEMO_BUDGET, _DEMO_ROUNDS, _CORRUPT_MOD,
-        _PAIR_DOC_MOD, _VIDEO_FRAMES, _VIDEO_EVERY, _RENDER_HTML_PIECES,
-    )
+    h = hashlib.md5()
     pkg = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    files = [
-        _os.path.join(pkg, m)
-        for m in (
-            "functions/images.py", "functions/hashing.py", "operators/bloom.py",
-            "operators/archive.py", "operators/multimodal.py", "sources/fixtures.py",
-        )
-    ]
-    files += sorted(glob.glob(_os.path.join(_os.path.dirname(pkg), "tests/oracle/*.py")))
-    h = hashlib.md5(repr(consts).encode())
-    for f in fns:
-        h.update(inspect.getsource(f).encode())
-    for path in files:
+    for path in _oracle_sources():
+        h.update(_os.path.relpath(path, _os.path.dirname(pkg)).encode() + b"\0")
         with open(path, "rb") as fh:
             h.update(fh.read())
     return h.hexdigest()[:10]

@@ -224,11 +224,11 @@ class FileLeaseCatalog:
       expired tombstone (``owner`` null, deadline 0), so the path stays
       present: the next acquirer takes it over like any expired lease,
       and no late release opens a window for a fresh O_EXCL create. A
-      live stealer's mutex means our lease has expired and is being taken
-      over (or the stealer is about to back off and the lease runs to its
-      TTL); the release then leaves it alone. Clearing a stale mutex and
-      dropping one's own use a read/take/re-verify removal
-      (``_remove_if``).
+      held mutex (a stealer taking over our expired lease, or a contender
+      re-checking before it backs off) makes the release poll, up to
+      twice the mutex deadline, until it takes the mutex or the lease is
+      no longer ours. Clearing a stale mutex and dropping one's own use a
+      read/take/re-verify removal (``_remove_if``).
 
     An unparsable lease file (a reader racing a writer's first write) is
     treated as HELD, with the file mtime + 60 s as the fallback expiry,
@@ -320,14 +320,25 @@ class FileLeaseCatalog:
             return True
 
     def release(self, table_id: str, owner: str) -> None:
+        """Tombstone our own lease (see the class docstring). A contender
+        holds the steal mutex only for its re-check and a crashed stealer's
+        clears itself within ``_STEAL_MUTEX_SEC``, so poll for it; only past
+        twice that is the release dropped and the lease runs to its TTL."""
         path = self._path(table_id)
-        held = self._read(path)
-        if held is None or held[0] != owner:
-            return  # not ours: leave it untouched
-        with self._steal_mutex(table_id) as held_mutex:
-            current = self._read(path)
-            if held_mutex and current is not None and current[0] == owner:
-                self._replace(path, table_id, None, 0.0)  # expired tombstone
+        give_up = time.time() + 2 * self._STEAL_MUTEX_SEC
+        while True:
+            held = self._read(path)
+            if held is None or held[0] != owner:
+                return  # not ours: leave it untouched
+            with self._steal_mutex(table_id) as held_mutex:
+                if held_mutex:
+                    current = self._read(path)
+                    if current is not None and current[0] == owner:
+                        self._replace(path, table_id, None, 0.0)  # tombstone
+                    return
+            if time.time() >= give_up:
+                return
+            time.sleep(0.02)
 
     def _replace(self, path: str, table_id: str, owner, deadline: float) -> None:
         """Atomically swap the lease file's content: write-temp + replace."""
