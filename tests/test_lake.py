@@ -3,25 +3,14 @@
 
 from __future__ import annotations
 
-import functools
+import contextlib
 import os
-import shutil
-import tempfile
 import time
-from contextlib import contextmanager
-from types import SimpleNamespace
 
-from hypothesis import settings
-from hypothesis import strategies as st
-from hypothesis.stateful import (
-    RuleBasedStateMachine,
-    invariant,
-    rule,
-    run_state_machine_as_test,
-)
+import pytest
 from pyspark.sql import functions as F
 
-import web_crawler_spark.sources.lake as lake
+from web_crawler_spark.schemas import PHASH_SEEN
 from web_crawler_spark.sources.lake import SnapshotTable
 
 
@@ -145,12 +134,10 @@ def test_applied_meta_follows_parent_chain(spark, tmp_path):
 
 def test_concurrent_writers_serialize(spark, tmp_path):
     """VERDICT r2 #4: interleaved writers must serialize — every commit
-    lands on the chain exactly once (no last-write-wins _current swap, no
-    overwritten manifest, no lost rows). Driver-local commits exercise the
+    lands on the chain exactly once (no overwritten manifest, no lost
+    rows). Driver-local commits exercise the
     same _finish_commit critical section as the Spark path."""
     import threading
-
-    from web_crawler_spark.schemas import PHASH_SEEN
 
     t = SnapshotTable(str(tmp_path / "t"))
     t.overwrite(_mk(spark, 0, 1))
@@ -206,8 +193,6 @@ def test_commit_lock_contention_fails_loudly(tmp_path):
     finally:
         os.close(fd)
     # lock released → commits proceed
-    from web_crawler_spark.schemas import PHASH_SEEN
-
     t.append_local([{"phash": 1}], PHASH_SEEN)
     assert t.current_snapshot_id() == 1
 
@@ -668,340 +653,168 @@ def test_commit_cas_rejects_moved_table(spark, tmp_path):
     assert "q1:7" in t.applied_meta("ingest_batch_id")  # marker carried
 
 
-def test_file_lease_two_writers(spark, tmp_path, monkeypatch):
-    """Deployable shared-directory lease backend (VERDICT r4 Missing #1):
-    the two-writer commit protocol through ``FileLeaseCatalog`` — O_EXCL conditional put + TTL takeover on a
-    plain directory, the backend usable on NFS/FUSE mounts where flock
-    is unreliable. Covers: mutual exclusion with a loud timeout, no lost
-    update once serialized, CAS CommitConflictError inside the held
-    lease, expired-lease takeover, and single-winner arbitration when
-    many threads race one conditional put."""
-    import threading
-    import time
+# ---------------------------------------------------------------------------
+# the commit protocol: each commit is a put-if-absent of the next manifest
+# id. These tests need no Spark session; writers that bypass the flock
+# stand for any writer the lock does not cover (another host, a stalled
+# holder), so only the put-if-absent keeps their commits.
+# ---------------------------------------------------------------------------
 
-    import pytest
 
-    from web_crawler_spark.sources.lake import (
-        CatalogCommitLease,
-        CommitConflictError,
-        FileLeaseCatalog,
+def _bypass_lock(t: SnapshotTable) -> SnapshotTable:
+    t._commit_lock = contextlib.nullcontext
+    return t
+
+
+def _rows(t: SnapshotTable) -> list[int]:
+    """The current snapshot's ``phash`` values, read with pyarrow."""
+    import pyarrow.parquet as pq
+
+    m = t._manifest(t.current_snapshot_id())
+    return sorted(
+        v
+        for d in m["files"]
+        for v in pq.read_table(os.path.join(t._data_dir, d))["phash"].to_pylist()
     )
 
-    catalog = FileLeaseCatalog(str(tmp_path / "leases"))
+
+class _ArrowSpark:
+    """The part of a SparkSession that ``read_incremental`` uses on a
+    non-empty delta, answered by pyarrow."""
+
+    @property
+    def read(self):
+        return self
+
+    def option(self, *_):
+        return self
+
+    def parquet(self, *paths):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        return pa.concat_tables(pq.read_table(p) for p in paths)
+
+
+def test_stalled_writer_rechains_onto_the_commit_it_missed(tmp_path):
+    """A pauses just after it reads its parent; B commits meanwhile. A's
+    commit must land on top of B's: B's row survives."""
     path = str(tmp_path / "t")
-    a = SnapshotTable(path, lease=CatalogCommitLease(catalog, "t", owner="A"))
-    b = SnapshotTable(path, lease=CatalogCommitLease(catalog, "t", owner="B"))
-    a.overwrite(_mk(spark, 0, 5))
+    a, b = _bypass_lock(SnapshotTable(path)), SnapshotTable(path)
+    a.append_local([{"phash": 1}], PHASH_SEEN)
+    read_parent = a.current_snapshot_id
+    stalled: list[int] = []
 
-    # A wedges mid-commit (holds the lease file); B times out loudly
-    entered = threading.Event()
-    release = threading.Event()
+    def stall_after_read():
+        sid = read_parent()
+        if not stalled:
+            stalled.append(sid)
+            b.append_local([{"phash": 2}], PHASH_SEEN)
+        return sid
 
-    def wedged_writer():
-        with a.lease.acquire(timeout_sec=5):
-            entered.set()
-            release.wait(10)
-
-    th = threading.Thread(target=wedged_writer)
-    th.start()
-    assert entered.wait(5)
-    with pytest.raises(TimeoutError, match="catalog lease"):
-        with b.lease.acquire(timeout_sec=0.2):
-            pass
-    release.set()
-    th.join()
-
-    # serialized writers: B appends after A, nothing lost
-    a.append(_mk(spark, 5, 10))
-    b.append(_mk(spark, 10, 15))
-    assert b.read(spark).count() == 15
-
-    # CAS conflict detection runs inside the held lease, same as flock
-    base = b.current_snapshot_id()
-    a.append(_mk(spark, 15, 20))
-    with pytest.raises(CommitConflictError):
-        b._commit(_mk(spark, 0, 5), "overwrite", expected_parent=base)
-    assert b.read(spark).count() == 20
-
-    # a crashed holder's lease file EXPIRES instead of wedging the table
-    assert catalog.try_acquire("t", "dead", ttl_sec=0.2)
-    time.sleep(0.3)
-    b.append(_mk(spark, 20, 25))  # takes over past the expired lease
-    assert b.read(spark).count() == 25
-
-    # release is owner-checked: releasing a lease you no longer hold is a
-    # no-op that does not clobber the live holder's file
-    assert catalog.try_acquire("t", "C", ttl_sec=30)
-    catalog.release("t", "B")
-    assert not catalog.try_acquire("t", "D", ttl_sec=1)
-    catalog.release("t", "C")
-
-    # ... and leaves no window for a third writer: A's lease expires, B
-    # takes over, A releases late. A contender D injected at the moment
-    # a restore-by-link would run must NOT be granted while B holds it.
-    import web_crawler_spark.sources.lake as lake
-
-    assert catalog.try_acquire("t", "A", ttl_sec=0.05)
-    time.sleep(0.1)
-    assert catalog.try_acquire("t", "B", ttl_sec=30)
-    granted = []
-    real_link = lake.os.link
-
-    def contended_link(src, dst):
-        granted.append(catalog.try_acquire("t", "D", ttl_sec=30))
-        return real_link(src, dst)
-
-    monkeypatch.setattr(lake.os, "link", contended_link)
-    catalog.release("t", "A")
-    monkeypatch.undo()
-    assert not any(granted), "D was granted a lease B still holds"
-    assert not catalog.try_acquire("t", "D", ttl_sec=1)
-    catalog.release("t", "B")
-    assert catalog.try_acquire("t", "D", ttl_sec=1)
-    catalog.release("t", "D")
+    a.current_snapshot_id = stall_after_read
+    sid = a.append_local([{"phash": 3}], PHASH_SEEN)
+    assert stalled == [1]
+    assert (sid, a._manifest(sid)["parent"]) == (3, 2)
+    assert _rows(b) == [1, 2, 3]
 
 
-def test_file_lease_steal_mutex_judged_by_its_deadline(tmp_path):
-    """A live stealer's mutex is judged by the deadline its creator wrote
-    into it, not by its mtime (the file server's clock): with the mtime 20 s
-    back, a contender must neither clear the mutex nor take the expired
-    lease. Once that deadline has passed (a crashed stealer), the mutex is
-    cleared and the takeover proceeds."""
-    import json
-    import os
-    import time
-
-    from web_crawler_spark.sources.lake import FileLeaseCatalog
-
-    catalog = FileLeaseCatalog(str(tmp_path / "leases"))
-    assert catalog.try_acquire("t", "dead", ttl_sec=0.05)
-    time.sleep(0.1)
-    mutex = catalog._path("t") + ".steal"
-
-    def stealer_mutex(deadline: float) -> None:
-        with open(mutex, "w") as f:
-            json.dump({"table_id": "t", "owner": "stealer", "deadline": deadline}, f)
-        back = time.time() - 20
-        os.utime(mutex, (back, back))
-
-    stealer_mutex(time.time() + 30)
-    assert not catalog.try_acquire("t", "C", ttl_sec=30)
-    assert not catalog.try_acquire("t", "C", ttl_sec=30)
-    assert os.path.exists(mutex)
-
-    stealer_mutex(time.time() - 1)
-    assert not catalog.try_acquire("t", "C", ttl_sec=30)  # clears it
-    assert catalog.try_acquire("t", "C", ttl_sec=30)
-    assert not os.path.exists(mutex)
-    catalog.release("t", "C")
-
-
-def test_file_lease_single_winner_under_contention(tmp_path):
-    """16 threads race one conditional put (fresh AND post-expiry steal):
-    exactly one wins each time — the property the O_EXCL create and the
-    rename-claimed steal must guarantee on any mount where those are
-    atomic."""
+def test_unlocked_writers_lose_no_row(tmp_path):
+    """8 threads x 25 ``append_local`` with the lock bypassed: the current
+    snapshot holds every row appended, and no writer fails. A short switch
+    interval makes the threads interleave inside the publish."""
+    import sys
     import threading
-    import time
 
-    from web_crawler_spark.sources.lake import FileLeaseCatalog
+    path = str(tmp_path / "t")
+    handles = [_bypass_lock(SnapshotTable(path)) for _ in range(8)]
+    barrier = threading.Barrier(len(handles))
+    errs: list = []
 
-    catalog = FileLeaseCatalog(str(tmp_path / "leases"))
-    for round_n in range(3):
-        if round_n:  # leave an EXPIRED lease behind → exercises the steal
-            assert catalog.try_acquire("t", f"stale{round_n}", ttl_sec=0.05)
-            time.sleep(0.1)
-        winners: list[str] = []
-        barrier = threading.Barrier(16)
-
-        def contend(owner: str):
-            barrier.wait()
-            if catalog.try_acquire("t", owner, ttl_sec=30):
-                winners.append(owner)
-
-        ths = [
-            threading.Thread(target=contend, args=(f"w{round_n}_{i}",))
-            for i in range(16)
-        ]
-        for t in ths:
-            t.start()
-        for t in ths:
-            t.join()
-        assert len(winners) == 1, f"round {round_n}: winners={winners}"
-        catalog.release("t", winners[0])
-
-
-_OWNERS = ("A", "B", "C")
-_OS_CALLS = ("open", "rename", "link", "replace", "unlink")
-_owners = st.sampled_from(_OWNERS)
-# os calls to contend: the two owners other than the stepping one take
-# turns, one polling just before the step's first call of each name
-_contentions = st.lists(
-    st.sampled_from(_OS_CALLS), unique=True, max_size=len(_OS_CALLS)
-)
-
-
-class _SteppedOs:
-    """``lake.os`` as the lease machine swaps it in: the real ``os``, except
-    that each ``armed`` (os call name, hook) pair runs its hook just before
-    the first call of that name, once."""
-
-    def __init__(self):
-        self.armed: list = []
-        self.fired: list[str] = []  # os call names whose hook ran
-
-    def __getattr__(self, name):
-        real = getattr(os, name)
-        if name not in _OS_CALLS:
-            return real
-
-        def call(*args, **kwargs):
-            hit = next((a for a in self.armed if a[0] == name), None)
-            if hit is not None:
-                rest = [a for a in self.armed if a is not hit]
-                self.armed = []  # the contender's own calls run unhooked
-                self.fired.append(name)
-                hit[1]()
-                self.armed = rest
-            return real(*args, **kwargs)
-
-        return call
-
-
-class FileLeaseMachine(RuleBasedStateMachine):
-    """Steps ``FileLeaseCatalog`` through acquire/renew, release and clock
-    advances for three owners over one lease directory. An acquire or a
-    release may be contended at any of the protocol's ``os`` calls: there
-    the two other owners, in turn, poll ``try_acquire`` (up to twice). The
-    clock is fake and starts at the wall clock, so file mtimes (the file
-    server's clock) fall behind it as it advances: single steps cross the
-    10 s steal-mutex deadline, both TTLs and the 60 s parse grace.
-    ``time.sleep`` (a release polling for the steal mutex) advances it
-    too."""
-
-    def __init__(self):
-        super().__init__()
-        self.now = time.time()
-        self.dir = tempfile.mkdtemp(prefix="lease-machine-")
-        self.believed: dict[str, float] = {}  # owner -> deadline granted
-        self.stepped_os = _SteppedOs()
-        self.saved = (lake.time, lake.os)
-        lake.time = SimpleNamespace(time=lambda: self.now, sleep=self.advance)
-        lake.os = self.stepped_os
-        self.catalog = lake.FileLeaseCatalog(self.dir)
-
-    def teardown(self):
-        lake.time, lake.os = self.saved
-        shutil.rmtree(self.dir, ignore_errors=True)
-
-    def _acquire(self, owner: str, ttl: float) -> bool:
-        if not self.catalog.try_acquire("t", owner, ttl):
-            return False
-        self.believed[owner] = self.now + ttl
-        return True
-
-    def _poll(self, contender: str) -> None:
-        # twice: a first poll may only clear a stale mutex
-        self._acquire(contender, 30.0) or self._acquire(contender, 30.0)
-
-    @contextmanager
-    def _contended(self, owner: str, contentions):
-        others = [o for o in _OWNERS if o != owner]
-        self.stepped_os.armed = [
-            (os_call, functools.partial(self._poll, others[i % 2]))
-            for i, os_call in enumerate(contentions)
-        ]
+    def writer(h, base):
+        barrier.wait()
         try:
-            yield
-        finally:
-            self.stepped_os.armed = []
+            for i in range(25):
+                h.append_local([{"phash": base * 100 + i}], PHASH_SEEN)
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
 
-    @rule(owner=_owners, ttl=st.sampled_from((5.0, 30.0)), contentions=_contentions)
-    def try_acquire(self, owner, ttl, contentions):  # also renews a held lease
-        with self._contended(owner, contentions):
-            self._acquire(owner, ttl)
-
-    @rule(owner=_owners, contentions=_contentions)
-    def release(self, owner, contentions):
-        with self._contended(owner, contentions):
-            self.catalog.release("t", owner)
-        self.believed.pop(owner, None)
-
-    @rule(dt=st.sampled_from((1.0, 10.5, 61.0)))
-    def advance(self, dt):
-        self.now += dt
-
-    @invariant()
-    def one_live_holder_named_by_the_lease_file(self):
-        live = sorted(o for o, d in self.believed.items() if d > self.now)
-        assert len(live) <= 1, f"two live holders: {live}"
-        if live:
-            held = self.catalog._read(self.catalog._path("t"))
-            assert held is not None and held[0] == live[0], (
-                f"the lease file holds {held}, not live holder {live[0]}"
-            )
+    threads = [
+        threading.Thread(target=writer, args=(h, n)) for n, h in enumerate(handles)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert not errs
+    t = SnapshotTable(path)
+    assert _rows(t) == sorted(b * 100 + i for b in range(8) for i in range(25))
+    assert t.current_snapshot_id() == 200
 
 
-def test_file_lease_state_machine():
-    """No interleaving of grants, renewals, takeovers, releases and clock
-    advances leaves two owners holding live leases, or a live holder whose
-    lease file names someone else. Pinned: the same examples every run."""
-    run_state_machine_as_test(
-        FileLeaseMachine,
-        settings=settings(
-            derandomize=True,
-            database=None,
-            deadline=None,
-            max_examples=500,
-            stateful_step_count=25,
-        ),
+def test_expire_keeps_a_commit_published_while_it_runs(tmp_path):
+    """A commit (lock bypassed) lands just after ``expire_snapshots`` read
+    the current id: its manifest and its data dir survive the expiry."""
+    path = str(tmp_path / "t")
+    t = SnapshotTable(path)
+    for v in (1, 2, 3):
+        t.append_local([{"phash": v}], PHASH_SEEN)
+    w = _bypass_lock(SnapshotTable(path))
+    read_current = t.current_snapshot_id
+    landed: list[int] = []
+
+    def read_then_commit():
+        sid = read_current()
+        if not landed:
+            landed.append(w.append_local([{"phash": 4}], PHASH_SEEN))
+        return sid
+
+    t.current_snapshot_id = read_then_commit
+    t.expire_snapshots(keep_last=1)
+    assert landed == [4] and w.current_snapshot_id() == 4
+    assert _rows(w) == [1, 2, 3, 4]
+    assert sorted(os.listdir(w._data_dir)) == sorted(w._manifest(4)["files"])
+
+
+def test_rollback_is_a_commit_incremental_reads_see_through(tmp_path):
+    """``rollback(s2)`` on s1 -> s2 -> s3 publishes a new snapshot with s2's
+    files; ``read_incremental(s1)`` then returns exactly s2's rows, and s3
+    is no longer an ancestor."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    s1, s2, s3 = (t.append_local([{"phash": v}], PHASH_SEEN) for v in (1, 2, 3))
+    r = t.rollback(s2)
+    m = t._manifest(r)
+    assert t.current_snapshot_id() == r > s3
+    assert (m["op"], m["parent"], m["files"]) == (
+        "rollback", s2, t._manifest(s2)["files"]
     )
+    got = t.read_incremental(_ArrowSpark(), s1)
+    assert got["phash"].to_pylist() == [2]
+    with pytest.raises(ValueError, match="not an ancestor"):
+        t.read_incremental(_ArrowSpark(), s3)
 
 
-def test_file_lease_late_release_with_two_contenders():
-    """The late-release window, stepped by hand through the machine: C's
-    5 s lease has run out when C releases. A polls just before the
-    tombstone's ``os.replace``, while C holds the steal mutex, so A must
-    back off; B polls just before the ``os.unlink`` that drops C's mutex,
-    when the lease is a tombstone, so B takes it over. Both polls must
-    run, and B alone ends up holding a live lease."""
-    machine = FileLeaseMachine()
-    try:
-        machine.try_acquire(owner="C", ttl=5.0, contentions=[])
-        machine.advance(dt=10.5)
-        machine.release(owner="C", contentions=["replace", "unlink"])
-        assert machine.stepped_os.fired == ["replace", "unlink"]
-        assert list(machine.believed) == ["B"]
-        machine.one_live_holder_named_by_the_lease_file()
-    finally:
-        machine.teardown()
-
-
-def test_file_lease_release_waits_for_a_contenders_mutex():
-    """A contender holding the steal mutex only to re-check and back off
-    does not make a release give up: the release polls until it takes the
-    mutex and tombstones the lease, so the next owner acquires at once,
-    long before the released lease's TTL runs out."""
-    import json
-
-    machine = FileLeaseMachine()
-    mutex = machine.catalog._path("t") + ".steal"
-    polls = []
-
-    def contender_backs_off(dt):
-        polls.append(dt)
-        machine.advance(dt)
-        os.unlink(mutex)
-
-    try:
-        machine.try_acquire(owner="A", ttl=30.0, contentions=[])
-        a_deadline = machine.believed["A"]
-        with open(mutex, "w") as f:
-            json.dump({"table_id": "t", "owner": "x", "deadline": machine.now + 10}, f)
-        lake.time.sleep = contender_backs_off
-        machine.release(owner="A", contentions=[])
-        assert polls == [0.02]
-        assert machine._acquire("B", 30.0) and machine.now < a_deadline
-        machine.one_live_holder_named_by_the_lease_file()
-    finally:
-        machine.teardown()
+def test_expire_removes_stale_temp_manifests(tmp_path):
+    """A crash between the temp write and the link leaves
+    ``snapshots/.tmp-*``; expiry removes it once it is older than the
+    grace window and leaves a younger one (a commit in progress)."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append_local([{"phash": 1}], PHASH_SEEN)
+    assert os.listdir(t._snap_dir) == ["s00000001.json"]
+    stale, fresh = (
+        os.path.join(t._snap_dir, f".tmp-{n}") for n in ("stale", "fresh")
+    )
+    for p in (stale, fresh):
+        with open(p, "w") as f:
+            f.write("{")
+    back = time.time() - 7200
+    os.utime(stale, (back, back))
+    t.expire_snapshots(in_flight_grace_s=3600)
+    assert sorted(os.listdir(t._snap_dir)) == [".tmp-fresh", "s00000001.json"]
+    assert t.current_snapshot_id() == 1

@@ -123,7 +123,10 @@ def test_resume_rolls_back_lazily_created_table(spark, fixture_dir, tmp_path_fac
     )
     assert fresh.dirty_vs_checkpoint()
     assert fresh.resume() == 1
-    assert fresh.trap_hosts_t.current_snapshot_id() is None
+    # the rollback to "no snapshot" publishes an empty one
+    traps = fresh.trap_hosts_t
+    assert traps._manifest(traps.current_snapshot_id())["files"] == []
+    assert traps.read(spark, schema=TRAP_HOSTS).count() == 0
     assert not fresh.dirty_vs_checkpoint(), "resume must leave a clean state"
     fresh.maintain()  # must not raise 'un-checkpointed commits'
     fresh.run()  # and the crawl still completes

@@ -57,7 +57,6 @@ _FMT_CODES = {"png": 0, "jpeg": 1, "webp": 2}
 # quantization step per lossy format (step q → PSNR ≈ 20*log10(255*sqrt(12)/q))
 _QUANT = {"png": 1, "jpeg": 4, "webp": 2}
 
-LOSSY_FORMATS = ("jpeg", "webp")
 PSNR_THRESHOLD_DB = 40.0
 # PSNR value reported for bit-exact matches (lossless); keeps the column a
 # plain finite DOUBLE for parquet/oracle comparison instead of +Inf.

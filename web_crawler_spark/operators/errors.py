@@ -21,16 +21,6 @@ from pyspark.sql import functions as F
 from ..functions.images import PSNR_THRESHOLD_DB
 from .faults import is_transient_fault
 
-ERROR_TYPES = [
-    "network_error",
-    "http_error",
-    "content_error",
-    "validation_error",
-    "parsing_error",
-    "permission_error",
-    "unknown_error",
-]
-
 # reference: utils/error_handler.py:22-84 (http suggestions), condensed
 SUGGESTIONS = {
     "404": ["Check the URL for typos", "The page may have been removed"],

@@ -33,14 +33,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..functions import images as I
 from .textdedup import (
@@ -49,19 +41,6 @@ from .textdedup import (
 
 # phash is a full signed 64-bit long: the band join runs over all 64 bits
 PHASH_BITS = 64
-
-MEDIA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("bytes", BinaryType(), True),
-        StructField("fmt", StringType(), True),
-        StructField("w", IntegerType(), True),
-        StructField("h", IntegerType(), True),
-        StructField("duration_ms", LongType(), True),
-        StructField("caption", StringType(), True),
-    ]
-)
 
 FEATURES_SCHEMA = (
     "media_id string, decoded boolean, w int, h int, "

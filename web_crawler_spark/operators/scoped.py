@@ -24,7 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-SCOPE_MISS_CODE = "SCOPED_ELEMENT_NOT_FOUND"
 MAX_CLASS_SAMPLE = 20  # parser.py:104 — "limit to 20"
 
 

@@ -999,17 +999,16 @@ WHERE n_hits * 10000 >= {_DECON_BP} * n_bench
 """
 
 
-_LINE_WORDS = 3  # words per derived line (3-word lines over the ~30-word
-# vocabulary give a natural mid-range cross-doc duplicate rate)
 _LINE_MIN_DOCS = 2
 
 
 def _wrapped_lines(text_col):
     """Deterministically wrap single-line word-soup text into 3-word lines
-    — the multi-line document shape line_dedupe operates on. One codegen'd
-    regex pass (non-overlapping matches group words left-to-right in 3s),
-    mirrored verbatim by the SQL twin; RE2 and Java regex agree on this
-    shape."""
+    (over the ~30-word vocabulary they give a natural mid-range cross-doc
+    duplicate rate) — the multi-line document shape line_dedupe operates
+    on. One codegen'd regex pass (non-overlapping matches group words
+    left-to-right in 3s), mirrored verbatim by the SQL twin; RE2 and Java
+    regex agree on this shape."""
     return F.regexp_replace(text_col, r"(\S+ \S+ \S+) ", "$1\n")
 
 

@@ -1113,8 +1113,8 @@ class CrawlRun:
             table = getattr(self, attr)
             sid = state.get(key)
             # sid None: the checkpoint recorded no snapshot, so every
-            # commit of the table came after it — roll back to the
-            # uninitialized state (a no-op when it never was initialized)
+            # commit of the table came after it — roll back to an empty
+            # snapshot (nothing to do when it never was initialized)
             if table.current_snapshot_id() != sid:
                 table.rollback(sid)
         if self.tiers is not None:
@@ -1122,4 +1122,7 @@ class CrawlRun:
         self.round = state["round"]
         # a prefetched trap list may predate the rollback — recompute inline
         self._next_traps = None
+        # a rollback publishes a new snapshot id: record it, or the tables
+        # would read as dirty against the checkpoint
+        self._checkpoint()
         return self.round

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -19,50 +18,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-)
-
-# ---------------------------------------------------------------------------
-# pages — the Iceberg-style lake table of image+caption rows (BASELINE.json
-# input_hint shape, byte-for-byte).
-# ---------------------------------------------------------------------------
-PAGES = StructType(
-    [
-        StructField("image_id", StringType(), False),
-        StructField("bytes", BinaryType(), True),
-        StructField("w", IntegerType(), True),
-        StructField("h", IntegerType(), True),
-        StructField("fmt", StringType(), True),
-        StructField("caption", StringType(), True),
-        StructField("phash", LongType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# urls — one row per crawlable page, 1:1 with pages on image_id (FIXTURES §2).
-# ---------------------------------------------------------------------------
-URLS = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("host", StringType(), False),
-        StructField("image_id", StringType(), False),
-        StructField("html_title", StringType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# links — raw extracted anchors, pre-normalization (reference:
-# crawler/link_extractor.py:121-127; raw href mix per FIXTURES §2).
-# ---------------------------------------------------------------------------
-LINKS = StructType(
-    [
-        StructField("src_url", StringType(), False),
-        StructField("href", StringType(), True),
-        StructField("pos", IntegerType(), False),
-        StructField("text", StringType(), True),
-        StructField("title", StringType(), True),
-        StructField("rel", ArrayType(StringType()), True),
-        StructField("has_fragment", BooleanType(), True),
-    ]
 )
 
 # ---------------------------------------------------------------------------

@@ -12,8 +12,8 @@ dimension table**:
 - every mutation appends ONE row version (driver-local parquet commit —
   no Spark job, atomic with the snapshot manifest); the whole
   read-modify-write is serialized by a store-level mutation lock so
-  concurrent updates allocate distinct versions (the table's commit lock
-  alone only serializes the manifest swap);
+  concurrent updates allocate distinct versions (the table's commit
+  alone only orders the manifests, not the reads before them);
 - current state is a DataFrame view resolving latest-version-per-id and
   dropping tombstones — the J2 "key lookup" shape, composable with any
   join (e.g. resolving a saved config for a scheduled run);
@@ -75,8 +75,8 @@ class SavedJobStore:
         """Serializes each mutation's read-modify-write: per-id version
         numbers are previous+1, so two concurrent update()s reading the same
         ``_latest`` would both commit the same version and make current()'s
-        latest-wins resolution nondeterministic. The table's commit lock
-        only serializes the manifest swap, not the read — this store-level
+        latest-wins resolution nondeterministic. The table's commit only
+        orders the manifests, not the read — this store-level
         lock (a separate file, so the nested commit lock doesn't self-block)
         covers the whole RMW."""
         return file_lock(
