@@ -719,6 +719,36 @@ def test_stalled_writer_rechains_onto_the_commit_it_missed(tmp_path):
     assert _rows(b) == [1, 2, 3]
 
 
+def test_stalled_writer_never_lands_in_an_expired_id(tmp_path):
+    """A reads head 3's manifest and pauses; B commits s4 and s5, and
+    expiry deletes s1-s4. A's link to the freed ``s00000004.json`` succeeds,
+    but s5 was not built on it: A must withdraw it and land on top of s5,
+    with every row kept."""
+    path = str(tmp_path / "t")
+    a, b = _bypass_lock(SnapshotTable(path)), SnapshotTable(path)
+    for v in (1, 2, 3):
+        b.append_local([{"phash": v}], PHASH_SEEN)
+    read_manifest = a._manifest
+    stalled: list[int] = []
+
+    def expire_after_read(sid):
+        m = read_manifest(sid)
+        if not stalled:
+            stalled.append(sid)
+            for v in (4, 5):
+                b.append_local([{"phash": v}], PHASH_SEEN)
+            b.expire_snapshots(keep_last=1)
+        return m
+
+    a._manifest = expire_after_read
+    sid = a.append_local([{"phash": 6}], PHASH_SEEN)
+    assert stalled == [3]
+    assert sid == b.current_snapshot_id() == 6
+    assert b._manifest(6)["parent_uid"] == b._manifest(5)["uid"]
+    assert _rows(b) == [1, 2, 3, 4, 5, 6]
+    assert sorted(os.listdir(b._snap_dir)) == ["s00000005.json", "s00000006.json"]
+
+
 def test_unlocked_writers_lose_no_row(tmp_path):
     """8 threads x 25 ``append_local`` with the lock bypassed: the current
     snapshot holds every row appended, and no writer fails. A short switch

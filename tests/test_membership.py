@@ -299,3 +299,33 @@ def test_words_probe_filter_consumer_keeps_projection(spark):
     )
     for i in range(bf.k):
         assert f"__bi{i}#" in plan, f"__bi{i} collapsed under the filter"
+
+
+def test_words_probe_lets_other_predicates_reach_the_scan(spark, tmp_path):
+    """The fence holds back only predicates on ``might_contain``: a
+    ``host`` filter written after the probe must still be pushed through
+    the probe's projections and its join into the candidates' scan, so
+    only that host's candidates are probed."""
+    from web_crawler_spark.operators.bloom import (
+        WORDS_SCHEMA,
+        PartitionedBloom,
+        probe_words_joined,
+    )
+
+    path = str(tmp_path / "cand")
+    spark.range(100).selectExpr(
+        "xxhash64(id) AS url_hash", "concat('h', id % 5) AS host"
+    ).write.parquet(path)
+    bf = PartitionedBloom.sized_for(1000, n_partitions=4)
+    words = spark.createDataFrame([], schema=WORDS_SCHEMA)
+    out = (
+        probe_words_joined(spark.read.parquet(path), words, m=bf.m, k=bf.k, p=bf.p)
+        .filter(F.col("host") == "h1")
+        .filter(F.col("might_contain"))
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
+    assert len(scans) == 1 and "EqualTo(host,h1)" in scans[0], (
+        f"the host predicate stopped above the probe: {scans}"
+    )
+    assert out.count() == 0  # an empty filter holds no key

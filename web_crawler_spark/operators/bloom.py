@@ -300,20 +300,27 @@ def probe_words_joined(
 
 
 def _pushdown_fence(c: Column) -> Column:
-    """Value-identity wrapper that marks ``c`` NON-DETERMINISTIC so a
-    consumer's ``.filter(...)`` cannot be pushed through the projection.
+    """Value-identity wrapper that stops a consumer's ``.filter(...)`` on
+    ``c`` from being substituted into the projection below it, while
+    filters on the other columns still reach the scan.
 
-    ``shuffle`` over a one-element array is the identity on values but is
-    flagged non-deterministic, which stops ``PushDownPredicate`` from
-    substituting the projected aliases into the Filter condition. Without
-    the fence, ``probed.filter("might_contain")`` — the round's and the
-    bench's actual consumption — collapses the whole two-Project index
-    layout into ONE Filter expression in which every index subtree
-    appears twice (word lookup + bit position) and the k bit tests
-    re-inline the full hash mix each: measured **1.7s → 35.5s** on a
-    10^8-row probe at k=10 (the same ~20x cliff the two-Project layout
-    was built against, resurfacing through the filter path; k ≤ 3 stays
-    under the generated-code threshold, k ≥ 4 falls off it). The fence
-    keeps the tests evaluated ONCE, in their Project, with the Filter
-    reading the materialized boolean."""
-    return F.element_at(F.shuffle(F.array(c)), 1)
+    ``explode`` of a one-element array is the identity on values (one row
+    out per row in; ``array(c)`` is never null or empty), and it plans as
+    a ``Generate``: ``PushDownPredicate`` moves the conjuncts that
+    reference only the Generate's input (``host``, ``url_hash``, ...)
+    below it and keeps the ones on the generated column above it, reading
+    the materialized boolean. Without the fence,
+    ``probed.filter("might_contain")`` — the round's and the bench's
+    actual consumption — collapses the whole two-Project index layout into
+    ONE Filter expression in which every index subtree appears twice (word
+    lookup + bit position) and the k bit tests re-inline the full hash mix
+    each: measured **1.7s → 35.5s** on a 10^8-row probe at k=10 (the same
+    ~20x cliff the two-Project layout was built against; k ≤ 3 stays
+    under the generated-code threshold, k ≥ 4 falls off it). A
+    non-deterministic wrapper in the Project would block the substitution
+    too, but ``PushDownPredicate`` then keeps EVERY predicate above the
+    probe, so a ``host`` filter written after it scans and probes every
+    candidate. Still, filter candidates before probing where the query
+    allows it: the probe's join and bit tests then run on fewer rows
+    whatever the optimizer does."""
+    return F.explode(F.array(c))

@@ -11,14 +11,91 @@ One place to pin every conf that correctness or reproducibility depends on:
 - AQE on, with skew-join handling: skewed hosts are a first-class concern of the
   frontier (Zipfian host distribution), handled by explicit salting for the window
   operator plus AQE for the join side.
+- ``spark.python.daemon.module`` — local sessions run their Python workers from
+  the installed pyspark, not Spark's zips (``_daemon.py``,
+  ``worker_daemon_module``).
 """
 
 from __future__ import annotations
 
 import contextlib as _contextlib
+import glob
 import os
+import re
 
+import pyspark
 from pyspark.sql import SparkSession
+
+DAEMON_CONF = "spark.python.daemon.module"
+DAEMON_MODULE = "web_crawler_spark._daemon"
+# the directory the package is imported from: a worker can run
+# ``python -m web_crawler_spark._daemon`` only with it on its path
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_daemon_module(
+    master: str | None,
+    extra_conf: dict[str, str] | None,
+    *,
+    pyspark_file: str,
+    pyspark_version: str,
+    jvm_version: str | None,
+    worker_path: list[str],
+) -> str | None:
+    """The ``spark.python.daemon.module`` to set, or None for Spark's own.
+
+    ``DAEMON_MODULE`` only when the workers share this host (``local`` or
+    ``local[...]`` master), the driver's pyspark is not inside a zip and is
+    the JVM's version, the package's parent dir is on ``worker_path`` (the
+    workers' PYTHONPATH and cwd) and the caller passed no daemon module of
+    its own."""
+    if extra_conf and DAEMON_CONF in extra_conf:
+        return None
+    ok = (
+        re.fullmatch(r"local(\[[^\]]*\])?", master or "") is not None
+        and ".zip" + os.sep not in pyspark_file
+        and pyspark_version == jvm_version
+        and PACKAGE_PARENT in {os.path.abspath(p) for p in worker_path}
+    )
+    return DAEMON_MODULE if ok else None
+
+
+def daemon_facts() -> dict:
+    """This process's facts for ``worker_daemon_module``. In local mode
+    the workers start in the JVM's cwd with the JVM's PYTHONPATH behind
+    Spark's own entries: this process's, or those a JVM launched earlier
+    (before a chdir) still has."""
+    from pyspark import SparkContext
+
+    jvm = SparkContext._jvm
+    if jvm is None:
+        cwd, pythonpath = os.getcwd(), os.environ.get("PYTHONPATH")
+    else:
+        cwd = jvm.System.getProperty("user.dir")
+        pythonpath = jvm.System.getenv("PYTHONPATH")
+    return {
+        "pyspark_file": pyspark.__file__,
+        "pyspark_version": pyspark.__version__,
+        "jvm_version": _jvm_version(),
+        "worker_path": [cwd, *filter(None, (pythonpath or "").split(os.pathsep))],
+    }
+
+
+def _jvm_version() -> str | None:
+    """The Spark version the JVM runs: ``$SPARK_HOME/RELEASE``'s first line,
+    else the ``spark-core`` jar's name."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    home = _find_spark_home()
+    try:
+        with open(os.path.join(home, "RELEASE")) as f:
+            m = re.match(r"Spark (\S+)", f.readline())
+    except OSError:
+        m = None
+    if m is None:
+        jars = glob.glob(os.path.join(home, "jars", "spark-core_*-*.jar"))
+        m = re.search(r"spark-core_[^-]+-(.+)\.jar$", jars[0]) if jars else None
+    return m.group(1) if m else None
 
 
 def get_spark(
@@ -40,9 +117,10 @@ def get_spark(
     # the env-var route; only then fall back to local[N]
     from pyspark import SparkConf
 
-    has_master = "SPARK_MASTER" in os.environ or SparkConf().contains("spark.master")
-    if cpus is not None and not has_master:
-        builder = builder.master(f"local[{cpus}]")
+    master = SparkConf().get("spark.master", os.environ.get("SPARK_MASTER"))
+    if cpus is not None and master is None:
+        master = f"local[{cpus}]"
+        builder = builder.master(master)
     n_shuffle = shuffle_partitions or cpus or 32
     confs = {
         # local-mode driver == executor JVM; 1g default heap cannot sort a
@@ -69,6 +147,9 @@ def get_spark(
         # Broadcast threshold: robots/mapping tables are small dims by design.
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     }
+    daemon = worker_daemon_module(master, extra_conf, **daemon_facts())
+    if daemon:
+        confs[DAEMON_CONF] = daemon
     if extra_conf:
         confs.update(extra_conf)
     for k, v in confs.items():

@@ -8,8 +8,9 @@ runtime jars are not in the image — on a cluster you'd swap this for an
 Iceberg catalog table; the API is deliberately snapshot-id-compatible):
 
     table/
-      snapshots/s00000001.json   # {"id", "parent", "op", "files": [...]};
-                                 # the highest id is the current snapshot
+      snapshots/s00000001.json   # {"id", "uid", "parent_uid", "parent",
+                                 #  "op", "files": [...]}; the highest id
+                                 # is the current snapshot
       data/c_<uuid>/part-*.parquet
       _inflight/c_<uuid>         # marks a data dir no manifest names yet
       _lock                      # flock: back-off between local writers
@@ -43,7 +44,10 @@ al., VLDB 2020). A writer chains onto the highest id H and links its
 manifest to H + 1; if another writer got there first, the link fails, an
 append re-chains onto the new head and a compare-and-swap commit raises
 ``CommitConflictError``. A writer that stalls (a GC pause, a slow write)
-therefore cannot commit on a stale parent. The flock only makes local
+therefore cannot commit on a stale parent, not even into an id that
+``expire_snapshots`` freed below the head: each manifest names the uid of
+the manifest it was built on (``parent_uid``), and a link whose next id up
+was not built on it is withdrawn and re-chained. The flock only makes local
 writers take turns; data files land outside it (writers only contend on
 the manifest publish), and a writer that cannot get it fails loudly. It
 also has add-column schema evolution (below) and
@@ -343,30 +347,61 @@ class SnapshotTable:
         )
 
     def _publish(self, build) -> int:
-        """Publish ``build(H)`` as manifest H + 1, H being the current
-        snapshot, and return H + 1. The manifest is written to a temp file
-        and hard-linked to ``s<H+1>.json``: the link is a put-if-absent,
-        so of two writers that built on the same H exactly one wins, and a
-        reader never sees a half-written manifest. The loser re-reads H
-        and builds again (``build`` raises to give up instead)."""
+        """Publish ``build(H, manifest of H)`` as manifest H + 1, H being
+        the current snapshot, and return H + 1. The manifest is written to
+        a temp file and hard-linked to ``s<H+1>.json``: the link is a
+        put-if-absent, so of two writers that built on the same H exactly
+        one wins, and a reader never sees a half-written manifest. The
+        loser re-reads H and builds again (``build`` raises to give up
+        instead).
+
+        The link alone cannot tell a free id from one ``expire_snapshots``
+        freed below the head while this writer stalled; linked there, the
+        commit would sit under the current snapshot, lost. So each
+        manifest carries a random ``uid`` and the ``parent_uid`` of H's
+        manifest, and after the link the next manifest up, if any, must
+        name this one as its ``parent_uid``: otherwise the link is
+        withdrawn and the writer re-chains."""
         with self._commit_lock():
             while True:
                 head = self.current_snapshot_id()
+                try:
+                    parent = None if head is None else self._manifest(head)
+                except FileNotFoundError:
+                    continue  # H was expired: a newer head exists
                 manifest = {
                     "id": (head or 0) + 1,
-                    **build(head),
+                    "uid": uuid.uuid4().hex,
+                    "parent_uid": parent and parent.get("uid"),
+                    **build(head, parent),
                     "committed_at": time.time(),
                 }
+                path = self._manifest_path(manifest["id"])
                 tmp = os.path.join(self._snap_dir, f".tmp-{uuid.uuid4().hex}")
                 with open(tmp, "w") as f:
                     json.dump(manifest, f)
                 try:
-                    os.link(tmp, self._manifest_path(manifest["id"]))
-                    return manifest["id"]
+                    os.link(tmp, path)
                 except FileExistsError:
                     continue  # another writer took the id: re-chain
                 finally:
                     os.remove(tmp)
+                if self._built_on(manifest):
+                    return manifest["id"]
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(path)  # a freed id under the head: re-chain
+
+    def _built_on(self, manifest: dict) -> bool:
+        """Whether no manifest sits above ``manifest`` or the lowest one
+        above names it as its ``parent_uid``."""
+        while True:
+            above = [k for k in self._snapshot_ids() if k > manifest["id"]]
+            if not above:
+                return True
+            try:
+                return self._manifest(min(above)).get("parent_uid") == manifest["uid"]
+            except FileNotFoundError:
+                continue  # expired meanwhile: look again
 
     def _finish_commit(
         self,
@@ -388,7 +423,7 @@ class SnapshotTable:
         file list, so an append that landed after they scanned would be
         silently erased by an unconditional commit."""
 
-        def build(parent):
+        def build(parent, pm):
             if expected_parent is not _UNSET and parent != expected_parent:
                 import shutil
 
@@ -404,7 +439,6 @@ class SnapshotTable:
             if op == "overwrite" or parent is None:
                 files, stats, schemas = [], {}, {}
             else:
-                pm = self._manifest(parent)
                 files = list(pm["files"])
                 stats = dict(pm.get("stats", {}))
                 schemas = dict(pm.get("schemas", {}))
@@ -768,7 +802,7 @@ class SnapshotTable:
         Returns the new snapshot id."""
         base = {} if snapshot_id is None else self._manifest(snapshot_id)
         return self._publish(
-            lambda _head: {
+            lambda _head, _head_manifest: {
                 "parent": snapshot_id,
                 "op": "rollback",
                 "files": base.get("files", []),
