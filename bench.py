@@ -110,22 +110,19 @@ def frontier_throughput(
 
     from web_crawler_spark.functions.urls import url_hash
     from web_crawler_spark.operators.membership import TableSeenTiers
-    from web_crawler_spark.plans.round import CrawlConfig, schedule
-    from web_crawler_spark.schemas import FRONTIER, ROBOTS
+    from web_crawler_spark.plans.round import CrawlConfig, frontier_rows, schedule
+    from web_crawler_spark.schemas import ROBOTS
     from web_crawler_spark.sources.lake import SnapshotTable
 
     space = n_rows * 4 // 5
     uid = (F.col("id") * 809) % space
     url, host = _url_and_host(uid)
-    nulls = ["parent_url", "cookies", "auth_headers", "basic_auth_user",
-             "basic_auth_pass"]
-    frontier = spark.range(n_rows).select(
-        url.alias("url"),
-        url_hash(url).alias("url_hash"),
-        host.alias("host"),
-        (uid % 100000).cast("double").alias("priority"),
-        *[F.lit(0).alias(c) for c in ("depth", "attempts", "discovered_round")],
-        *[F.lit(None).cast(FRONTIER[c].dataType).alias(c) for c in nulls],
+    frontier = frontier_rows(
+        spark.range(n_rows).withColumns({"url": url, "host": host}),
+        priority=(uid % 100000).cast("double"),
+        depth=0,
+        attempts=0,
+        discovered_round=0,
     )
     robots = spark.createDataFrame([], ROBOTS)
     cfg = CrawlConfig(default_host_budget=8, salt_buckets=16)

@@ -40,9 +40,9 @@ from web_crawler_spark.functions.urls import (
 from web_crawler_spark.operators.faults import (
     DEPTH_PRIORITY_STEP,
     MAX_ATTEMPTS,
+    py_band_priority,
     py_discovered_priority,
     py_is_transient_fault,
-    py_seed_priority,
 )
 
 DEFAULT_HOST_BUDGET = 4
@@ -157,7 +157,7 @@ class OracleCrawler:
                     url=url,
                     url_hash=xxh64_str(url),
                     host=py_host(url),
-                    priority=py_seed_priority(i),
+                    priority=py_band_priority(0, i),
                     depth=0,
                     attempts=0,
                     discovered_round=0,

@@ -48,6 +48,14 @@ def _new_run(spark, fixture_dir, run_dir, **cfg):
     return run
 
 
+def _assert_frontier_schema(t):
+    """Every live commit of frontier table ``t`` was written with exactly
+    FRONTIER's columns and types (the manifest records each commit's)."""
+    want = [[f.name, f.dataType.simpleString()] for f in FRONTIER]
+    schemas = t._manifest(t.current_snapshot_id())["schemas"]
+    assert schemas and all(e == want for e in schemas.values())
+
+
 def _log(spark, run):
     return sorted(
         map(
@@ -172,11 +180,13 @@ def test_batch_round_preserves_stream_marker(spark, fixture_dir, tmp_path_factor
     ticks = tmp / "ticks"
     ticks.mkdir()
     run = _new_run(spark, fixture_dir, run_dir)
+    _assert_frontier_schema(run.frontier_t)
     (ticks / "t0.csv").write_text("0\n")
     q = crawl_round_stream(spark, run, str(ticks), str(tmp / "ckpt"))
     q.awaitTermination(300)
     assert run.checkpoint_state()["stream_batch_id"] == 0
     run.run_round()  # batch driving in between
+    _assert_frontier_schema(run.frontier_t)
     assert run.checkpoint_state()["stream_batch_id"] == 0  # marker survives
     run.maintain(keep_last=4)
     assert run.checkpoint_state()["stream_batch_id"] == 0
@@ -218,6 +228,7 @@ def test_gated_candidate_ingest_bounds_frontier_per_host(spark, tmp_path):
     pr = [r["priority"] for r in sorted(by_host["h1.com"], key=lambda r: r["url"])]
     assert pr == sorted(pr, reverse=True)
     assert all(r["depth"] == 1 for r in rows)
+    _assert_frontier_schema(frontier)
 
 
 def test_stream_restart_in_round_zero_window_keeps_tiers(

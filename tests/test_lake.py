@@ -257,7 +257,7 @@ def test_admit_cap_counts_only_valid_seeds(spark, tmp_path):
     ]
     batch = spark.createDataFrame(rows, SEEDS_RAW)
     # cap of 3: all 3 valid seeds admitted even though 5 junk rows precede them
-    _admit_batch(batch, 0, frontier, max_urls_per_batch=3)
+    frontier.append(_admit_batch(batch, 0, max_urls_per_batch=3))
     got = sorted(
         r["url"] for r in frontier.read(spark, schema=FRONTIER).collect()
     )

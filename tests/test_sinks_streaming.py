@@ -128,6 +128,84 @@ def test_seed_stream_ingest(spark, tmp_path):
     urls = [r["url"] for r in rows]
     assert urls == ["https://a.com/x", "https://b.com/y"]  # invalid dropped, fragment stripped
     assert all(r["depth"] == 0 and r["attempts"] == 0 for r in rows)
+    want = [[f.name, f.dataType.simpleString()] for f in FRONTIER]
+    schemas = frontier._manifest(frontier.current_snapshot_id())["schemas"]
+    assert len(schemas) == 2 and all(e == want for e in schemas.values())
+
+
+def test_start_keeps_seeds_in_band_zero(spark, tmp_path):
+    """Seeds stay above every discovered band however long the seed list:
+    ``start()`` clamps through ``faults.band_priority``, so rows past the
+    band's width tie at its floor instead of sinking into depth 1, and rows
+    inside it keep -row_index (seed 0 as -0.0)."""
+    import math
+
+    from web_crawler_spark.operators import faults
+    from web_crawler_spark.plans.round import CrawlRun
+    from web_crawler_spark.schemas import FRONTIER
+
+    idx = [0, 999_999, 1_000_000, 2_500_000]
+    seeds = spark.createDataFrame(
+        [(i, f"https://s{i}.com/p") for i in idx], ["row_index", "url"]
+    )
+    # start() reads none of the fixture tables
+    run = CrawlRun(spark, str(tmp_path / "run"), None, None, None, None)
+    run.start(seeds)
+    got = {
+        r["url"]: r["priority"]
+        for r in run.frontier_t.read(spark, schema=FRONTIER).collect()
+    }
+    assert len(got) == 4 and all(p > -1e6 for p in got.values())
+    for i in idx:
+        p = got[f"https://s{i}.com/p"]
+        if i < 1_000_000:
+            assert p == -i
+        assert p == faults.py_band_priority(0, i)  # the oracle's twin
+    assert math.copysign(1.0, got["https://s0.com/p"]) == -1.0
+
+
+def test_seed_stream_parses_credentials_like_read_seeds(spark, tmp_path):
+    """A streamed seed CSV yields the same per-row credentials as the same
+    file through ``read_seeds`` → ``start()``: cookie, header (RFC-4180
+    quoted JSON) and basic channels, NULLs when auth is disabled, and the
+    URL trimmed."""
+    from web_crawler_spark.plans.round import CrawlRun
+    from web_crawler_spark.schemas import FRONTIER, SEEDS_RAW
+    from web_crawler_spark.sources.lake import SnapshotTable
+    from web_crawler_spark.sources.seeds import read_seeds
+    from web_crawler_spark.streaming.ingest import ingest_seed_stream
+
+    seeds_dir = tmp_path / "seeds"
+    seeds_dir.mkdir()
+    blank = ",,,,,,"  # mode .. exclude_anchors
+    (seeds_dir / "auth.csv").write_text(
+        ",".join(SEEDS_RAW.fieldNames()) + "\n"
+        f'https://a.com/c,content{blank},yes,cookies,"sid=abc; t=1",,,\n'
+        f'https://b.com/h,content{blank},true,headers,,"{{""X-Token"": ""t1""}}",,\n'
+        f"  https://c.com/b  ,content{blank},1,basic,,,alice,s3cret\n"
+        f"https://d.com/n,content{blank},no,cookies,sid=zzz,,,\n"
+    )
+    cols = ["url", "cookies", "auth_headers", "basic_auth_user", "basic_auth_pass"]
+
+    def creds(table):
+        rows = table.read(spark, schema=FRONTIER).select(*cols).orderBy("url")
+        return [tuple(r) for r in rows.collect()]
+
+    frontier = SnapshotTable(str(tmp_path / "frontier"))
+    frontier.overwrite(spark.createDataFrame([], FRONTIER))
+    q = ingest_seed_stream(spark, str(seeds_dir), frontier, str(tmp_path / "ck"))
+    q.awaitTermination(120)
+    run = CrawlRun(spark, str(tmp_path / "run"), None, None, None, None)
+    run.start(read_seeds(spark, str(seeds_dir / "auth.csv")))
+
+    want = [
+        ("https://a.com/c", {"sid": "abc", "t": "1"}, None, None, None),
+        ("https://b.com/h", None, {"X-Token": "t1"}, None, None),
+        ("https://c.com/b", None, None, "alice", "s3cret"),
+        ("https://d.com/n", None, None, None, None),
+    ]
+    assert creds(run.frontier_t) == want
+    assert creds(frontier) == want
 
 
 def test_hourly_rollup_stream_matches_batch(spark, tmp_path):

@@ -15,10 +15,18 @@ engines agree without any shared state:
   (http_error, not retryable: status_code < 500).
 - a URL whose page row has undecodable bytes → content_error.
 
-Priority scheme (pinned; SURVEY §3.3 ordering contract):
-- seed row i (0-based)      → priority = -i        (reproduces the reference's
-  strict FIFO bulk order, api/tasks.py:488, when budgets don't bind)
-- link discovered at depth d → priority = -1_000_000 * d
+Priority scheme (pinned; SURVEY §3.3 ordering contract): one rule,
+``band_priority(depth, offset)`` = -(STEP·depth + min(offset, STEP - 1)),
+STEP = ``DEPTH_PRIORITY_STEP``.
+- seed row i (0-based)      → band_priority(0, i) = -i (reproduces the
+  reference's strict FIFO bulk order, api/tasks.py:488, when budgets don't
+  bind); stream-ingested seeds use offset b·MAX + i, gated candidates
+  band_priority(1, admitted_seq)
+- link discovered at depth d → discovered_priority(d) = -STEP·d, the
+  band's head
+- the clamp keeps every row inside its band: past the band's width
+  (offset ≥ STEP - 1) seeds keep precedence over every discovered band but
+  tie with each other, and ties go by url_hash
 - total order within a round: (priority DESC, url_hash ASC) — deterministic
   under any parallelism.
 """
@@ -42,8 +50,14 @@ def is_transient_fault(url_hash: Column, attempts: Column) -> Column:
     return (F.pmod(url_hash, F.lit(TRANSIENT_MOD)) == 0) & (attempts == 0)
 
 
-def seed_priority(row_index: Column) -> Column:
-    return -row_index.cast("double")
+def band_priority(depth, offset: Column) -> Column:
+    """Priority of the ``offset``-th row of depth band ``depth`` (an int or
+    a Column), the offset clamped to the band's width. A negated cast, so
+    offset 0 of band 0 stores -0.0, as seed 0 always has."""
+    return -(
+        F.lit(DEPTH_PRIORITY_STEP) * depth
+        + F.least(offset, F.lit(DEPTH_PRIORITY_STEP - 1))
+    ).cast("double")
 
 
 def discovered_priority(depth: Column) -> Column:
@@ -56,8 +70,8 @@ def py_is_transient_fault(url: str, attempts: int) -> bool:
     return xxh64_str(url) % TRANSIENT_MOD == 0 and attempts == 0
 
 
-def py_seed_priority(row_index: int) -> float:
-    return float(-row_index)
+def py_band_priority(depth: int, offset: int) -> float:
+    return -float(DEPTH_PRIORITY_STEP * depth + min(offset, DEPTH_PRIORITY_STEP - 1))
 
 
 def py_discovered_priority(depth: int) -> float:

@@ -39,7 +39,12 @@ from pyspark.sql import functions as F
 from ..functions.text import SIMHASH_BITS, md5_long, shingle_hashes
 import contextlib as _contextlib
 
-from ..session import release_frame, scoped_confs, truncate_plan
+from ..session import (
+    SMALL_STAGE_CONFS,
+    release_frame,
+    scoped_confs,
+    truncate_plan,
+)
 
 DEFAULT_PERMS = 32
 # 4 bands × 8 rows: r=8 keeps moderate-similarity pairs (J≈0.4-0.5, which
@@ -332,21 +337,12 @@ def connected_components(
     # (the reason parallelism-first is the global default — session.py).
     small_graph = n_edges < 5_000_000
     confs_scope = (
-        scoped_confs(
-            edges.sparkSession,
-            {
-                "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-            },
-        )
+        scoped_confs(edges.sparkSession, SMALL_STAGE_CONFS)
         if small_graph
         else _contextlib.nullcontext()
     )
-    prev_ckpt = edges
-    fp_prev: tuple | None = None
-    converged = False
     with confs_scope:
-        return _cc_loop(edges, prev_ckpt, fp_prev, converged, max_iters)
+        return _cc_loop(edges, max_iters)
 
 
 def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
@@ -388,7 +384,9 @@ def _cc_driver_union_find(edges: DataFrame) -> DataFrame:
     return edges.sparkSession.createDataFrame(labels, schema=out_schema)
 
 
-def _cc_loop(edges, prev_ckpt, fp_prev, converged, max_iters):
+def _cc_loop(edges, max_iters):
+    prev_ckpt = edges
+    fp_prev: tuple | None = None
     for it_n in range(max_iters):
         # -- large-star: for each u, m = min(Γ⁺(u)); every neighbor v > u
         # re-points to m. Operates on the symmetric view (u sees both
@@ -439,10 +437,9 @@ def _cc_loop(edges, prev_ckpt, fp_prev, converged, max_iters):
         prev_ckpt = new_edges
         edges = new_edges
         if fp == fp_prev:
-            converged = True
             break
         fp_prev = fp
-    if not converged:
+    else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} iterations"
         )

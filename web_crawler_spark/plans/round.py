@@ -33,7 +33,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import urls as U
@@ -58,7 +58,7 @@ from ..schemas import (
     TRAP_HOSTS,
 )
 from ..session import release_frame as _release
-from ..session import scoped_confs
+from ..session import SMALL_STAGE_CONFS, scoped_confs
 from ..sources.lake import SnapshotTable
 
 _FETCH_LOG_COLS = [f.name for f in FETCH_LOG.fields]
@@ -165,6 +165,31 @@ def _skipped_log(
         "auth_headers",
         "basic_auth_user",
     )
+
+
+def frontier_rows(df: DataFrame, keep: tuple[str, ...] = (), **cols) -> DataFrame:
+    """The one way rows enter the frontier: ``df`` (a ``url`` column and
+    any FRONTIER columns it already carries) as FRONTIER rows, in FRONTIER
+    column order, followed by the ``keep`` columns. ``cols`` sets columns
+    by name (a Column or a literal). ``url_hash`` is derived from ``url``,
+    and ``host`` too unless ``df`` has one (the gated stream keeps its
+    gate's state key). A nullable column found in neither — ``parent_url``,
+    the credentials (reference CrawlRequest, models.py:31-34) — is a NULL
+    of its FRONTIER type."""
+    derived = {"url_hash": U.url_hash(F.col("url"))}
+    if "host" not in df.columns:
+        derived["host"] = U.url_host(F.col("url"))
+    cols = {**derived, **cols}
+
+    def column(f):
+        if f.name in cols:
+            v = cols[f.name]
+            return v if isinstance(v, Column) else F.lit(v)
+        if f.name in df.columns or not f.nullable:
+            return F.col(f.name)
+        return F.lit(None).cast(f.dataType)
+
+    return df.select(*[column(f).alias(f.name) for f in FRONTIER.fields], *keep)
 
 
 @dataclass
@@ -437,55 +462,30 @@ class CrawlRun:
     # admission (reference: routes.py:108-241 + tasks.py:488-504)
     # ------------------------------------------------------------------
 
-    # frontier credential columns (reference CrawlRequest models.py:31-34):
-    # carried row-by-row from seeds through scheduling to the fetch batch
-    _AUTH_COLS = {
-        "cookies": "map<string,string>",
-        "auth_headers": "map<string,string>",
-        "basic_auth_user": "string",
-        "basic_auth_pass": "string",
-    }
-
-    @classmethod
-    def _with_auth_cols(cls, df: DataFrame) -> DataFrame:
-        """Fill any missing credential columns of an ad-hoc seed frame
-        with typed NULLs."""
-        for c, t in cls._AUTH_COLS.items():
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast(t))
-        return df
-
     def start(self, seeds: DataFrame) -> None:
         """Admit a seed list: valid rows become the round-0 frontier in strict
-        FIFO priority; invalid rows are logged as failed validation rows
-        (never abort the batch — tasks.py:496-504)."""
-        w = Window.orderBy("row_index")
-        seeds = self._with_auth_cols(seeds)
-        seeds = seeds.withColumn(
-            "url", U.remove_anchors(F.col("url")) if self.config.exclude_anchors else F.col("url")
+        FIFO priority inside the seed band (``faults.band_priority``);
+        invalid rows are logged as failed validation rows (never abort the
+        batch — tasks.py:496-504)."""
+        url = F.col("url")
+        rows = frontier_rows(
+            seeds.withColumn(
+                "url", U.remove_anchors(url) if self.config.exclude_anchors else url
+            ),
+            keep=("row_index",),
+            priority=faults.band_priority(0, F.col("row_index")),
+            depth=0,
+            attempts=0,
+            discovered_round=0,
         )
-        valid = seeds.filter(U.is_valid_url(F.col("url")))
-        invalid = seeds.filter(~U.is_valid_url(F.col("url")))
-
-        frontier = (
-            valid.withColumn("priority", faults.seed_priority(F.col("row_index")))
-            .withColumn("url_hash", U.url_hash(F.col("url")))
-            .withColumn("host", U.url_host(F.col("url")))
-            .withColumn("depth", F.lit(0))
-            .withColumn("attempts", F.lit(0))
-            .withColumn("discovered_round", F.lit(0))
-            .withColumn("parent_url", F.lit(None).cast("string"))
-            .select(*_FRONTIER_COLS)
-        )
-        self.frontier_t.overwrite(frontier)
+        valid = U.is_valid_url(F.col("url"))
+        self.frontier_t.overwrite(rows.filter(valid).drop("row_index"))
 
         # invalid seeds → round-0 validation_error rows, ordered by seed order
         inv_log = _skipped_log(
-            invalid.withColumn("url_hash", U.url_hash(F.col("url")))
-            .withColumn("host", U.url_host(F.col("url")))
-            .withColumn("attempts", F.lit(0)),
+            rows.filter(~valid),
             0,
-            F.row_number().over(w),
+            F.row_number().over(Window.orderBy("row_index")),
             "failed",
             "validation_error",
             "INVALID_URL",
@@ -608,19 +608,14 @@ class CrawlRun:
             canon, ["src_url", "child_url"], [F.col("pos").asc()]
         )
         child_depth = F.col("depth") + 1
-        return per_page.select(
-            F.col("child_url").alias("url"),
-            U.url_hash(F.col("child_url")).alias("url_hash"),
-            U.url_host(F.col("child_url")).alias("host"),
-            faults.discovered_priority(child_depth).alias("priority"),
-            child_depth.alias("depth"),
-            F.lit(0).alias("attempts"),
-            F.lit(next_round).alias("discovered_round"),
-            F.col("src_url").alias("parent_url"),
-            "cookies",
-            "auth_headers",
-            "basic_auth_user",
-            "basic_auth_pass",
+        return frontier_rows(
+            per_page.withColumns(
+                {"url": F.col("child_url"), "parent_url": F.col("src_url")}
+            ),
+            priority=faults.discovered_priority(child_depth),
+            depth=child_depth,
+            attempts=0,
+            discovered_round=next_round,
         )
 
     def _pagerank_scores(self) -> DataFrame:
@@ -643,7 +638,7 @@ class CrawlRun:
             from ..operators.graph import RankIndex
 
             # NOTE: these edge/rank jobs derive from the caller-session
-            # links frame, so they plan OUTSIDE _ROUND_CONFS — correct by
+            # links frame, so they plan OUTSIDE SMALL_STAGE_CONFS — correct by
             # intent: the graph pass is a real data job that wants default
             # parallelism-first coalescing, not the tiny-stage round flips.
             # decimal(38,0) sum: xxhash64 spans the full long range, so a
@@ -667,21 +662,11 @@ class CrawlRun:
             )
         return self._rank_df
 
-    # AQE coalescing for ROUND jobs only: a scheduling round is dozens of
-    # small stages where task-launch latency dominates, so partitions should
-    # follow data volume (size-based), not core count — measured ~25% off
-    # the round's fixed cost. Globally this setting is wrong (compressed
-    # shuffle sizes under-estimate row volume on repetitive data and idle
-    # the cluster on big scans — see session.py), hence the per-round scope.
-    # The set/unset below mutates SQLConf on ``self.spark`` — the
-    # __init__-cloned PRIVATE session nothing else plans against — so the
-    # flip is invisible to concurrent work on the caller's session; the
-    # unset keeps this run's own maintain()/resume jobs on the defaults.
-    _ROUND_CONFS = {
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-    }
-
+    # AQE coalescing for ROUND jobs only (session.SMALL_STAGE_CONFS). The
+    # set/unset mutates SQLConf on ``self.spark`` — the __init__-cloned
+    # PRIVATE session nothing else plans against — so the flip is invisible
+    # to concurrent work on the caller's session; the unset keeps this
+    # run's own maintain()/resume jobs on the defaults.
     def run_round(self, checkpoint_extra: dict | None = None) -> dict:
         """Execute one round; returns the metrics dict (rows_selected == 0 and
         rows_in == 0 means the crawl is complete). ``checkpoint_extra`` is
@@ -689,7 +674,7 @@ class CrawlRun:
         commit) — the streaming driver's exactly-once micro-batch marker:
         present ⇒ the whole round committed; absent ⇒ a replay first rolls
         back whatever partial commits exist (``resume``) and re-runs."""
-        with scoped_confs(self.spark, self._ROUND_CONFS):
+        with scoped_confs(self.spark, SMALL_STAGE_CONFS):
             return self._run_round_body(checkpoint_extra)
 
     def _detect_new_traps(self, frontier_df: DataFrame, flag_round: int) -> list:
@@ -788,19 +773,8 @@ class CrawlRun:
                 _skipped_log(df_, rnd, F.lit(0), "skipped", error_type, error_code)
             )
             all_settled = all_settled.unionByName(settle(df_))
-        retries = fetched.filter(retryable).select(
-            "url",
-            "url_hash",
-            "host",
-            "priority",
-            "depth",
-            (F.col("attempts") + 1).alias("attempts"),
-            "discovered_round",
-            "parent_url",
-            "cookies",
-            "auth_headers",
-            "basic_auth_user",
-            "basic_auth_pass",
+        retries = fetched.filter(retryable).withColumn(
+            "attempts", F.col("attempts") + 1
         )
 
         # ---- discovery (T3)
@@ -830,7 +804,7 @@ class CrawlRun:
         ).select(*_FRONTIER_COLS)
         new_frontier = leftover.unionByName(
             retries.select(*_FRONTIER_COLS)
-        ).unionByName(discovered.select(*_FRONTIER_COLS))
+        ).unionByName(discovered)
 
         # ---- lineage counters (A5; models.py:170-176 done per-round)
         # ALL per-round counters in ONE driver action and ONE shuffle: every

@@ -159,6 +159,18 @@ def get_spark(
     return spark
 
 
+# Size-based AQE coalescing for small-stage operators (the crawl round,
+# the connected-components loop below 5M edges): dozens of tiny stages
+# where task-launch latency dominates, so partitions follow data volume,
+# not core count — measured ~25% off the round's fixed cost. Globally this
+# is wrong (see the parallelism-first note in get_spark), so it is only
+# ever applied through ``scoped_confs``.
+SMALL_STAGE_CONFS = {
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
+}
+
+
 @_contextlib.contextmanager
 def scoped_confs(spark, confs: dict):
     """Temporarily set SQLConf entries, restoring previous values on exit.

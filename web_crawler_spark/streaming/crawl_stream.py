@@ -31,13 +31,11 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import FRONTIER
-from ..operators import faults
 from ..functions import urls as U
-from .marker import marker_value, stream_app_id
+from ..operators import faults
+from ..plans.round import frontier_rows
+from .marker import append_once, marker_value, start_foreach_batch, stream_app_id
 from .stateful import politeness_gate
-
-_FRONTIER_COLS = [f.name for f in FRONTIER.fields]
 
 TICK_SCHEMA = "tick long"
 
@@ -94,12 +92,7 @@ def crawl_round_stream(
         .option("maxFilesPerTrigger", 1)
         .csv(ticks_dir)
     )
-    writer = src.writeStream.foreachBatch(body).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(src, body, checkpoint_dir, available_now)
 
 
 def ingest_gated_candidates(
@@ -136,40 +129,20 @@ def ingest_gated_candidates(
     )
 
     def body(batch, batch_id: int) -> None:
-        mark = marker_value(checkpoint_dir, batch_id)
-        if mark in frontier_table.applied_meta("gate_batch_id"):
-            return
-        rows = (
-            batch.select(
-                "url",
-                U.url_hash(F.col("url")).alias("url_hash"),
-                F.col("host"),
-                # clamp inside the depth-1 band: even a pathological
-                # budget_per_host ≥ DEPTH_PRIORITY_STEP must not push an
-                # admission below the depth-2 band (the seed-ingest path
-                # enforces the same invariant for batch counts)
-                F.greatest(
-                    faults.discovered_priority(F.lit(1))
-                    - F.col("admitted_seq").cast("double"),
-                    F.lit(float(-(2 * faults.DEPTH_PRIORITY_STEP - 1))),
-                ).alias("priority"),
-                F.lit(1).alias("depth"),
-                F.lit(0).alias("attempts"),
-                F.lit(0).alias("discovered_round"),
-                F.lit(None).cast("string").alias("parent_url"),
-                # gated candidates carry no credentials (FRONTIER schema)
-                F.lit(None).cast("map<string,string>").alias("cookies"),
-                F.lit(None).cast("map<string,string>").alias("auth_headers"),
-                F.lit(None).cast("string").alias("basic_auth_user"),
-                F.lit(None).cast("string").alias("basic_auth_pass"),
-            )
-            .select(*_FRONTIER_COLS)
+        # the candidate keeps its own host (the gate's state key); the
+        # band clamp keeps even a pathological budget_per_host ≥
+        # DEPTH_PRIORITY_STEP inside the depth-1 band
+        append_once(
+            frontier_table,
+            "gate_batch_id",
+            marker_value(checkpoint_dir, batch_id),
+            lambda: frontier_rows(
+                batch,
+                priority=faults.band_priority(1, F.col("admitted_seq")),
+                depth=1,
+                attempts=0,
+                discovered_round=0,
+            ),
         )
-        frontier_table.append(rows, meta={"gate_batch_id": mark})
 
-    writer = admitted.writeStream.foreachBatch(body).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(admitted, body, checkpoint_dir, available_now)

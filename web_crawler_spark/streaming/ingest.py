@@ -25,24 +25,21 @@ from pyspark.sql import functions as F
 
 from ..functions import urls as U
 from ..operators import faults
-from ..schemas import FRONTIER, SEEDS_RAW
-from ..sources.seeds import MAX_URLS_PER_CSV
-from .marker import marker_value
-
-_FRONTIER_COLS = [f.name for f in FRONTIER.fields]
+from ..plans.round import frontier_rows
+from ..schemas import SEEDS_RAW
+from ..sources.seeds import MAX_URLS_PER_CSV, _auth_columns
+from .marker import append_once, marker_value, start_foreach_batch
 
 
 def _admit_batch(
     batch: DataFrame,
     batch_id: int,
-    frontier_table,
     *,
     exclude_anchors: bool = True,
     max_urls_per_batch: int = MAX_URLS_PER_CSV,
-    meta: dict | None = None,
-) -> None:
-    """foreachBatch body: normalize seed rows → valid frontier rows appended
-    with strict per-batch FIFO priority.
+) -> DataFrame:
+    """foreachBatch rows: a SEEDS_RAW-schema batch → normalized, valid
+    frontier rows with strict per-batch FIFO priority.
 
     Batch path parity caveats, by design:
     - the admission gate TRUNCATES an oversized batch to ``max_urls_per_batch``
@@ -53,69 +50,44 @@ def _admit_batch(
     - invalid rows are dropped (routing them to the fetch log is the crawl
       round's job; the stream only feeds the frontier).
 
-    Priority: seeds stay in the depth-0 band strictly above discovered
-    links — batch b, admissible row i gets ``seed_priority(b·MAX + i)``,
-    clamped so even pathological batch counts never cross into the depth-1
-    band (``faults.DEPTH_PRIORITY_STEP``).
+    Priority: batch b, admissible row i gets ``faults.band_priority(0,
+    b·MAX + i)`` — the seed band, clamped so even pathological batch counts
+    never cross into the depth-1 band. Credentials parse through
+    ``read_seeds``' own auth_enabled/auth_type gate, so stream-admitted
+    seeds authenticate exactly like batch ones.
     """
-    url = U.remove_anchors(F.col("url")) if exclude_anchors else F.col("url")
-    seeds = batch.withColumn("url", url)
+    url = F.trim(F.col("url"))  # as read_seeds does
+    url = U.remove_anchors(url) if exclude_anchors else url
     w = Window.orderBy(F.monotonically_increasing_id())
     valid = (
-        seeds.filter(U.is_valid_url(F.col("url")))
+        batch.withColumn("url", url)
+        .filter(U.is_valid_url(F.col("url")))
         .withColumn("row_index", F.row_number().over(w) - 1)
         .filter(F.col("row_index") < max_urls_per_batch)
     )
     offset = F.col("row_index") + F.lit(batch_id * max_urls_per_batch)
-    rows = (
-        valid.withColumn(
-            "priority",
-            F.greatest(
-                faults.seed_priority(offset),
-                F.lit(float(-(faults.DEPTH_PRIORITY_STEP - 1))),
-            ),
-        )
-        .withColumn("url_hash", U.url_hash(F.col("url")))
-        .withColumn("host", U.url_host(F.col("url")))
-        .withColumn("depth", F.lit(0))
-        .withColumn("attempts", F.lit(0))
-        .withColumn("discovered_round", F.lit(0))
-        .withColumn("parent_url", F.lit(None).cast("string"))
+    return frontier_rows(
+        _auth_columns(valid, None),
+        priority=faults.band_priority(0, offset),
+        depth=0,
+        attempts=0,
+        discovered_round=0,
     )
-    # credential columns (FRONTIER schema): streamed seed rows carry the
-    # same raw CSV auth columns as the batch path (SEEDS_RAW) — parse them
-    # with the identical auth_enabled/auth_type gate so stream-admitted
-    # seeds authenticate exactly like read_seeds ones; ad-hoc batches
-    # without the raw columns get string NULLs first (gate yields NULLs)
-    from ..sources.seeds import _auth_columns
-
-    for c in (
-        "auth_enabled", "auth_type", "cookies", "auth_headers",
-        "basic_auth_username", "basic_auth_password",
-    ):
-        if c not in rows.columns:
-            rows = rows.withColumn(c, F.lit(None).cast("string"))
-    rows = _auth_columns(rows, None).select(*_FRONTIER_COLS)
-    frontier_table.append(rows, meta=meta)
 
 
 def _idempotent_admit(batch, batch_id, frontier_table, checkpoint_dir, **kw) -> None:
-    """Skip micro-batches already applied: foreachBatch replays the last
-    batch after a crash between the table append and the offset commit,
-    which would double-insert seed rows without this guard.
-
-    The applied marker is recorded as commit *metadata inside the same
-    SnapshotTable commit as the rows* (atomic by the manifest os.replace),
-    so there is no crash window between data and marker — exactly-once
-    frontier appends hold across any crash point (ADVICE r1 #1). The marker
-    is scoped by the stream's query id (streaming/marker.py): batch ids are
-    only meaningful within one checkpoint's lifetime, and a recreated
-    checkpoint must not silently skip never-applied data."""
-    mark = marker_value(checkpoint_dir, batch_id)
-    if mark in frontier_table.applied_meta("ingest_batch_id"):
-        return
-    _admit_batch(
-        batch, batch_id, frontier_table, meta={"ingest_batch_id": mark}, **kw
+    """Append ``_admit_batch``'s rows exactly once per micro-batch:
+    foreachBatch replays the last batch after a crash between the table
+    append and the offset commit, which would double-insert seed rows
+    without the ``append_once`` marker. The marker is scoped by the
+    stream's query id (streaming/marker.py): batch ids are only meaningful
+    within one checkpoint's lifetime, and a recreated checkpoint must not
+    silently skip never-applied data."""
+    append_once(
+        frontier_table,
+        "ingest_batch_id",
+        marker_value(checkpoint_dir, batch_id),
+        lambda: _admit_batch(batch, batch_id, **kw),
     )
 
 
@@ -142,24 +114,23 @@ def ingest_seed_stream(
     (the batch path, sources/seeds.read_seeds, is header-name-keyed and
     accepts any order).
     """
+    # escape='"': RFC-4180 doubled quotes, as read_seeds parses them — a
+    # header JSON like "{""k"": ""v""}" must not keep its doubled quotes
     src = (
         spark.readStream.schema(SEEDS_RAW)
         .option("header", True)
+        .option("escape", '"')
         .option("maxFilesPerTrigger", 8)
         .csv(seeds_dir)
     )
-    writer = (
-        src.writeStream.foreachBatch(
-            lambda df, bid: _idempotent_admit(
-                df, bid, frontier_table, checkpoint_dir,
-                exclude_anchors=exclude_anchors,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
+    return start_foreach_batch(
+        src,
+        lambda df, bid: _idempotent_admit(
+            df, bid, frontier_table, checkpoint_dir, exclude_anchors=exclude_anchors
+        ),
+        checkpoint_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hourly_rollup_stream(

@@ -1,4 +1,6 @@
-"""Exactly-once marker identity for foreachBatch sinks.
+"""The exactly-once foreachBatch sink: how a stream is started
+(``start_foreach_batch``), how a micro-batch lands at most once
+(``append_once``) and the marker identity that makes a replay detectable.
 
 Structured Streaming batch ids are only meaningful relative to ONE stream
 checkpoint: a recreated checkpoint (ops wipe, or a second stream feeding
@@ -39,3 +41,31 @@ def marker_value(checkpoint_dir: str, batch_id: int) -> str:
     """The value recorded in (and checked against) SnapshotTable commit
     metadata for one applied micro-batch."""
     return f"{stream_app_id(checkpoint_dir)}:{int(batch_id)}"
+
+
+def start_foreach_batch(stream, body, checkpoint_dir: str, available_now: bool):
+    """Start ``stream`` with ``body(batch_df, batch_id)`` as its foreachBatch
+    sink, checkpointed at ``checkpoint_dir``. ``available_now`` drains what
+    the source holds and stops (the test/CI mode); without it the query
+    keeps running. Returns the started StreamingQuery."""
+    writer = stream.writeStream.foreachBatch(body).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def append_once(table, key: str, mark, rows):
+    """The exactly-once step of a foreachBatch body: append ``rows()`` to
+    the SnapshotTable ``table`` with ``meta={key: mark}``, unless a commit
+    already carries ``mark`` under ``key``. The marker rides in the same
+    atomic commit as the rows, so there is no crash window between data and
+    marker: a batch replayed after any crash point is skipped. ``rows`` is
+    only called when the batch applies, so a replay plans and runs nothing.
+    Returns the appended frame, or None for a skipped replay."""
+    if mark in table.applied_meta(key):
+        return None
+    df = rows()
+    table.append(df, meta={key: mark})
+    return df

@@ -19,9 +19,9 @@ caption metrics), then two near-dup stages:
    lexicographic-min representative (a stream cannot know future arrivals).
 
 Exactly-once: the applied batch_id rides as commit metadata INSIDE the same
-SnapshotTable commit as the admitted rows (atomic by the manifest swap), so
-a foreachBatch replay after any crash point skips the batch — the
-``ingest_seed_stream`` marker pattern.
+SnapshotTable commit as the admitted rows (``marker.append_once``, the sink
+step every frontier stream shares), so a foreachBatch replay after any
+crash point skips the batch.
 
 Scale shape per batch: one decode map + banded equi-joins (self + probe)
 + O(log diameter) component rounds. The probe side reads the admitted
@@ -44,7 +44,7 @@ from ..operators.multimodal import (
 from ..operators.textdedup import _check_bands, hamming_clusters
 from ..schemas import ADMITTED_PAIRS
 from ..session import release_frame
-from .marker import marker_value
+from .marker import append_once, marker_value, start_foreach_batch
 
 PAIR_STREAM_SCHEMA = "pair_id string, bytes binary, caption string"
 
@@ -75,47 +75,45 @@ def admit_pair_batch(
         if checkpoint_dir is not None
         else batch_id
     )
-    if mark in admitted_table.applied_meta("pair_batch_id"):
-        return
-    spark = batch.sparkSession
-    base = pair_metrics(batch)
-    survivors = base.withColumn(
-        "_fail",
-        pair_gate_expr(
+
+    def rows() -> DataFrame:
+        gate = pair_gate_expr(
             lang=lang, min_dim=min_dim, min_quality=min_quality, min_tokens=min_tokens
-        ),
-    ).filter(F.col("_fail").isNull())
-
-    # within-batch near-dup prune: identical semantics to curate_pairs
-    clusters = hamming_clusters(
-        survivors, "pair_id", "phash",
-        bits=PHASH_BITS, max_hamming=max_hamming, bands=bands,
-    )
-    reps = (
-        survivors.join(clusters, "pair_id", "left")
-        .filter(
-            F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col("pair_id"))
         )
-        .select(*_ADMITTED_COLS)
-    )
+        survivors = (
+            pair_metrics(batch).withColumn("_fail", gate).filter(F.col("_fail").isNull())
+        )
+        # within-batch near-dup prune: identical semantics to curate_pairs
+        clusters = hamming_clusters(
+            survivors, "pair_id", "phash",
+            bits=PHASH_BITS, max_hamming=max_hamming, bands=bands,
+        )
+        reps = (
+            survivors.join(clusters, "pair_id", "left")
+            .filter(
+                F.col("cluster_id").isNull() | (F.col("cluster_id") == F.col("pair_id"))
+            )
+            .select(*_ADMITTED_COLS)
+        )
+        # cross-batch: probe the admitted index; first-admitted-wins
+        index = admitted_table.read(batch.sparkSession, schema=ADMITTED_PAIRS)
+        dupes = banded_matches(
+            reps.select("pair_id", "phash"), index.select("pair_id", "phash"),
+            max_hamming=max_hamming, bands=bands,
+        )
+        return reps.join(dupes, "pair_id", "left_anti")
 
-    # cross-batch: probe the admitted index; first-admitted-wins
-    index = admitted_table.read(spark, schema=ADMITTED_PAIRS).select(
-        "pair_id", "phash"
-    )
-    dupes = banded_matches(
-        reps.select("pair_id", "phash"), index, max_hamming=max_hamming, bands=bands
-    )
-    admitted = reps.join(dupes, "pair_id", "left_anti")
-    admitted_table.append(admitted, meta={"pair_batch_id": mark})
-    # the append above fully materialized everything downstream of this
-    # batch's checkpoints (the metrics frame + the component labels, both
-    # leaves of admitted's plan and owned by nobody else) — free their
-    # blocks now, or a long-running stream accrues one batch's worth of
-    # dead storage per trigger
-    # blocking: a long-running stream's storage must be back to baseline
-    # when the micro-batch commits, not "eventually" (r4 VERDICT Wrong #1)
-    release_frame(admitted, deep=True, blocking=True)
+    admitted = append_once(admitted_table, "pair_batch_id", mark, rows)
+    if admitted is not None:
+        # the append fully materialized everything downstream of this
+        # batch's checkpoints (the metrics frame + the component labels,
+        # both leaves of admitted's plan and owned by nobody else) — free
+        # their blocks now, or a long-running stream accrues one batch's
+        # worth of dead storage per trigger
+        # blocking: a long-running stream's storage must be back to
+        # baseline when the micro-batch commits, not "eventually" (r4
+        # VERDICT Wrong #1)
+        release_frame(admitted, deep=True, blocking=True)
 
 
 def admit_pair_stream(
@@ -139,11 +137,11 @@ def admit_pair_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(pairs_dir)
     )
-    writer = src.writeStream.foreachBatch(
+    return start_foreach_batch(
+        src,
         lambda df, bid: admit_pair_batch(
             df, bid, admitted_table, checkpoint_dir=checkpoint_dir, **gate_kw
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        ),
+        checkpoint_dir,
+        available_now,
+    )
